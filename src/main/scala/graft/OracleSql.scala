@@ -899,7 +899,7 @@ object OracleSql {
       // Per-QUERY cell ranking in SQL (parallel unnest zips cluster ids
       // with the inlined per-centroid distance list; row_number picks
       // each query's 3 nearest cells), then the corpus assignment chain
-      // joins on cluster — the twin of Ann.probeBatch end to end.
+      // joins on cluster — the twin of the in-memory batch Ann.probe end to end.
       val qDists = cents.map(c => distChain("qnv", 0, c)).mkString(", ")
       val cDists = cents.map(c => distChain("nv2", 0, c)).mkString(", ")
       val batchSql =

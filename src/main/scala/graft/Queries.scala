@@ -331,15 +331,15 @@ object Queries {
     val corpus = embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding")
     val path = graft.operators.LayoutCache.getOrWrite(s"ivfbq:$dir")(p =>
       graft.operators.Bq.writeIvfBq(p, corpus, "embedding", "vec_id", index.centroids))
-    graft.operators.Bq.probeIvf(s, path, index.centroids, corpus, q,
-      "q_vec", "vec_id", "embedding", nProbe = 3, k = 10, refine = 40)
+    graft.operators.Bq.probeIvf(s, path, Some(corpus), q, "q_vec", "vec_id", "embedding",
+      cells = cells, k = 10, refine = 40)
   }
 
   /** IVF+MRL probe: the persisted cluster-partitioned PREFIX sidecar
     * (first 16 of 64 dims — exact leading coordinates, no quantization),
     * partition-pruned to the probed cells, prefix-cosine cut, exact
     * full-dim re-rank from the base table
-    * ([[graft.operators.Matryoshka.probeIvfMrl]]) — IVF pruning
+    * ([[graft.operators.Matryoshka.probeIvf]]) — IVF pruning
     * compounded with the 4× prefix byte reduction, and the sidecar
     * column is itself a vector (any d' ≤ 16 tier is one more slice, no
     * re-encode).
@@ -352,8 +352,8 @@ object Queries {
     val corpus = embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding")
     val path = graft.operators.LayoutCache.getOrWrite(s"ivfmrl:$dir")(p =>
       Matryoshka.writeIvfMrl(p, corpus, "embedding", "vec_id", index.centroids, dPrefix = 16))
-    Matryoshka.probeIvfMrl(s, path, index.centroids, corpus, q,
-      "q_vec", "vec_id", "embedding", dPrefix = 16, nProbe = 3, k = 10, refine = 40)
+    Matryoshka.probeIvf(s, path, Some(corpus), q, "q_vec", "vec_id", "embedding",
+      cells = cells, dPrefix = 16, k = 10, refine = 40)
   }
 
   def knnPerGroup(s: SparkSession, dir: String): DataFrame =
@@ -591,7 +591,8 @@ object Queries {
     val (index, cells) = annIndexAndCells(s, dir)
     val fts = Fts.buildCached(dir, docs(s, dir), "text", "doc_id")
     val bm25Leg = Fts.probe(s, fts, "doc_id", QueryTerms, k = 100)
-    val knnLeg = Ann.probeCells(index, queryVecLocal(s, dir), "q_vec", cells, topK = 100)
+    val knnLeg = Ann.probe(index.assigned, queryVecLocal(s, dir), "q_vec", index.vecCol,
+        index.idCol, topK = 100, cells = cells)
       .select(col("vec_id").as("doc_id"), col("cos_sim"))
     Search.rrfFuse(bm25Leg, knnLeg, "doc_id", "bm25", "cos_sim", k = 10)
   }
@@ -2851,7 +2852,8 @@ object Queries {
 
   def annProbe(s: SparkSession, dir: String): DataFrame = {
     val (index, cells) = annIndexAndCells(s, dir)
-    Ann.probeCells(index, queryVecLocal(s, dir), "q_vec", cells, topK = 10)
+    Ann.probe(index.assigned, queryVecLocal(s, dir), "q_vec", index.vecCol, index.idCol,
+      topK = 10, cells = cells)
   }
 
   /** IVF index books ([[Ann.stats]]) — the twin re-derives the cell
@@ -2910,8 +2912,8 @@ object Queries {
     val corpus = embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding")
     val path = graft.operators.LayoutCache.getOrWrite(s"ivfsq_no_qvec:$dir")(p =>
       Sq.writeIvfSq(p, corpus, "embedding", "vec_id", index.centroids))
-    Sq.probeIvfSq(s, path, index.centroids, corpus, q,
-      "q_vec", "vec_id", "embedding", nProbe = 3, k = 10, refine = 40)
+    Sq.probeIvf(s, path, Some(corpus), q, "q_vec", "vec_id", "embedding",
+      cells = cells, k = 10, refine = 40)
   }
 
   /** Incremental index maintenance end-to-end (reference: store.py:197
@@ -2987,7 +2989,8 @@ object Queries {
     val q = queryVecLocal(s, dir)
     val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
     OracleArtifacts.annIncremental = Some((index.centroids, cells))
-    Ann.probePersistedCells(s, path, cells, q, "q_vec", "embedding", "vec_id", topK = 10)
+    Ann.probe(Ann.liveLayout(s, path, "vec_id"), q, "q_vec", "embedding", "vec_id",
+      topK = 10, cells = cells)
   }
 
   /** [[annIncremental]]'s delta fed from a STREAM (the vector face of
@@ -3012,7 +3015,8 @@ object Queries {
     val q = queryVecLocal(s, dir)
     val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
     OracleArtifacts.annIncremental = Some((index.centroids, cells))
-    Ann.probePersistedCells(s, path, cells, q, "q_vec", "embedding", "vec_id", topK = 10)
+    Ann.probe(Ann.liveLayout(s, path, "vec_id"), q, "q_vec", "embedding", "vec_id",
+      topK = 10, cells = cells)
   }
 
   /** DELETE-aware persisted probe — the reference's `delete_document`
@@ -3020,7 +3024,7 @@ object Queries {
     * tombstone sidecar ([[graft.operators.Ann.deleteFromIndex]],
     * merge-on-read like the ChunkStore), and the probe anti-joins the
     * broadcast tombstone set INSIDE the pruned scan so all k results
-    * are live ([[graft.operators.Ann.probePersistedLive]]). The twin
+    * are live ([[graft.operators.Ann.liveLayout]]). The twin
     * runs the same assignment chain with the tombstone predicate
     * applied before ranking.
     */
@@ -3030,7 +3034,8 @@ object Queries {
     val q = queryVecLocal(s, dir)
     val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
     OracleArtifacts.annDeleted = Some((index.centroids, cells))
-    Ann.probePersistedLiveCells(s, path, cells, q, "q_vec", "embedding", "vec_id", topK = 10)
+    Ann.probe(Ann.liveLayout(s, path, "vec_id"), q, "q_vec", "embedding", "vec_id",
+      topK = 10, cells = cells)
   }
 
   /** COMPACTION closes the ANN maintenance triangle (append
@@ -3056,7 +3061,8 @@ object Queries {
     val q = queryVecLocal(s, dir)
     val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
     OracleArtifacts.annCompacted = Some((index.centroids, cells))
-    Ann.probePersistedCells(s, path, cells, q, "q_vec", "embedding", "vec_id", topK = 10)
+    Ann.probe(Ann.liveLayout(s, path, "vec_id"), q, "q_vec", "embedding", "vec_id",
+      topK = 10, cells = cells)
   }
 
   /** PREFILTERED persisted-IVF probe — the reference's filtered vector
@@ -3076,8 +3082,8 @@ object Queries {
     // same corpus + same fitted index as annBatchPersisted → same layout
     val path = graft.operators.LayoutCache.getOrWrite(s"annidx_full:$dir")(p =>
       Ann.writeIndex(index, p))
-    Ann.probePersistedFilteredCells(s, path, cells, q, "q_vec", "embedding", "vec_id",
-      prefilter = col("label").isin(2, 5), keep = Seq("label"), topK = 10)
+    Ann.probe(Ann.liveLayout(s, path, "vec_id"), q, "q_vec", "embedding", "vec_id",
+      topK = 10, cells = cells, prefilter = Some(col("label").isin(2, 5)), keep = Seq("label"))
   }
 
   /** IVF-PQ-style probe: PQ codes + ADC ranking + exact re-rank at
@@ -3104,10 +3110,11 @@ object Queries {
     val e = embs(s, dir)
     val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
     OracleArtifacts.annBatch = Some(index.centroids)
-    Ann.probeBatch(index,
+    val qCells = Ann.queryCells(
       e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_vec")),
-      "q_vec", "query_id", nProbe = 3, topK = 5)
+      "q_vec", "query_id", index.centroids, nProbe = 3)
+    Ann.probe(index.assigned, qCells, "q_vec", index.vecCol, index.idCol, topK = 5)
       .orderBy("query_id", "rk")
   }
 
@@ -3128,8 +3135,8 @@ object Queries {
     // relation — the warm probe is the pruned scan + heap alone
     val qCells = Ann.queryCellsLocal(batchQueriesLocal(s, dir),
       "q_vec", "query_id", index.centroids, nProbe = 3)
-    Ann.probeBatchPersistedCells(s, path, qCells,
-      "q_vec", "query_id", "embedding", "vec_id", topK = 5)
+    Ann.probe(Ann.liveLayout(s, path, "vec_id"), qCells, "q_vec", "embedding", "vec_id",
+      topK = 5)
       .orderBy("query_id", "rk")
   }
 
@@ -3146,12 +3153,10 @@ object Queries {
     OracleArtifacts.annBatchSq = Some(index.centroids)
     val path = graft.operators.LayoutCache.getOrWrite(s"ivfsq_full:$dir")(p =>
       Sq.writeIvfSq(p, e, "embedding", "vec_id", index.centroids))
-    Sq.probeBatchIvfSq(s, path, index.centroids,
-      e.select("vec_id", "embedding"),
-      batchQueriesLocal(s, dir),
-      "q_vec", "query_id", "vec_id", "embedding", nProbe = 3, k = 5, refine = 20,
-      qCellsPre = Some(Ann.queryCellsLocal(batchQueriesLocal(s, dir),
-        "q_vec", "query_id", index.centroids, nProbe = 3)))
+    Sq.probeIvf(s, path, Some(e.select("vec_id", "embedding")),
+      Ann.queryCellsLocal(batchQueriesLocal(s, dir), "q_vec", "query_id", index.centroids,
+        nProbe = 3),
+      "q_vec", "vec_id", "embedding", k = 5, refine = 20)
       .orderBy("query_id", "rk")
   }
 
@@ -3195,12 +3200,10 @@ object Queries {
     OracleArtifacts.annBatchMrl = Some(index.centroids)
     val path = graft.operators.LayoutCache.getOrWrite(s"ivfmrl_full:$dir")(p =>
       Matryoshka.writeIvfMrl(p, e, "embedding", "vec_id", index.centroids, dPrefix = 16))
-    Matryoshka.probeBatchIvfMrl(s, path, index.centroids,
-      e.select("vec_id", "embedding"),
-      batchQueriesLocal(s, dir),
-      "q_vec", "query_id", "vec_id", "embedding", dPrefix = 16, nProbe = 3, k = 5, refine = 20,
-      qCellsPre = Some(Ann.queryCellsLocal(batchQueriesLocal(s, dir),
-        "q_vec", "query_id", index.centroids, nProbe = 3)))
+    Matryoshka.probeIvf(s, path, Some(e.select("vec_id", "embedding")),
+      Ann.queryCellsLocal(batchQueriesLocal(s, dir), "q_vec", "query_id", index.centroids,
+        nProbe = 3),
+      "q_vec", "vec_id", "embedding", dPrefix = 16, k = 5, refine = 20)
       .orderBy("query_id", "rk")
   }
 
@@ -3257,12 +3260,10 @@ object Queries {
     val rot = graft.operators.Bq.rotationMatrix(64, seed = 7L)
     val path = graft.operators.LayoutCache.getOrWrite(s"ivfbqrot_full:$dir")(p =>
       graft.operators.Bq.writeIvfBqRotated(p, e, "embedding", "vec_id", index.centroids, rot))
-    graft.operators.Bq.probeBatchIvfRotated(s, path, index.centroids,
-      e.select("vec_id", "embedding"),
-      batchQueriesLocal(s, dir),
-      "q_vec", "query_id", "vec_id", "embedding", rot, nProbe = 3, k = 5, refine = 20,
-      qCellsPre = Some(Ann.queryCellsLocal(batchQueriesLocal(s, dir),
-        "q_vec", "query_id", index.centroids, nProbe = 3)))
+    graft.operators.Bq.probeIvf(s, path, Some(e.select("vec_id", "embedding")),
+      Ann.queryCellsLocal(batchQueriesLocal(s, dir), "q_vec", "query_id", index.centroids,
+        nProbe = 3),
+      "q_vec", "vec_id", "embedding", rot = Some(rot), k = 5, refine = 20)
       .orderBy("query_id", "rk")
   }
 
@@ -3286,8 +3287,8 @@ object Queries {
       Ann.writeIndex(index, p))
     val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
     OracleArtifacts.annTwoLevel = Some((two, cells))
-    Ann.probePersistedCells(s, path, cells, queryVecLocal(s, dir),
-      "q_vec", "embedding", "vec_id", topK = 10)
+    Ann.probe(Ann.liveLayout(s, path, "vec_id"), queryVecLocal(s, dir), "q_vec", "embedding",
+      "vec_id", topK = 10, cells = cells)
   }
 
   /** THE FLAGSHIP COMPOSITION — the full 10^9-vector serving path as
@@ -3343,9 +3344,8 @@ object Queries {
       Ann.writeIndex(index, p))
     val qCells = Ann.queryCellsLocal(batchQueriesLocal(s, dir),
       "q_vec", "query_id", index.centroids, nProbe = 3)
-    Ann.probeBatchPersistedFilteredCells(s, path, qCells,
-      "q_vec", "query_id", "embedding", "vec_id",
-      prefilter = col("label").isin(2, 5), keep = Seq("label"), topK = 5)
+    Ann.probe(Ann.liveLayout(s, path, "vec_id"), qCells, "q_vec", "embedding", "vec_id",
+      topK = 5, prefilter = Some(col("label").isin(2, 5)), keep = Seq("label"))
       .orderBy("query_id", "rk")
   }
 
@@ -3539,7 +3539,8 @@ object Queries {
     val exact = Ann.exact(embs(s, dir), q, "embedding", "q_vec", "vec_id", topK = 10)
       .select("vec_id")
     (1 to 5).map { n =>
-      val probe = Ann.probeCells(index, q, "q_vec", cells5.take(n), topK = 10).select("vec_id")
+      val probe = Ann.probe(index.assigned, q, "q_vec", index.vecCol, index.idCol, topK = 10,
+        cells = cells5.take(n)).select("vec_id")
       val hits = exact.join(probe, Seq("vec_id"), "left_semi").count()
       (10L, n.toLong,
         BigDecimal(hits.toDouble / 10.0).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
@@ -3572,7 +3573,8 @@ object Queries {
     import s.implicits._
     val q = queryVecLocal(s, dir)
     val (index, cells) = annIndexAndCells(s, dir)
-    val probe = Ann.probeCells(index, q, "q_vec", cells, topK = 10).select("vec_id")
+    val probe = Ann.probe(index.assigned, q, "q_vec", index.vecCol, index.idCol, topK = 10,
+      cells = cells).select("vec_id")
     val exact = Ann.exact(embs(s, dir), q, "embedding", "q_vec", "vec_id", topK = 10)
       .select("vec_id")
     val hits = exact.join(probe, Seq("vec_id"), "left_semi").count()

@@ -4,7 +4,7 @@ import graft.functions.VectorOps
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** IVF-style ANN index: KMeans coarse quantizer + cluster-pruned probe
   * (reference: the IVF-PQ hint at store.py:274; here as a batch index
@@ -63,12 +63,6 @@ object Ann extends IndexMaintenance {
     */
   private[graft] val TrainPointsPerCentroid = 256L
 
-  /** `rowCount`: pass the corpus size when the caller already knows it
-    * (e.g. a rebuild that just measured drift) — otherwise one count()
-    * derives the sample fraction (metadata-cheap on parquet; for
-    * non-file inputs it is still one narrow pass against the 14 wide
-    * passes the unsampled fit would run).
-    */
   /** The fit-sample row target for a k-centroid quantizer: the
     * 256/centroid FAISS budget with a 2000-row floor. EVERYTHING the
     * KMeans fit consumes is bounded by ~this (a Bernoulli sample has
@@ -92,6 +86,12 @@ object Ann extends IndexMaintenance {
     else df
   }
 
+  /** `rowCount`: pass the corpus size when the caller already knows it
+    * (e.g. a rebuild that just measured drift) — otherwise one count()
+    * derives the sample fraction (metadata-cheap on parquet; for
+    * non-file inputs it is still one narrow pass against the 14 wide
+    * passes the unsampled fit would run).
+    */
   def build(df: DataFrame, vecCol: String, idCol: String, k: Int, seed: Long,
             rowCount: Option[Long] = None): Index = {
     val n = rowCount.getOrElse(df.count())
@@ -319,20 +319,15 @@ object Ann extends IndexMaintenance {
     * float or double element types).
     */
   def queryVector(queryDf: DataFrame, queryVec: String): Array[Double] =
-    queryDf.select(queryVec).head().getSeq[Any](0).map {
+    doubles(queryDf.select(queryVec).head().getSeq[Any](0))
+
+  private def doubles(v: Seq[Any]): Array[Double] =
+    v.map {
       case f: java.lang.Float  => f.toDouble
       case d: java.lang.Double => d.doubleValue()
       case other => sys.error(s"unsupported vector element: ${other.getClass}")
     }.toArray
 
-  /** Cluster-pruned cosine top-k for a one-row query DataFrame. */
-  def probe(index: Index, queryDf: DataFrame, queryVec: String, nProbe: Int, topK: Int): DataFrame =
-    probeCells(index, queryDf, queryVec,
-      nearestCells(index.centroids, queryVector(queryDf, queryVec), nProbe), topK)
-
-  /** Probe restricted to an explicit cell list (cells are driver-side
-    * constants — the same list is inlined into the DuckDB twin).
-    */
   /** Index observability — the IVF analog of [[Fts.stats]]: one
     * O(index) aggregate over the assignment table exposing the books a
     * capacity planner reads. A skewed coarse quantizer means hot probe
@@ -361,14 +356,6 @@ object Ann extends IndexMaintenance {
           col("mx").cast("double") / (col("nv").cast("double") / lit(nlist.toDouble)),
           5).as("balance"))
   }
-
-  def probeCells(index: Index, queryDf: DataFrame, queryVec: String, cells: Seq[Int], topK: Int): DataFrame =
-    Search
-      .knnTopK(
-        index.assigned.filter(col("cluster").isInCollection(cells)),
-        queryDf, index.vecCol, queryVec, index.idCol, topK
-      )
-      .select(col(index.idCol), col("cluster").cast("long").as("cluster"), col("cos_sim"))
 
   /** Persist the index partitioned by cluster id — the at-scale layout:
     * a probe's nProbe-cluster filter prunes whole partitions at the
@@ -425,53 +412,6 @@ object Ann extends IndexMaintenance {
       writeClustered(liveFace(spark, path, spark.read.parquet(path), idCol),
         outPath, "overwrite")
     }
-  }
-
-  /** Probe serving only LIVE rows: the tombstone set (small next to
-    * the corpus — deletes are rare) broadcast-ANTI-joins inside the
-    * partition-pruned scan, BEFORE the top-k heap, so all k results
-    * are live; filtering the unfiltered top-k afterwards could come
-    * back short. Compaction = [[writeIndex]] over the live rows once
-    * tombstones accumulate, which also clears the sidecar.
-    */
-  def probePersistedLive(
-      spark: SparkSession,
-      path: String,
-      centroids: Array[Array[Double]],
-      queryDf: DataFrame,
-      queryVec: String,
-      vecCol: String,
-      idCol: String,
-      nProbe: Int,
-      topK: Int
-  ): DataFrame =
-    probePersistedLiveCells(spark, path,
-      nearestCells(centroids, queryVector(queryDf, queryVec), nProbe),
-      queryDf, queryVec, vecCol, idCol, topK)
-
-  /** [[probePersistedLive]] with the cell list precomputed — the warm
-    * serving shape: a caller holding the centroids and a driver-side
-    * query vector pays ZERO extra jobs before the probe action (no
-    * re-collect of the query, no re-listing of the layout — see
-    * [[LayoutCache.readCached]], no tombstone broadcast below the
-    * inline limit).
-    */
-  def probePersistedLiveCells(
-      spark: SparkSession,
-      path: String,
-      cells: Seq[Int],
-      queryDf: DataFrame,
-      queryVec: String,
-      vecCol: String,
-      idCol: String,
-      topK: Int
-  ): DataFrame = {
-    val pruned = LayoutCache.readCached(spark, path)
-      .filter(col("cluster").isInCollection(cells))
-    val live = liveFace(spark, path, pruned, idCol)
-    Search
-      .knnTopK(live, queryDf, vecCol, queryVec, idCol, topK)
-      .select(col(idCol), col("cluster").cast("long").as("cluster"), col("cos_sim"))
   }
 
   final case class MaintenanceReport(deltaCost: Double, baseCost: Double, rebuilt: Boolean)
@@ -534,112 +474,6 @@ object Ann extends IndexMaintenance {
       .agg(avg("d2")).head().getDouble(0)
   }
 
-  /** Probe a persisted index directory: cluster pruning happens at the
-    * parquet partition level (visible as PartitionFilters in explain).
-    */
-  def probePersisted(
-      spark: SparkSession,
-      path: String,
-      centroids: Array[Array[Double]],
-      queryDf: DataFrame,
-      queryVec: String,
-      vecCol: String,
-      idCol: String,
-      nProbe: Int,
-      topK: Int
-  ): DataFrame =
-    probePersistedCells(spark, path,
-      nearestCells(centroids, queryVector(queryDf, queryVec), nProbe),
-      queryDf, queryVec, vecCol, idCol, topK)
-
-  /** [[probePersisted]] with the cell list precomputed (see
-    * [[probePersistedLiveCells]] for the why — warm probes should be
-    * one action, not a train of listing/collect jobs).
-    */
-  def probePersistedCells(
-      spark: SparkSession,
-      path: String,
-      cells: Seq[Int],
-      queryDf: DataFrame,
-      queryVec: String,
-      vecCol: String,
-      idCol: String,
-      topK: Int
-  ): DataFrame = {
-    val pruned = LayoutCache.readCached(spark, path)
-      .filter(col("cluster").isInCollection(cells))
-    Search
-      .knnTopK(pruned, queryDf, vecCol, queryVec, idCol, topK)
-      .select(col(idCol), col("cluster").cast("long").as("cluster"), col("cos_sim"))
-  }
-
-  /** PREFILTERED probe of a persisted layout — the reference's filtered
-    * vector search (server.py `search` metadata filters composed with
-    * the LanceDB prefilter; store.py:261): the metadata predicate is
-    * applied IN the partition-pruned scan, BEFORE the top-k heap, so
-    * the k results all satisfy it — a postfilter can come back short
-    * (or empty) whenever the predicate is selective. At scale the
-    * cluster filter prunes partition directories at the file listing,
-    * the predicate prunes row groups via parquet min/max stats (both
-    * visible in explain: PartitionFilters + PushedFilters), and only
-    * survivors reach the cosine heap — no second pass, no join back.
-    * `keep` names metadata columns to carry into the result.
-    */
-  def probePersistedFiltered(
-      spark: SparkSession,
-      path: String,
-      centroids: Array[Array[Double]],
-      queryDf: DataFrame,
-      queryVec: String,
-      vecCol: String,
-      idCol: String,
-      prefilter: org.apache.spark.sql.Column,
-      keep: Seq[String],
-      nProbe: Int,
-      topK: Int
-  ): DataFrame =
-    probePersistedFilteredCells(spark, path,
-      nearestCells(centroids, queryVector(queryDf, queryVec), nProbe),
-      queryDf, queryVec, vecCol, idCol, prefilter, keep, topK)
-
-  /** [[probePersistedFiltered]] with the cell list precomputed. */
-  def probePersistedFilteredCells(
-      spark: SparkSession,
-      path: String,
-      cells: Seq[Int],
-      queryDf: DataFrame,
-      queryVec: String,
-      vecCol: String,
-      idCol: String,
-      prefilter: org.apache.spark.sql.Column,
-      keep: Seq[String],
-      topK: Int
-  ): DataFrame = {
-    // LIVE face inside the pruned+prefiltered scan: unlike the flat
-    // probePersisted/probePersistedLive pair, the filtered family has no
-    // separate live variant, so it is delete-aware unconditionally — a
-    // memoized no-op (zero jobs) on delete-free layouts.
-    val pruned = liveFace(spark, path,
-      LayoutCache.readCached(spark, path)
-        .filter(col("cluster").isInCollection(cells))
-        .filter(prefilter),
-      idCol)
-    Search
-      .knnTopK(pruned, queryDf, vecCol, queryVec, idCol, topK)
-      .select(Seq(col(idCol), col("cluster").cast("long").as("cluster")) ++
-        keep.map(col) :+ col("cos_sim"): _*)
-  }
-
-  /** Batch IVF probe: every query is pruned to its nProbe nearest cells
-    * and scored only against those cells' vectors — the hard-negative-
-    * mining shape (millions of training queries against a static index).
-    * Cell ranking is a |Q|×k broadcast join + per-query window (k is the
-    * centroid count — tiny); candidate scoring co-shuffles on `cluster`
-    * so each index vector meets only the queries probing its cell; the
-    * final per-query top-k is the bounded-heap [[graft.plans.TopK]]
-    * operator, never a global sort. ~nProbe/k of the brute-force
-    * [[Search.knnBatch]] work.
-    */
   /** Per-query cell ranking for batch probes: a |Q|×k broadcast join
     * against the (tiny) centroid table + a per-query window picking
     * each query's nProbe nearest cells — the same (distance, cluster)
@@ -693,12 +527,7 @@ object Ann extends IndexMaintenance {
     val rows = slim.collect()
     val out = new java.util.ArrayList[org.apache.spark.sql.Row](rows.length * nProbe)
     rows.foreach { r =>
-      val vec = r.getSeq[Any](1).map {
-        case f: java.lang.Float  => f.toDouble
-        case d: java.lang.Double => d.doubleValue()
-        case other => sys.error(s"unsupported vector element: ${other.getClass}")
-      }.toArray
-      nearestCells(centroids, vec, nProbe).foreach { c =>
+      nearestCells(centroids, doubles(r.getSeq[Any](1)), nProbe).foreach { c =>
         out.add(org.apache.spark.sql.Row(r.get(0), r.get(1), c))
       }
     }
@@ -737,121 +566,104 @@ object Ann extends IndexMaintenance {
       case None        => scan
     }
 
-  def probeBatch(
-      index: Index,
+  /** A compressed family's shortlist stage (SQ codes, MRL prefix, BQ
+    * sign bits): the approximate score over a joined (layout row,
+    * query row) and its rank direction, the shortlist size, and the
+    * full-precision `base` the exact re-rank joins back by id — None
+    * when the layout was written with its vectors inline.
+    */
+  private[operators] final case class Shortlist(
+      name: String, score: Column, ascending: Boolean, refine: Int, base: Option[DataFrame])
+
+  /** Cluster-pruned cosine top-k over any cell-partitioned layout —
+    * `index.assigned` in memory, [[liveLayout]] on disk.
+    *
+    * The query relation decides the shape. Without a `queryId` column
+    * it is ONE query probing `cells` ([[nearestCells]]): a static
+    * partition filter, the query row broadcast against the pruned
+    * scan, and an `orderBy.limit` heap. With one it is a BATCH whose
+    * per-query cells ride in its `cluster` column ([[queryCellsLocal]]
+    * for a bounded set, [[queryCells]] in-plan): the cell union
+    * prunes statically when driver-known (DPP otherwise), each layout
+    * row meets only the queries probing its cell, and the heap is the
+    * per-query bounded [[graft.plans.TopK]] (output gains `rk`).
+    *
+    * `prefilter` is a metadata predicate applied INSIDE the pruned
+    * scan, before the heap, so all k results satisfy it (a postfilter
+    * over the unfiltered top-k comes back short whenever the
+    * predicate is selective); `keep` names layout columns carried
+    * into the result.
+    */
+  def probe(
+      scan: DataFrame,
+      queries: DataFrame,
+      queryVec: String,
+      vecCol: String,
+      idCol: String,
+      topK: Int,
+      cells: Seq[Int] = Nil,
+      prefilter: Option[Column] = None,
+      keep: Seq[String] = Nil,
+      queryId: String = "query_id"): DataFrame =
+    probeScan(scan, queries, queryVec, queryId, vecCol, idCol, topK, cells, prefilter, keep, None)
+
+  /** The one IVF probe core every family folds onto: pruned scan →
+    * optional prefilter → approximate score → heap to `refine` →
+    * exact re-rank → heap to k (the two middle steps only when a
+    * [[Shortlist]] is given). See [[probe]] for the single/batch
+    * contract; a family supplies its (live) scan and shortlist only.
+    */
+  private[operators] def probeScan(
+      scan: DataFrame,
       queries: DataFrame,
       queryVec: String,
       queryId: String,
-      nProbe: Int,
-      topK: Int
-  ): DataFrame = {
-    val spark = queries.sparkSession
-    graft.plans.GraftFunctions.register(spark)
-    val qCells = queryCells(queries, queryVec, queryId, index.centroids, nProbe)
-    val scored = index.assigned
-      .join(qCells, "cluster")
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col(index.vecCol), col(queryVec)))
-      .select(col(queryId), col(index.idCol), col("cluster").cast("long").as("cluster"), col("cos_sim"))
-    graft.plans.TopK
-      .perKey(scored, Seq(queryId), Seq(("cos_sim", false), (index.idCol, true)), topK)
-      .select(col(queryId), col(index.idCol), col("cluster"), col("cos_sim"), col("rk"))
-  }
-
-  /** Batch IVF probe against the PERSISTED partitioned-by-cluster
-    * layout — [[probeBatch]]'s disk-backed twin (equal by construction:
-    * same cell ranking, same candidate scoring, same bounded-heap
-    * top-k). Cell ranking is the |Q|×k broadcast join; the (tiny)
-    * per-query cell table then joins the parquet layout on its
-    * PARTITION column, so Spark's dynamic partition pruning narrows
-    * the scan to the union of probed cells at the file level — the
-    * serving shape when the index outlives the session. At
-    * millions of queries the probed-cell union saturates every cell
-    * and this degrades gracefully to [[probeBatch]]'s co-shuffle; at
-    * dashboard-size batches whole cell files are skipped.
-    */
-  def probeBatchPersisted(
-      spark: SparkSession,
-      path: String,
-      centroids: Array[Array[Double]],
-      queries: DataFrame,
-      queryVec: String,
-      queryId: String,
       vecCol: String,
       idCol: String,
-      nProbe: Int,
-      topK: Int
-  ): DataFrame =
-    probeBatchPersistedCells(spark, path,
-      queryCells(queries, queryVec, queryId, centroids, nProbe),
-      queryVec, queryId, vecCol, idCol, topK)
-
-  /** [[probeBatchPersisted]] against a PRECOMPUTED per-query cell table
-    * (either ranking — [[queryCells]] in-plan or [[queryCellsLocal]]
-    * driver-side; a local one makes the whole warm probe ≤2 jobs:
-    * the broadcast builds driver-side off the local relation and only
-    * the pruned-scan → heap stages run as jobs).
-    */
-  def probeBatchPersistedCells(
-      spark: SparkSession,
-      path: String,
-      qCells: DataFrame,
-      queryVec: String,
-      queryId: String,
-      vecCol: String,
-      idCol: String,
-      topK: Int
-  ): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
-    val scored = pruneToCells(LayoutCache.readCached(spark, path), qCells)
-      .join(broadcast(qCells), "cluster")
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col(vecCol), col(queryVec)))
-      .select(col(queryId), col(idCol), col("cluster").cast("long").as("cluster"), col("cos_sim"))
-    graft.plans.TopK
-      .perKey(scored, Seq(queryId), Seq(("cos_sim", false), (idCol, true)), topK)
-      .select(col(queryId), col(idCol), col("cluster"), col("cos_sim"), col("rk"))
-  }
-
-  /** [[probeBatchPersistedCells]] with a metadata PREFILTER applied
-    * INSIDE the partition-pruned scan — the BATCH face of
-    * [[probePersistedFilteredCells]] (the reference's filtered vector
-    * search, server.py `search` + LanceDB prefilter, at batch serving
-    * scale): the predicate lands before every query's top-k heap, so
-    * all k results per query satisfy it — postfiltering the unfiltered
-    * batch top-k could come back short (or empty) per query whenever
-    * the predicate is selective. At scale the cell union prunes
-    * partition directories, the predicate prunes row groups via
-    * parquet min/max stats (PartitionFilters + PushedFilters in
-    * explain), and only survivors reach the bounded per-query heaps.
-    * `keep` names metadata columns carried into the result.
-    */
-  def probeBatchPersistedFilteredCells(
-      spark: SparkSession,
-      path: String,
-      qCells: DataFrame,
-      queryVec: String,
-      queryId: String,
-      vecCol: String,
-      idCol: String,
-      prefilter: org.apache.spark.sql.Column,
+      k: Int,
+      cells: Seq[Int],
+      prefilter: Option[Column],
       keep: Seq[String],
-      topK: Int
-  ): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
-    // LIVE face before the per-query heaps (same contract as the
-    // single-query filtered probe above): the filtered family has no
-    // separate live variant, so tombstoned rows must never occupy heap
-    // slots here; memoized no-op on delete-free layouts.
-    val scored = liveFace(spark, path,
-        pruneToCells(LayoutCache.readCached(spark, path), qCells), idCol)
-      .filter(prefilter)
-      .join(broadcast(qCells), "cluster")
+      shortlist: Option[Shortlist]): DataFrame = {
+    graft.plans.GraftFunctions.register(scan.sparkSession)
+    val batch = queries.columns.contains(queryId)
+    require(batch || cells.nonEmpty, s"a one-query probe needs its cells (no `$queryId` column)")
+    val staticCells = if (batch) staticCellsOf(queries) else Some(cells)
+    val pruned = staticCells.fold(scan)(cs => scan.filter(col("cluster").isInCollection(cs)))
+    // a batch row meets only the queries probing its cell (`on`); the one
+    // query meets every row. A driver-known query side broadcasts without
+    // a job; an in-plan one may be unbounded (hard-negative mining), so
+    // the planner picks that join.
+    def withQueries(df: DataFrame, q: DataFrame, on: Seq[String]): DataFrame = {
+      val side = if (staticCells.isDefined) broadcast(q) else q
+      if (batch) df.join(side, on) else df.crossJoin(side)
+    }
+    def heap(df: DataFrame, score: String, ascending: Boolean, n: Int): DataFrame =
+      if (batch) graft.plans.TopK.perKey(df, Seq(queryId), Seq((score, ascending), (idCol, true)), n)
+      else df.orderBy(if (ascending) col(score).asc else col(score).desc, col(idCol)).limit(n)
+    val qKey = if (batch) Seq(col(queryId)) else Nil
+    val joined = withQueries(prefilter.fold(pruned)(pruned.filter), queries, Seq("cluster"))
+    val exact = shortlist.fold(joined) { s =>
+      // the vectors ride the shortlist only when the layout carries them
+      val carry = if (s.base.isEmpty) Seq(col(vecCol), col(queryVec)) else Nil
+      val candidates = heap(joined.withColumn(s.name, s.score)
+          .select((qKey ++ Seq(col(idCol), col("cluster")) ++ keep.map(col) ++ carry :+
+            col(s.name)): _*),
+        s.name, s.ascending, s.refine).drop("rk")
+      s.base.fold(candidates) { base =>
+        // corpus-sized base stays the probe side; the shortlist broadcasts
+        // and finds its query again by (query, cell)
+        val qVecs =
+          if (batch) queries.select(col(queryId), col("cluster"), col(queryVec))
+          else queries.select(queryVec)
+        withQueries(base.join(broadcast(candidates), idCol), qVecs, Seq(queryId, "cluster"))
+      }
+    }
+    val scored = exact
       .withColumn("cos_sim", VectorOps.cosineFastRounded(col(vecCol), col(queryVec)))
-      .select(Seq(col(queryId), col(idCol), col("cluster").cast("long").as("cluster")) ++
-        keep.map(col) :+ col("cos_sim"): _*)
-    graft.plans.TopK
-      .perKey(scored, Seq(queryId), Seq(("cos_sim", false), (idCol, true)), topK)
-      .select(Seq(col(queryId), col(idCol), col("cluster")) ++
-        keep.map(col) ++ Seq(col("cos_sim"), col("rk")): _*)
+      .select((qKey ++ Seq(col(idCol), col("cluster").cast("long").as("cluster")) ++
+        keep.map(col) ++ shortlist.map(s => col(s.name)) :+ col("cos_sim")): _*)
+    heap(scored, "cos_sim", ascending = false, k)
   }
 
   /** Exact top-k baseline for recall measurement. */

@@ -99,44 +99,6 @@ object Bq extends IndexMaintenance {
           (0 until nWords(dim)).map(w => col(s"bq_w$w")): _*),
       path, "overwrite")
 
-  /** Probe the persisted IVF+BQ layout: nProbe-cell partition-pruned
-    * scan of the packed words, hamming cut to `refine` (ties by id),
-    * exact cosine re-rank against the full-precision base joined back
-    * by id — the two memory levers compounded: scan nProbe/k of the
-    * corpus, at 1/32 of the float32 bytes.
-    */
-  def probeIvf(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      centroids: Array[Array[Double]],
-      base: DataFrame,
-      queryDf: DataFrame,
-      queryVec: String,
-      idCol: String,
-      vecCol: String,
-      nProbe: Int = 3,
-      k: Int = 10,
-      refine: Int = 40,
-      dim: Int = 64): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
-    val cells = Ann.nearestCells(centroids, Ann.queryVector(queryDf, queryVec), nProbe)
-    val candidates = liveFace(spark, path,
-        LayoutCache.readCached(spark, path).filter(col("cluster").isInCollection(cells)),
-        idCol)
-      .crossJoin(broadcast(pack(queryDf, queryVec, "_qw", dim)))
-      .withColumn("hamming", hammingExpr("bq_w", "_qw", dim))
-      .select(col(idCol), col("cluster").cast("long").as("cluster"), col("hamming"))
-      .orderBy(col("hamming"), col(idCol))
-      .limit(refine)
-    base
-      .join(broadcast(candidates), idCol)
-      .crossJoin(broadcast(queryDf))
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col(vecCol), col(queryVec)))
-      .select(col(idCol), col("cluster"), col("hamming"), col("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
-  }
-
   /** Exact top-k via hamming-candidate scan + cosine re-rank: scan
     * the packed codes for the `refine` hamming-nearest candidates
     * (ties broken by id — deterministic cut), then exact cosine over
@@ -255,8 +217,8 @@ object Bq extends IndexMaintenance {
   /** Persisted IVF+BQ layout over ROTATED sign bits: cluster assignment
     * stays in the ORIGINAL space (same fitted centroids and partition
     * pruning as [[writeIvfBq]]); only the packed words change.
-    */
-  /** `inlineVectors = true` stores the full vector next to the packed
+    *
+    * `inlineVectors = true` stores the full vector next to the packed
     * words — the bytes-vs-jobs dial (see [[Sq.writeIvfSq]]): the layout
     * grows from 1/32 to ~1.03× the vector bytes; the batch probe drops
     * the base-table refine join (single scan, ≤4 warm jobs —
@@ -279,101 +241,38 @@ object Bq extends IndexMaintenance {
             (if (inlineVectors) Seq(col(vecCol)) else Nil)): _*),
       path, "overwrite")
 
-  /** Probe the rotated IVF+BQ layout: pruned cells from the original
-    * query, hamming on rotated words, exact re-rank on the original
-    * base vectors — [[probeIvf]] with the rotation applied to the
-    * query's pack only.
+  /** Probe a persisted IVF+BQ layout ([[Ann.probe]]'s single/batch
+    * contract): the cell-pruned scan reads the packed sign words (1/32
+    * of the float32 bytes), XOR+popcount hamming against each query's
+    * pack cuts to `refine` candidates (ties by id), and the exact
+    * cosine re-rank reads the vectors from `base` by id (None: the
+    * layout was written with `inlineVectors = true`). `rot` serves a
+    * [[writeIvfBqRotated]] layout: cells still come from the ORIGINAL
+    * query, only the query's pack is rotated — computed once per query
+    * row on the broadcast side with the same [[rotateCol]] /
+    * [[packWordExpr]] chain the write used. Rotation preserves cosine,
+    * so the re-rank column is bit-identical to the plain probes'.
     */
-  /** Batch probe over the ROTATED persisted IVF+BQ layout — closes the
-    * batch matrix for the rotated-BQ family (plain/SQ/PQ/PQ-residual/
-    * MRL already have batch faces): per-query cell ranking joins the
-    * partition-pruned words scan, hamming runs on each query's ROTATED
-    * pack (computed once per (query, cell) row on the broadcast side
-    * via the same [[rotateCol]]/[[packWordExpr]] chain the write path
-    * used), per-query hamming prune and exact re-rank are bounded
-    * heaps, and only |Q|·refine rows touch the full-precision base.
-    * Rotation preserves cosine, so the re-rank column is bit-identical
-    * to the plain batch probes'.
-    */
-  def probeBatchIvfRotated(
+  def probeIvf(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      centroids: Array[Array[Double]],
-      base: DataFrame,
+      base: Option[DataFrame],
       queries: DataFrame,
       queryVec: String,
-      queryId: String,
       idCol: String,
       vecCol: String,
-      rot: Array[Array[Double]],
-      nProbe: Int = 3,
+      cells: Seq[Int] = Nil,
+      rot: Option[Array[Array[Double]]] = None,
       k: Int = 10,
       refine: Int = 40,
       dim: Int = 64,
-      qCellsPre: Option[DataFrame] = None,
-      vecInLayout: Boolean = false): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
-    val qCells = qCellsPre.getOrElse(
-      Ann.queryCells(queries, queryVec, queryId, centroids, nProbe))
+      queryId: String = "query_id"): DataFrame = {
     val qPacked = pack(
-      qCells.withColumn("_rq", rotateCol(col(queryVec), rot)), "_rq", "_qw", dim)
-      .select(Seq(col(queryId), col(queryVec), col("cluster")) ++
-        (0 until nWords(dim)).map(w => col(s"_qw$w")): _*)
-    val carry = if (vecInLayout) Seq(col(vecCol), col(queryVec)) else Nil
-    val approx = liveFace(spark, path,
-        Ann.pruneToCells(LayoutCache.readCached(spark, path), qCells), idCol)
-      .join(broadcast(qPacked), "cluster")
-      .withColumn("hamming", hammingExpr("bq_w", "_qw", dim))
-      .select(Seq(col(queryId), col(idCol), col("cluster").cast("long").as("cluster")) ++
-        carry :+ col("hamming"): _*)
-    val candidates = graft.plans.TopK
-      .perKey(approx, Seq(queryId), Seq(("hamming", true), (idCol, true)), refine)
-      .drop("rk")
-    val refined =
-      if (vecInLayout) candidates // vector rode the scan (inlineVectors layout)
-      else base
-        .join(broadcast(candidates), idCol)
-        .join(broadcast(queries.select(col(queryId), col(queryVec))), queryId)
-    refined
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col(vecCol), col(queryVec)))
-      .select(col(queryId), col(idCol), col("cluster"), col("hamming"), col("cos_sim"))
-      .transform(df => graft.plans.TopK
-        .perKey(df, Seq(queryId), Seq(("cos_sim", false), (idCol, true)), k))
-      .select(col(queryId), col(idCol), col("cluster"), col("hamming"),
-        col("cos_sim"), col("rk"))
-  }
-
-  def probeIvfRotated(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      centroids: Array[Array[Double]],
-      base: DataFrame,
-      queryDf: DataFrame,
-      queryVec: String,
-      idCol: String,
-      vecCol: String,
-      rot: Array[Array[Double]],
-      nProbe: Int = 3,
-      k: Int = 10,
-      refine: Int = 40,
-      dim: Int = 64): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
-    val cells = Ann.nearestCells(centroids, Ann.queryVector(queryDf, queryVec), nProbe)
-    val candidates = liveFace(spark, path,
-        LayoutCache.readCached(spark, path).filter(col("cluster").isInCollection(cells)),
-        idCol)
-      .crossJoin(broadcast(
-        pack(queryDf.withColumn("_rq", rotateCol(col(queryVec), rot)), "_rq", "_qw", dim)))
-      .withColumn("hamming", hammingExpr("bq_w", "_qw", dim))
-      .select(col(idCol), col("cluster").cast("long").as("cluster"), col("hamming"))
-      .orderBy(col("hamming"), col(idCol))
-      .limit(refine)
-    base
-      .join(broadcast(candidates), idCol)
-      .crossJoin(broadcast(queryDf))
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col(vecCol), col(queryVec)))
-      .select(col(idCol), col("cluster"), col("hamming"), col("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
+      queries.withColumn("_rq", rot.fold(col(queryVec))(rotateCol(col(queryVec), _))),
+      "_rq", "_qw", dim).drop("_rq")
+    Ann.probeScan(liveLayout(spark, path, idCol), qPacked, queryVec, queryId, vecCol, idCol,
+      k, cells, None, Nil,
+      Some(Ann.Shortlist("hamming", hammingExpr("bq_w", "_qw", dim), ascending = true,
+        refine, base)))
   }
 }

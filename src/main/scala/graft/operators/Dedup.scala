@@ -523,19 +523,22 @@ object Dedup {
     * sameResult substitution can never serve a previous invocation's
     * entry to a later run (a bench warm pass recomputes from parquet
     * by construction, not by pool-eviction luck — CacheSaltSpec pins
-    * this). The salt is dropped before the frame is handed back, so
-    * consumers see the original schema; retention stays bounded via
-    * [[retainCached]].
+    * this). The salt column takes a name none of the caller's columns
+    * has (case-insensitively, as Spark resolves names) and is dropped
+    * before the frame is handed back, so consumers see the original
+    * schema and values; retention stays bounded via [[retainCached]].
     */
   private val invNonce = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] def saltedCached(
       dfc: DataFrame,
       level: org.apache.spark.storage.StorageLevel =
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    val salted = dfc.withColumn("_inv", lit(invNonce.incrementAndGet()))
+    val salt = Iterator.iterate("_inv")("_" + _)
+      .find(n => !dfc.columns.exists(_.equalsIgnoreCase(n))).get
+    val salted = dfc.withColumn(salt, lit(invNonce.incrementAndGet()))
       .persist(level)
     retainCached(salted)
-    salted.drop("_inv")
+    salted.drop(salt)
   }
 
   /** Asymmetric CONTAINMENT pairs — excerpt/quote detection:

@@ -387,7 +387,7 @@ object Fts extends IndexMaintenance {
   }
 
   /** Batch semantic retrieval from the index sidecar — the third leg
-    * of the batch trio ([[probeBatch]] for BM25, Ann.probeBatch for
+    * of the batch trio ([[probeBatch]] for BM25, [[Ann.probe]]'s batch face for
     * vectors): every text query's cosine top-k in ONE docdims pass.
     * Query-side dims and norms are O(queries × query terms) and
     * broadcast; the sparse integer dot products make the scores exact
@@ -475,7 +475,7 @@ object Fts extends IndexMaintenance {
   }
 
   /** Batch BM25 over the persisted index — the text-side analog of
-    * [[Ann.probeBatch]] (offline eval / distillation-query workloads):
+    * [[Ann.probe]]'s batch face (offline eval / distillation-query workloads):
     * every query's top-k in ONE pruned postings pass. The scan is
     * pruned to the UNION of all query terms (pushed to the term-sorted
     * layout), the query table and the per-term df table broadcast

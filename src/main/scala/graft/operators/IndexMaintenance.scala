@@ -115,6 +115,14 @@ trait IndexMaintenance {
         df.join(broadcast(tombstones(spark, dir)), Seq(idCol), "left_anti")
     }
 
+  /** The persisted layout at `dir` as its probes scan it: the memoized
+    * listing ([[LayoutCache.readCached]]) through [[liveFace]] — the
+    * input unchanged on a delete-free layout, so every probe is live at
+    * no cost until something is deleted.
+    */
+  final def liveLayout(spark: SparkSession, dir: String, idCol: String): DataFrame =
+    liveFace(spark, dir, LayoutCache.readCached(spark, dir), idCol)
+
   /** Ids from `ids` NOT yet tombstoned — the idempotent-delete filter
     * (repeat calls and overlapping batches must not double-decrement a
     * family's driver-side stats).

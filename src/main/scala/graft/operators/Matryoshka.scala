@@ -46,8 +46,8 @@ object Matryoshka extends IndexMaintenance {
     * delta is `writeClustered(assign+slice, path, "append")`, exactly
     * the [[Ann.appendToIndex]] shape. Full-precision vectors stay in
     * the base table; the refine re-rank fetches them by id.
-    */
-  /** `inlineVectors = true` stores the full vector next to the prefix —
+    *
+    * `inlineVectors = true` stores the full vector next to the prefix —
     * the bytes-vs-jobs dial (see [[Sq.writeIvfSq]]): layout grows from
     * dPrefix/dim to 1 + dPrefix/dim of the vector bytes; the batch
     * probe drops the base-table refine join (single scan, ≤4 warm
@@ -104,105 +104,35 @@ object Matryoshka extends IndexMaintenance {
     }
   }
 
-  /** Probe the persisted IVF+MRL layout: nProbe-cell partition-pruned
-    * scan of the PREFIX sidecar, prefix-cosine prune to `refine`
-    * candidates, exact full-dim re-rank against the base table joined
-    * back by id — IVF pruning compounded with the prefix's 4× byte
-    * reduction, the same two-lever shape as [[Sq.probeIvfSq]] /
-    * [[Bq.probeIvf]]. The stored prefix elements are bit-identical to
-    * `slice(vec, 1, dPrefix)` of the base vector (no quantization), so
-    * the whole probe stays exactly DuckDB-twinnable given the fitted
-    * IVF centroids.
+  /** Probe the persisted IVF+MRL layout ([[Ann.probe]]'s single/batch
+    * contract): the cell-pruned scan reads the PREFIX sidecar, the
+    * prefix cosine prunes each query to `refine` candidates, and the
+    * exact full-dim re-rank reads the vectors from `base` by id (None:
+    * the layout was written with `inlineVectors = true`) — IVF pruning
+    * compounded with the prefix's 4× byte reduction, the same two-lever
+    * shape as [[Sq.probeIvf]] / [[Bq.probeIvf]]. The stored prefix
+    * elements are bit-identical to `slice(vec, 1, dPrefix)` of the base
+    * vector (no quantization), so the whole probe stays exactly
+    * DuckDB-twinnable given the fitted IVF centroids.
     */
-  def probeIvfMrl(
+  def probeIvf(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      centroids: Array[Array[Double]],
-      base: DataFrame,
-      queryDf: DataFrame,
-      queryVec: String,
-      idCol: String,
-      vecCol: String,
-      dPrefix: Int = 16,
-      nProbe: Int = 3,
-      k: Int = 10,
-      refine: Int = 40,
-      cellsPre: Option[Seq[Int]] = None): DataFrame = {
-    val cells = cellsPre.getOrElse(
-      Ann.nearestCells(centroids, Ann.queryVector(queryDf, queryVec), nProbe))
-    val pruned = LayoutCache.readCached(spark, path)
-      .filter(col("cluster").isInCollection(cells))
-    val candidates = liveFace(spark, path, pruned, idCol)
-      .crossJoin(broadcast(queryDf))
-      .withColumn("approx_sim",
-        VectorOps.cosineRounded(col("mrl_prefix"), slice(col(queryVec), 1, dPrefix)))
-      .select(col(idCol), col("cluster").cast("long").as("cluster"), col("approx_sim"))
-      .orderBy(col("approx_sim").desc, col(idCol))
-      .limit(refine)
-    base
-      .join(broadcast(candidates), idCol)
-      .crossJoin(broadcast(queryDf))
-      .withColumn("cos_sim", VectorOps.cosineRounded(col(vecCol), col(queryVec)))
-      .select(col(idCol), col("cluster"), col("approx_sim"), col("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Batch probe over the persisted IVF+MRL layout — the
-    * [[Sq.probeBatchIvfSq]] serving shape with the prefix sidecar in
-    * place of the int8 codes: each query's nProbe nearest cells are
-    * ranked in-plan ([[Ann.queryCells]]), the cells join the
-    * partition-pruned prefix scan, the prefix cosine prunes per query
-    * to `refine` candidates with a bounded heap
-    * ([[graft.plans.TopK.perKey]] — no full sort), and only k·refine
-    * candidates per query touch the full-precision base for the exact
-    * re-rank. Closes the batch-probe matrix (plain/PQ/SQ/MRL): the
-    * prefix is stored floats, so approx_sim is bit-identical to a
-    * `slice`-then-cosine of the base vector and the whole probe keeps
-    * an exact DuckDB twin given the fitted centroids.
-    */
-  def probeBatchIvfMrl(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      centroids: Array[Array[Double]],
-      base: DataFrame,
+      base: Option[DataFrame],
       queries: DataFrame,
       queryVec: String,
-      queryId: String,
       idCol: String,
       vecCol: String,
+      cells: Seq[Int] = Nil,
       dPrefix: Int = 16,
-      nProbe: Int = 3,
       k: Int = 10,
       refine: Int = 40,
-      qCellsPre: Option[DataFrame] = None,
-      vecInLayout: Boolean = false): DataFrame = {
-    val qCells = qCellsPre.getOrElse(
-      Ann.queryCells(queries, queryVec, queryId, centroids, nProbe))
-    val carry = if (vecInLayout) Seq(col(vecCol), col(queryVec)) else Nil
-    val approx = liveFace(spark, path,
-        Ann.pruneToCells(LayoutCache.readCached(spark, path), qCells), idCol)
-      .join(broadcast(qCells), "cluster")
-      .withColumn("approx_sim",
-        VectorOps.cosineRounded(col("mrl_prefix"), slice(col(queryVec), 1, dPrefix)))
-      .select(Seq(col(queryId), col(idCol), col("cluster").cast("long").as("cluster")) ++
-        carry :+ col("approx_sim"): _*)
-    val candidates = graft.plans.TopK
-      .perKey(approx, Seq(queryId), Seq(("approx_sim", false), (idCol, true)), refine)
-      .drop("rk")
-    val refined =
-      if (vecInLayout) candidates // vector rode the scan (inlineVectors layout)
-      else base
-        .join(broadcast(candidates), idCol)
-        .join(broadcast(queries.select(col(queryId), col(queryVec))), queryId)
-    refined
-      .withColumn("cos_sim", VectorOps.cosineRounded(col(vecCol), col(queryVec)))
-      .select(col(queryId), col(idCol), col("cluster"), col("approx_sim"), col("cos_sim"))
-      .transform(df => graft.plans.TopK
-        .perKey(df, Seq(queryId), Seq(("cos_sim", false), (idCol, true)), k))
-      .select(col(queryId), col(idCol), col("cluster"), col("approx_sim"),
-        col("cos_sim"), col("rk"))
-  }
+      queryId: String = "query_id"): DataFrame =
+    Ann.probeScan(liveLayout(spark, path, idCol), queries, queryVec, queryId, vecCol, idCol,
+      k, cells, None, Nil,
+      Some(Ann.Shortlist("approx_sim",
+        VectorOps.cosineFastRounded(col("mrl_prefix"), slice(col(queryVec), 1, dPrefix)),
+        ascending = false, refine, base)))
 
   /** Two-stage probe: prefix-cosine prune to `refine` candidates
     * (TakeOrderedAndProject — no full sort), exact full-dim cosine

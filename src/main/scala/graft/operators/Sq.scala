@@ -52,8 +52,8 @@ object Sq extends IndexMaintenance {
     * compounding the two levers (scan nProbe/k of the corpus, at a
     * quarter of the bytes). Full-precision vectors stay in the BASE
     * table; the refine re-rank fetches them by id.
-    */
-  /** `inlineVectors = true` writes the full-precision vector INTO the
+    *
+    * `inlineVectors = true` writes the full-precision vector INTO the
     * sidecar next to the codes — the bytes-vs-jobs storage dial: the
     * layout grows from 0.25× to 1.25× the vector bytes, but the batch
     * probe becomes a SINGLE SCAN (no base-table join for the refine),
@@ -75,105 +75,35 @@ object Sq extends IndexMaintenance {
           (if (inlineVectors) Seq(col(vecCol)) else Nil): _*),
       path, "overwrite")
 
-  /** Probe the persisted IVF+SQ8 layout: nProbe-cell partition-pruned
-    * scan of the CODES sidecar, approximate-cosine prune to `refine`
-    * candidates, then exact re-rank against the full-precision `base`
-    * table joined back by id (the candidate set broadcasts — at scale
-    * this is a point-lookup against a bucketed-by-id base layout, not
-    * a second corpus pass).
+  /** Probe the persisted IVF+SQ8 layout ([[Ann.probe]]'s single/batch
+    * contract): the cell-pruned scan reads the int8 CODES (a quarter of
+    * the float32 bytes), the approximate cosine against the raw codes
+    * (the per-vector scale cancels) prunes each query to `refine`
+    * candidates, and ONLY that bounded set touches full vectors for
+    * the exact re-rank — fetched from `base` by id (the shortlist
+    * broadcasts; at scale a point lookup against a bucketed-by-id
+    * base, not a second corpus pass), or read off the scan itself when
+    * `base` is None (a layout written with `inlineVectors = true`:
+    * one pruned scan, ≤4 warm batch jobs, identical results —
+    * ProbeJobCountSpec).
     */
-  def probeIvfSq(
+  def probeIvf(
       spark: SparkSession,
       path: String,
-      centroids: Array[Array[Double]],
-      base: DataFrame,
-      queryDf: DataFrame,
-      queryVec: String,
-      idCol: String,
-      vecCol: String,
-      nProbe: Int = 3,
-      k: Int = 10,
-      refine: Int = 40,
-      cellsPre: Option[Seq[Int]] = None): DataFrame = {
-    val cells = cellsPre.getOrElse(
-      Ann.nearestCells(centroids, Ann.queryVector(queryDf, queryVec), nProbe))
-    val candidates = liveFace(spark, path,
-        LayoutCache.readCached(spark, path).filter(col("cluster").isInCollection(cells)),
-        idCol)
-      .crossJoin(broadcast(queryDf))
-      .withColumn("approx_sim", VectorOps.cosineRounded(col("sq_codes"), col(queryVec)))
-      .select(col(idCol), col("cluster").cast("long").as("cluster"), col("approx_sim"))
-      .orderBy(col("approx_sim").desc, col(idCol))
-      .limit(refine)
-    base
-      .join(broadcast(candidates), idCol)
-      .crossJoin(broadcast(queryDf))
-      .withColumn("cos_sim", VectorOps.cosineRounded(col(vecCol), col(queryVec)))
-      .select(col(idCol), col("cluster"), col("approx_sim"), col("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Batch probe over the persisted IVF+SQ8 layout — the compressed
-    * counterpart of [[Ann.probeBatchPersisted]]: every query ranks its
-    * own nProbe cells ([[Ann.queryCells]]), the per-query cell table
-    * joins the int8 CODES sidecar on its partition column (dynamic
-    * partition pruning narrows the scan to the probed-cell union, at a
-    * quarter of the float32 bytes), each query approximate-prunes to
-    * `refine` candidates with a bounded heap, and ONLY that bounded
-    * set touches the full-precision base table for the exact re-rank.
-    * At 100 TB this is the batch serving shape for a compressed index:
-    * the corpus-sized scan reads codes, never vectors; the vector
-    * reads are |Q|×refine point lookups against a bucketed-by-id base.
-    */
-  /** `vecInLayout = true` serves a layout written with
-    * `inlineVectors = true`: the refine re-rank reads the vector column
-    * riding the sidecar scan instead of joining `base` back by id —
-    * one pruned scan, ≤4 warm jobs, identical results (same scores,
-    * same heaps, same tie-breaks; pinned in ProbeJobCountSpec).
-    */
-  def probeBatchIvfSq(
-      spark: SparkSession,
-      path: String,
-      centroids: Array[Array[Double]],
-      base: DataFrame,
+      base: Option[DataFrame],
       queries: DataFrame,
       queryVec: String,
-      queryId: String,
       idCol: String,
       vecCol: String,
-      nProbe: Int = 3,
+      cells: Seq[Int] = Nil,
       k: Int = 10,
       refine: Int = 40,
-      qCellsPre: Option[DataFrame] = None,
-      vecInLayout: Boolean = false): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
-    val qCells = qCellsPre.getOrElse(
-      Ann.queryCells(queries, queryVec, queryId, centroids, nProbe))
-    val scan = liveFace(spark, path,
-      Ann.pruneToCells(LayoutCache.readCached(spark, path), qCells), idCol)
-    val carry = if (vecInLayout) Seq(col(vecCol), col(queryVec)) else Nil
-    val approx = scan
-      .join(broadcast(qCells), "cluster")
-      .withColumn("approx_sim", VectorOps.cosineFastRounded(col("sq_codes"), col(queryVec)))
-      .select(Seq(col(queryId), col(idCol), col("cluster").cast("long").as("cluster")) ++
-        carry :+ col("approx_sim"): _*)
-    val candidates = graft.plans.TopK
-      .perKey(approx, Seq(queryId), Seq(("approx_sim", false), (idCol, true)), refine)
-      .drop("rk")
-    val refined =
-      if (vecInLayout) candidates // vector rode the scan — no base join
-      else base // corpus-sized: stays the probe side, candidates broadcast
-        .join(broadcast(candidates), idCol)
-        .join(broadcast(queries.select(col(queryId), col(queryVec))), queryId)
-    refined
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col(vecCol), col(queryVec)))
-      .select(col(queryId), col(idCol), col("cluster"), col("approx_sim"), col("cos_sim"))
-      .transform(df => graft.plans.TopK
-        .perKey(df, Seq(queryId), Seq(("cos_sim", false), (idCol, true)), k))
-      .select(col(queryId), col(idCol), col("cluster"), col("approx_sim"),
-        col("cos_sim"), col("rk"))
-  }
+      queryId: String = "query_id"): DataFrame =
+    Ann.probeScan(liveLayout(spark, path, idCol), queries, queryVec, queryId, vecCol, idCol,
+      k, cells, None, Nil,
+      Some(Ann.Shortlist("approx_sim",
+        VectorOps.cosineFastRounded(col("sq_codes"), col(queryVec)), ascending = false,
+        refine, base)))
 
   /** Residual-quantized IVF+SQ8 (the FAISS IVF,SQ8 residual variant):
     * quantize `normalize(v) − centroid[cluster]` instead of `v`. On

@@ -159,19 +159,21 @@ object StreamPipeline {
   /** Run independent per-batch actions CONCURRENTLY (guide §2.6 — the
     * Fts.writeSegments recipe: actions are only sequential because the
     * driver calls them sequentially; a micro-batch body paying k
-    * sequential job latencies pays max-of-k instead). Awaits ALL,
-    * propagates the first failure, always shuts the pool down — no
-    * timing bleed outside the batch body.
+    * sequential job latencies pays max-of-k instead). Awaits EVERY
+    * action — also after one fails, so no sibling write is still
+    * landing files when the batch body rethrows — then propagates the
+    * first failure and shuts the pool down: no timing bleed outside the
+    * batch body.
     */
-  private def concurrently(actions: (() => Unit)*): Unit = {
+  private[graft] def concurrently(actions: (() => Unit)*): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(actions.size)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
       import scala.concurrent.{Await, Future}
-      Await.result(
-        Future.sequence(actions.map(a => Future(a()))),
-        scala.concurrent.duration.Duration.Inf): Unit
+      val running = actions.map(a => Future(a()))
+      running.map(f => Await.ready(f, scala.concurrent.duration.Duration.Inf).value.get)
+        .collectFirst { case scala.util.Failure(e) => throw e }: Unit
     } finally pool.shutdown()
   }
 
@@ -224,12 +226,9 @@ object StreamPipeline {
     // a caller that already derived the probe cells (Queries.streamPipeline
     // computes them for the oracle artifact) skips the probe-side
     // re-collect of the query vector — one fewer driver job
-    cells match {
-      case Some(cs) => Ann.probePersistedCells(spark, indexDir, cs, queryDf,
-        "q_vec", "embedding", "doc_id", k)
-      case None => Ann.probePersisted(spark, indexDir, centroids, queryDf,
-        "q_vec", "embedding", "doc_id", nProbe, k)
-    }
+    Ann.probe(Ann.liveLayout(spark, indexDir, "doc_id"), queryDf, "q_vec", "embedding", "doc_id",
+      k, cells.getOrElse(
+        Ann.nearestCells(centroids, Ann.queryVector(queryDf, "q_vec"), nProbe)))
   }
 
   /** One-row hashed-BoW embedding of a query text (the same featurizer

@@ -271,12 +271,12 @@ object ScaleCheck {
         .createTempDirectory("graft_scale_ivf_").toString + "/idx"
       Ann.writeIndex(ivfIdx, ivfDir)
       println(f"[scale] ivf_build nlist=$nlist%-17d ${(System.nanoTime() - tb) / 1e9}%7.2f s  ($nVecs vecs)")
-      time(f"ivf_probe nlist=$nlist nprobe=4",
-        Ann.probePersisted(spark, ivfDir, ivfIdx.centroids, ivfQuery,
-          "q_vec", "embedding", "vec_id", nProbe = 4, topK = 10))
-      val got = Ann.probePersisted(spark, ivfDir, ivfIdx.centroids, ivfQuery,
-          "q_vec", "embedding", "vec_id", nProbe = 4, topK = 10)
-        .collect().map(_.getLong(0)).toSet
+      val ivfCells = Ann.nearestCells(ivfIdx.centroids, Ann.queryVector(ivfQuery, "q_vec"), 4)
+      def ivfProbe(dir: String): DataFrame =
+        Ann.probe(Ann.liveLayout(spark, dir, "vec_id"), ivfQuery, "q_vec", "embedding",
+          "vec_id", topK = 10, cells = ivfCells)
+      time(f"ivf_probe nlist=$nlist nprobe=4", ivfProbe(ivfDir))
+      val got = ivfProbe(ivfDir).collect().map(_.getLong(0)).toSet
       val want = Ann.exact(corpusVecs, ivfQuery, "embedding", "q_vec", "vec_id", 10)
         .collect().map(_.getLong(0)).toSet
       println(f"[scale] ivf_recall nlist=$nlist         ${(got & want).size / want.size.toDouble}%.2f")
@@ -305,18 +305,14 @@ object ScaleCheck {
       Ann.deleteFromIndex(spark, ivfDir,
         corpusVecs.filter(pmod(col("vec_id"), lit(10)) === 3).select("vec_id"), "vec_id")
       println(f"[scale] ivf_delete 10pct             ${(System.nanoTime() - td) / 1e9}%7.2f s")
-      time(f"ivf_probe_live nlist=$nlist",
-        Ann.probePersistedLive(spark, ivfDir, ivfIdx.centroids, ivfQuery,
-          "q_vec", "embedding", "vec_id", nProbe = 4, topK = 10))
+      time(f"ivf_probe_live nlist=$nlist", ivfProbe(ivfDir))
       val filesBefore = parquetFiles(ivfDir)
       val compDir = java.nio.file.Files
         .createTempDirectory("graft_scale_compact_").toString + "/idx"
       val tc = System.nanoTime()
       Ann.compact(spark, ivfDir, compDir, "vec_id")
       println(f"[scale] ivf_compact                  ${(System.nanoTime() - tc) / 1e9}%7.2f s  (files $filesBefore -> ${parquetFiles(compDir)})")
-      time(f"ivf_probe_compacted nlist=$nlist",
-        Ann.probePersisted(spark, compDir, ivfIdx.centroids, ivfQuery,
-          "q_vec", "embedding", "vec_id", nProbe = 4, topK = 10))
+      time(f"ivf_probe_compacted nlist=$nlist", ivfProbe(compDir))
     }
     // Two-level fit at the same scales (section `ivf2`): the flat fit's
     // measured wall (PLANS.md) against the hierarchical one, same
@@ -345,15 +341,15 @@ object ScaleCheck {
         .createTempDirectory("graft_scale_ivf2_").toString + "/idx"
       Ann.writeIndex(idx2, dir2)
       println(f"[scale] ivf2_build nlist=$nlist%-16d ${(System.nanoTime() - tb) / 1e9}%7.2f s  ($nVecs vecs)")
-      time(f"ivf2_probe nlist=$nlist nprobe=4",
-        Ann.probePersisted(spark, dir2, idx2.centroids, ivfQuery,
-          "q_vec", "embedding", "vec_id", nProbe = 4, topK = 10))
+      def ivf2Probe(np: Int): DataFrame =
+        Ann.probe(Ann.liveLayout(spark, dir2, "vec_id"), ivfQuery, "q_vec", "embedding",
+          "vec_id", topK = 10,
+          cells = Ann.nearestCells(idx2.centroids, Ann.queryVector(ivfQuery, "q_vec"), np))
+      time(f"ivf2_probe nlist=$nlist nprobe=4", ivf2Probe(4))
       val want = Ann.exact(corpusVecs, ivfQuery, "embedding", "q_vec", "vec_id", 10)
         .collect().map(_.getLong(0)).toSet
       Seq(4, 8).foreach { np =>
-        val got = Ann.probePersisted(spark, dir2, idx2.centroids, ivfQuery,
-            "q_vec", "embedding", "vec_id", nProbe = np, topK = 10)
-          .collect().map(_.getLong(0)).toSet
+        val got = ivf2Probe(np).collect().map(_.getLong(0)).toSet
         println(f"[scale] ivf2_recall nlist=$nlist np=$np   ${(got & want).size / want.size.toDouble}%.2f")
       }
     }
@@ -568,8 +564,8 @@ object ScaleCheck {
       recall(s"ivf nProbe=$np") { v =>
         val cells = Ann.nearestCells(idx.centroids, v.map(_.toDouble), np)
         scanned += cells.map(c => sizes.getOrElse(c, 0L)).sum
-        Ann.probePersisted(spark, ivfDir, idx.centroids, qDf(v),
-            "q_vec", "embedding", "vec_id", nProbe = np, topK = 10)
+        Ann.probe(Ann.liveLayout(spark, ivfDir, "vec_id"), qDf(v), "q_vec", "embedding",
+            "vec_id", topK = 10, cells = cells)
           .collect().map(_.getLong(0)).toSet
       }
       println(f"[structured]   scanned ${100.0 * scanned / (8.0 * n)}%.3f%% of corpus rows per query")
@@ -615,20 +611,20 @@ object ScaleCheck {
         }
     }
 
+    def cells4(v: Array[Float]): Seq[Int] = Ann.nearestCells(idx.centroids, v.map(_.toDouble), 4)
     val sqDir = dir + "/sq"
     Sq.writeIvfSq(sqDir, corpus, "embedding", "vec_id", idx.centroids)
     for (rf <- Seq(40, 100))
       recall(s"ivfsq nProbe=4 refine=$rf") { v =>
-        Sq.probeIvfSq(spark, sqDir, idx.centroids, corpus, qDf(v),
-            "q_vec", "vec_id", "embedding", nProbe = 4, k = 10, refine = rf)
+        Sq.probeIvf(spark, sqDir, Some(corpus), qDf(v), "q_vec", "vec_id", "embedding",
+            cells = cells4(v), k = 10, refine = rf)
           .collect().map(_.getLong(0)).toSet
       }
 
     for (rf <- Seq(40, 100))
       recall(s"ivfsq_residual nProbe=4 refine=$rf") { v =>
-        val cells = Ann.nearestCells(idx.centroids, v.map(_.toDouble), 4)
         Sq.residualProbe(corpus, qDf(v), idx.centroids,
-            "embedding", "q_vec", "vec_id", cells, k = 10, refine = rf)
+            "embedding", "q_vec", "vec_id", cells4(v), k = 10, refine = rf)
           .collect().map(_.getLong(0)).toSet
       }
 
@@ -636,8 +632,8 @@ object ScaleCheck {
     Bq.writeIvfBq(bqDir, corpus, "embedding", "vec_id", idx.centroids)
     for (rf <- Seq(40, 100))
       recall(s"ivfbq nProbe=4 refine=$rf") { v =>
-        Bq.probeIvf(spark, bqDir, idx.centroids, corpus, qDf(v),
-            "q_vec", "vec_id", "embedding", nProbe = 4, k = 10, refine = rf)
+        Bq.probeIvf(spark, bqDir, Some(corpus), qDf(v), "q_vec", "vec_id", "embedding",
+            cells = cells4(v), k = 10, refine = rf)
           .collect().map(_.getLong(0)).toSet
       }
 
@@ -646,8 +642,8 @@ object ScaleCheck {
     Bq.writeIvfBqRotated(bqrDir, corpus, "embedding", "vec_id", idx.centroids, rot)
     for (rf <- Seq(40, 100))
       recall(s"ivfbq_rotated nProbe=4 refine=$rf") { v =>
-        Bq.probeIvfRotated(spark, bqrDir, idx.centroids, corpus, qDf(v),
-            "q_vec", "vec_id", "embedding", rot, nProbe = 4, k = 10, refine = rf)
+        Bq.probeIvf(spark, bqrDir, Some(corpus), qDf(v), "q_vec", "vec_id", "embedding",
+            cells = cells4(v), rot = Some(rot), k = 10, refine = rf)
           .collect().map(_.getLong(0)).toSet
       }
 
@@ -655,8 +651,8 @@ object ScaleCheck {
     Matryoshka.writeIvfMrl(mrlDir, corpus, "embedding", "vec_id", idx.centroids, dPrefix = 16)
     for (rf <- Seq(40, 100))
       recall(s"ivfmrl d'=16 nProbe=4 refine=$rf") { v =>
-        Matryoshka.probeIvfMrl(spark, mrlDir, idx.centroids, corpus, qDf(v),
-            "q_vec", "vec_id", "embedding", dPrefix = 16, nProbe = 4, k = 10, refine = rf)
+        Matryoshka.probeIvf(spark, mrlDir, Some(corpus), qDf(v), "q_vec", "vec_id",
+            "embedding", cells = cells4(v), dPrefix = 16, k = 10, refine = rf)
           .collect().map(_.getLong(0)).toSet
       }
   }

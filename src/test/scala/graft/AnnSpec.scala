@@ -14,7 +14,8 @@ class AnnSpec extends SparkSpec {
     val embs = Tables.embeddings(spark, sf)
     val queryDf = embs.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
     val index = Ann.build(embs, "embedding", "vec_id", k = 10, seed = 42)
-    val probe = Ann.probe(index, queryDf, "q_vec", nProbe = 3, topK = 10)
+    val probe = Ann.probe(index.assigned, queryDf, "q_vec", "embedding", "vec_id", topK = 10,
+        cells = cellsOf(index.centroids, queryDf, 3))
       .select("vec_id").as[Long].collect().toSet
     val exact = Ann.exact(embs, queryDf, "embedding", "q_vec", "vec_id", topK = 10)
       .select("vec_id").as[Long].collect().toSet
@@ -48,10 +49,12 @@ class AnnSpec extends SparkSpec {
     val index = Ann.build(embs, "embedding", "vec_id", k = 10, seed = 42)
     val dir = java.nio.file.Files.createTempDirectory("annappend").toString + "/idx"
     Ann.writeIndex(index, dir)
+    def probe(): Set[Long] =
+      Ann.probe(Ann.liveLayout(spark, dir, "vec_id"), queryDf, "q_vec", "embedding", "vec_id",
+          topK = 10, cells = cellsOf(index.centroids, queryDf, 3))
+        .select("vec_id").as[Long].collect().toSet
 
-    val before = Ann.probePersisted(spark, dir, index.centroids, queryDf,
-      "q_vec", "embedding", "vec_id", nProbe = 3, topK = 10)
-      .select("vec_id").as[Long].collect().toSet
+    val before = probe()
 
     // Upsert a near-copy of the query vector under a fresh id: it must
     // land in the query's own cell and dominate the probe's top-k.
@@ -59,9 +62,7 @@ class AnnSpec extends SparkSpec {
       .select(lit(999999L).as("vec_id"), lit("new").as("label"), col("q_vec").as("embedding"))
     Ann.appendToIndex(dir, delta, "embedding", index.centroids)
 
-    val after = Ann.probePersisted(spark, dir, index.centroids, queryDf,
-      "q_vec", "embedding", "vec_id", nProbe = 3, topK = 10)
-      .select("vec_id").as[Long].collect().toSet
+    val after = probe()
     assert(after.contains(999999L), s"appended vector not visible to probe: $after")
     // old neighbors unchanged modulo the one slot the new exact-match takes
     assert((before -- after).size <= 1, s"old recall degraded: before=$before after=$after")
@@ -114,23 +115,6 @@ class AnnSpec extends SparkSpec {
     assert(mixedNew < mixedOld, s"rebuild did not improve fit: $mixedNew vs $mixedOld")
   }
 
-  test("probeBatch equals per-query single probes (same cells, same ranking)") {
-    val embs = Tables.embeddings(spark, sf)
-    val index = Ann.buildCached(sf, embs, "embedding", "vec_id", k = 10, seed = 42)
-    // shape: 8 queries x top-5, rk 1..5 per query
-    val byQ = Queries.annBatchProbe(spark, sf).collect().groupBy(_.getLong(0))
-    assert(byQ.keySet == (0L until 8L).toSet)
-    byQ.values.foreach(rows => assert(rows.map(_.getLong(4)).sorted.toSeq == (1L to 5L)))
-    // each query's hits equal the single-query probe over ITS OWN cells
-    (0L until 8L).foreach { qid =>
-      val qDf = embs.filter(col("vec_id") === qid).select(col("embedding").as("q_vec"))
-      val single = Ann.probe(index, qDf, "q_vec", nProbe = 3, topK = 5)
-        .select("vec_id").as[Long].collect().toSeq
-      val got = byQ(qid).sortBy(_.getLong(4)).map(_.getLong(1)).toSeq
-      assert(got == single, s"query $qid: batch $got vs single $single")
-    }
-  }
-
   test("probeBatchPersisted equals probeBatch and prunes the partitioned layout") {
     val embs = Tables.embeddings(spark, sf)
     val index = Ann.buildCached(sf, embs, "embedding", "vec_id", k = 10, seed = 42)
@@ -171,15 +155,15 @@ class AnnSpec extends SparkSpec {
     assert(rows.length == 10)
     assert(rows.map(_._3).toSeq == rows.map(_._3).sortBy(-_).toSeq, "cos_sim not descending")
     // cross-check: same centroids applied in-memory over ALL vectors
-    // (base ∪ delta) through probeCells must reproduce the persisted path
+    // (base ∪ delta) through the in-memory probe must reproduce the persisted path
     val embs = Tables.embeddings(spark, sf)
     val base = embs.filter(col("vec_id") % 10 =!= 7)
     val index = Ann.buildCached(sf + "#incr-base", base, "embedding", "vec_id", k = 10, seed = 42)
     val queryDf = embs.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
     val cells = Ann.nearestCells(index.centroids, Ann.queryVector(queryDf, "q_vec"), 3)
     val inMem = Ann
-      .probeCells(index.copy(assigned = Ann.assign(embs, "embedding", index.centroids)),
-        queryDf, "q_vec", cells, topK = 10)
+      .probe(Ann.assign(embs, "embedding", index.centroids), queryDf, "q_vec", "embedding",
+        "vec_id", topK = 10, cells = cells)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(rows.toSeq == inMem.toSeq, s"persisted vs in-memory diverge:\n$rows\n$inMem")
     // the 10% delta is present in the probed layout (visibility, not luck)
@@ -229,21 +213,24 @@ class AnnSpec extends SparkSpec {
       "compaction must drop tombstoned rows physically")
   }
 
-  test("probePersistedLive works on a delete-free layout (no tombstone sidecar)") {
+  test("persisted probe of a delete-free layout equals the in-memory Index probe") {
     val embs = Tables.embeddings(spark, sf)
     val queryDf = embs.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
     val index = Ann.buildCached(sf, embs, "embedding", "vec_id", k = 10, seed = 42)
     val path = java.nio.file.Files
       .createTempDirectory("graft_ann_nodelete").resolve("idx").toString
     Ann.writeIndex(index, path)
-    // never deleted from: the live probe must equal the plain persisted probe
-    val live = Ann.probePersistedLive(spark, path, index.centroids,
-      queryDf, "q_vec", "embedding", "vec_id", nProbe = 3, topK = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    val plain = Ann.probePersisted(spark, path, index.centroids,
-      queryDf, "q_vec", "embedding", "vec_id", nProbe = 3, topK = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    assert(live == plain, s"delete-free live probe diverges:\n$live\n$plain")
+    // never deleted from: no sidecar, so the live face is the raw layout
+    assert(!Ann.hasTombstones(path))
+    val cells = cellsOf(index.centroids, queryDf, 3)
+    val persisted = Ann.probe(Ann.liveLayout(spark, path, "vec_id"), queryDf, "q_vec",
+        "embedding", "vec_id", topK = 10, cells = cells)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val inMem = Ann.probe(index.assigned, queryDf, "q_vec", "embedding", "vec_id", topK = 10,
+        cells = cells)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(persisted.length == 10)
+    assert(persisted == inMem, s"delete-free persisted probe diverges:\n$persisted\n$inMem")
   }
 
   test("stats books balance: counts sum to the corpus, bounds hold, skew detected") {

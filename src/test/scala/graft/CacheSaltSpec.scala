@@ -53,4 +53,16 @@ class CacheSaltSpec extends SparkSpec {
     assert(rels.nonEmpty, "expected CacheManager substitution on sameResult plan")
     p1.unpersist()
   }
+
+  test("a caller column named like the salt keeps its schema and values") {
+    val base = spark.range(0, 100)
+      .select(col("id"), (col("id") * 2).as("_inv"), lit("x").as("__inv"))
+    val c = Dedup.saltedCached(base)
+    assert(c.columns.toSeq == Seq("id", "_inv", "__inv"))
+    assert(c.schema == base.schema)
+    assert(c.orderBy("id").collect().toSeq == base.orderBy("id").collect().toSeq,
+      "the caller's _inv column must come back unchanged")
+    assert(inMemRelations(c).size == 1, "the salted frame must still be cached")
+    c.unpersist()
+  }
 }

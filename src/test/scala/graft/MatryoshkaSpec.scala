@@ -75,7 +75,8 @@ class MatryoshkaSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_mrl_spec").toString + "/idx"
     Matryoshka.writeIvfMrl(dir, corpus, "embedding", "vec_id", index.centroids, dPrefix = 16)
     val nProbe = 2
-    val cells = Ann.nearestCells(index.centroids, Ann.queryVector(q, "q_vec"), nProbe).toSet
+    val probeCells = cellsOf(index.centroids, q, nProbe)
+    val cells = probeCells.toSet
 
     // Driver recompute: NearestCentroid semantics (normalize, sequential
     // squared euclidean, first-minimum tie-break), cell filter, prefix
@@ -100,8 +101,8 @@ class MatryoshkaSpec extends SparkSpec {
         .sortBy { case (id, _, c) => (-c, id) }.take(5)
 
     def got(): Seq[(Long, Double, Double)] =
-      Matryoshka.probeIvfMrl(spark, dir, index.centroids, corpus, q,
-          "q_vec", "vec_id", "embedding", dPrefix = 16, nProbe = nProbe, k = 5, refine = 20)
+      Matryoshka.probeIvf(spark, dir, Some(corpus), q, "q_vec", "vec_id", "embedding",
+          cells = probeCells, dPrefix = 16, k = 5, refine = 20)
         .collect().map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3))).toSeq
 
     val before = got()
@@ -122,8 +123,8 @@ class MatryoshkaSpec extends SparkSpec {
     Matryoshka.appendToIndex(dir, delta, "embedding", "vec_id", index.centroids, dPrefix = 16)
     val corpusPlus = corpus.unionByName(delta)
     def gotOver(c: org.apache.spark.sql.DataFrame): Seq[(Long, Double, Double)] =
-      Matryoshka.probeIvfMrl(spark, dir, index.centroids, c, q,
-          "q_vec", "vec_id", "embedding", dPrefix = 16, nProbe = nProbe, k = 5, refine = 20)
+      Matryoshka.probeIvf(spark, dir, Some(c), q, "q_vec", "vec_id", "embedding",
+          cells = probeCells, dPrefix = 16, k = 5, refine = 20)
         .collect().map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3))).toSeq
     val withDelta = gotOver(corpusPlus)
     assert(withDelta.head._1 == newId && withDelta.head._3 == 1.0,
@@ -134,8 +135,8 @@ class MatryoshkaSpec extends SparkSpec {
     val compDir = java.nio.file.Files.createTempDirectory("graft_mrl_comp").toString + "/idx"
     Matryoshka.compact(spark, dir, compDir, "vec_id")
     assert(!Matryoshka.hasTombstones(compDir), "compaction must clear the sidecar")
-    val compacted = Matryoshka.probeIvfMrl(spark, compDir, index.centroids, corpusPlus, q,
-        "q_vec", "vec_id", "embedding", dPrefix = 16, nProbe = nProbe, k = 5, refine = 20)
+    val compacted = Matryoshka.probeIvf(spark, compDir, Some(corpusPlus), q,
+        "q_vec", "vec_id", "embedding", cells = probeCells, dPrefix = 16, k = 5, refine = 20)
       .collect().map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3))).toSeq
     assert(compacted == withDelta, s"compacted:\n$compacted\nlive:\n$withDelta")
     assert(!compacted.exists(_._1 == topId), "tombstoned row must stay gone after compaction")
@@ -162,16 +163,16 @@ class MatryoshkaSpec extends SparkSpec {
     Matryoshka.writeIvfMrl(dir, corpus, "embedding", "vec_id", index.centroids, dPrefix = 16)
     val queries = corpus.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
-    val batch = Matryoshka.probeBatchIvfMrl(spark, dir, index.centroids,
-        corpus, queries, "q_vec", "query_id", "vec_id", "embedding",
-        dPrefix = 16, nProbe = 2, k = 5, refine = 20)
+    val batch = Matryoshka.probeIvf(spark, dir, Some(corpus),
+        Ann.queryCells(queries, "q_vec", "query_id", index.centroids, nProbe = 2),
+        "q_vec", "vec_id", "embedding", dPrefix = 16, k = 5, refine = 20)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getDouble(4)))
       .groupBy(_._1)
     (0L until 4L).foreach { qid =>
       val q = Seq(Tuple1(rows(qid.toInt)._2)).toDF("q_vec")
-      val single = Matryoshka.probeIvfMrl(spark, dir, index.centroids, corpus, q,
-          "q_vec", "vec_id", "embedding", dPrefix = 16, nProbe = 2, k = 5, refine = 20)
+      val single = Matryoshka.probeIvf(spark, dir, Some(corpus), q, "q_vec", "vec_id",
+          "embedding", cells = cellsOf(index.centroids, q, 2), dPrefix = 16, k = 5, refine = 20)
         .collect().map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3))).toSeq
       val got = batch(qid).sortBy(t => (-t._4, t._2)).map(t => (t._2, t._3, t._4)).toSeq
       assert(got == single, s"query $qid:\n batch: $got\n single: $single")

@@ -51,6 +51,18 @@ class ProbeJobCountSpec extends SparkSpec {
     }
   }
 
+  test("warm single-query two-table refine probes are pinned (SQ/MRL/BQ)") {
+    // the codes/prefix/signs sidecar probes re-rank against the base
+    // table by id, so the shortlist broadcast is materialized by its own
+    // job(s) before the exact top-k; bounds = the warm counts
+    // `runMain graft.tools.JobAudit <sf0.001> ivfsq_probe,ivfmrl_probe,ivfbq_probe`
+    // reports
+    for ((q, bound) <- Seq("ivfsq_probe" -> 3, "ivfmrl_probe" -> 3, "ivfbq_probe" -> 4)) {
+      val n = warmJobs(q)
+      assert(n <= bound, s"$q fired $n jobs warm (bound $bound)")
+    }
+  }
+
   test("warm batch persisted probes are bounded (no per-probe ranking jobs)") {
     // SINGLE-SCAN layouts (vec rides in the index: plain, PQ, residual
     // PQ, the two-level composition): pruned scan + bounded-heap
@@ -94,7 +106,6 @@ class ProbeJobCountSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val e = Tables.embeddings(spark, sf)
     val index = Ann.buildCached(sf, e, "embedding", "vec_id", k = 10, seed = 42)
-    val base = e.select("vec_id", "embedding")
     val qRows = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
     val qLocal = spark.createDataFrame(
@@ -110,16 +121,12 @@ class ProbeJobCountSpec extends SparkSpec {
     Bq.writeIvfBqRotated(root + "/bq", e, "embedding", "vec_id", index.centroids, rot,
       inlineVectors = true)
     val variants: Seq[(String, () => org.apache.spark.sql.DataFrame, String)] = Seq(
-      ("sq_inline", () => Sq.probeBatchIvfSq(spark, root + "/sq", index.centroids, base,
-        qLocal, "q_vec", "query_id", "vec_id", "embedding", nProbe = 3, k = 5, refine = 20,
-        qCellsPre = Some(qCells), vecInLayout = true), "ann_batch_sq"),
-      ("mrl_inline", () => Matryoshka.probeBatchIvfMrl(spark, root + "/mrl", index.centroids,
-        base, qLocal, "q_vec", "query_id", "vec_id", "embedding", dPrefix = 16,
-        nProbe = 3, k = 5, refine = 20, qCellsPre = Some(qCells), vecInLayout = true),
-        "ann_batch_mrl"),
-      ("bq_inline", () => Bq.probeBatchIvfRotated(spark, root + "/bq", index.centroids,
-        base, qLocal, "q_vec", "query_id", "vec_id", "embedding", rot,
-        nProbe = 3, k = 5, refine = 20, qCellsPre = Some(qCells), vecInLayout = true),
+      ("sq_inline", () => Sq.probeIvf(spark, root + "/sq", None, qCells, "q_vec", "vec_id",
+        "embedding", k = 5, refine = 20), "ann_batch_sq"),
+      ("mrl_inline", () => Matryoshka.probeIvf(spark, root + "/mrl", None, qCells, "q_vec",
+        "vec_id", "embedding", dPrefix = 16, k = 5, refine = 20), "ann_batch_mrl"),
+      ("bq_inline", () => Bq.probeIvf(spark, root + "/bq", None, qCells, "q_vec", "vec_id",
+        "embedding", rot = Some(rot), k = 5, refine = 20),
         "ann_batch_bq_rotated"))
     for ((name, probe, registered) <- variants) {
       probe().count() // cold: codegen + listing memos

@@ -27,11 +27,13 @@ class SkewAndLayoutSpec extends SparkSpec {
 
     val queryDf = Tables.embeddings(spark, sf).filter(col("vec_id") === 0)
       .select(col("embedding").as("q_vec"))
-    val probed = Ann.probePersisted(spark, dir, index.centroids,
-      queryDf, "q_vec", "embedding", "vec_id", nProbe = 3, topK = 10)
+    val cells = cellsOf(index.centroids, queryDf, 3)
+    val probed = Ann.probe(Ann.liveLayout(spark, dir, "vec_id"), queryDf, "q_vec", "embedding",
+      "vec_id", topK = 10, cells = cells)
 
     // identical results to the in-memory probe
-    val inMem = Ann.probe(index, queryDf, "q_vec", nProbe = 3, topK = 10)
+    val inMem = Ann.probe(index.assigned, queryDf, "q_vec", "embedding", "vec_id", topK = 10,
+        cells = cells)
       .select("vec_id").as[Long].collect().toSet
     assert(probed.select("vec_id").as[Long].collect().toSet == inMem)
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -10,6 +10,11 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** The `nProbe` IVF cells nearest a one-row query relation's `q_vec`. */
+  def cellsOf(centroids: Array[Array[Double]], queryDf: DataFrame, nProbe: Int): Seq[Int] =
+    graft.operators.Ann.nearestCells(centroids,
+      graft.operators.Ann.queryVector(queryDf, "q_vec"), nProbe)
 }
 
 object SparkSpec {

@@ -45,8 +45,8 @@ class SqSpec extends SparkSpec {
     val sidecarCols = spark.read.parquet(path).columns.toSet
     assert(sidecarCols == Set("vec_id", "sq_scale", "sq_codes", "cluster"))
 
-    val probe = Sq.probeIvfSq(spark, path, index.centroids, corpus, queryDf,
-      "q_vec", "vec_id", "embedding")
+    val probe = Sq.probeIvf(spark, path, Some(corpus), queryDf, "q_vec", "vec_id", "embedding",
+      cells = cellsOf(index.centroids, queryDf, 3))
     // cluster pruning reaches the file level
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), "probe lost partition pruning")
@@ -71,8 +71,9 @@ class SqSpec extends SparkSpec {
     Sq.writeIvfSq(path, corpus, "embedding", "vec_id", index.centroids)
     val queries = embs.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
-    val batch = Sq.probeBatchIvfSq(spark, path, index.centroids, corpus, queries,
-      "q_vec", "query_id", "vec_id", "embedding", nProbe = 3, k = 5, refine = 20)
+    val batch = Sq.probeIvf(spark, path, Some(corpus),
+      Ann.queryCells(queries, "q_vec", "query_id", index.centroids, nProbe = 3),
+      "q_vec", "vec_id", "embedding", k = 5, refine = 20)
       .collect()
       .groupBy(_.getLong(0))
       .view.mapValues(_.sortBy(_.getLong(5)).map(r =>
@@ -81,8 +82,8 @@ class SqSpec extends SparkSpec {
     assert(batch.keySet == Set(0L, 1L, 2L, 3L), s"got ${batch.keySet}")
     (0L until 4L).foreach { qid =>
       val qDf = embs.filter(col("vec_id") === qid).select(col("embedding").as("q_vec"))
-      val single = Sq.probeIvfSq(spark, path, index.centroids, corpus, qDf,
-        "q_vec", "vec_id", "embedding", nProbe = 3, k = 5, refine = 20)
+      val single = Sq.probeIvf(spark, path, Some(corpus), qDf, "q_vec", "vec_id", "embedding",
+        cells = cellsOf(index.centroids, qDf, 3), k = 5, refine = 20)
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
       assert(batch(qid) == single, s"query $qid: batch ${batch(qid)} != single $single")

@@ -25,8 +25,8 @@ class StreamPipelineSpec extends SparkSpec {
         spark.range(1).select(lit("spark filter join stream").as("text"), col("id")),
         "text", 64, Seq("id"))
       .select(col("embedding").as("q_vec"))
-    val expected = Ann.probePersisted(spark, batchDir, idx.centroids, queryDf,
-      "q_vec", "embedding", "doc_id", nProbe = 3, topK = 10)
+    val expected = Ann.probe(Ann.liveLayout(spark, batchDir, "doc_id"), queryDf, "q_vec",
+        "embedding", "doc_id", topK = 10, cells = cellsOf(idx.centroids, queryDf, 3))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
 
     assert(got == expected, s"streamed probe diverged:\n$got\nvs\n$expected")
@@ -125,5 +125,29 @@ class StreamPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(path)
       .filter(org.apache.spark.sql.functions.col("vec_id") % 10 === 7).count() > 0,
       "streamed delta rows must land in the layout")
+  }
+
+  test("concurrently: a failed action rethrows only after every sibling action has finished") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    // the sibling stands in for a parquet append still landing files: it
+    // is running when the other action fails, and only the test thread
+    // releases it early — so it can finish before `concurrently` returns
+    // only if `concurrently` waits for it (up to the 2 s release timeout)
+    val siblingRunning = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val err = intercept[IllegalStateException] {
+      StreamPipeline.concurrently(
+        () => { siblingRunning.await(); throw new IllegalStateException("write failed") },
+        () => {
+          siblingRunning.countDown()
+          release.await(2, TimeUnit.SECONDS)
+          siblingDone.set(true)
+        })
+    }
+    val finishedBeforeReturn = siblingDone.get()
+    release.countDown()
+    assert(err.getMessage == "write failed")
+    assert(finishedBeforeReturn, "concurrently returned while a sibling action was still running")
   }
 }

@@ -380,8 +380,8 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
 
-    val after = Ann.probePersisted(spark, dir, index.centroids, queryDf,
-      "q_vec", "embedding", "vec_id", nProbe = 3, topK = 10)
+    val after = Ann.probe(Ann.liveLayout(spark, dir, "vec_id"), queryDf, "q_vec", "embedding",
+        "vec_id", topK = 10, cells = cellsOf(index.centroids, queryDf, 3))
       .select("vec_id").as[Long].collect().toSet
     assert(after.contains(888888L), s"streamed vector not probe-visible: $after")
     // the appended file landed under the assigned cluster partition

@@ -64,7 +64,8 @@ class TwoLevelSpec extends SparkSpec {
     def recallAt(id: Long, nProbe: Int): Double = {
       val exact = Ann.exact(embs, qDf(id), "embedding", "q_vec", "vec_id", topK = 10)
         .select("vec_id").as[Long].collect().toSet
-      val probe = Ann.probe(index, qDf(id), "q_vec", nProbe = nProbe, topK = 10)
+      val probe = Ann.probe(index.assigned, qDf(id), "q_vec", "embedding", "vec_id", topK = 10,
+          cells = cellsOf(index.centroids, qDf(id), nProbe))
         .select("vec_id").as[Long].collect().toSet
       (probe & exact).size.toDouble / exact.size
     }
