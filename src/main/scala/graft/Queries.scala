@@ -3095,10 +3095,9 @@ object Queries {
     val qDf = queryVecLocal(s, dir)
     OracleArtifacts.pq =
       Some((model, Pq.distanceTable(model, Ann.queryVector(qDf, "q_vec"))))
-    Pq.probe(
-      Pq.encode(e.filter(col("vec_id") =!= 0), "embedding", model),
-      qDf, model, "embedding", "q_vec", "vec_id", k = 10
-    )
+    Pq.adcProbe(Pq.encode(e.filter(col("vec_id") =!= 0), "embedding", model),
+      model, qDf, "q_vec", "embedding", "vec_id", k = 10, refine = 100)
+      .select("vec_id", "cos_sim")
   }
 
   /** Batch IVF probe: 8 queries, each pruned to its own 3 nearest cells
@@ -3177,12 +3176,7 @@ object Queries {
     // the memoized centroid fit above
     val path = graft.operators.LayoutCache.getOrWrite(s"ivfpq_full:$dir")(p =>
       Pq.writeIvfPq(p, e, "embedding", "vec_id", index.centroids, model))
-    Pq.probeBatchIvfPq(s, path, index.centroids, model,
-      batchQueriesLocal(s, dir),
-      "q_vec", "query_id", "embedding", "vec_id", nProbe = 3, k = 5, refineFactor = 10,
-      qCellsPre = Some(Ann.queryCellsLocal(batchQueriesLocal(s, dir),
-        "q_vec", "query_id", index.centroids, nProbe = 3)))
-      .orderBy("query_id", "rk")
+    batchPqProbe(s, dir, path, index.centroids, model)
   }
 
   /** [[annBatchProbe]] over the persisted IVF+MRL layout — closes the
@@ -3225,23 +3219,17 @@ object Queries {
     // residual family — the round-12 operating-point study at 1M
     // anisotropic vectors measured it at recall 0.862 (refine 25), the
     // full-SQ8/IVF-ceiling parity point, vs 0.688 for 8x16 at the SAME
-    // 8-byte code budget (PLANS.md round-12 table). Since round 13 the
-    // single-query ivfpq_residual runs at this same 8x256 point by
-    // routing through probeBatchIvfPqResidual at |Q| = 1 — for both,
-    // the per-(query, cell) ADC tables ride as broadcast-side HOF
-    // columns, never plan literals, so code count doesn't inflate the
-    // plan (the round-8 janino lesson).
+    // 8-byte code budget (PLANS.md round-12 table). The single-query
+    // ivfpq_residual runs at this same 8x256 point as the |Q| = 1
+    // batch — for both, the per-(query, cell) ADC tables ride as
+    // broadcast-side HOF columns, never plan literals, so code count
+    // doesn't inflate the plan (the round-8 janino lesson).
     val model = Pq.trainResidualCached(dir, e, "embedding", "vec_id", index.centroids,
       m = 8, codes = 256)
     OracleArtifacts.annBatchPqr = Some((index.centroids, model))
     val path = graft.operators.LayoutCache.getOrWrite(s"ivfpqres_full:$dir")(p =>
       Pq.writeIvfPqResidual(p, e, "embedding", "vec_id", index.centroids, model))
-    Pq.probeBatchIvfPqResidual(s, path, index.centroids, model,
-      batchQueriesLocal(s, dir),
-      "q_vec", "query_id", "embedding", "vec_id", nProbe = 3, k = 5, refineFactor = 10,
-      qCellsPre = Some(Ann.queryCellsLocal(batchQueriesLocal(s, dir),
-        "q_vec", "query_id", index.centroids, nProbe = 3)))
-      .orderBy("query_id", "rk")
+    batchPqProbe(s, dir, path, index.centroids, model)
   }
 
   /** [[annBatchPersisted]] over the ROTATED persisted IVF+BQ layout —
@@ -3318,12 +3306,7 @@ object Queries {
     val path = graft.operators.LayoutCache.getOrWrite(s"ann2lpqr:$dir")(p =>
       Pq.writeIvfPqResidualAssigned(p, Ann.assignTwoLevel(e, "embedding", two),
         "embedding", "vec_id", index.centroids, model))
-    Pq.probeBatchIvfPqResidual(s, path, index.centroids, model,
-      batchQueriesLocal(s, dir),
-      "q_vec", "query_id", "embedding", "vec_id", nProbe = 3, k = 5, refineFactor = 10,
-      qCellsPre = Some(Ann.queryCellsLocal(batchQueriesLocal(s, dir),
-        "q_vec", "query_id", index.centroids, nProbe = 3)))
-      .orderBy("query_id", "rk")
+    batchPqProbe(s, dir, path, index.centroids, model)
   }
 
   /** [[annBatchPersisted]] with the reference's metadata PREFILTER in
@@ -3388,13 +3371,17 @@ object Queries {
     (two, model, index.centroids, path)
   }
 
-  private def twoLevelLifecycleProbe(s: SparkSession, dir: String,
-      cents: Array[Array[Double]], model: Pq.Model, path: String): DataFrame =
-    Pq.probeBatchIvfPqResidual(s, path, cents, model,
-      batchQueriesLocal(s, dir),
-      "q_vec", "query_id", "embedding", "vec_id", nProbe = 3, k = 5, refineFactor = 10,
-      qCellsPre = Some(Ann.queryCellsLocal(batchQueriesLocal(s, dir),
-        "q_vec", "query_id", cents, nProbe = 3)))
+  /** The 8-query batch over a persisted IVF-PQ layout (global or
+    * residual — the model says which) that every `ann_batch_pq*` and
+    * two-level PQ key shares: cells ranked on the driver, 3 per query,
+    * top 5 after a 50-candidate ADC shortlist.
+    */
+  private def batchPqProbe(s: SparkSession, dir: String, path: String,
+      cents: Array[Array[Double]], model: Pq.Model): DataFrame =
+    Pq.probeIvf(s, path, cents, model,
+      Ann.queryCellsLocal(batchQueriesLocal(s, dir), "q_vec", "query_id", cents, nProbe = 3),
+      "q_vec", "embedding", "vec_id", nProbe = 3, k = 5, refineFactor = 10)
+      .drop("adc_dist")
       .orderBy("query_id", "rk")
 
   /** The flagship layout's delta maintenance fed from a STREAM — the
@@ -3422,7 +3409,7 @@ object Queries {
         index.centroids, model, deltaFilter = col("vec_id") % 10 === 7)
     }
     OracleArtifacts.annTwoLevelStream = Some((two, model))
-    twoLevelLifecycleProbe(s, dir, index.centroids, model, path)
+    batchPqProbe(s, dir, path, index.centroids, model)
   }
 
   /** LIVE probe of the maintained two-level residual layout: base +
@@ -3437,7 +3424,7 @@ object Queries {
     */
   def annTwoLevelLive(s: SparkSession, dir: String): DataFrame = {
     val (_, model, cents, path) = twoLevelLifecycleLayout(s, dir)
-    twoLevelLifecycleProbe(s, dir, cents, model, path)
+    batchPqProbe(s, dir, path, cents, model)
   }
 
   /** COMPACTION closes the flagship lifecycle triangle: the tombstoned
@@ -3452,7 +3439,7 @@ object Queries {
     val (_, model, cents, path) = twoLevelLifecycleLayout(s, dir)
     val compacted = graft.operators.LayoutCache.getOrWrite(s"ann2lpqr_life_compact:$dir")(
       p => Pq.compact(s, path, p, "vec_id"))
-    twoLevelLifecycleProbe(s, dir, cents, model, compacted)
+    batchPqProbe(s, dir, compacted, cents, model)
   }
 
   /** Full persisted IVF-PQ probe — the reference's actual index type
@@ -3476,13 +3463,14 @@ object Queries {
     OracleArtifacts.ivfpq = Some(
       (index.centroids, Ann.nearestCells(index.centroids, qv, 3), model,
         Pq.distanceTable(model, qv)))
-    Pq.probeIvfPq(s, path, index.centroids, model, qDf, "q_vec", "embedding", "vec_id",
+    Pq.probeIvf(s, path, index.centroids, model, qDf, "q_vec", "embedding", "vec_id",
       nProbe = 3, k = 10)
+      .select("vec_id", "cos_sim")
   }
 
   /** RESIDUAL IVF-PQ probe — FAISS's actual IVF,PQ form
     * ([[graft.operators.Pq.writeIvfPqResidual]]/
-    * [[graft.operators.Pq.probeIvfPqResidual]]; reference:
+    * [[graft.operators.Pq.probeIvf]]; reference:
     * store.py:274's IVF_PQ index type): codebooks train on
     * normalize(v) − centroid[cell] residuals, so the 16 codes per
     * subspace encode WITHIN-cell structure — on anisotropic corpora
@@ -3490,19 +3478,19 @@ object Queries {
     * (measured 0.075 recall in the round-11 structured study) while
     * residual ADC ranks by ||qn − vn||² exactly (the centroid term
     * cancels). Probe: partition-pruned scan of 3 cells, per-cell
-    * residual ADC tables as driver literals (CASE over cells — tiny
-    * plan), exact re-rank of the top 100.
+    * residual ADC tables as broadcast-side HOF columns, exact re-rank
+    * of the top 100.
     */
   def ivfpqResidual(s: SparkSession, dir: String): DataFrame = {
     val e = embs(s, dir)
     val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
     // registered at the PRODUCTION operating point m=8 × codes=256
     // (round-12 study: recall 0.862 vs 0.688 for 8×16 at the same
-    // 8-byte budget, PLANS.md) — possible since round 13 because the
-    // single query routes through the BATCH machinery at |Q| = 1: the
-    // per-cell ADC tables ride as broadcast-side HOF columns instead
-    // of plan-literal CASE tables, so code count no longer inflates
-    // the plan (the round-8 janino lesson, retired for this probe).
+    // 8-byte budget, PLANS.md) — possible because Pq.probeIvf runs a
+    // residual single query as the |Q| = 1 batch: the per-cell ADC
+    // tables ride as broadcast-side HOF columns, never plan literals,
+    // so code count does not inflate the plan (the round-8 janino
+    // lesson).
     val model = Pq.trainResidualCached(dir, e, "embedding", "vec_id", index.centroids,
       m = 8, codes = 256)
     val path = graft.operators.LayoutCache.getOrWrite(s"ivfpqres256_no_qvec:$dir")(p =>
@@ -3511,11 +3499,8 @@ object Queries {
     val qv = queryVecArr(s, dir)
     val cells = Ann.nearestCells(index.centroids, qv, 3)
     OracleArtifacts.ivfpqResidual = Some((index.centroids, cells, model))
-    val q = queryVecLocal(s, dir).withColumn("query_id", lit(0L))
-    Pq.probeBatchIvfPqResidual(s, path, index.centroids, model, q,
-      "q_vec", "query_id", "embedding", "vec_id", nProbe = 3, k = 10, refineFactor = 10,
-      qCellsPre = Some(Ann.queryCellsLocal(q, "q_vec", "query_id",
-        index.centroids, nProbe = 3)))
+    Pq.probeIvf(s, path, index.centroids, model, queryVecLocal(s, dir),
+      "q_vec", "embedding", "vec_id", nProbe = 3, k = 10, refineFactor = 10)
       .select(col("vec_id"), col("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
   }

@@ -546,25 +546,28 @@ object Ann extends IndexMaintenance {
     * is already known on the driver, so the probe applies it as a
     * STATIC partition filter — stronger than DPP (pruned at plan time,
     * no subquery execution) and visible as `PartitionFilters:
-    * [cluster IN (...)]` in explain.
+    * [cluster IN (...)]` in explain. The local relation is found
+    * through the row-preserving nodes a family stacks on the query
+    * side (a projection that passes `cluster` through — BQ's query
+    * pack, PQ's ADC tables — and a broadcast hint).
     */
-  private[operators] def staticCellsOf(qCells: DataFrame): Option[Seq[Int]] =
-    qCells.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val idx = lr.output.indexWhere(_.name == "cluster")
-        if (idx < 0) None
-        else Some(lr.data.map(_.getInt(idx)).distinct.sorted.toSeq)
+  private[operators] def staticCellsOf(qCells: DataFrame): Option[Seq[Int]] = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, ResolvedHint}
+    def cells(plan: LogicalPlan, cluster: Attribute): Option[Seq[Int]] = plan match {
+      case lr: LocalRelation =>
+        val idx = lr.output.indexWhere(_.exprId == cluster.exprId)
+        if (idx < 0) None else Some(lr.data.map(_.getInt(idx)).distinct.sorted.toSeq)
+      case p: Project if p.projectList.exists {
+            case a: Attribute => a.exprId == cluster.exprId
+            case _ => false
+          } => cells(p.child, cluster)
+      case h: ResolvedHint => cells(h.child, cluster)
       case _ => None
     }
-
-  /** Apply [[staticCellsOf]] to a layout scan when the cell union is
-    * driver-known; pass through (DPP regime) otherwise.
-    */
-  private[operators] def pruneToCells(scan: DataFrame, qCells: DataFrame): DataFrame =
-    staticCellsOf(qCells) match {
-      case Some(cells) => scan.filter(col("cluster").isInCollection(cells))
-      case None        => scan
-    }
+    val plan = qCells.queryExecution.analyzed
+    plan.output.find(_.name == "cluster").flatMap(cells(plan, _))
+  }
 
   /** A compressed family's shortlist stage (SQ codes, MRL prefix, BQ
     * sign bits): the approximate score over a joined (layout row,
@@ -579,7 +582,8 @@ object Ann extends IndexMaintenance {
     * `index.assigned` in memory, [[liveLayout]] on disk.
     *
     * The query relation decides the shape. Without a `queryId` column
-    * it is ONE query probing `cells` ([[nearestCells]]): a static
+    * it is ONE query probing `cells` ([[nearestCells]]; none = every
+    * row, the flat probes of an unpartitioned relation): a static
     * partition filter, the query row broadcast against the pruned
     * scan, and an `orderBy.limit` heap. With one it is a BATCH whose
     * per-query cells ride in its `cluster` column ([[queryCellsLocal]]
@@ -612,6 +616,7 @@ object Ann extends IndexMaintenance {
     * exact re-rank → heap to k (the two middle steps only when a
     * [[Shortlist]] is given). See [[probe]] for the single/batch
     * contract; a family supplies its (live) scan and shortlist only.
+    * The output carries `cluster` when the scan has one.
     */
   private[operators] def probeScan(
       scan: DataFrame,
@@ -627,28 +632,29 @@ object Ann extends IndexMaintenance {
       shortlist: Option[Shortlist]): DataFrame = {
     graft.plans.GraftFunctions.register(scan.sparkSession)
     val batch = queries.columns.contains(queryId)
-    require(batch || cells.nonEmpty, s"a one-query probe needs its cells (no `$queryId` column)")
-    val staticCells = if (batch) staticCellsOf(queries) else Some(cells)
+    // the one query without cells scans every row (a flat probe)
+    val staticCells =
+      if (batch) staticCellsOf(queries) else Some(cells).filter(_.nonEmpty)
     val pruned = staticCells.fold(scan)(cs => scan.filter(col("cluster").isInCollection(cs)))
     // a batch row meets only the queries probing its cell (`on`); the one
-    // query meets every row. A driver-known query side broadcasts without
-    // a job; an in-plan one may be unbounded (hard-negative mining), so
-    // the planner picks that join.
+    // query meets every row. The one-row or a driver-known query side
+    // broadcasts without a job; an in-plan one may be unbounded
+    // (hard-negative mining), so the planner picks that join.
     def withQueries(df: DataFrame, q: DataFrame, on: Seq[String]): DataFrame = {
-      val side = if (staticCells.isDefined) broadcast(q) else q
+      val side = if (!batch || staticCells.isDefined) broadcast(q) else q
       if (batch) df.join(side, on) else df.crossJoin(side)
     }
     def heap(df: DataFrame, score: String, ascending: Boolean, n: Int): DataFrame =
       if (batch) graft.plans.TopK.perKey(df, Seq(queryId), Seq((score, ascending), (idCol, true)), n)
       else df.orderBy(if (ascending) col(score).asc else col(score).desc, col(idCol)).limit(n)
     val qKey = if (batch) Seq(col(queryId)) else Nil
+    val cluster = if (scan.columns.contains("cluster")) Seq("cluster") else Nil
     val joined = withQueries(prefilter.fold(pruned)(pruned.filter), queries, Seq("cluster"))
     val exact = shortlist.fold(joined) { s =>
       // the vectors ride the shortlist only when the layout carries them
       val carry = if (s.base.isEmpty) Seq(col(vecCol), col(queryVec)) else Nil
       val candidates = heap(joined.withColumn(s.name, s.score)
-          .select((qKey ++ Seq(col(idCol), col("cluster")) ++ keep.map(col) ++ carry :+
-            col(s.name)): _*),
+          .select((qKey ++ (Seq(idCol) ++ cluster ++ keep).map(col) ++ carry :+ col(s.name)): _*),
         s.name, s.ascending, s.refine).drop("rk")
       s.base.fold(candidates) { base =>
         // corpus-sized base stays the probe side; the shortlist broadcasts
@@ -661,7 +667,7 @@ object Ann extends IndexMaintenance {
     }
     val scored = exact
       .withColumn("cos_sim", VectorOps.cosineFastRounded(col(vecCol), col(queryVec)))
-      .select((qKey ++ Seq(col(idCol), col("cluster").cast("long").as("cluster")) ++
+      .select((qKey ++ (col(idCol) +: cluster.map(c => col(c).cast("long").as(c))) ++
         keep.map(col) ++ shortlist.map(s => col(s.name)) :+ col("cos_sim")): _*)
     heap(scored, "cos_sim", ascending = false, k)
   }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -102,7 +101,8 @@ object Bq extends IndexMaintenance {
   /** Exact top-k via hamming-candidate scan + cosine re-rank: scan
     * the packed codes for the `refine` hamming-nearest candidates
     * (ties broken by id — deterministic cut), then exact cosine over
-    * that bounded set. Output (id, hamming, cos_sim) ranked by the
+    * that bounded set — the flat [[probeIvf]] over the whole corpus,
+    * packing in place. Output (id, hamming, cos_sim) ranked by the
     * exact score.
     */
   def probe(
@@ -114,19 +114,7 @@ object Bq extends IndexMaintenance {
       k: Int = 10,
       refine: Int = 40,
       dim: Int = 64
-  ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val cand = pack(corpus, vecCol, dim = dim)
-      .crossJoin(broadcast(pack(queryDf, queryVec, "_qw", dim)))
-      .withColumn("hamming", hammingExpr("bq_w", "_qw", dim))
-      .orderBy(col("hamming"), col(idCol))
-      .limit(refine)
-    cand
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col(vecCol), col(queryVec)))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), col("hamming"), col("cos_sim"))
-  }
+  ): DataFrame = flat(corpus, queryDf, vecCol, queryVec, idCol, None, k, refine, dim)
 
   // ── Rotated BQ (isotropization pre-step) ─────────────────────────────
 
@@ -199,20 +187,29 @@ object Bq extends IndexMaintenance {
       k: Int = 10,
       refine: Int = 40,
       dim: Int = 64
-  ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val cand = pack(corpus.withColumn("_rv", rotateCol(col(vecCol), rot)), "_rv", dim = dim)
-      .crossJoin(broadcast(
-        pack(queryDf.withColumn("_rq", rotateCol(col(queryVec), rot)), "_rq", "_qw", dim)))
-      .withColumn("hamming", hammingExpr("bq_w", "_qw", dim))
-      .orderBy(col("hamming"), col(idCol))
-      .limit(refine)
-    cand
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col(vecCol), col(queryVec)))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), col("hamming"), col("cos_sim"))
-  }
+  ): DataFrame = flat(corpus, queryDf, vecCol, queryVec, idCol, Some(rot), k, refine, dim)
+
+  private def flat(corpus: DataFrame, queryDf: DataFrame, vecCol: String, queryVec: String,
+                   idCol: String, rot: Option[Array[Array[Double]]], k: Int, refine: Int,
+                   dim: Int): DataFrame =
+    Ann.probeScan(packed(corpus, vecCol, "bq_w", rot, dim),
+      packed(queryDf, queryVec, "_qw", rot, dim), queryVec, "query_id", vecCol, idCol, k,
+      Nil, None, Nil, hammingShortlist(refine, dim, None))
+
+  /** `df` plus the sign words of `vecCol` — of its rotation when `rot`
+    * is given — as `<prefix>0 …`.
+    */
+  private def packed(df: DataFrame, vecCol: String, prefix: String,
+                     rot: Option[Array[Array[Double]]], dim: Int): DataFrame =
+    pack(df.withColumn("_rv", rot.fold(col(vecCol))(rotateCol(col(vecCol), _))),
+      "_rv", prefix, dim).drop("_rv")
+
+  /** The BQ shortlist: hamming of the layout's words against the
+    * query's, cut to `refine` per query (ties by id).
+    */
+  private def hammingShortlist(refine: Int, dim: Int, base: Option[DataFrame]) =
+    Some(Ann.Shortlist("hamming", hammingExpr("bq_w", "_qw", dim), ascending = true,
+      refine, base))
 
   /** Persisted IVF+BQ layout over ROTATED sign bits: cluster assignment
     * stays in the ORIGINAL space (same fitted centroids and partition
@@ -234,8 +231,7 @@ object Bq extends IndexMaintenance {
       dim: Int = 64,
       inlineVectors: Boolean = false): Unit =
     writeClustered(
-      pack(Ann.assign(df, vecCol, centroids).withColumn("_rv", rotateCol(col(vecCol), rot)),
-          "_rv", dim = dim)
+      packed(Ann.assign(df, vecCol, centroids), vecCol, "bq_w", Some(rot), dim)
         .select(col(idCol) +: col("cluster") +:
           ((0 until nWords(dim)).map(w => col(s"bq_w$w")) ++
             (if (inlineVectors) Seq(col(vecCol)) else Nil)): _*),
@@ -266,13 +262,7 @@ object Bq extends IndexMaintenance {
       k: Int = 10,
       refine: Int = 40,
       dim: Int = 64,
-      queryId: String = "query_id"): DataFrame = {
-    val qPacked = pack(
-      queries.withColumn("_rq", rot.fold(col(queryVec))(rotateCol(col(queryVec), _))),
-      "_rq", "_qw", dim).drop("_rq")
-    Ann.probeScan(liveLayout(spark, path, idCol), qPacked, queryVec, queryId, vecCol, idCol,
-      k, cells, None, Nil,
-      Some(Ann.Shortlist("hamming", hammingExpr("bq_w", "_qw", dim), ascending = true,
-        refine, base)))
-  }
+      queryId: String = "query_id"): DataFrame =
+    Ann.probeScan(liveLayout(spark, path, idCol), packed(queries, queryVec, "_qw", rot, dim),
+      queryVec, queryId, vecCol, idCol, k, cells, None, Nil, hammingShortlist(refine, dim, base))
 }

@@ -129,15 +129,21 @@ object Matryoshka extends IndexMaintenance {
       refine: Int = 40,
       queryId: String = "query_id"): DataFrame =
     Ann.probeScan(liveLayout(spark, path, idCol), queries, queryVec, queryId, vecCol, idCol,
-      k, cells, None, Nil,
-      Some(Ann.Shortlist("approx_sim",
-        VectorOps.cosineFastRounded(col("mrl_prefix"), slice(col(queryVec), 1, dPrefix)),
-        ascending = false, refine, base)))
+      k, cells, None, Nil, prefixShortlist(col("mrl_prefix"), queryVec, dPrefix, refine, base))
 
-  /** Two-stage probe: prefix-cosine prune to `refine` candidates
-    * (TakeOrderedAndProject — no full sort), exact full-dim cosine
-    * re-rank to top `k`. Output carries both scores so the prefix
-    * approximation error is observable per hit.
+  /** The MRL shortlist: cosine of the stored (or sliced) `prefix`
+    * against the query's first `dPrefix` dims, cut to `refine` per query.
+    */
+  private def prefixShortlist(prefix: org.apache.spark.sql.Column, queryVec: String,
+                              dPrefix: Int, refine: Int, base: Option[DataFrame]) =
+    Some(Ann.Shortlist("approx_sim",
+      VectorOps.cosineFastRounded(prefix, slice(col(queryVec), 1, dPrefix)),
+      ascending = false, refine, base))
+
+  /** Two-stage probe: prefix-cosine prune to `refine` candidates, exact
+    * full-dim cosine re-rank to top `k` — the flat [[probeIvf]] over the
+    * whole corpus, slicing the prefix in place. Output carries both
+    * scores so the prefix approximation error is observable per hit.
     */
   def probe(
       corpus: DataFrame,
@@ -147,19 +153,7 @@ object Matryoshka extends IndexMaintenance {
       idCol: String,
       dPrefix: Int = 16,
       k: Int = 10,
-      refine: Int = 40): DataFrame = {
-    val approx = corpus
-      .crossJoin(broadcast(queryDf))
-      .withColumn("approx_sim",
-        VectorOps.cosineRounded(
-          slice(col(corpusVec), 1, dPrefix), slice(col(queryVec), 1, dPrefix)))
-      .select(col(idCol), col(corpusVec), col(queryVec), col("approx_sim"))
-      .orderBy(col("approx_sim").desc, col(idCol))
-      .limit(refine)
-    approx
-      .withColumn("cos_sim", VectorOps.cosineRounded(col(corpusVec), col(queryVec)))
-      .select(col(idCol), col("approx_sim"), col("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
-  }
+      refine: Int = 40): DataFrame =
+    Ann.probeScan(corpus, queryDf, queryVec, "query_id", corpusVec, idCol, k, Nil, None, Nil,
+      prefixShortlist(slice(col(corpusVec), 1, dPrefix), queryVec, dPrefix, refine, None))
 }

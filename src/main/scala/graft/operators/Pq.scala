@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.VectorOps
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Product quantization for embedding compression + fast approximate
   * distance (reference: the IVF-PQ index hint at store.py:274).
@@ -14,18 +14,20 @@ import org.apache.spark.sql.DataFrame
   *  - encoding is a distributed single pass with the codebooks
   *    broadcast (here: closure-captured arrays in a mapPartitions);
   *  - the ADC probe is pure expressions over the tiny code arrays with
-  *    the query's distance table inlined as literals — the corpus scan
-  *    reads m bytes per vector instead of dim floats (m=8, dim=64 →
-  *    32× less I/O);
+  *    the query's distance tables as broadcast array columns — the
+  *    corpus scan reads m bytes per vector instead of dim floats (m=8,
+  *    dim=64 → 32× less I/O);
   *  - exact re-rank of the top `k * refineFactor` ADC candidates
   *    mirrors the reference's `search_refine_factor` (config.py:62).
   */
 object Pq extends IndexMaintenance {
 
   /** Per-subspace codebooks: codebooks(j)(c) is the c-th centroid of
-    * subspace j (each of length dim/m).
+    * subspace j (each of length dim/m). `residual`: trained on IVF
+    * residuals ([[trainResidual]]), so the ADC tables are per probed cell.
     */
-  final case class Model(m: Int, dim: Int, codebooks: Array[Array[Array[Double]]])
+  final case class Model(m: Int, dim: Int, codebooks: Array[Array[Array[Double]]],
+                         residual: Boolean = false)
 
   // A PQ codebook is a fitted model: trained once per (corpus, params),
   // reused by every encode/probe — the exact contract of Ann.buildCached
@@ -178,8 +180,9 @@ object Pq extends IndexMaintenance {
           org.apache.spark.sql.GraftBridge.expression(col(vecCol)),
           model.codebooks)))
 
-  /** ADC distance table for a query: table(j)(c) = ||q_j − codebook_j(c)||².
-    * Driver-side constants — also what the DuckDB oracle twin inlines.
+  /** ADC distance table for a query: table(j)(c) = ||q_j − codebook_j(c)||²
+    * as driver-side constants — what the DuckDB oracle twin inlines. The
+    * probe computes the same table in-plan ([[adcProbe]]).
     */
   def distanceTable(model: Model, q: Array[Double]): Array[Array[Double]] = {
     val sub = model.dim / model.m
@@ -191,36 +194,6 @@ object Pq extends IndexMaintenance {
         d
       }
     }
-  }
-
-  /** ADC (asymmetric distance) probe: approximate squared distances via
-    * the query's per-subspace table (literal arrays — pure expressions
-    * over the m-byte codes), take top `k * refineFactor` candidates,
-    * then exact-cosine re-rank to k (reference: search_refine_factor).
-    */
-  def probe(
-      encoded: DataFrame, // carries idCol, vecCol (for re-rank) and codes
-      queryDf: DataFrame,
-      model: Model,
-      vecCol: String,
-      queryVec: String,
-      idCol: String,
-      k: Int,
-      refineFactor: Int = 10
-  ): DataFrame = {
-    val q = queryDf.select(queryVec).head().getSeq[Float](0).map(_.toDouble).toArray
-    val table = distanceTable(model, q)
-    val tableCols = table.map(row => array(row.map(lit): _*))
-    val adc = (0 until model.m)
-      .map(j => element_at(tableCols(j), element_at(col("codes"), j + 1) + 1))
-      .reduce(_ + _)
-    val candidates = encoded
-      .withColumn("adc_dist", adc)
-      .orderBy(col("adc_dist").asc, col(idCol))
-      .limit(k * refineFactor)
-    Search
-      .knnTopK(candidates.drop("adc_dist"), queryDf, vecCol, queryVec, idCol, k)
-      .select(col(idCol), col("cos_sim"))
   }
 
   /** Persist the FULL IVF-PQ index — the reference's actual index type
@@ -243,33 +216,6 @@ object Pq extends IndexMaintenance {
       encode(Ann.assign(df, vecCol, ivfCentroids), vecCol, model)
         .select(col(idCol), col(vecCol), col("codes"), col("cluster")),
       path, "overwrite")
-
-  /** Probe a persisted IVF-PQ index: partition-pruned scan of the
-    * nProbe nearest cells → ADC rank → exact re-rank (reference:
-    * store.py:274 + config.py:62 refine factor).
-    */
-  def probeIvfPq(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      ivfCentroids: Array[Array[Double]],
-      model: Model,
-      queryDf: DataFrame,
-      queryVec: String,
-      vecCol: String,
-      idCol: String,
-      nProbe: Int,
-      k: Int,
-      refineFactor: Int = 0
-  ): DataFrame = {
-    val cells = Ann.nearestCells(ivfCentroids, Ann.queryVector(queryDf, queryVec), nProbe)
-    // LIVE face: tombstoned ids excluded inside the pruned scan, before
-    // the ADC cut (zero cost on delete-free layouts — memoized exists)
-    val pruned = liveFace(spark, path,
-      LayoutCache.readCached(spark, path).filter(col("cluster").isInCollection(cells)),
-      idCol)
-    val rf = resolveRefine(refineFactor, nProbe)
-    probe(pruned, queryDf, model, vecCol, queryVec, idCol, k, rf)
-  }
 
   // ── Residual IVF-PQ (FAISS's actual IVF,PQ form) ─────────────────────
 
@@ -340,7 +286,7 @@ object Pq extends IndexMaintenance {
       val pts = sample.map(v => v.slice(j * sub, (j + 1) * sub))
       lloyd(pts, codes, iters, rnd)
     }
-    Model(mEff, dim, codebooks)
+    Model(mEff, dim, codebooks, residual = true)
   }
 
   /** `m` sentinel: derive the subspace count from the training
@@ -553,37 +499,107 @@ object Pq extends IndexMaintenance {
     if (refineFactor == AutoRefine) autoRefineFactor(nProbe) else refineFactor
   }
 
-  /** Per-cell ADC distance tables for a query: for each probed cell c,
-    * table_c(j)(k) = ||(qn − centroid_c)_j − codebook_j(k)||² — the
-    * residual-space analog of [[distanceTable]]. Driver-side constants
-    * (nProbe × m × codes doubles), also what the twin inlines.
+  /** Probe a persisted IVF-PQ layout ([[writeIvfPq]], or
+    * [[writeIvfPqResidual]] with its [[trainResidual]] model) with
+    * [[Ann.probe]]'s single/batch contract: partition-pruned scan of
+    * each query's `nProbe` nearest cells → ADC rank on the m-byte codes
+    * → exact cosine re-rank of the k·refine candidates (reference:
+    * store.py:274 + config.py:62 refine factor). A batch carries its
+    * cells in `cluster` ([[Ann.queryCellsLocal]] for a bounded set) or
+    * has them ranked in-plan ([[Ann.queryCells]]). A residual model's
+    * ADC tables differ per probed cell, so its one query runs as the
+    * |Q| = 1 batch (rank order kept, `query_id`/`rk` dropped). On
+    * residuals the ADC approximates ||qn − vn||² directly (the centroid
+    * term cancels), so unlike global codebooks the ranking stays
+    * informative on clustered/anisotropic corpora (PLANS.md). Output
+    * as [[Ann.probe]]'s plus `adc_dist`.
     */
-  def residualDistanceTables(
+  def probeIvf(
+      spark: SparkSession,
+      path: String,
+      ivfCentroids: Array[Array[Double]],
       model: Model,
-      centroids: Array[Array[Double]],
-      qRaw: Array[Double],
-      cells: Seq[Int]): Map[Int, Array[Array[Double]]] = {
-    var s = 0.0; var i = 0
-    while (i < qRaw.length) { s += qRaw(i) * qRaw(i); i += 1 }
-    val norm = math.sqrt(s)
-    cells.map { c =>
-      val qr = Array.tabulate(qRaw.length)(j => qRaw(j) / norm - centroids(c)(j))
-      c -> distanceTable(model, qr)
-    }.toMap
+      queries: DataFrame,
+      queryVec: String,
+      vecCol: String,
+      idCol: String,
+      nProbe: Int,
+      k: Int,
+      refineFactor: Int = AutoRefine,
+      queryId: String = "query_id"): DataFrame = {
+    def probe(q: DataFrame, cells: Seq[Int]): DataFrame =
+      adcProbe(liveLayout(spark, path, idCol), model, q, queryVec, vecCol, idCol, k,
+        k * resolveRefine(refineFactor, nProbe), cells, ivfCentroids, queryId)
+    if (queries.columns.contains(queryId))
+      probe(if (queries.columns.contains("cluster")) queries
+        else Ann.queryCells(queries, queryVec, queryId, ivfCentroids, nProbe), Nil)
+    else if (model.residual)
+      probe(Ann.queryCellsLocal(queries.withColumn(queryId, lit(0L)), queryVec, queryId,
+        ivfCentroids, nProbe), Nil).drop(queryId, "rk")
+    else probe(queries, Ann.nearestCells(ivfCentroids, Ann.queryVector(queries, queryVec), nProbe))
   }
 
-  /** Probe the persisted residual IVF-PQ layout: partition-pruned scan
-    * of the nProbe cells; ADC rank with the per-cell residual tables —
-    * a CASE over the probed cells (nProbe × m element_at lookups, tiny
-    * plan), since the query's residual differs per cell; exact cosine
-    * re-rank of the k·refine candidates. On residuals the ADC
-    * approximates ||qn − vn||² DIRECTLY (the centroid term cancels), so
-    * unlike the global-codebook [[probeIvfPq]] the ranking stays
-    * informative on clustered/anisotropic corpora — recall measured in
-    * the structured study (PLANS.md).
+  /** The one PQ probe body: [[Ann.probeScan]] over a codes `scan` with
+    * the ADC shortlist. Each query row's tables ride the broadcast query
+    * side as array columns, table(j)(c) = ||x_j − codebook_j(c)||² for x
+    * the query (global codebooks) or its residual normalize(q) −
+    * centroid[cluster] against the probed cell (a residual model, via
+    * the native [[graft.plans.CentroidResidual]] the encode uses). The
+    * codebook centers are one literal per subspace and the distances
+    * HOF folds, evaluated on the |Q|·nProbe query rows only (unrolled
+    * into m×codes×sub scalar nodes, Catalyst analysis + janino cost
+    * ~2.5 s per invocation). The corpus side pays m `element_at`
+    * lookups per code row. The fold order is [[distanceTable]]'s (left
+    * to right over dims, (x−c)² per dim), so the ADC values are
+    * bit-identical to the oracle twin's. With no `cells` and no
+    * `cluster` in `scan` this is the flat probe of an encoded frame.
+    */
+  private[graft] def adcProbe(
+      scan: DataFrame,
+      model: Model,
+      queries: DataFrame,
+      queryVec: String,
+      vecCol: String,
+      idCol: String,
+      k: Int,
+      refine: Int,
+      cells: Seq[Int] = Nil,
+      ivfCentroids: Array[Array[Double]] = Array.empty,
+      queryId: String = "query_id"): DataFrame = {
+    require(!model.residual || ivfCentroids.nonEmpty, "a residual model needs its IVF centroids")
+    val sub = model.dim / model.m
+    val vec =
+      if (!model.residual) VectorOps.toDouble(col(queryVec))
+      else org.apache.spark.sql.GraftBridge.column(
+        graft.plans.CentroidResidual(
+          org.apache.spark.sql.GraftBridge.expression(col(queryVec)),
+          org.apache.spark.sql.GraftBridge.expression(col("cluster")),
+          ivfCentroids))
+    val tables = (0 until model.m).map { j =>
+      transform(typedLit(model.codebooks(j).map(_.toSeq).toSeq), cent =>
+        aggregate(
+          zip_with(slice(col("_adcq"), j * sub + 1, sub), cent, (x, c) => {
+            val d = x - c
+            d * d
+          }),
+          lit(0.0),
+          (acc, x) => acc + x)).as(s"_adc$j")
+    }
+    val adc = (0 until model.m)
+      .map(j => element_at(col(s"_adc$j"), element_at(col("codes"), j + 1) + 1))
+      .reduce(_ + _)
+    // always broadcast: an in-plan batch's cell rows are |Q|·nProbe
+    Ann.probeScan(scan,
+      broadcast(queries.withColumn("_adcq", vec).select(queries.columns.map(col) ++ tables: _*)),
+      queryVec, queryId, vecCol, idCol, k, cells, None, Nil,
+      Some(Ann.Shortlist("adc_dist", adc, ascending = true, refine, None)))
+  }
+
+  /** [[probeIvf]] of one query, output (id, cos_sim). Kept with this
+    * signature only because the `serve` benchmark compiles against it.
     */
   def probeIvfPqResidual(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       ivfCentroids: Array[Array[Double]],
       model: Model,
@@ -594,124 +610,16 @@ object Pq extends IndexMaintenance {
       nProbe: Int,
       k: Int,
       refineFactor: Int = 0
-  ): DataFrame = {
-    val qRaw = Ann.queryVector(queryDf, queryVec)
-    val cells = Ann.nearestCells(ivfCentroids, qRaw, nProbe)
-    val tables = residualDistanceTables(model, ivfCentroids, qRaw, cells)
-    val pruned = liveFace(spark, path,
-      LayoutCache.readCached(spark, path).filter(col("cluster").isInCollection(cells)),
-      idCol)
-    def adcFor(c: Int): org.apache.spark.sql.Column = {
-      val t = tables(c).map(row => array(row.map(lit): _*))
-      (0 until model.m)
-        .map(j => element_at(t(j), element_at(col("codes"), j + 1) + 1))
-        .reduce(_ + _)
-    }
-    val adc = cells.tail.foldLeft(when(col("cluster") === cells.head, adcFor(cells.head))) {
-      (acc, c) => acc.when(col("cluster") === c, adcFor(c))
-    }
-    val candidates = pruned
-      .withColumn("adc_dist", adc)
-      .orderBy(col("adc_dist").asc, col(idCol))
-      .limit(k * resolveRefine(refineFactor, nProbe))
-    Search
-      .knnTopK(candidates.drop("adc_dist"), queryDf, vecCol, queryVec, idCol, k)
-      .select(col(idCol), col("cos_sim"))
-  }
+  ): DataFrame =
+    probeIvf(spark, path, ivfCentroids, model, queryDf, queryVec, vecCol, idCol, nProbe, k,
+      refineFactor).select(col(idCol), col("cos_sim"))
 
-  /** Batch probe over the persisted IVF-PQ layout. The single-query
-    * [[probe]] inlines the query's ADC table as driver literals; a
-    * BATCH can't (the table is per query), so the tables become array
-    * COLUMNS computed once per (query, probed cell) row — the codebook
-    * centers are the plan literals, the per-center squared distances
-    * run inside codegen, and every corpus row's ADC is then m
-    * element_at lookups + a sum. Work per scanned code row is O(m),
-    * exactly like the single-query path; the |Q|-dependent table cost
-    * is paid on the tiny broadcast side, never in the corpus scan.
-    * Per-query candidate pruning and the exact re-rank both run in the
-    * bounded-heap [[graft.plans.TopK]] — no global sort anywhere.
-    */
-  def probeBatchIvfPq(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      ivfCentroids: Array[Array[Double]],
-      model: Model,
-      queries: DataFrame,
-      queryVec: String,
-      queryId: String,
-      vecCol: String,
-      idCol: String,
-      nProbe: Int,
-      k: Int,
-      refineFactor: Int = 0,
-      qCellsPre: Option[DataFrame] = None
-  ): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
-    val rf = resolveRefine(refineFactor, nProbe)
-    val sub = model.dim / model.m
-    // ||q_j − center||² via HOF folds over ONE typedLit literal per
-    // subspace. The earlier formulation unrolled m×codes×sub scalar
-    // expression nodes (~3k) — Catalyst analysis + janino compilation
-    // of that tree cost ~2.5 s PER INVOCATION (warm == cold in the
-    // bench), dwarfing the actual probe. HOFs evaluate interpreted,
-    // but only on the |Q|·nProbe broadcast rows; the corpus-side ADC
-    // lookup below stays codegen'd. Fold order matches distanceTable's
-    // loop (left-to-right over dims, (q−c)² per dim) so batch ADC
-    // values remain bit-identical to the single-query path and the
-    // oracle twin's distChain.
-    val qd = graft.functions.VectorOps.toDouble(col(queryVec))
-    val tableCols = (0 until model.m).map { j =>
-      val codebook = typedLit(model.codebooks(j).map(_.toSeq).toSeq)
-      transform(codebook, cent =>
-        aggregate(
-          zip_with(slice(qd, j * sub + 1, sub), cent, (x, c) => {
-            val d = x - c
-            d * d
-          }),
-          lit(0.0),
-          (acc, x) => acc + x)).as(s"_adc$j")
-    }
-    val qCellsRaw = qCellsPre
-      .getOrElse(Ann.queryCells(queries, queryVec, queryId, ivfCentroids, nProbe))
-    val qCells = qCellsRaw
-      .select(Seq(col(queryId), col(queryVec), col("cluster")) ++ tableCols: _*)
-    val adc = (0 until model.m)
-      .map(j => element_at(col(s"_adc$j"), element_at(col("codes"), j + 1) + 1))
-      .reduce(_ + _)
-    val scored = liveFace(spark, path,
-        Ann.pruneToCells(LayoutCache.readCached(spark, path), qCellsRaw), idCol)
-      .join(broadcast(qCells), "cluster")
-      .withColumn("adc_dist", adc)
-      .select(col(queryId), col(idCol), col("cluster").cast("long").as("cluster"),
-        col(vecCol), col(queryVec), col("adc_dist"))
-    val candidates = graft.plans.TopK
-      .perKey(scored, Seq(queryId), Seq(("adc_dist", true), (idCol, true)), k * rf)
-    candidates
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col(vecCol), col(queryVec)))
-      .select(col(queryId), col(idCol), col("cluster"), col("cos_sim"))
-      .transform(df => graft.plans.TopK
-        .perKey(df, Seq(queryId), Seq(("cos_sim", false), (idCol, true)), k))
-      .select(col(queryId), col(idCol), col("cluster"), col("cos_sim"), col("rk"))
-  }
-
-  /** Batch probe over the persisted RESIDUAL IVF-PQ layout — the batch
-    * face of [[probeIvfPqResidual]], completing the batch matrix for
-    * the family the round-11 structured study showed actually works on
-    * anisotropic vectors (global-ADC collapsed to 0.075 recall there;
-    * `ann_batch_pq` keeps covering that global form). The residual ADC
-    * table differs PER (query, probed cell) — table(j)(c) =
-    * ||(qn − centroid_cell)_j − codebook_j(c)||² — so the tables are
-    * computed as array columns on the (tiny) broadcast side: the
-    * query's per-cell residual comes from the same native
-    * [[graft.plans.CentroidResidual]] the write path encodes with, and
-    * the per-center distances are the batch-PQ HOF folds over it.
-    * Corpus-side work stays O(m) lookups per scanned code row; per-query
-    * candidate prune and exact re-rank are bounded heaps. Work scales
-    * with |Q|·nProbe on the broadcast side and codes-bytes on the scan —
-    * the 100 TB batch serving shape for the residual index.
+  /** [[probeIvf]] of a batch (cells from `qCellsPre` when given), output
+    * (query, id, cluster, cos_sim, rk). Kept with this signature only
+    * because the `serve` benchmark compiles against it.
     */
   def probeBatchIvfPqResidual(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       ivfCentroids: Array[Array[Double]],
       model: Model,
@@ -724,54 +632,7 @@ object Pq extends IndexMaintenance {
       k: Int,
       refineFactor: Int = 0,
       qCellsPre: Option[DataFrame] = None
-  ): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
-    val rf = resolveRefine(refineFactor, nProbe)
-    val sub = model.dim / model.m
-    // per-(query, cell) residual (normalize(q) − centroid[cell]) via the
-    // same expression the encode path uses — bit-identical spaces
-    val qres = org.apache.spark.sql.GraftBridge.column(
-      graft.plans.CentroidResidual(
-        org.apache.spark.sql.GraftBridge.expression(col(queryVec)),
-        org.apache.spark.sql.GraftBridge.expression(col("cluster")),
-        ivfCentroids))
-    // same HOF-fold table shape (and fold order) as [[probeBatchIvfPq]],
-    // over the residual instead of the raw query
-    val tableCols = (0 until model.m).map { j =>
-      val codebook = typedLit(model.codebooks(j).map(_.toSeq).toSeq)
-      transform(codebook, cent =>
-        aggregate(
-          zip_with(slice(col("_qres"), j * sub + 1, sub), cent, (x, c) => {
-            val d = x - c
-            d * d
-          }),
-          lit(0.0),
-          (acc, x) => acc + x)).as(s"_adc$j")
-    }
-    val qCellsRaw = qCellsPre
-      .getOrElse(Ann.queryCells(queries, queryVec, queryId, ivfCentroids, nProbe))
-    val qCells = qCellsRaw
-      .withColumn("_qres", qres)
-      .select(Seq(col(queryId), col(queryVec), col("cluster")) ++ tableCols: _*)
-    val adc = (0 until model.m)
-      .map(j => element_at(col(s"_adc$j"), element_at(col("codes"), j + 1) + 1))
-      .reduce(_ + _)
-    // LIVE face inside the pruned scan, before the candidate heap —
-    // tombstoned ids can never occupy shortlist slots (no-op with zero
-    // jobs on delete-free layouts: the sidecar check is memoized)
-    val scored = liveFace(spark, path,
-        Ann.pruneToCells(LayoutCache.readCached(spark, path), qCellsRaw), idCol)
-      .join(broadcast(qCells), "cluster")
-      .withColumn("adc_dist", adc)
-      .select(col(queryId), col(idCol), col("cluster").cast("long").as("cluster"),
-        col(vecCol), col(queryVec), col("adc_dist"))
-    val candidates = graft.plans.TopK
-      .perKey(scored, Seq(queryId), Seq(("adc_dist", true), (idCol, true)), k * rf)
-    candidates
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col(vecCol), col(queryVec)))
-      .select(col(queryId), col(idCol), col("cluster"), col("cos_sim"))
-      .transform(df => graft.plans.TopK
-        .perKey(df, Seq(queryId), Seq(("cos_sim", false), (idCol, true)), k))
-      .select(col(queryId), col(idCol), col("cluster"), col("cos_sim"), col("rk"))
-  }
+  ): DataFrame =
+    probeIvf(spark, path, ivfCentroids, model, qCellsPre.getOrElse(queries), queryVec, vecCol,
+      idCol, nProbe, k, refineFactor, queryId).drop("adc_dist")
 }

@@ -100,10 +100,15 @@ object Sq extends IndexMaintenance {
       refine: Int = 40,
       queryId: String = "query_id"): DataFrame =
     Ann.probeScan(liveLayout(spark, path, idCol), queries, queryVec, queryId, vecCol, idCol,
-      k, cells, None, Nil,
-      Some(Ann.Shortlist("approx_sim",
-        VectorOps.cosineFastRounded(col("sq_codes"), col(queryVec)), ascending = false,
-        refine, base)))
+      k, cells, None, Nil, codesShortlist(queryVec, refine, base))
+
+  /** The SQ8 shortlist: approximate cosine of the raw int8 codes (the
+    * per-vector scale cancels) cut to `refine` per query.
+    */
+  private def codesShortlist(queryVec: String, refine: Int, base: Option[DataFrame]) =
+    Some(Ann.Shortlist("approx_sim",
+      VectorOps.cosineFastRounded(col("sq_codes"), col(queryVec)), ascending = false,
+      refine, base))
 
   /** Residual-quantized IVF+SQ8 (the FAISS IVF,SQ8 residual variant):
     * quantize `normalize(v) − centroid[cluster]` instead of `v`. On
@@ -132,31 +137,22 @@ object Sq extends IndexMaintenance {
       refine: Int = 40): DataFrame = {
     val centLit = array(centroids.map(c => array(c.map(lit): _*)): _*)
     val assigned = Ann.assign(corpus, corpusVec, centroids)
-      .filter(col("cluster").isInCollection(cells))
       .withColumn("_cent", element_at(centLit, col("cluster") + 1))
       .withColumn("_nv", VectorOps.normalize(col(corpusVec)))
       .withColumn("_res", zip_with(col("_nv"), col("_cent"), (x, c) => x - c))
     val coded = quantize(assigned, "_res", "rs_scale", "rs_codes")
       .withColumn("_recon",
         zip_with(col("_cent"), col("rs_codes"), (c, q) => c + q.cast("double") * col("rs_scale")))
-    coded
-      .crossJoin(broadcast(queryDf))
-      .withColumn("approx_sim", VectorOps.cosineRounded(col("_recon"), col(queryVec)))
-      .select(col(idCol), col("cluster").cast("long").as("cluster"),
-        col(corpusVec), col(queryVec), col("approx_sim"))
-      .orderBy(col("approx_sim").desc, col(idCol))
-      .limit(refine)
-      .withColumn("cos_sim", VectorOps.cosineRounded(col(corpusVec), col(queryVec)))
-      .select(col(idCol), col("cluster"), col("approx_sim"), col("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
+    Ann.probeScan(coded, queryDf, queryVec, "query_id", corpusVec, idCol, k, cells, None, Nil,
+      Some(Ann.Shortlist("approx_sim", VectorOps.cosineRounded(col("_recon"), col(queryVec)),
+        ascending = false, refine, None)))
   }
 
   /** Brute-force SQ probe with exact re-rank: approximate cosine on the
-    * int8 codes prunes the corpus to `refine` candidates
-    * (TakeOrderedAndProject — no full sort), then the exact cosine on
-    * the raw vectors re-ranks those to top `k`. Output carries both
-    * scores so the approximation error is observable per hit.
+    * int8 codes prunes the corpus to `refine` candidates, then the exact
+    * cosine on the raw vectors re-ranks those to top `k` — the flat
+    * [[probeIvf]] over the whole corpus. Output carries both scores so
+    * the approximation error is observable per hit.
     */
   def probe(
       corpus: DataFrame,
@@ -165,19 +161,7 @@ object Sq extends IndexMaintenance {
       queryVec: String,
       idCol: String,
       k: Int = 10,
-      refine: Int = 40): DataFrame = {
-    val quantized = quantize(corpus, corpusVec)
-    val approx = quantized
-      .crossJoin(broadcast(queryDf))
-      .withColumn("approx_sim",
-        VectorOps.cosineRounded(col("sq_codes"), col(queryVec)))
-      .select(col(idCol), col(corpusVec), col(queryVec), col("approx_sim"))
-      .orderBy(col("approx_sim").desc, col(idCol))
-      .limit(refine)
-    approx
-      .withColumn("cos_sim", VectorOps.cosineRounded(col(corpusVec), col(queryVec)))
-      .select(col(idCol), col("approx_sim"), col("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
-  }
+      refine: Int = 40): DataFrame =
+    Ann.probeScan(quantize(corpus, corpusVec), queryDf, queryVec, "query_id", corpusVec, idCol,
+      k, Nil, None, Nil, codesShortlist(queryVec, refine, None))
 }

@@ -575,8 +575,8 @@ object ScaleCheck {
     val encoded = Pq.encode(corpus, "embedding", model)
     for (rf <- Seq(10, 25))
       recall(s"pq m=8x16 adc refine=$rf") { v =>
-        Pq.probe(encoded, qDf(v), model, "embedding", "q_vec", "vec_id",
-            k = 10, refineFactor = rf)
+        Pq.adcProbe(encoded, model, qDf(v), "q_vec", "embedding", "vec_id",
+            k = 10, refine = 10 * rf)
           .collect().map(_.getLong(0)).toSet
       }
 
@@ -586,7 +586,7 @@ object ScaleCheck {
     Pq.writeIvfPqResidual(pqrDir, corpus, "embedding", "vec_id", idx.centroids, resModel)
     for (rf <- Seq(10, 25))
       recall(s"ivfpq_residual nProbe=4 refine=$rf") { v =>
-        Pq.probeIvfPqResidual(spark, pqrDir, idx.centroids, resModel, qDf(v),
+        Pq.probeIvf(spark, pqrDir, idx.centroids, resModel, qDf(v),
             "q_vec", "embedding", "vec_id", nProbe = 4, k = 10, refineFactor = rf)
           .collect().map(_.getLong(0)).toSet
       }
@@ -605,7 +605,7 @@ object ScaleCheck {
       Pq.writeIvfPqResidual(d, corpus, "embedding", "vec_id", idx.centroids, rm)
       for (rf <- Seq(10, 25))
         recall(s"ivfpq_residual ${mm}x$cc nP=4 refine=$rf") { v =>
-          Pq.probeIvfPqResidual(spark, d, idx.centroids, rm, qDf(v),
+          Pq.probeIvf(spark, d, idx.centroids, rm, qDf(v),
               "q_vec", "embedding", "vec_id", nProbe = 4, k = 10, refineFactor = rf)
             .collect().map(_.getLong(0)).toSet
         }
@@ -736,11 +736,11 @@ object ScaleCheck {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.FloatType, containsNull = false), nullable = false))))
     def probe(d: String): Seq[(Long, Long, Double, Long)] = {
-      Pq.probeBatchIvfPqResidual(spark, d, idx.centroids, resModel, qLocal,
-          "q_vec", "query_id", "embedding", "vec_id", nProbe = 8, k = 10,
-          qCellsPre = Some(Ann.queryCellsLocal(qLocal, "q_vec", "query_id",
-            idx.centroids, nProbe = 8)))
-        .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
+      Pq.probeIvf(spark, d, idx.centroids, resModel,
+          Ann.queryCellsLocal(qLocal, "q_vec", "query_id", idx.centroids, nProbe = 8),
+          "q_vec", "embedding", "vec_id", nProbe = 8, k = 10)
+        .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getAs[Double]("cos_sim"),
+          r.getAs[Long]("rk")))
         .sortBy(t => (t._1, t._4))
     }
     probe(layout) // warm codegen/listing off the clock
@@ -878,7 +878,7 @@ object ScaleCheck {
       val rs = queries.map { case (id, v) =>
         val cells = Ann.nearestCells(idx.centroids, v.map(_.toDouble), np)
         scanned += cells.map(c => sizes.getOrElse(c, 0L)).sum
-        val got = Pq.probeIvfPqResidual(spark, layout, idx.centroids, resModel, qDf(v),
+        val got = Pq.probeIvf(spark, layout, idx.centroids, resModel, qDf(v),
             "q_vec", "embedding", "vec_id", nProbe = np, k = 10, refineFactor = rf)
           .collect().map(_.getLong(0)).toSet
         (truth(id) & got).size / 10.0
@@ -889,7 +889,7 @@ object ScaleCheck {
     }
 
     // BATCH face at the same scale — the registered serving shape
-    // (probeBatchIvfPqResidual = ann_two_level_pqr's probe), which is
+    // (Pq.probeIvf = ann_two_level_pqr's probe), which is
     // also the TopKPerKey partial-heap path: all 8 queries in ONE
     // pruned scan, per-(query, cell) ADC tables broadcast, map-side
     // heaps bounding the shuffle. Recall must match the corresponding
@@ -912,11 +912,9 @@ object ScaleCheck {
         queriesDf.schema)
       for (np <- Seq(8); rf <- Seq(25)) {
         val t0 = System.nanoTime()
-        val got = Pq.probeBatchIvfPqResidual(spark, layout, idx.centroids, resModel,
-            qLocal, "q_vec", "query_id", "embedding", "vec_id",
-            nProbe = np, k = 10, refineFactor = rf,
-            qCellsPre = Some(Ann.queryCellsLocal(qLocal, "q_vec", "query_id",
-              idx.centroids, nProbe = np)))
+        val got = Pq.probeIvf(spark, layout, idx.centroids, resModel,
+            Ann.queryCellsLocal(qLocal, "q_vec", "query_id", idx.centroids, nProbe = np),
+            "q_vec", "embedding", "vec_id", nProbe = np, k = 10, refineFactor = rf)
           .collect().groupBy(_.getLong(0)).map { case (q, rows) =>
             q -> rows.map(_.getLong(1)).toSet
           }

@@ -10,8 +10,8 @@ import graft.plans.GraftFunctions
   * (`plans_baseline/<name>.txt`, refreshed by `runMain graft.tools.Plans
   * <sfDir> plans_baseline` after an INTENTIONAL shape change) on the
   * regression-class signals from tools/diff_plans.py — lost broadcasts,
-  * lost pushed filters, new sorts / exchanges / object serializations /
-  * codegen fallbacks. Plan shapes are SF-invariant here (verified round 5:
+  * lost pushed filters, lost static partition IN-sets, new sorts /
+  * exchanges / object serializations / codegen fallbacks. Plan shapes are SF-invariant here (verified round 5:
   * sf0.001-generated plans diff clean against sf0.01 snapshots in both
   * directions — broadcasts are hint-driven, CBO/AQE don't alter
   * explainString pre-execution), so the gate runs at sf0.001.
@@ -24,6 +24,8 @@ class PlanGuardSpec extends SparkSpec {
   private val signals: Seq[(String, scala.util.matching.Regex, Boolean)] = Seq(
     ("broadcast", "Broadcast(HashJoin|ExchangeExec|Exchange|NestedLoopJoin)".r, false),
     ("pushed_filters", "PushedFilters: \\[[^\\]]".r, false),
+    // static partition pruning: a `PartitionFilters` list with an IN set
+    ("static_cells", "PartitionFilters: \\[[^\\]]* IN \\(".r, false),
     ("sort", "(?m)^\\s*[+:*-]*\\s*\\(?\\d*\\)?\\s*Sort\\b".r, true),
     ("exchange", "\\bExchange\\b".r, true),
     ("serialize", "SerializeFromObject".r, true),

@@ -30,7 +30,8 @@ class PqSpec extends SparkSpec {
   test("ADC probe with exact re-rank reaches high recall vs exact top-10") {
     val model = Pq.train(embs, "embedding", "vec_id", m = 8, codes = 16)
     val encoded = Pq.encode(embs.filter(col("vec_id") =!= 0), "embedding", model)
-    val approx = Pq.probe(encoded, queryDf, model, "embedding", "q_vec", "vec_id", k = 10)
+    val approx = Pq.adcProbe(encoded, model, queryDf, "q_vec", "embedding", "vec_id",
+        k = 10, refine = 100)
       .select("vec_id").as[Long].collect().toSet
     val exact = graft.operators.Ann
       .exact(embs.filter(col("vec_id") =!= 0), queryDf, "embedding", "q_vec", "vec_id", 10)
@@ -64,18 +65,19 @@ class PqSpec extends SparkSpec {
     Pq.writeIvfPq(path, embs, "embedding", "vec_id", index.centroids, model)
     val queries = embs.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
-    val batch = Pq.probeBatchIvfPq(spark, path, index.centroids, model, queries,
-      "q_vec", "query_id", "embedding", "vec_id", nProbe = 3, k = 5, refineFactor = 10)
+    val batch = Pq.probeIvf(spark, path, index.centroids, model, queries,
+      "q_vec", "embedding", "vec_id", nProbe = 3, k = 5, refineFactor = 10)
       .collect()
       .groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getLong(4)).map(r => (r.getLong(1), r.getDouble(3))).toSeq)
+      .view.mapValues(_.sortBy(_.getAs[Long]("rk"))
+        .map(r => (r.getLong(1), r.getAs[Double]("cos_sim"))).toSeq)
       .toMap
     assert(batch.keySet == Set(0L, 1L, 2L, 3L), s"got ${batch.keySet}")
     (0L until 4L).foreach { qid =>
       val qDf = embs.filter(col("vec_id") === qid).select(col("embedding").as("q_vec"))
-      val single = Pq.probeIvfPq(spark, path, index.centroids, model, qDf,
+      val single = Pq.probeIvf(spark, path, index.centroids, model, qDf,
         "q_vec", "embedding", "vec_id", nProbe = 3, k = 5, refineFactor = 10)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        .collect().map(r => (r.getLong(0), r.getAs[Double]("cos_sim"))).toSeq
       assert(batch(qid) == single, s"query $qid: batch ${batch(qid)} != single $single")
     }
   }
@@ -87,14 +89,20 @@ class PqSpec extends SparkSpec {
     val model = Pq.trainResidual(corpus, "embedding", "vec_id", index.centroids, m = 8, codes = 16)
     val dir = java.nio.file.Files.createTempDirectory("graft_pqres").toString + "/idx"
     Pq.writeIvfPqResidual(dir, corpus, "embedding", "vec_id", index.centroids, model)
-    val got = Pq.probeIvfPqResidual(spark, dir, index.centroids, model, queryDf,
+    val got = Pq.probeIvf(spark, dir, index.centroids, model, queryDf,
         "q_vec", "embedding", "vec_id", nProbe = 3, k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      .collect().map(r => (r.getLong(0), r.getAs[Double]("cos_sim"))).toSeq
 
     // driver recompute with the NearestCentroid/PqEncode arithmetic
     val qRaw = Ann.queryVector(queryDf, "q_vec")
     val cells = Ann.nearestCells(index.centroids, qRaw, 3).toSet
-    val tables = Pq.residualDistanceTables(model, index.centroids, qRaw, cells.toSeq)
+    // per-cell ADC tables: distanceTable of the query's residual
+    // normalize(q) − centroid[cell]
+    val tables = cells.map { c =>
+      var s = 0.0; qRaw.foreach(x => s += x * x); val norm = math.sqrt(s)
+      c -> Pq.distanceTable(model,
+        Array.tabulate(qRaw.length)(j => qRaw(j) / norm - index.centroids(c)(j)))
+    }.toMap
     def nn(v: Array[Double]): Int = {
       var s = 0.0; v.foreach(x => s += x * x); val n = math.sqrt(s)
       var best = 0; var bd = Double.MaxValue
@@ -197,7 +205,7 @@ class PqSpec extends SparkSpec {
     }.toMap
     val recalls = Seq(2, 4, 8, 16).map { np =>
       val r = qids.map { id =>
-        val got = Pq.probeIvfPqResidual(spark, dir, index.centroids, model, qDfOf(id),
+        val got = Pq.probeIvf(spark, dir, index.centroids, model, qDfOf(id),
             "q_vec", "embedding", "vec_id", nProbe = np, k = 10) // refine: auto
           .select("vec_id").as[Long].collect().toSet
         (truth(id) & got).size / 10.0
@@ -238,7 +246,7 @@ class PqSpec extends SparkSpec {
     val recall = qids.map { id =>
       val truth = Ann.exact(corpus, qDfOf(id), "embedding", "q_vec", "vec_id", 10)
         .select("vec_id").as[Long].collect().toSet
-      val got = Pq.probeIvfPqResidual(spark, dir, index.centroids, model, qDfOf(id),
+      val got = Pq.probeIvf(spark, dir, index.centroids, model, qDfOf(id),
           "q_vec", "embedding", "vec_id", nProbe = 8, k = 10) // refine: auto
         .select("vec_id").as[Long].collect().toSet
       (truth & got).size / 10.0

@@ -63,6 +63,17 @@ class ProbeJobCountSpec extends SparkSpec {
     }
   }
 
+  test("warm single-query IVF-PQ probes are pinned (global and residual)") {
+    // bounds = the warm counts `runMain graft.tools.JobAudit <sf0.001>
+    // ivfpq_probe,ivfpq_residual` reported before both probes moved onto
+    // Pq.probeIvf; the residual query runs as the |Q| = 1 batch, so it
+    // carries the batch's heap exchanges
+    for ((q, bound) <- Seq("ivfpq_probe" -> 2, "ivfpq_residual" -> 4)) {
+      val n = warmJobs(q)
+      assert(n <= bound, s"$q fired $n jobs warm (bound $bound)")
+    }
+  }
+
   test("warm batch persisted probes are bounded (no per-probe ranking jobs)") {
     // SINGLE-SCAN layouts (vec rides in the index: plain, PQ, residual
     // PQ, the two-level composition): pruned scan + bounded-heap

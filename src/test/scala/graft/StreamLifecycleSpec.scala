@@ -54,8 +54,9 @@ class StreamLifecycleSpec extends SparkSpec {
 
     val qDf = frame(Seq(123L)).select(col("embedding").as("q_vec"))
     def probe(path: String): Seq[(Long, Double)] =
-      Pq.probeIvfPqResidual(spark, path, idx.centroids, model, qDf,
+      Pq.probeIvf(spark, path, idx.centroids, model, qDf,
           "q_vec", "embedding", "vec_id", nProbe = 4, k = 10)
+        .select("vec_id", "cos_sim")
         .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
 
     // from-scratch twin over an arbitrary live-id set: same assigner,

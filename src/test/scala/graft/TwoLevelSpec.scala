@@ -148,11 +148,11 @@ class TwoLevelSpec extends SparkSpec {
     val queries = embs.filter(col("vec_id").isin(1L, 7L, 13L, 250L))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
     def probe(d: String): Seq[(Long, Long, Double, Long)] =
-      Pq.probeBatchIvfPqResidual(spark, d, index.centroids, model, queries,
-          "q_vec", "query_id", "embedding", "vec_id", nProbe = 4, k = 10)
+      Pq.probeIvf(spark, d, index.centroids, model, queries,
+          "q_vec", "embedding", "vec_id", nProbe = 4, k = 10)
         .orderBy("query_id", "rk")
         .collect().toSeq
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
+        .map(r => (r.getLong(0), r.getLong(1), r.getAs[Double]("cos_sim"), r.getAs[Long]("rk")))
     val live = probe(dir)
     assert(live.nonEmpty && live.forall(_._2 % 10 != 3),
       "tombstoned ids must never reach the live probe's results")

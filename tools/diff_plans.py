@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Diff two rounds of plan snapshots (written by graft.tools.Plans) and
 flag plan-shape regressions: lost broadcasts, new sorts/exchanges, lost
-pushed filters, codegen boundary changes. Usage:
+pushed filters, lost static partition IN-sets, codegen boundary changes. Usage:
     python3 tools/diff_plans.py plans_r03 plans_r04
 Exit code 1 when any regression-class change is found.
 """
@@ -15,6 +15,7 @@ SIGNALS = {
     "sort": re.compile(r"^\s*[+:*-]*\s*\(?\d*\)?\s*Sort\b", re.M),
     "exchange": re.compile(r"\bExchange\b"),
     "pushedfilters": re.compile(r"PushedFilters: \[[^\]]"),
+    "static_cells": re.compile(r"PartitionFilters: \[[^\]]* IN \("),
     "codegen_fallback": re.compile(r"CodegenFallback"),
     "serialize": re.compile(r"SerializeFromObject"),
 }
@@ -39,11 +40,13 @@ def main(old_dir: str, new_dir: str) -> int:
             continue
         co, cn = counts(po.read_text()), counts(pn.read_text())
         diffs = []
-        # regressions: fewer broadcasts / pushed filters, more of the rest
+        # regressions: fewer broadcasts / pushed filters / static cells, more of the rest
         if cn["broadcast"] < co["broadcast"]:
             diffs.append(f"broadcasts {co['broadcast']}->{cn['broadcast']}")
         if cn["pushedfilters"] < co["pushedfilters"]:
             diffs.append(f"pushed-filters {co['pushedfilters']}->{cn['pushedfilters']}")
+        if cn["static_cells"] < co["static_cells"]:
+            diffs.append(f"static-cells {co['static_cells']}->{cn['static_cells']}")
         for k in ("sort", "exchange", "serialize", "codegen_fallback"):
             if cn[k] > co[k]:
                 diffs.append(f"{k} {co[k]}->{cn[k]}")
