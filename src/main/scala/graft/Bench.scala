@@ -179,12 +179,12 @@ object Bench {
     else "box"
   }
 
-  private def jitNowMs: Long = {
+  private[graft] def jitNowMs: Long = {
     val c = java.lang.management.ManagementFactory.getCompilationMXBean
     if (c != null && c.isCompilationTimeMonitoringSupported) c.getTotalCompilationTime else 0L
   }
 
-  private final class MetricsListener extends SparkListener {
+  private[graft] final class MetricsListener extends SparkListener {
     private val lock = new Object
     private var cur = new QueryMetrics
     private var jobsStarted = 0L

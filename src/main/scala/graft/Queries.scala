@@ -439,31 +439,25 @@ object Queries {
         col("path_check").startsWith("exists").as("docs_readable"))
   }
 
-  private val incFtsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Fts.Index]()
+  private val incFtsCache = Caches.lru[String, Fts.Index](16)
 
   /** Memoized BASE index over doc_id % 5 != 0 — shared by the
     * incremental and streamed maintenance queries; each consumer
     * hardlink-clones it ([[Fts.cloneIndex]]) before appending, so the
     * base layout stays pristine.
     */
-  private val baseFtsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Fts.Index]()
+  private val baseFtsCache = Caches.lru[String, Fts.Index](16)
 
   private def baseFtsIndex(s: SparkSession, dir: String): Fts.Index =
     baseFtsCache.computeIfAbsent(dir, _ =>
       Fts.build(
         docs(s, dir).filter(col("doc_id") % 5 =!= 0), "text", "doc_id",
-        java.nio.file.Files.createTempDirectory("graft_fts_base_").toString))
+        graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
+          java.nio.file.Files.createTempDirectory("graft_fts_base_")).toString))
 
-  private val docsimAnchorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Long, Long)]]()
+  private val docsimAnchorCache = Caches.lru[String, Seq[(Long, Long, Long)]](16)
 
-  private val docEmbTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val incDocEmbCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val incDocEmbCache = Caches.lru[String, String](16)
 
   /** PERSISTED doc-embedding sidecar (build once, probe many — the
     * docdims/IVF-layout pattern applied to pooled doc vectors): the
@@ -474,14 +468,11 @@ object Queries {
     * the corpus, refreshed incrementally with ingest.
     */
   private def docEmbTable(s: SparkSession, dir: String): DataFrame = {
-    val path = docEmbTableCache.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_docemb_").toString
+    val path = LayoutCache.getOrWrite(s"docemb:$dir")(p =>
       Featurize.meanPoolChunks(
         chunks(s, dir).select("doc_id", "chunk_index", "chunk"),
         "doc_id", "chunk_index", "chunk")
-        .write.mode("overwrite").parquet(out)
-      out
-    })
+        .write.mode("overwrite").parquet(p))
     s.read.parquet(path)
   }
 
@@ -504,8 +495,7 @@ object Queries {
     Fts.probe(s, idx, "doc_id", QueryTerms, k = 10)
   }
 
-  private val delFtsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Fts.Index]()
+  private val delFtsCache = Caches.lru[String, Fts.Index](16)
 
   /** DELETE maintenance on the FTS index
     * ([[graft.operators.Fts.deleteFromIndex]], the text-side sibling
@@ -523,8 +513,7 @@ object Queries {
     Fts.probe(s, idx, "doc_id", QueryTerms, k = 10)
   }
 
-  private val compactFtsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Fts.Index]()
+  private val compactFtsCache = Caches.lru[String, Fts.Index](16)
 
   /** COMPACTION closes the FTS maintenance triangle
     * (append [[bm25Incremental]] → delete [[bm25Deleted]] → compact):
@@ -971,18 +960,12 @@ object Queries {
     * maintenance queries; consumers hardlink-clone it
     * ([[graft.operators.Featurize.cloneDir]]) before appending.
     */
-  private val baseDocEmbCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def baseDocEmbDir(s: SparkSession, dir: String): String =
-    baseDocEmbCache.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_docemb_base_").toString
+    LayoutCache.getOrWrite(s"docemb_base:$dir")(p =>
       Featurize.meanPoolChunks(
         chunks(s, dir).select("doc_id", "chunk_index", "chunk")
           .filter(col("doc_id") % 5 =!= 0), "doc_id", "chunk_index", "chunk")
-        .write.mode("overwrite").parquet(out)
-      out
-    })
+        .write.mode("overwrite").parquet(p))
 
   /** The STREAMED face of [[docsimIncremental]]
     * ([[graft.streaming.StreamPipeline.docEmbeddingAppend]]): corpus
@@ -1322,8 +1305,7 @@ object Queries {
   def langId(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.langId(docs(s, dir), "text", "doc_id").orderBy("doc_id")
 
-  private val chunkStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ChunkStore]()
+  private val chunkStoreCache = Caches.lru[String, ChunkStore](16)
 
   /** The reference's store-maintenance loop (store.py:180 upsert,
     * :237 delete) exercised end-to-end on driver data and verified via
@@ -1333,9 +1315,15 @@ object Queries {
     * modification rules, so the hash check proves delta ordering,
     * tombstone drop, and compaction all preserve the right rows.
     */
-  def chunkstoreRead(s: SparkSession, dir: String): DataFrame = {
-    val store = chunkStoreCache.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft_cs_").toString
+  def chunkstoreRead(s: SparkSession, dir: String): DataFrame =
+    chunkStore(s, dir).read(s)
+      .select(col("doc_id"), col("lang"), md5(col("text")).as("content_hash"))
+      .orderBy("doc_id")
+
+  private def chunkStore(s: SparkSession, dir: String): ChunkStore =
+    chunkStoreCache.computeIfAbsent(dir, _ => {
+      val root = graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
+        java.nio.file.Files.createTempDirectory("graft_cs_")).toString
       val st = new ChunkStore(root, "doc_id")
       val base = docs(s, dir).select("doc_id", "text", "lang", "source")
       st.upsert(base)
@@ -1346,10 +1334,6 @@ object Queries {
       st.compact(s)
       st
     })
-    store.read(s)
-      .select(col("doc_id"), col("lang"), md5(col("text")).as("content_hash"))
-      .orderBy("doc_id")
-  }
 
   /** TIME TRAVEL over [[chunkstoreRead]]'s store: read manifest v2 —
     * after the modified re-upsert, BEFORE the `%13==5` tombstones and
@@ -1361,8 +1345,7 @@ object Queries {
     * v4 compaction left history intact.
     */
   def chunkstoreTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    chunkstoreRead(s, dir).limit(0).count() // ensure the cached store exists
-    chunkStoreCache.get(dir).readVersion(s, 2L)
+    chunkStore(s, dir).readVersion(s, 2L)
       .select(col("doc_id"), col("lang"), md5(col("text")).as("content_hash"))
       .orderBy("doc_id")
   }
@@ -1378,8 +1361,7 @@ object Queries {
     * change history intact).
     */
   def chunkstoreChanges(s: SparkSession, dir: String): DataFrame = {
-    chunkstoreRead(s, dir).limit(0).count() // ensure the cached store exists
-    chunkStoreCache.get(dir).changes(s, 1L, 4L)
+    chunkStore(s, dir).changes(s, 1L, 4L)
       .select(col("doc_id"), col("change"), md5(col("after.text")).as("content_hash"))
       .orderBy("doc_id")
   }
@@ -2108,14 +2090,14 @@ object Queries {
     * doc key — no new shuffle class. The twin composes the same CTE
     * fragments.
     */
-  /** The curation universe and the four detector legs, factored so
-    * graft.tools.Profile can time each leg in isolation (round-10
-    * verdict #4: the driver box cold-flagged the composed query 51.9x
-    * while the builder box sat at cold = 2.2x warm — per-leg timings
-    * plus the bench stage metrics are the adjudication evidence). Leg
-    * order carries the disposition priority.
+  /** The curation universe and the four detector legs, each a
+    * DataFrame that can be run and timed on its own (round-10 verdict
+    * #4: the driver box cold-flagged the composed query 51.9x while the
+    * builder box sat at cold = 2.2x warm — per-leg timings plus the
+    * bench stage metrics are the adjudication evidence). Leg order
+    * carries the disposition priority.
     */
-  private[graft] def curationLegs(
+  private def curationLegs(
       s: SparkSession, dir: String): (DataFrame, Seq[(String, DataFrame)]) = {
     val d = docs(s, dir).select("doc_id", "text", "lang")
     val bench = d.filter(col("doc_id") < 10)
@@ -2564,10 +2546,6 @@ object Queries {
       .agg(count("*").as("n"), round(sum("value"), 2).as("total_value"))
       .orderBy("hour_start", "event_type")
 
-  // One Z-order rewrite per source dir per session (a layout is an
-  // offline artifact, like an index build).
-  private val zorderCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** 2-D box scan over a Z-ORDERED copy of events: the layout
     * interleaves (user_id, minute) bits so each parquet file covers a
     * rectangle of that space and a predicate on BOTH dimensions prunes
@@ -2580,16 +2558,14 @@ object Queries {
     */
   def zorderScan(s: SparkSession, dir: String): DataFrame = {
     val epochMin = 28401120L // minutes from epoch to 2024-01-01T00:00Z
-    val path = zorderCache.computeIfAbsent(dir, _ => {
-      val p = graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
-        java.nio.file.Files.createTempDirectory("graft_zorder")).toString + "/z"
+    // one Z-order rewrite per source dir (a layout is an offline
+    // artifact, like an index build)
+    val path = LayoutCache.getOrWrite(s"zorder:$dir")(p =>
       Layout.zorderWrite(
         events(s, dir).select(
           col("event_id"), col("user_id"), col("event_type"), col("value"),
           (expr("ts DIV 60000000000") - epochMin).as("minute")),
-        "user_id", "minute", nFiles = 16, path = p)
-      p
-    })
+        "user_id", "minute", nFiles = 16, path = p))
     s.read.parquet(path)
       .filter(col("user_id").between(40, 60) && col("minute").between(14400, 17280))
       .groupBy("user_id")

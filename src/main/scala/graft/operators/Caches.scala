@@ -57,7 +57,7 @@ private[graft] object Caches {
 
   def lru[K, V](maxEntries: Int): Bounded[K, V] = new Bounded[K, V](maxEntries)
 
-  // session -> random id through a WEAK map (the Fts pattern, shared):
+  // session -> random id through a WEAK map:
   // the key vanishes with the session (no pinning), and the UUID cannot
   // collide across live sessions the way a 32-bit identity hash can.
   private val sessionIds =

@@ -148,7 +148,8 @@ object Featurize {
     * no data copied; parquet part files are immutable once written).
     */
   def cloneDir(src: String): String = {
-    val dst = java.nio.file.Files.createTempDirectory("graft_sidecar_clone_")
+    val dst = graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
+      java.nio.file.Files.createTempDirectory("graft_sidecar_clone_"))
     val files = java.nio.file.Files.list(java.nio.file.Paths.get(src))
     try files.forEach { p =>
       if (java.nio.file.Files.isRegularFile(p))

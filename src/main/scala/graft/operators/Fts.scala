@@ -47,42 +47,16 @@ object Fts extends IndexMaintenance {
     indexCache.computeIfAbsent(
       (dataKey, textCol, idCol),
       _ => build(docs, textCol, idCol,
-        java.nio.file.Files.createTempDirectory("graft_fts_").toString)
+        graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
+          java.nio.file.Files.createTempDirectory("graft_fts_")).toString)
     )
 
-  // Parquet handles per (session id, layout, segment): re-using one
-  // DataFrame instance re-uses its resolved FileIndex, so repeated
-  // probes don't pay file listing + footer/schema resolution per call
-  // (the catalog-table-handle pattern — at cluster scale this is the
-  // metastore's job). Keyed by a session ID string, not the session
-  // object, so a retired session can't be pinned by its handles (the
-  // cached DataFrame still references its session, but it ages out of
-  // the LRU instead of living forever under a strong map key);
-  // LRU-bounded so retired layouts (clones, compactions) age out.
-  // Invalidated when the layout mutates (append).
-  private val segmentCache = Caches.lru[(String, String, String), DataFrame](256)
-
-  // session → random id through a WEAK map: the key vanishes with the
-  // session (no pinning) and the UUID cannot collide across sessions
-  // the way an identity hash can (32-bit, reusable after GC — a
-  // collision would silently serve one session's resolved DataFrame
-  // to another)
-  private val sessionIds =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, String]())
-
-  private def sessionId(spark: SparkSession): String =
-    sessionIds.computeIfAbsent(spark, _ => java.util.UUID.randomUUID().toString)
-
+  // Parquet handles per (session, segment dir) from the shared listing
+  // cache: re-using one DataFrame re-uses its resolved FileIndex, so
+  // repeated probes don't pay file listing + footer/schema resolution
+  // per call. Every verb that mutates the layout invalidates it.
   private def segment(spark: SparkSession, dir: String, sub: String): DataFrame =
-    segmentCache.computeIfAbsent(
-      (sessionId(spark), dir, sub),
-      _ => spark.read.parquet(s"$dir/$sub"))
-
-  private def invalidateSegments(dir: String): Unit =
-    segmentCache.synchronized {
-      segmentCache.keySet.removeIf(k => k._2 == dir)
-    }
+    LayoutCache.readCached(spark, s"$dir/$sub")
 
   /** The layout's LIVE face of one segment: anti-join the tombstone
     * sidecar when present — shared by ALL probe entry points
@@ -105,7 +79,7 @@ object Fts extends IndexMaintenance {
     */
   def build(docs: DataFrame, textCol: String, idCol: String, outDir: String): Index = {
     val (n, sumDl) = writeSegments(docs, textCol, idCol, outDir, overwrite = true)
-    invalidateSegments(outDir) // a rebuild replaces the layout
+    LayoutCache.invalidate(outDir) // a rebuild replaces the layout
     Index(outDir, n, sumDl)
   }
 
@@ -133,7 +107,7 @@ object Fts extends IndexMaintenance {
       // path (periodic `build` compaction restores the global layout)
       val (dn, dSumDl) = writeSegments(newDocs, textCol, idCol, index.dir,
         overwrite = false, parts = 4)
-      invalidateSegments(index.dir) // layout grew: cached handles are stale
+      LayoutCache.invalidate(index.dir) // layout grew: cached handles are stale
       Index(index.dir, index.nDocs + dn, index.sumDl + dSumDl)
     }
   }
@@ -201,7 +175,7 @@ object Fts extends IndexMaintenance {
         .write.mode("overwrite").parquet(s"$outDir/docdims")
       liveSegment(spark, index.dir, "docnorms", idCol)
         .write.mode("overwrite").parquet(s"$outDir/docnorms")
-      invalidateSegments(outDir)
+      LayoutCache.invalidate(outDir)
       LayoutLog.commitVerb(spark, outDir, "build",
         LayoutLog.version(spark, outDir)): Unit
       Index(outDir, index.nDocs, index.sumDl)
@@ -228,7 +202,7 @@ object Fts extends IndexMaintenance {
     val rep = maintainLayout(spark, index.dir,
       (_, out) => { compact(spark, index, idCol, out); () },
       maxDeltaAppends, maxTombstones)
-    if (rep.compacted) invalidateSegments(index.dir) // cached handles are stale post-swap
+    if (rep.compacted) LayoutCache.invalidate(index.dir) // cached handles are stale post-swap
     (index, rep)
   }
 
@@ -241,7 +215,8 @@ object Fts extends IndexMaintenance {
     * stream run accumulates its own deltas.
     */
   def cloneIndex(index: Index): Index = {
-    val dst = java.nio.file.Files.createTempDirectory("graft_fts_clone_")
+    val dst = graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
+      java.nio.file.Files.createTempDirectory("graft_fts_clone_"))
     val subs = Seq("postings", "docdims", "docnorms") ++
       Seq(TombstonesSub).filter(_ => hasTombstones(index.dir))
     subs.foreach { sub =>

@@ -40,22 +40,10 @@ class IndexMaintainSpec extends SparkSpec {
     // "pays nothing" made mechanical: the no-op decision is driver-side
     // metadata only — ZERO Spark jobs (the tombstone count below the
     // sidecar-exists memo never runs, and delta count reads the log)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.GraftTestBridge.waitListenerBusEmpty(spark.sparkContext, 30000)
-    spark.sparkContext.addSparkListener(listener)
-    val r =
-      try {
-        val r0 = M.maintainLayout(spark, dir, annCompact, maxDeltaAppends = 8)
-        org.apache.spark.GraftTestBridge.waitListenerBusEmpty(spark.sparkContext, 30000)
-        r0
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (r, jobs) = graft.tools.Inspect.jobsOf(spark)(
+      M.maintainLayout(spark, dir, annCompact, maxDeltaAppends = 8))
     assert(r == M.LayoutMaintenanceReport(1, 0L, compacted = false))
-    assert(jobs.get() == 0, s"the no-op policy path fired ${jobs.get()} Spark jobs")
+    assert(jobs.size == 0, s"the no-op policy path fired ${jobs.size} Spark jobs")
     assert(LayoutLog.appendsSinceBuild(spark, dir) == 1, "no-op must not touch the log")
   }
 

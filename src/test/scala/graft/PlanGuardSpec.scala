@@ -7,8 +7,9 @@ import graft.plans.GraftFunctions
 
 /** Round gate for physical-plan shape: every registered query's formatted
   * plan is compared against its checked-in snapshot
-  * (`plans_baseline/<name>.txt`, refreshed by `runMain graft.tools.Plans
-  * <sfDir> plans_baseline` after an INTENTIONAL shape change) on the
+  * (`plans_baseline/<name>.txt`, refreshed by `runMain graft.tools.Inspect
+  * <sfDir> all --passes 0 --plans-to plans_baseline` after an INTENTIONAL
+  * shape change) on the
   * regression-class signals from tools/diff_plans.py — lost broadcasts,
   * lost pushed filters, lost static partition IN-sets, new sorts /
   * exchanges / object serializations / codegen fallbacks. Plan shapes are SF-invariant here (verified round 5:
@@ -18,26 +19,11 @@ import graft.plans.GraftFunctions
   */
 class PlanGuardSpec extends SparkSpec {
 
-  private val snapDir = Paths.get("plans_baseline")
-
-  // (signal, pattern, moreIsWorse) — mirror of tools/diff_plans.py SIGNALS
-  private val signals: Seq[(String, scala.util.matching.Regex, Boolean)] = Seq(
-    ("broadcast", "Broadcast(HashJoin|ExchangeExec|Exchange|NestedLoopJoin)".r, false),
-    ("pushed_filters", "PushedFilters: \\[[^\\]]".r, false),
-    // static partition pruning: a `PartitionFilters` list with an IN set
-    ("static_cells", "PartitionFilters: \\[[^\\]]* IN \\(".r, false),
-    ("sort", "(?m)^\\s*[+:*-]*\\s*\\(?\\d*\\)?\\s*Sort\\b".r, true),
-    ("exchange", "\\bExchange\\b".r, true),
-    ("serialize", "SerializeFromObject".r, true),
-    ("codegen_fallback", "CodegenFallback".r, true)
-  )
-
-  private def counts(plan: String): Map[String, Int] =
-    signals.map { case (n, p, _) => n -> p.findAllMatchIn(plan).size }.toMap
+  import PlanGuardSpec.{counts, signals, snapDir}
 
   test("plans_baseline snapshots exist for every registered query") {
     assert(Files.isDirectory(snapDir),
-      "plans_baseline/ missing — run: sbt 'runMain graft.tools.Plans /root/testdata/sf0.01 plans_baseline'")
+      "plans_baseline/ missing — run: sbt 'runMain graft.tools.Inspect /root/testdata/sf0.01 all --passes 0 --plans-to plans_baseline'")
     val missing = SparkEntry.queries.keySet.filterNot(n => Files.exists(snapDir.resolve(s"$n.txt")))
     assert(missing.isEmpty, s"no plan snapshot for: ${missing.toSeq.sorted.mkString(", ")}")
   }
@@ -103,7 +89,26 @@ class PlanGuardSpec extends SparkSpec {
       }
       assert(regressions.isEmpty,
         s"plan-shape regression in $name: ${regressions.mkString(", ")} — " +
-          "if intentional, refresh plans_baseline/ via graft.tools.Plans")
+          "if intentional, refresh plans_baseline/ via graft.tools.Inspect all --passes 0 --plans-to plans_baseline")
     }
   }
+}
+
+object PlanGuardSpec {
+  val snapDir = Paths.get("plans_baseline")
+
+  // (signal, pattern, moreIsWorse) — mirror of tools/diff_plans.py SIGNALS
+  val signals: Seq[(String, scala.util.matching.Regex, Boolean)] = Seq(
+    ("broadcast", "Broadcast(HashJoin|ExchangeExec|Exchange|NestedLoopJoin)".r, false),
+    ("pushed_filters", "PushedFilters: \\[[^\\]]".r, false),
+    // static partition pruning: a `PartitionFilters` list with an IN set
+    ("static_cells", "PartitionFilters: \\[[^\\]]* IN \\(".r, false),
+    ("sort", "(?m)^\\s*[+:*-]*\\s*\\(?\\d*\\)?\\s*Sort\\b".r, true),
+    ("exchange", "\\bExchange\\b".r, true),
+    ("serialize", "SerializeFromObject".r, true),
+    ("codegen_fallback", "CodegenFallback".r, true)
+  )
+
+  def counts(plan: String): Map[String, Int] =
+    signals.map { case (n, p, _) => n -> p.findAllMatchIn(plan).size }.toMap
 }

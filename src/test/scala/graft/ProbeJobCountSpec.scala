@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.tools.Inspect
 
 /** Pins the DRIVER-SIDE cost of warm persisted-index probes — the
   * round-11 finding the bench metrics exposed twice in a row: warm
@@ -20,28 +20,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   */
 class ProbeJobCountSpec extends SparkSpec {
 
-  private val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val listener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-  }
-
-  /** Jobs fired by the SECOND (warm) execution of a registered query.
-    * The bus is drained via waitUntilEmpty (not fixed sleeps) so late
-    * job-start events can't be attributed to the wrong window on a
-    * loaded box (round-12 advice).
+  /** Jobs fired by the SECOND (warm) execution of a registered query —
+    * the same measurement `graft.tools.Inspect --jobs` prints.
     */
-  private def warmJobs(name: String): Int = {
-    val fn = SparkEntry.queries(name)
-    fn(spark, sf).count() // cold: builds, writes, memoizes
-    org.apache.spark.GraftTestBridge.waitListenerBusEmpty(spark.sparkContext, 30000)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      jobs.set(0)
-      fn(spark, sf).count()
-      org.apache.spark.GraftTestBridge.waitListenerBusEmpty(spark.sparkContext, 30000)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def warmJobs(name: String): Int = Inspect.warmJobs(spark, sf, name).size
 
   test("warm single-query persisted probes are <=2 jobs") {
     for (q <- Seq("ann_incremental", "ann_compacted", "ann_deleted", "ann_filtered",
@@ -55,7 +37,7 @@ class ProbeJobCountSpec extends SparkSpec {
     // the codes/prefix/signs sidecar probes re-rank against the base
     // table by id, so the shortlist broadcast is materialized by its own
     // job(s) before the exact top-k; bounds = the warm counts
-    // `runMain graft.tools.JobAudit <sf0.001> ivfsq_probe,ivfmrl_probe,ivfbq_probe`
+    // `runMain graft.tools.Inspect <sf0.001> ivfsq_probe,ivfmrl_probe,ivfbq_probe --jobs`
     // reports
     for ((q, bound) <- Seq("ivfsq_probe" -> 3, "ivfmrl_probe" -> 3, "ivfbq_probe" -> 4)) {
       val n = warmJobs(q)
@@ -64,8 +46,8 @@ class ProbeJobCountSpec extends SparkSpec {
   }
 
   test("warm single-query IVF-PQ probes are pinned (global and residual)") {
-    // bounds = the warm counts `runMain graft.tools.JobAudit <sf0.001>
-    // ivfpq_probe,ivfpq_residual` reported before both probes moved onto
+    // bounds = the warm counts `runMain graft.tools.Inspect <sf0.001>
+    // ivfpq_probe,ivfpq_residual --jobs` reported before both probes moved onto
     // Pq.probeIvf; the residual query runs as the |Q| = 1 batch, so it
     // carries the batch's heap exchanges
     for ((q, bound) <- Seq("ivfpq_probe" -> 2, "ivfpq_residual" -> 4)) {
@@ -141,14 +123,7 @@ class ProbeJobCountSpec extends SparkSpec {
         "ann_batch_bq_rotated"))
     for ((name, probe, registered) <- variants) {
       probe().count() // cold: codegen + listing memos
-      org.apache.spark.GraftTestBridge.waitListenerBusEmpty(spark.sparkContext, 30000)
-      spark.sparkContext.addSparkListener(listener)
-      val n = try {
-        jobs.set(0)
-        probe().count()
-        org.apache.spark.GraftTestBridge.waitListenerBusEmpty(spark.sparkContext, 30000)
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val n = Inspect.jobsOf(spark)(probe().count())._2.size
       assert(n <= 4, s"$name fired $n jobs warm (bound 4 — the single-scan contract)")
       val got = probe().orderBy("query_id", "rk").collect().toSeq
       val twoTable = SparkEntry.queries(registered)(spark, sf)

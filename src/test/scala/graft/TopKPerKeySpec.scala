@@ -65,7 +65,7 @@ class TopKPerKeySpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       TopK.perKey(big, Seq("grp"), Seq(("score", false), ("id", true)), 7).collect()
-      org.apache.spark.GraftTestBridge.waitListenerBusEmpty(spark.sparkContext, 30000)
+      org.apache.spark.GraftMainBridge.waitListenerBusEmpty(spark.sparkContext, 30000)
     } finally spark.sparkContext.removeSparkListener(l)
     val bound = 16L * 5 * 7 // partitions x keys x k = 560 << 5000 rows
     assert(written.get() <= bound,

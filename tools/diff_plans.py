@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Diff two rounds of plan snapshots (written by graft.tools.Plans) and
+"""Diff two rounds of plan snapshots (written by
+`runMain graft.tools.Inspect <sfDir> all --passes 0 --plans-to <dir>`) and
 flag plan-shape regressions: lost broadcasts, new sorts/exchanges, lost
 pushed filters, lost static partition IN-sets, codegen boundary changes. Usage:
     python3 tools/diff_plans.py plans_r03 plans_r04
