@@ -62,102 +62,55 @@ class ChunkStore(val root: String, val keyCol: String) {
   private val logPath = new Path(root, "_log")
 
   private def fs(spark: SparkSession): FileSystem =
-    rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    rootPath.getFileSystem(spark.sessionState.newHadoopConf())
 
   /** One live segment: `seq` is the latest-wins order, `dir` the
     * segment directory name under root.
     */
   final case class Segment(seq: Long, dir: String)
 
+  /** Complete manifest versions on disk, ascending. */
+  private def listVersions(f: FileSystem): Seq[Long] =
+    if (!f.exists(logPath)) Seq.empty
+    else f.listStatus(logPath).toSeq
+      .map(_.getPath.getName)
+      .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
+      .map(_.stripPrefix("v").stripSuffix(".manifest").toLong)
+      .sorted
+
+  /** The segments manifest `version` lists, in sequence order. */
+  private def readManifest(f: FileSystem, version: Long): Seq[Segment] = {
+    val in = f.open(manifestPath(version))
+    val body =
+      try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).mkString
+      finally in.close()
+    body.linesIterator.map(_.trim).filter(_.nonEmpty).map { l =>
+      val Array(seq, dir) = l.split(" ", 2)
+      Segment(seq.toLong, dir)
+    }.toSeq.sortBy(_.seq)
+  }
+
   /** (version, segments) of the highest complete manifest, if any. */
   private def currentManifest(spark: SparkSession): Option[(Long, Seq[Segment])] = {
     val f = fs(spark)
-    if (!f.exists(logPath)) return None
-    val versions = f.listStatus(logPath).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toLong)
-    if (versions.isEmpty) None
-    else {
-      val v = versions.max
-      val in = f.open(manifestPath(v))
-      val body =
-        try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).mkString
-        finally in.close()
-      val segs = body.linesIterator.map(_.trim).filter(_.nonEmpty).map { l =>
-        val Array(seq, dir) = l.split(" ", 2)
-        Segment(seq.toLong, dir)
-      }.toSeq.sortBy(_.seq)
-      Some(v -> segs)
-    }
+    listVersions(f).lastOption.map(v => v -> readManifest(f, v))
   }
 
   private def manifestPath(version: Long): Path =
     new Path(logPath, f"v$version%08d.manifest")
 
-  /** Atomic pointer swap: write the segment list to a temp file, then
-    * install it at the final version name via an atomic fail-if-exists
-    * primitive; a loss means a concurrent writer won this version —
-    * surface it; the caller retries against the re-read state. The
-    * primitive is scheme-dependent, mirroring [[LayoutLog.tryCommit]]
-    * (where the cross-process racer empirically broke the old
-    * FileContext-only version): kernel `link(2)` on `file:`
-    * (FileContext's Rename.NONE is check-then-act there, and ChecksumFs
-    * renames the `.crc` sidecar separately — two racing drivers can
-    * tear a manifest's data/checksum pair; the NIO tmp write also mints
-    * no `.crc`); `FileContext.rename(…, Rename.NONE)` on remote
-    * schemes, where it is namenode-atomic — Delta's HDFSLogStore
-    * reasoning. (Stock `FileSystem.rename` silently REPLACES on local —
-    * verified against this distribution's Hadoop 3.4.2 — and is never
-    * used here.)
+  /** Atomic pointer swap: install the segment list at the final
+    * version name through [[LayoutLog.casCreate]], the same
+    * scheme-dependent fail-if-exists primitive as the layout commit
+    * log (kernel `link(2)` on `file:`, `FileContext.rename(…,
+    * Rename.NONE)` elsewhere); a loss means a concurrent writer won
+    * this version — surface it; the caller retries against the
+    * re-read state.
     */
   private def commit(spark: SparkSession, version: Long, segments: Seq[Segment]): Unit = {
-    val f = fs(spark)
-    if (!f.exists(logPath)) f.mkdirs(logPath)
     val body = segments.sortBy(_.seq).map(s => s"${s.seq} ${s.dir}").mkString("", "\n", "\n")
       .getBytes(StandardCharsets.UTF_8)
-    val dst = manifestPath(version)
-    val won =
-      if (f.getUri.getScheme == "file") {
-        val lpNio = java.nio.file.Paths.get(f.makeQualified(logPath).toUri.getPath)
-        val tmp = lpNio.resolve(s"_tmp-${java.util.UUID.randomUUID()}")
-        java.nio.file.Files.write(tmp, body)
-        try {
-          java.nio.file.Files.createLink(lpNio.resolve(dst.getName), tmp)
-          java.nio.file.Files.delete(tmp)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            java.nio.file.Files.delete(tmp); false
-          case e: Throwable =>
-            try java.nio.file.Files.deleteIfExists(tmp) catch { case _: Throwable => () }
-            throw e
-        }
-      } else {
-        val tmp = new Path(logPath, s"_tmp-${java.util.UUID.randomUUID()}")
-        val out = f.create(tmp, false)
-        try out.write(body)
-        finally out.close()
-        try {
-          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-            dst.toUri, spark.sparkContext.hadoopConfiguration)
-          fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.NONE)
-          true
-        } catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-            f.delete(tmp, false); false
-          case _: java.io.IOException if f.exists(dst) =>
-            f.delete(tmp, false); false
-          case e: Throwable =>
-            // genuine infrastructure failure (dst absent): reap the
-            // temp file before propagating, or a long-lived driver
-            // accumulates _tmp-* debris in _log/ (LayoutLog.tryCommit's
-            // clause, mirrored per round-16 advice)
-            try f.delete(tmp, false) catch { case _: Throwable => () }
-            throw e
-        }
-      }
-    if (!won)
+    if (!LayoutLog.casCreate(spark, manifestPath(version), body))
       throw new java.util.ConcurrentModificationException(
         s"manifest v$version already committed by a concurrent writer at $root")
   }
@@ -231,18 +184,11 @@ class ChunkStore(val root: String, val keyCol: String) {
     */
   def readVersion(spark: SparkSession, version: Long): DataFrame = {
     val f = fs(spark)
-    val avail = versions(spark)
+    val avail = listVersions(f)
     require(avail.contains(version),
       s"version $version not retained at $root (have: ${avail.mkString(", ")}) — " +
         "vacuumed manifests cannot be replayed; raise keepManifests to retain more history")
-    val in = f.open(manifestPath(version))
-    val body =
-      try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).mkString
-      finally in.close()
-    val segs = body.linesIterator.map(_.trim).filter(_.nonEmpty).map { l =>
-      val Array(seq, dir) = l.split(" ", 2)
-      Segment(seq.toLong, dir)
-    }.toSeq.sortBy(_.seq)
+    val segs = readManifest(f, version)
     require(segs.nonEmpty, s"manifest v$version at $root is empty")
     readSegments(spark, segs)
   }
@@ -286,15 +232,7 @@ class ChunkStore(val root: String, val keyCol: String) {
   }
 
   /** Manifest versions still on disk (readable via [[readVersion]]). */
-  def versions(spark: SparkSession): Seq[Long] = {
-    val f = fs(spark)
-    if (!f.exists(logPath)) Seq.empty
-    else f.listStatus(logPath).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-      .map(_.stripPrefix("v").stripSuffix(".manifest").toLong)
-      .sorted
-  }
+  def versions(spark: SparkSession): Seq[Long] = listVersions(fs(spark))
 
   /** Fold the oldest `runLength` segments into ONE segment holding the
     * run's highest sequence number, and commit a manifest with the fold
@@ -326,19 +264,9 @@ class ChunkStore(val root: String, val keyCol: String) {
   def vacuum(spark: SparkSession, keepManifests: Int = 2): Unit = {
     val f = fs(spark)
     if (!f.exists(logPath)) return
-    val versions = f.listStatus(logPath).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toLong)
-      .sorted
+    val versions = listVersions(f)
     val keep = versions.takeRight(math.max(1, keepManifests)).toSet
-    val referenced = keep.flatMap { v =>
-      val in = f.open(manifestPath(v))
-      val body =
-        try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).mkString
-        finally in.close()
-      body.linesIterator.map(_.trim).filter(_.nonEmpty).map(_.split(" ", 2)(1)).toSet
-    }
+    val referenced = keep.flatMap(v => readManifest(f, v).map(_.dir))
     versions.filterNot(keep).foreach(v => f.delete(manifestPath(v), false))
     f.listStatus(rootPath).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("seg-"))

@@ -150,11 +150,7 @@ object Featurize {
   def cloneDir(src: String): String = {
     val dst = graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
       java.nio.file.Files.createTempDirectory("graft_sidecar_clone_"))
-    val files = java.nio.file.Files.list(java.nio.file.Paths.get(src))
-    try files.forEach { p =>
-      if (java.nio.file.Files.isRegularFile(p))
-        java.nio.file.Files.createLink(dst.resolve(p.getFileName.toString), p)
-    } finally files.close()
+    Fts.linkFiles(java.nio.file.Paths.get(src), dst)
     dst.toString
   }
 

@@ -219,17 +219,21 @@ object Fts extends IndexMaintenance {
       java.nio.file.Files.createTempDirectory("graft_fts_clone_"))
     val subs = Seq("postings", "docdims", "docnorms") ++
       Seq(TombstonesSub).filter(_ => hasTombstones(index.dir))
-    subs.foreach { sub =>
-      val from = java.nio.file.Paths.get(index.dir, sub)
-      val to = dst.resolve(sub)
-      java.nio.file.Files.createDirectories(to)
-      val files = java.nio.file.Files.list(from)
-      try files.forEach { p =>
-        if (java.nio.file.Files.isRegularFile(p))
-          java.nio.file.Files.createLink(to.resolve(p.getFileName.toString), p)
-      } finally files.close()
-    }
+    subs.foreach(sub => linkFiles(java.nio.file.Paths.get(index.dir, sub), dst.resolve(sub)))
     Index(dst.toString, index.nDocs, index.sumDl)
+  }
+
+  /** Hardlink every regular file of `from` into `to` (created if
+    * absent) — the clone step of [[cloneIndex]] and
+    * [[Featurize.cloneDir]].
+    */
+  private[operators] def linkFiles(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    java.nio.file.Files.createDirectories(to)
+    val files = java.nio.file.Files.list(from)
+    try files.forEach { p =>
+      if (java.nio.file.Files.isRegularFile(p))
+        java.nio.file.Files.createLink(to.resolve(p.getFileName.toString), p)
+    } finally files.close()
   }
 
   /** One tokenize+explode scan feeding all three layout outputs; returns
@@ -433,14 +437,7 @@ object Fts extends IndexMaintenance {
     val stats = p.agg(dfAggs.head, dfAggs.tail: _*)
       .withColumn("n", lit(index.nDocs))
       .withColumn("avgdl", lit(index.avgdl))
-    val contribs = queryTerms.map { t =>
-      val tf = col(tfCol(t))
-      val df = col(s"df_${tfCol(t)}")
-      val idf = log(lit(1.0) + (col("n") - df + 0.5) / (df + 0.5))
-      val tfNorm = tf * lit(k1 + 1) /
-        (tf + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
-      when(tf > 0, idf * tfNorm).otherwise(lit(0.0))
-    }
+    val contribs = queryTerms.map(t => Search.bm25Term(col(tfCol(t)), col(s"df_${tfCol(t)}"), k1, b))
     perDoc
       .crossJoin(broadcast(stats))
       .withColumn("bm25", round(contribs.reduce(_ + _), 5))

@@ -93,11 +93,6 @@ object Ingest {
     )
   }
 
-  /** Former name of [[convert]], kept while the stub half is still the
-    * seam for binary formats.
-    */
-  def convertStub(df: DataFrame): DataFrame = convert(df)
-
   /** Deterministic JSON rendering of a user metadata map (sorted keys),
     * carried verbatim onto every chunk of the ingest call — the analog
     * of the `metadata` argument of the reference's ingest_* tools.

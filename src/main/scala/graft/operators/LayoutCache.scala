@@ -1,6 +1,11 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Session memo for PERSISTED index layouts — the storage-side face of
   * [[Ann.buildCached]] / [[Fts.buildCached]]: an index layout is an
@@ -64,7 +69,43 @@ object LayoutCache {
     */
   def readCached(spark: SparkSession, path: String): DataFrame =
     readCache.computeIfAbsent((Caches.sessionId(spark), path),
-      _ => spark.read.parquet(path))
+      _ => footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path)))
+
+  /** The data schema of the layout dir at `path`, read on the driver
+    * from the footer of its first visible data file: the schema Spark's
+    * own non-merging inference returns, without the one-task job that
+    * inference launches. That job was half of a cold layout read, and
+    * a cold read has to fit between two in-place swaps for
+    * [[probeRetry]] to land. Hidden names follow Spark's listing filter.
+    * None — the caller then infers as before, errors included — for a
+    * missing path, a plain file, a dir with no data file, or a session
+    * that merges parquet schemas.
+    */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def visible(p: Path): Boolean = {
+      val n = p.getName
+      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".") && !n.endsWith("._COPYING_")
+    }
+    def firstFile(dir: Path): Option[Path] = {
+      val (dirs, files) = fs.listStatus(dir).toSeq.filter(s => visible(s.getPath))
+        .sortBy(_.getPath.getName).partition(_.isDirectory)
+      files.headOption.map(_.getPath)
+        .orElse(dirs.iterator.map(d => firstFile(d.getPath)).collectFirst { case Some(f) => f })
+    }
+    val isDir =
+      try fs.getFileStatus(root).isDirectory
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!isDir || spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else firstFile(root).map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val meta = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(
+        new Footer(f, meta), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
 
   /** True iff `e` is one of the TRANSIENT visibility shapes a reader
     * can observe while an in-place [[IndexMaintenance.fencedSwap]]'s

@@ -226,19 +226,27 @@ object LayoutLog {
     *    sidecar is ever minted for log files.
     */
   private[graft] def tryCommit(
-      spark: SparkSession, dir: String, v: Long, verb: String, observed: Long): Boolean = {
-    val fs = fsOf(spark, dir)
-    val lp = logPath(dir)
+      spark: SparkSession, dir: String, v: Long, verb: String, observed: Long): Boolean =
+    casCreate(spark, commitPath(dir, v), s"$verb observed=$observed\n".getBytes(StandardCharsets.UTF_8))
+
+  /** Create `dst` holding `body` through the scheme's atomic
+    * fail-if-exists primitive (see [[tryCommit]]); false = `dst` already
+    * exists, and the existing file is PRESERVED. The body is written to
+    * a `_tmp-<uuid>` file in `dst`'s directory first, and that temp
+    * file is reaped on every path, also when the install throws.
+    * [[ChunkStore]]'s manifest commit installs through this too.
+    */
+  private[operators] def casCreate(spark: SparkSession, dst: Path, body: Array[Byte]): Boolean = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = dst.getFileSystem(conf)
+    val lp = dst.getParent
     if (!fs.exists(lp)) fs.mkdirs(lp)
-    val body = s"$verb observed=$observed\n".getBytes(StandardCharsets.UTF_8)
-    val dst = commitPath(dir, v)
     if (fs.getUri.getScheme == "file") {
       val lpNio = java.nio.file.Paths.get(fs.makeQualified(lp).toUri.getPath)
       val tmp = lpNio.resolve(s"_tmp-${java.util.UUID.randomUUID()}")
       java.nio.file.Files.write(tmp, body)
-      val dstNio = lpNio.resolve(dst.getName)
       try {
-        java.nio.file.Files.createLink(dstNio, tmp)
+        java.nio.file.Files.createLink(lpNio.resolve(dst.getName), tmp)
         java.nio.file.Files.delete(tmp)
         true
       } catch {
@@ -254,9 +262,8 @@ object LayoutLog {
       try out.write(body)
       finally out.close()
       try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          dst.toUri, spark.sessionState.newHadoopConf())
-        fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.NONE)
+        org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, conf)
+          .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.NONE)
         true
       } catch {
         case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
@@ -268,7 +275,7 @@ object LayoutLog {
         case e: Throwable =>
           // genuine infrastructure failure: still reap the temp file —
           // leaking one _tmp-* per failed attempt grows _log/ forever
-          // (they are invisible to listVersions but real FS debris)
+          // (they are invisible to version listings but real FS debris)
           try fs.delete(tmp, false) catch { case _: Throwable => () }
           throw e
       }

@@ -214,14 +214,7 @@ object Search {
     val statAggs = count(lit(1)).cast("double").as("n") +: avg("dl").as("avgdl") +:
       tfCols.map(c => count(when(col(c) > 0, true)).cast("double").as(s"df_$c"))
     val stats = perDoc.groupBy(col(groupCol)).agg(statAggs.head, statAggs.tail: _*)
-    val contribs = tfCols.map { c =>
-      val tf = col(c)
-      val df = col(s"df_$c")
-      val idf = log(lit(1.0) + (col("n") - df + 0.5) / (df + 0.5))
-      val tfNorm = tf * lit(k1 + 1) /
-        (tf + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
-      when(tf > 0, idf * tfNorm).otherwise(lit(0.0))
-    }
+    val contribs = tfCols.map(c => bm25Term(col(c), col(s"df_$c"), k1, b))
     val scored = perDoc
       .filter(tfCols.map(c => col(c) > 0).reduce(_ || _))
       .join(broadcast(stats), Seq(groupCol))
@@ -274,30 +267,52 @@ object Search {
       queryTerms: Seq[String],
       k1: Double = 1.2,
       b: Double = 0.75
+  ): DataFrame =
+    bm25TermScores(tokens, idCol, queryTerms.map(_ -> None), k1, b)
+
+  /** One query term's BM25 contribution over the per-doc `dl` and the
+    * corpus `n` / `avgdl` columns — the one idf × tfNorm expression
+    * every BM25 scorer and the FTS probe share. A `weight` multiplies
+    * the idf first, `(w · idf) · tfNorm`, so weighted and unweighted
+    * scores keep their plans.
+    */
+  private[operators] def bm25Term(
+      tf: Column, df: Column, k1: Double, b: Double, weight: Option[Double] = None): Column = {
+    val idf = log(lit(1.0) + (col("n") - df + 0.5) / (df + 0.5))
+    val tfNorm = tf * lit(k1 + 1) /
+      (tf + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
+    when(tf > 0, weight.fold(idf)(w => lit(w) * idf) * tfNorm).otherwise(lit(0.0))
+  }
+
+  /** [[bm25Scores]] and [[bm25WeightedScores]]: each term's contribution
+    * optionally weighted.
+    */
+  private def bm25TermScores(
+      tokens: DataFrame,
+      idCol: String,
+      termWeights: Seq[(String, Option[Double])],
+      k1: Double,
+      b: Double
   ): DataFrame = {
+    val terms = termWeights.map(_._1)
     // ONE shuffle of the token table: doc length + per-query-term tf
     // pivoted into a single map-side-combined aggregation (the pivot is
     // |queryTerms| wide — a handful of columns).
     def tfCol(t: String) = s"tf_${t.hashCode.toHexString}"
     val perDocAggs = count("*").cast("double").as("dl") +:
-      queryTerms.map(t => count(when(col("term") === t, true)).cast("double").as(tfCol(t)))
+      terms.map(t => count(when(col("term") === t, true)).cast("double").as(tfCol(t)))
     val perDoc = tokens.groupBy(col(idCol)).agg(perDocAggs.head, perDocAggs.tail: _*)
 
     // Corpus stats (N, avgdl, df per term) — a one-row broadcast.
     val statAggs = count("*").cast("double").as("n") +: avg("dl").as("avgdl") +:
-      queryTerms.map(t => count(when(col(tfCol(t)) > 0, true)).cast("double").as(s"df_${tfCol(t)}"))
+      terms.map(t => count(when(col(tfCol(t)) > 0, true)).cast("double").as(s"df_${tfCol(t)}"))
     val stats = perDoc.agg(statAggs.head, statAggs.tail: _*)
 
-    val contribs = queryTerms.map { t =>
-      val tf = col(tfCol(t))
-      val df = col(s"df_${tfCol(t)}")
-      val idf = log(lit(1.0) + (col("n") - df + 0.5) / (df + 0.5))
-      val tfNorm = tf * lit(k1 + 1) /
-        (tf + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
-      when(tf > 0, idf * tfNorm).otherwise(lit(0.0))
+    val contribs = termWeights.map { case (t, w) =>
+      bm25Term(col(tfCol(t)), col(s"df_${tfCol(t)}"), k1, b, w)
     }
     perDoc
-      .filter(queryTerms.map(t => col(tfCol(t)) > 0).reduce(_ || _))
+      .filter(terms.map(t => col(tfCol(t)) > 0).reduce(_ || _))
       .crossJoin(broadcast(stats))
       .withColumn("score", contribs.reduce(_ + _))
       .select(col(idCol), col("score"))
@@ -404,29 +419,8 @@ object Search {
       termWeights: Seq[(String, Double)],
       k1: Double = 1.2,
       b: Double = 0.75
-  ): DataFrame = {
-    val terms = termWeights.map(_._1)
-    def tfCol(t: String) = s"tf_${t.hashCode.toHexString}"
-    val perDocAggs = count("*").cast("double").as("dl") +:
-      terms.map(t => count(when(col("term") === t, true)).cast("double").as(tfCol(t)))
-    val perDoc = tokens.groupBy(col(idCol)).agg(perDocAggs.head, perDocAggs.tail: _*)
-    val statAggs = count("*").cast("double").as("n") +: avg("dl").as("avgdl") +:
-      terms.map(t => count(when(col(tfCol(t)) > 0, true)).cast("double").as(s"df_${tfCol(t)}"))
-    val stats = perDoc.agg(statAggs.head, statAggs.tail: _*)
-    val contribs = termWeights.map { case (t, w) =>
-      val tf = col(tfCol(t))
-      val df = col(s"df_${tfCol(t)}")
-      val idf = log(lit(1.0) + (col("n") - df + 0.5) / (df + 0.5))
-      val tfNorm = tf * lit(k1 + 1) /
-        (tf + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
-      when(tf > 0, lit(w) * idf * tfNorm).otherwise(lit(0.0))
-    }
-    perDoc
-      .filter(terms.map(t => col(tfCol(t)) > 0).reduce(_ || _))
-      .crossJoin(broadcast(stats))
-      .withColumn("score", contribs.reduce(_ + _))
-      .select(col(idCol), col("score"))
-  }
+  ): DataFrame =
+    bm25TermScores(tokens, idCol, termWeights.map { case (t, w) => t -> Some(w) }, k1, b)
 
   /** RM3 pseudo-relevance-feedback query expansion (Lavrenko &
     * Croft 2001 relevance models; the Anserini/Indri default): run the

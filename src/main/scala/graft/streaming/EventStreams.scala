@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Structured Streaming operators over the events stream (SURVEY §2 F5).
   *
@@ -157,53 +157,4 @@ object EventStreams {
       .groupBy("source")
       .agg(count("*").as("docs"), sum("toks").as("bpe_tokens"))
       .withColumn("over_budget", col("bpe_tokens") > budget)
-
-  /** Continuous index maintenance: append each micro-batch of chunk
-    * rows as a ChunkStore delta (foreachBatch → upsert). Latest-wins
-    * merge-on-read means replayed documents just supersede themselves;
-    * a periodic `compact` bounds read amplification. The streaming face
-    * of the reference's upsert loop (store.py:180) — state lives in the
-    * store layout, not in the stream.
-    */
-  def appendToChunkStore(
-      chunks: DataFrame,
-      store: graft.operators.ChunkStore
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    chunks.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.upsert(batch)
-      }
-
-  /** Continuous ANN index maintenance: each micro-batch of embedding
-    * rows is assigned to the EXISTING centroids and appended into the
-    * persisted partitioned-by-cluster layout ([[graft.operators.Ann
-    * .appendToIndex]]) — probes see new vectors at the next batch
-    * boundary with no rebuild (reference: store.py:197 rebuilds on every
-    * upsert; this is the at-scale replacement). Pair with
-    * [[graft.operators.Ann.assignmentCost]] on the deltas to decide when
-    * drift warrants a re-cluster.
-    */
-  def appendToAnnIndex(
-      vectors: DataFrame,
-      indexPath: String,
-      vecCol: String,
-      centroids: Array[Array[Double]]
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) graft.operators.Ann.appendToIndex(indexPath, batch, vecCol, centroids)
-      }
-
-  /** Wire a streaming windowed-count query to a memory sink (testing /
-    * demo harness; production would write a Delta/parquet sink).
-    */
-  def startWindowedToMemory(spark: SparkSession, events: DataFrame, name: String) =
-    windowedCounts(events)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .start()
 }

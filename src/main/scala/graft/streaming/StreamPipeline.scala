@@ -1,7 +1,11 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+
 import graft.operators.{Ann, Featurize}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** End-to-end continuous-ingest pipeline: document files arrive as a
@@ -22,32 +26,55 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object StreamPipeline {
 
-  /** File-stream the documents table of a testdata dir. The file source
-    * requires a DIRECTORY to watch, so the table file is linked into a
-    * fresh staging dir — the local stand-in for the landing zone new
-    * corpus files arrive in.
+  /** File-stream the parquet table `file` of a testdata dir. The file
+    * source requires a DIRECTORY to watch, so the table file is linked
+    * into a fresh staging dir — the local stand-in for the landing zone
+    * new corpus files arrive in. `schema` is the caller's: each source
+    * keeps its own (memoized or raw) schema read.
     */
-  def documentStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = graft.Tables.documents(spark, dir).schema
-    val staging = java.nio.file.Files.createTempDirectory("graft_doc_stream")
-    val link = staging.resolve("documents.parquet")
-    java.nio.file.Files.createSymbolicLink(
-      link, java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    deleteRecursivelyOnExit(staging)
+  def landing(spark: SparkSession, dir: String, file: String, schema: StructType): DataFrame = {
+    val staging = deleteRecursivelyOnExit(Files.createTempDirectory("graft_landing_"))
+    Files.createSymbolicLink(staging.resolve(file), Paths.get(dir, file))
     spark.readStream.schema(schema).parquet(staging.toString)
   }
+
+  /** File-stream the documents table of a testdata dir. */
+  def documentStream(spark: SparkSession, dir: String): DataFrame =
+    landing(spark, dir, "documents.parquet", graft.Tables.documents(spark, dir).schema)
 
   /** File-stream the embeddings table of a testdata dir — the vector
     * landing zone ([[documentStream]]'s sibling for embedding ingest).
     */
-  def embeddingStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = graft.Tables.embeddings(spark, dir).schema
-    val staging = java.nio.file.Files.createTempDirectory("graft_emb_stream")
-    java.nio.file.Files.createSymbolicLink(
-      staging.resolve("embeddings.parquet"),
-      java.nio.file.Paths.get(s"$dir/embeddings.parquet"))
-    deleteRecursivelyOnExit(staging)
-    spark.readStream.schema(schema).parquet(staging.toString)
+  def embeddingStream(spark: SparkSession, dir: String): DataFrame =
+    landing(spark, dir, "embeddings.parquet", graft.Tables.embeddings(spark, dir).schema)
+
+  /** Start an append-mode `foreachBatch` query on `stream`; `body` gets
+    * each micro-batch spread by [[distributeBatch]]. The caller owns
+    * `processAllAvailable`/`stop`. The harness adds no `isEmpty` job:
+    * a body that needs one checks for itself.
+    */
+  def eachBatch(stream: DataFrame)(body: DataFrame => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, _: Long) => body(distributeBatch(batch)) }
+      .start()
+
+  /** [[eachBatch]] run to the end of the available input, then stopped. */
+  def drain(stream: DataFrame)(body: DataFrame => Unit): Unit = {
+    val q = eachBatch(stream)(body)
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** Drain `df` through a memory sink in output `mode` and return the
+    * sink's rows. The sink's temp view is dropped before returning: the
+    * returned frame is resolved first and keeps reading the sink, so
+    * no `stream_*` view outlives the call.
+    */
+  def drainToMemory(df: DataFrame, mode: String): DataFrame = {
+    val name = "stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
+    try { q.processAllAvailable(); df.sparkSession.table(name) }
+    finally { q.stop(); df.sparkSession.catalog.dropTempView(name) }
   }
 
   /** STREAMED ANN index maintenance (the vector face of
@@ -66,20 +93,13 @@ object StreamPipeline {
       path: String,
       centroids: Array[Array[Double]],
       deltaFilter: org.apache.spark.sql.Column = lit(true)
-  ): Unit = {
-    val stream = embeddingStream(spark, dir).select("vec_id", "embedding")
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // deltaFilter is the CALLER's landing-zone predicate (e.g. "only
-        // the rows not already in the base index"); the operator itself
-        // appends exactly what arrives
-        val b = distributeBatch(batch.filter(deltaFilter))
-        if (!b.isEmpty) graft.operators.Ann.appendToIndex(path, b, "embedding", centroids)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+  ): Unit =
+    // deltaFilter is the CALLER's landing-zone predicate (e.g. "only the
+    // rows not already in the base index"); the operator itself appends
+    // exactly what arrives
+    drain(embeddingStream(spark, dir).select("vec_id", "embedding").filter(deltaFilter)) { b =>
+      if (!b.isEmpty) Ann.appendToIndex(path, b, "embedding", centroids)
+    }
 
   /** Streamed delta maintenance for the two-level RESIDUAL-PQ layout —
     * [[appendToAnnIndex]]'s flagship-index sibling (F10 × the round-14
@@ -123,17 +143,12 @@ object StreamPipeline {
       two: graft.operators.Ann.TwoLevel,
       centroids: Array[Array[Double]],
       model: graft.operators.Pq.Model
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = distributeBatch(batch)
-        if (!b.isEmpty)
-          graft.operators.Pq.appendIvfPqResidualAssigned(path,
-            graft.operators.Ann.assignTwoLevel(b, "embedding", two),
-            "embedding", "vec_id", centroids, model)
-      }
-      .start()
+  ): StreamingQuery =
+    eachBatch(stream) { b =>
+      if (!b.isEmpty)
+        graft.operators.Pq.appendIvfPqResidualAssigned(path,
+          Ann.assignTwoLevel(b, "embedding", two), "embedding", "vec_id", centroids, model)
+    }
 
   /** Spread a file-source micro-batch across the cluster before heavy
     * per-row work. The micro-batch arrives as a SINGLE-partition row
@@ -147,8 +162,7 @@ object StreamPipeline {
     * and is a barrier no pushdown crosses: everything downstream plans
     * exactly like the batch flow, fully distributed.
     */
-  private def distributeBatch(batch: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+  private def distributeBatch(batch: DataFrame): DataFrame =
     // LAZY checkpoint: the blocks materialize inside the first
     // consumer's job instead of an extra eager job per micro-batch
     // (same barrier, same distribution — one fewer fixed job latency
@@ -177,21 +191,29 @@ object StreamPipeline {
     } finally pool.shutdown()
   }
 
+  /** Temp roots to delete at JVM exit, and the one shutdown hook that
+    * deletes them (registered on first use). A root that fails to
+    * delete does not stop the others.
+    */
+  private val exitRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    exitRoots.forEach { root =>
+      try if (Files.exists(root)) {
+        val walk = Files.walk(root)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+        finally walk.close()
+      } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+    }))
+
   /** Recursively delete `root` at JVM exit. The staging and index temp
     * dirs must outlive the LAZY probe DataFrame that reads them, so
     * eager cleanup is impossible — but nothing should outlive the
     * process, or repeated bench/verify invocations accumulate them.
+    * Every root rides one shutdown hook, however many calls register.
     */
-  def deleteRecursivelyOnExit(root: java.nio.file.Path): java.nio.file.Path = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }))
+  def deleteRecursivelyOnExit(root: Path): Path = {
+    exitHook
+    exitRoots.add(root)
     root
   }
 
@@ -209,19 +231,12 @@ object StreamPipeline {
       nProbe: Int = 3,
       k: Int = 10,
       cells: Option[Seq[Int]] = None): DataFrame = {
-    val stream = documentStream(spark, dir).select("doc_id", "text")
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val embedded = Featurize.hashedBow(distributeBatch(batch), "text", dims, Seq("doc_id"))
-          Ann.appendToIndex(indexDir, embedded.select("doc_id", "embedding"),
-            "embedding", centroids)
-        }
+    drain(documentStream(spark, dir).select("doc_id", "text")) { b =>
+      if (!b.isEmpty) {
+        val embedded = Featurize.hashedBow(b, "text", dims, Seq("doc_id"))
+        Ann.appendToIndex(indexDir, embedded.select("doc_id", "embedding"), "embedding", centroids)
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-
+    }
     val queryDf = queryEmbedding(spark, queryText, dims)
     // a caller that already derived the probe cells (Queries.streamPipeline
     // computes them for the oracle artifact) skips the probe-side
@@ -269,12 +284,9 @@ object StreamPipeline {
     System.err.println(f"[graft-stream] decontaminate: ${benchGrams.length} benchmark grams " +
       f"in ${(System.nanoTime() - t0) / 1e9}%.2f s")
     val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stream = documentStream(spark, dir).select("doc_id", "text")
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    drain(documentStream(spark, dir).select("doc_id", "text").filter(col("doc_id") >= minDocId)) {
+      corpus =>
         val bt = System.nanoTime()
-        val corpus = distributeBatch(batch.filter(col("doc_id") >= minDocId))
         if (!corpus.isEmpty) {
           graft.operators.Dedup
             .decontaminateSpansPrecomputed(corpus, benchGrams, "text", "doc_id")
@@ -283,9 +295,7 @@ object StreamPipeline {
         }
         System.err.println(f"[graft-stream] decontaminate batch ${nBatches.incrementAndGet()}: " +
           f"${(System.nanoTime() - bt) / 1e9}%.2f s")
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
     spark.read.parquet(landDir).orderBy("doc_id")
   }
 
@@ -304,18 +314,10 @@ object StreamPipeline {
       dir: String,
       store: graft.operators.ChunkStore,
       augment: DataFrame => DataFrame = identity
-  ): Unit = {
-    val stream = documentStream(spark, dir).select("doc_id", "text")
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = distributeBatch(batch)
-        if (!b.isEmpty)
-          graft.operators.Dedup.appendSignatures(store, augment(b), "text", parts = 4)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+  ): Unit =
+    drain(documentStream(spark, dir).select("doc_id", "text")) { b =>
+      if (!b.isEmpty) graft.operators.Dedup.appendSignatures(store, augment(b), "text", parts = 4)
+    }
 
   /** STREAMED FTS index maintenance (the text-index face of
     * [[appendToAnnIndex]], sibling of [[signAndStore]]'s minhash loop):
@@ -344,15 +346,10 @@ object StreamPipeline {
     // memoized base layout (the query measures the STREAMING loop, not
     // the one-time base build)
     val idx = new java.util.concurrent.atomic.AtomicReference(Fts.cloneIndex(base))
-    val stream = documentStream(spark, dir).select("doc_id", "text")
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = distributeBatch(batch.filter(col("doc_id") % 5 === 0))
-        idx.set(Fts.appendToIndex(idx.get(), b, "text", "doc_id"))
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    // Fts.appendToIndex checks the batch for emptiness itself
+    drain(documentStream(spark, dir).select("doc_id", "text").filter(col("doc_id") % 5 === 0)) {
+      b => idx.set(Fts.appendToIndex(idx.get(), b, "text", "doc_id"))
+    }
     Fts.probe(spark, idx.get(), "doc_id", queryTerms, k)
   }
 
@@ -366,23 +363,16 @@ object StreamPipeline {
     * the merged sidecar is row-identical to a one-shot build
     * (cross-batch parity spec'd; the probe shares docsim_topk's twin).
     */
-  def docEmbeddingAppend(spark: SparkSession, dir: String, sidecarDir: String): Unit = {
-    val stream = documentStream(spark, dir).select("doc_id", "text")
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = distributeBatch(batch.filter(col("doc_id") % 5 === 0))
+  def docEmbeddingAppend(spark: SparkSession, dir: String, sidecarDir: String): Unit =
+    drain(documentStream(spark, dir).select("doc_id", "text").filter(col("doc_id") % 5 === 0)) {
+      b =>
         if (!b.isEmpty) {
           val ch = graft.operators.Chunker
             .fixedSize(b, "text", chunkSize = 32, overlap = 8, keep = Seq("doc_id"))
             .select("doc_id", "chunk_index", "chunk")
-          graft.operators.Featurize.appendDocEmbeddings(
-            sidecarDir, ch, "doc_id", "chunk_index", "chunk")
+          Featurize.appendDocEmbeddings(sidecarDir, ch, "doc_id", "chunk_index", "chunk")
         }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+    }
 
   /** Streaming CDC upsert loop: every micro-batch lands in the
     * manifest [[graft.operators.ChunkStore]] as three segments —
@@ -403,37 +393,24 @@ object StreamPipeline {
       dir: String,
       store: graft.operators.ChunkStore
   ): DataFrame = {
-    val stream = documentStream(spark, dir).select("doc_id", "text", "lang", "source")
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = distributeBatch(batch)
-        if (!b.isEmpty) {
-          // parts=4 bounds each CDC segment's file count: the
-          // checkpointed micro-batch carries defaultParallelism
-          // near-empty partitions, and without the bound the drain's
-          // merge-on-read scanned 85 files after three segments
-          // (JobAudit: three 85-task stages at sf0.001)
-          store.upsert(b, parts = 4)
-          store.upsert(b.filter(col("doc_id") % 7 === 3)
-            .withColumn("text", upper(col("text")))
-            .withColumn("lang", lit("xx")), parts = 4)
-          store.delete(b.filter(col("doc_id") % 13 === 5).select("doc_id"), parts = 4)
-        }
+    drain(documentStream(spark, dir).select("doc_id", "text", "lang", "source")) { b =>
+      if (!b.isEmpty) {
+        // parts=4 bounds each CDC segment's file count: the checkpointed
+        // micro-batch carries defaultParallelism near-empty partitions,
+        // and without the bound the drain's merge-on-read scanned 85
+        // files after three segments (three 85-task stages at sf0.001)
+        store.upsert(b, parts = 4)
+        store.upsert(b.filter(col("doc_id") % 7 === 3)
+          .withColumn("text", upper(col("text")))
+          .withColumn("lang", lit("xx")), parts = 4)
+        store.delete(b.filter(col("doc_id") % 13 === 5).select("doc_id"), parts = 4)
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
     store.read(spark)
       .select(col("doc_id"), col("lang"), md5(col("text")).as("content_hash"))
       .orderBy("doc_id")
   }
 
-  /** Streamed per-source BPE token accounting, drained synchronously:
-    * the complete-mode [[EventStreams.tokenAccounting]] aggregation
-    * lands in a memory sink and the final totals come back ordered.
-    * Equal BY CONSTRUCTION to the batch aggregation over the same
-    * corpus — which is exactly what its DuckDB twin checks.
-    */
   /** File-stream the events table, ts normalized to epoch-nanos longs
     * exactly like the batch loader ([[graft.Tables.events]]).
     */
@@ -442,11 +419,7 @@ object StreamPipeline {
     // even when Tables.events hasn't set this conf on the session first
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val staging = java.nio.file.Files.createTempDirectory("graft_ev_stream")
-    java.nio.file.Files.createSymbolicLink(
-      staging.resolve("events.parquet"), java.nio.file.Paths.get(s"$dir/events.parquet"))
-    deleteRecursivelyOnExit(staging)
-    val s = spark.readStream.schema(raw.schema).parquet(staging.toString)
+    val s = landing(spark, dir, "events.parquet", raw.schema)
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => s
       case org.apache.spark.sql.types.TimestampNTZType =>
@@ -456,17 +429,6 @@ object StreamPipeline {
     }
   }
 
-  /** STREAMED conversion funnel: per-user ordered stage progress kept
-    * as `mapGroupsWithState` state — each user's vector of
-    * first-qualifying stage times, updated by min as events arrive
-    * (assumes per-user in-order arrival, the partitioned-by-user
-    * deployment; within a micro-batch rows are sorted by ts, so the
-    * single ascending pass computes exactly the batch chain: when a
-    * stage-k event at time t is processed, the state already holds the
-    * FINAL first-qualifying time of stage k-1 among events before t).
-    * The drained per-user stage counts must equal the batch
-    * [[graft.operators.Events.funnel]] — shared oracle twin.
-    */
   /** Per-user funnel state transition over a typed (user, ts, type)
     * stream — reusable by [[funnelSnapshot]] and the multi-batch
     * parity spec. Emits the user's reached-stage count per trigger
@@ -494,18 +456,24 @@ object StreamPipeline {
       }
   }
 
+  /** STREAMED conversion funnel: per-user ordered stage progress kept
+    * as `mapGroupsWithState` state — each user's vector of
+    * first-qualifying stage times, updated by min as events arrive
+    * (assumes per-user in-order arrival, the partitioned-by-user
+    * deployment; within a micro-batch rows are sorted by ts, so the
+    * single ascending pass computes exactly the batch chain: when a
+    * stage-k event at time t is processed, the state already holds the
+    * FINAL first-qualifying time of stage k-1 among events before t).
+    * The drained per-user stage counts must equal the batch
+    * [[graft.operators.Events.funnel]] — shared oracle twin.
+    */
   def funnelSnapshot(spark: SparkSession, dir: String, stages: Seq[String]): DataFrame = {
     import spark.implicits._
     val typed = eventStream(spark, dir)
       .select(col("user_id").cast("long"), col("ts").cast("long"), col("event_type"))
       .as[(Long, Long, String)]
-    val progress = funnelProgress(typed, stages)
-    val name = "stream_funnel_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = progress.toDF("user_id", "reached")
-      .writeStream.format("memory").queryName(name).outputMode("update")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val per = spark.table(name).groupBy("user_id").agg(max("reached").as("reached"))
+    val per = drainToMemory(funnelProgress(typed, stages).toDF("user_id", "reached"), "update")
+      .groupBy("user_id").agg(max("reached").as("reached"))
     val countAggs = stages.indices.map(i =>
       sum(when(col("reached") > i, 1L).otherwise(0L)).as(s"_c$i"))
     val counts = per.agg(countAggs.head, countAggs.tail: _*)
@@ -561,12 +529,7 @@ object StreamPipeline {
       .select(col("user_id").cast("long"),
         expr(s"ts DIV $dayDivisor").cast("long").as("day"))
       .as[(Long, Long)]
-    val name = "stream_retention_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = retentionProgress(typed).toDF("cohort", "day_offset")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    drainToMemory(retentionProgress(typed).toDF("cohort", "day_offset"), "append")
       .groupBy("cohort", "day_offset")
       .agg(count(lit(1)).as("users"))
       .orderBy("cohort", "day_offset")
@@ -622,12 +585,7 @@ object StreamPipeline {
         expr("ts DIV 1000000").cast("long").as("ms"),
         col("event_id").cast("long"), col("event_type"))
       .as[(Long, Long, Long, String)]
-    val name = "stream_paths_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = pathsProgress(typed, n, gapMs).toDF("user_id", "path")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    drainToMemory(pathsProgress(typed, n, gapMs).toDF("user_id", "path"), "append")
       .groupBy("path")
       .agg(count(lit(1)).as("occurrences"), countDistinct(col("user_id")).as("n_users"))
       .orderBy(col("occurrences").desc, col("path"))
@@ -653,14 +611,9 @@ object StreamPipeline {
       .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"),
         expr("ts DIV 1000000").as("t"), col("value"))
-    val name = "stream_interval_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = graft.operators.Events
+    drainToMemory(graft.operators.Events
       .intervalJoin(clicks, broadcast(windows), "t", "w_start", "w_end", binWidth = 300000L)
-      .select("win_id", "click_id", "value")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+      .select("win_id", "click_id", "value"), "append")
       .groupBy("win_id")
       .agg(count(lit(1)).as("n_clicks"), round(sum("value"), 2).as("click_value"))
       .orderBy("win_id")
@@ -681,11 +634,9 @@ object StreamPipeline {
     val refA = graft.Tables.documents(spark, dir)
       .filter(col("doc_id") % 2 === 0).select("doc_id", "text")
     val landTerms = deleteRecursivelyOnExit(
-      java.nio.file.Files.createTempDirectory("graft_drift_t_")).toString + "/t"
+      Files.createTempDirectory("graft_drift_t_")).toString + "/t"
     val landShape = deleteRecursivelyOnExit(
-      java.nio.file.Files.createTempDirectory("graft_drift_s_")).toString + "/s"
-    val stream = documentStream(spark, dir)
-      .filter(col("doc_id") % 2 === 1).select("doc_id", "text")
+      Files.createTempDirectory("graft_drift_s_")).toString + "/s"
     // Seed both land dirs with empty typed writes (the heavy-hitters
     // empty-stream guard): an all-empty stream must drain to the
     // zero-count drift result, not a 'Path does not exist' throw.
@@ -695,10 +646,8 @@ object StreamPipeline {
       .write.mode("overwrite").parquet(landTerms)
     graft.operators.TextAnalysis.driftShapePartials(emptyDocs, "text")
       .write.mode("overwrite").parquet(landShape)
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = distributeBatch(batch)
+    drain(documentStream(spark, dir).filter(col("doc_id") % 2 === 1).select("doc_id", "text")) {
+      b =>
         if (!b.isEmpty) {
           // the two partial writes are independent consumers of the
           // checkpointed batch — overlap them (guide §2.6, the
@@ -710,9 +659,7 @@ object StreamPipeline {
             () => graft.operators.TextAnalysis.driftShapePartials(b, "text")
               .write.mode("append").parquet(landShape))
         }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
     val tb = spark.read.parquet(landTerms)
       .groupBy("term").agg(sum("cb").as("cb")) // monoid merge
     graft.operators.TextAnalysis.corpusDriftFromCounts(
@@ -749,9 +696,9 @@ object StreamPipeline {
     require(theta * (m + 1) > 1.0,
       s"theta*(m+1) must be > 1 for completeness: theta=$theta m=$m")
     val landTerms = deleteRecursivelyOnExit(
-      java.nio.file.Files.createTempDirectory("graft_hh_t_")).toString + "/terms"
+      Files.createTempDirectory("graft_hh_t_")).toString + "/terms"
     val landCand = deleteRecursivelyOnExit(
-      java.nio.file.Files.createTempDirectory("graft_hh_c_")).toString + "/cand"
+      Files.createTempDirectory("graft_hh_c_")).toString + "/cand"
     // Seed both land dirs with an empty typed write: if EVERY
     // micro-batch is empty the foreachBatch body never runs, and the
     // drain's spark.read.parquet would throw 'Path does not exist'
@@ -759,41 +706,33 @@ object StreamPipeline {
     val emptyTerms = spark.range(0).select(lit("").as("term"))
     emptyTerms.write.mode("overwrite").parquet(landTerms)
     emptyTerms.write.mode("overwrite").parquet(landCand)
-    val stream = docStream.select("text")
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val b = distributeBatch(batch)
-        if (!b.isEmpty) {
-          val items = b.select(
-            explode(graft.functions.TextOps.tokenize(col("text"))).as("term"))
-          // independent consumers of the checkpointed batch — overlap
-          // (guide §2.6); the exploded-term landing keeps the batch's
-          // partitioning (map-only, corpus-sized per batch)
-          concurrently(
-            () => items.write.mode("append").parquet(landTerms),
-            () => graft.operators.Freq.mgCandidates(items, "term", m)
-              .coalesce(4).write.mode("append").parquet(landCand))
-        }
+    drain(docStream.select("text")) { b =>
+      if (!b.isEmpty) {
+        val items = b.select(explode(graft.functions.TextOps.tokenize(col("text"))).as("term"))
+        // independent consumers of the checkpointed batch — overlap
+        // (guide §2.6); the exploded-term landing keeps the batch's
+        // partitioning (map-only, corpus-sized per batch)
+        concurrently(
+          () => items.write.mode("append").parquet(landTerms),
+          () => graft.operators.Freq.mgCandidates(items, "term", m)
+            .coalesce(4).write.mode("append").parquet(landCand))
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
     graft.operators.Freq.recount(
       spark.read.parquet(landTerms),
       spark.read.parquet(landCand).distinct(),
       "term", theta)
   }
 
-  def tokenBudgetSnapshot(spark: SparkSession, dir: String, budget: Long): DataFrame = {
-    val stream = documentStream(spark, dir).select("doc_id", "source", "text")
-    val name = "stream_token_budget_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = EventStreams.tokenAccounting(stream, budget)
-      .writeStream.format("memory").queryName(name).outputMode("complete")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+  /** Streamed per-source BPE token accounting, drained synchronously:
+    * the complete-mode [[EventStreams.tokenAccounting]] aggregation
+    * lands in a memory sink and the final totals come back ordered.
+    * Equal BY CONSTRUCTION to the batch aggregation over the same
+    * corpus — which is exactly what its DuckDB twin checks.
+    */
+  def tokenBudgetSnapshot(spark: SparkSession, dir: String, budget: Long): DataFrame =
+    drainToMemory(EventStreams.tokenAccounting(
+      documentStream(spark, dir).select("doc_id", "source", "text"), budget), "complete")
       .select(col("source"), col("docs"), col("bpe_tokens"), col("over_budget"))
       .orderBy("source")
-  }
 }

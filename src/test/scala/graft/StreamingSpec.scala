@@ -346,9 +346,9 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_stream_store").resolve("chunks").toString,
       "doc_id")
     val input = MemoryStream[(Long, String)]
-    val q = EventStreams
-      .appendToChunkStore(input.toDF().toDF("doc_id", "content"), store)
-      .start()
+    val q = graft.streaming.StreamPipeline.eachBatch(input.toDF().toDF("doc_id", "content")) {
+      b => if (!b.isEmpty) store.upsert(b)
+    }
     try {
       input.addData((1L, "v1"), (2L, "b"))
       q.processAllAvailable()
@@ -373,8 +373,9 @@ class StreamingSpec extends SparkSpec {
     // stream in a near-copy of the query vector under a fresh id
     val qVec = queryDf.as[Seq[Float]].head()
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = EventStreams.appendToAnnIndex(
-      input.toDF().toDF("vec_id", "embedding"), dir, "embedding", index.centroids).start()
+    val q = graft.streaming.StreamPipeline.eachBatch(input.toDF().toDF("vec_id", "embedding")) {
+      b => if (!b.isEmpty) Ann.appendToIndex(dir, b, "embedding", index.centroids)
+    }
     try {
       input.addData((888888L, qVec))
       q.processAllAvailable()
