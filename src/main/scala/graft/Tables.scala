@@ -30,29 +30,45 @@ object Tables {
     cached(spark, dir, "documents")(spark.read.parquet(s"$dir/documents.parquet"))
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     cached(spark, dir, "embeddings")(spark.read.parquet(s"$dir/embeddings.parquet"))
-  /** `events.ts` is normalized to a LONG (ns since epoch) whatever the
-    * parquet physical type — TIMESTAMP(NANOS) reads as a raw long via
-    * the legacy conf; TIMESTAMP(MICROS) (what the driver generates now)
-    * arrives as TIMESTAMP_NTZ and is converted with a tz-independent
-    * `timestampdiff` from the epoch. All downstream time math therefore
-    * runs on exact long arithmetic (`DIV`), never double conversions
-    * (ns magnitudes exceed double's 2^53 exactness); DuckDB twins use
-    * `epoch_ns`/`epoch_ms` on the native timestamp, which agree with
-    * the naive (no-tz) reading on both physical types.
+  /** `events.parquet` as stored, `ts` in its physical type — the
+    * schema the streamed events source ([[graft.streaming.StreamPipeline.eventStream]])
+    * needs. TIMESTAMP(NANOS) reads as a raw long via the legacy conf,
+    * set on every call so the read is self-contained.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = cached(spark, dir, "events") {
+  def rawEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => raw
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.expr(
-            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts) * 1000"))
-      case _ => // TIMESTAMP_LTZ (session tz is pinned to UTC in every entry point)
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.expr("unix_micros(ts) * 1000"))
-    }
+    cached(spark, dir, "events_raw")(spark.read.parquet(s"$dir/events.parquet"))
+  }
+
+  /** [[rawEvents]] with `ts` normalized to a LONG (ns since epoch).
+    * The raw frame is fetched before the memo lookup: filling one entry
+    * of the ConcurrentHashMap-backed cache from inside another entry's
+    * fill is a recursive update the map forbids.
+    */
+  def events(spark: SparkSession, dir: String): DataFrame = {
+    val raw = rawEvents(spark, dir)
+    cached(spark, dir, "events")(tsAsNanos(raw))
+  }
+
+  /** `ts` as a LONG (ns since epoch) whatever its physical type, on a
+    * batch or a streamed events frame: a raw long (TIMESTAMP(NANOS)
+    * under the legacy conf) passes; TIMESTAMP(MICROS) (what the driver
+    * generates now) arrives as TIMESTAMP_NTZ and is converted with a
+    * tz-independent `timestampdiff` from the epoch. All downstream time
+    * math therefore runs on exact long arithmetic (`DIV`), never double
+    * conversions (ns magnitudes exceed double's 2^53 exactness); DuckDB
+    * twins use `epoch_ns`/`epoch_ms` on the native timestamp, which
+    * agree with the naive (no-tz) reading on both physical types.
+    */
+  def tsAsNanos(events: DataFrame): DataFrame = events.schema("ts").dataType match {
+    case org.apache.spark.sql.types.LongType => events
+    case org.apache.spark.sql.types.TimestampNTZType =>
+      events.withColumn("ts",
+        org.apache.spark.sql.functions.expr(
+          "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts) * 1000"))
+    case _ => // TIMESTAMP_LTZ (session tz is pinned to UTC in every entry point)
+      events.withColumn("ts",
+        org.apache.spark.sql.functions.expr("unix_micros(ts) * 1000"))
   }
   def lineitem(spark: SparkSession, dir: String): DataFrame =
     cached(spark, dir, "lineitem")(spark.read.parquet(s"$dir/lineitem.parquet"))

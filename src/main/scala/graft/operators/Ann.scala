@@ -645,8 +645,7 @@ object Ann extends IndexMaintenance {
       if (batch) df.join(side, on) else df.crossJoin(side)
     }
     def heap(df: DataFrame, score: String, ascending: Boolean, n: Int): DataFrame =
-      if (batch) graft.plans.TopK.perKey(df, Seq(queryId), Seq((score, ascending), (idCol, true)), n)
-      else df.orderBy(if (ascending) col(score).asc else col(score).desc, col(idCol)).limit(n)
+      graft.plans.TopK.heap(df, if (batch) Seq(queryId) else Nil, score, ascending, idCol, n)
     val qKey = if (batch) Seq(col(queryId)) else Nil
     val cluster = if (scan.columns.contains("cluster")) Seq("cluster") else Nil
     val joined = withQueries(prefilter.fold(pruned)(pruned.filter), queries, Seq("cluster"))

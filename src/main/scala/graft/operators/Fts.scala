@@ -20,10 +20,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     returned [[Fts.Index]], the same place the fitted IVF centroids
   *     live after an ANN build.
   *
-  * The probe reproduces [[Search.bm25Scores]]' exact arithmetic shape
-  * (per-term tf pivot columns, contributions summed in query-term
-  * order), so an index probe is bit-compatible with the full-scan
-  * scorer and shares its DuckDB oracle twin.
+  * Probes: one BM25 core and one semantic core, each serving a single
+  * query as the |Q| = 1 case of its batch (only the heap differs:
+  * `orderBy.limit` for the one query, the per-query bounded heap for a
+  * batch). BM25 scores row-wise per (query, doc, term) posting with
+  * [[Search.bm25Term]] — the full-scan scorers' one formula — and sums
+  * per doc, so a probe agrees with [[Search.bm25TopK]] on the rounded
+  * scores and shares its DuckDB oracle twin.
   *
   * Like the reference (store.py:197 `replace=True`), a re-ingest
   * rebuilds: `build` overwrites the layout atomically per subdir.
@@ -59,10 +62,9 @@ object Fts extends IndexMaintenance {
     LayoutCache.readCached(spark, s"$dir/$sub")
 
   /** The layout's LIVE face of one segment: anti-join the tombstone
-    * sidecar when present — shared by ALL probe entry points
-    * ([[probe]], [[probeBatch]], [[semanticProbe]],
-    * [[semanticProbeBatch]]), so a delete is honored uniformly: after
-    * [[deleteFromIndex]] no probe family keeps serving deleted docs.
+    * sidecar when present — shared by both probe cores, so a delete is
+    * honored uniformly: after [[deleteFromIndex]] no probe keeps
+    * serving deleted docs.
     */
   private def liveSegment(
       spark: SparkSession,
@@ -331,7 +333,8 @@ object Fts extends IndexMaintenance {
   /** Text-query cosine top-k served from the index sidecar — the same
     * math as the from-scratch flow (Queries.semanticSearch twin), but
     * the corpus side reads pre-aggregated (doc, dim, cnt) rows: no
-    * tokenize, no explode, no (doc, dim) shuffle at query time.
+    * tokenize, no explode, no (doc, dim) shuffle at query time. The one
+    * query is the |Q| = 1 case of [[semanticProbeBatch]].
     */
   def semanticProbe(
       spark: SparkSession,
@@ -339,38 +342,12 @@ object Fts extends IndexMaintenance {
       idCol: String,
       queryText: String,
       k: Int
-  ): DataFrame = {
-    import spark.implicits._
-    // query featurization is DRIVER work (the query string is driver
-    // data): dims/counts/norm computed locally with the bit-identical
-    // hashedBowDimLocal and shipped as a local relation + literal — the
-    // round-11 form spent 3 jobs per probe re-deriving this O(query
-    // terms) table in-plan (explode + groupBy + two broadcast builds)
-    val qDims: Seq[(Long, Long)] = TextOps.tokenizeLocal(queryText)
-      .map(TextOps.hashedBowDimLocal(_))
-      .groupBy(identity).map { case (d, ts) => (d, ts.size.toLong) }.toSeq.sortBy(_._1)
-    val qss: Long = qDims.map(c => c._2 * c._2).sum
-    val qd = qDims.toDF("dim", "qcnt")
-    // anti-joining docdims alone suffices: docnorms joins back inner on
-    // the id, so tombstoned docs can't resurface through the norm table
-    val dd = liveSegment(spark, index.dir, "docdims", idCol)
-    val dn = segment(spark, index.dir, "docnorms")
-    dd.join(broadcast(qd), "dim")
-      .groupBy(col(idCol)).agg(sum(col("cnt") * col("qcnt")).as("dot"))
-      .join(dn, idCol)
-      .withColumn("qss", lit(qss))
-      .select(col(idCol),
-        round(col("dot") / (sqrt(col("ss")) * sqrt(col("qss"))), 5).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
-  }
+  ): DataFrame = semanticScan(spark, index, idCol, Seq(0L -> queryText), k, batch = false)
 
   /** Batch semantic retrieval from the index sidecar — the third leg
     * of the batch trio ([[probeBatch]] for BM25, [[Ann.probe]]'s batch face for
     * vectors): every text query's cosine top-k in ONE docdims pass.
-    * Query-side dims and norms are O(queries × query terms) and
-    * broadcast; the sparse integer dot products make the scores exact
-    * rationals before the one rounded division.
+    * Output (query_id, id, cos_sim, rk).
     */
   def semanticProbeBatch(
       spark: SparkSession,
@@ -378,116 +355,119 @@ object Fts extends IndexMaintenance {
       idCol: String,
       queries: Seq[(Long, String)],
       k: Int
-  ): DataFrame = {
-    import spark.implicits._
-    // driver-side query featurization (see [[semanticProbe]]) — the
-    // query batch is a driver Seq already
-    val qRows: Seq[(Long, Long, Long)] = queries.flatMap { case (qid, text) =>
-      TextOps.tokenizeLocal(text).map(TextOps.hashedBowDimLocal(_))
-        .groupBy(identity).map { case (d, ts) => (qid, d, ts.size.toLong) }
-    }.sortBy(r => (r._1, r._2))
-    val qd = qRows.toDF("query_id", "dim", "qcnt")
-    val qn = qRows.groupBy(_._1)
-      .map { case (qid, rs) => (qid, rs.map(r => r._3 * r._3).sum) }
-      .toSeq.sortBy(_._1).toDF("query_id", "qss")
-    val dd = liveSegment(spark, index.dir, "docdims", idCol)
-    val dn = segment(spark, index.dir, "docnorms")
-    val scored = dd
-      .join(broadcast(qd), "dim")
-      .groupBy(col("query_id"), col(idCol))
-      .agg(sum(col("cnt") * col("qcnt")).as("dot"))
-      .join(dn, idCol)
-      .join(broadcast(qn), "query_id")
-      .select(col("query_id"), col(idCol),
-        round(col("dot") / (sqrt(col("ss")) * sqrt(col("qss"))), 5).as("cos_sim"))
-    graft.plans.TopK
-      .perKey(scored, Seq("query_id"), Seq(("cos_sim", false), (idCol, true)), k)
-      .select(col("query_id"), col(idCol), col("cos_sim"), col("rk"))
-      .orderBy("query_id", "rk")
-  }
+  ): DataFrame = semanticScan(spark, index, idCol, queries, k, batch = true)
 
-  /** BM25 top-k over the persisted index: a term-pruned postings scan,
-    * one groupBy(doc) pivot, a one-row df aggregate broadcast back.
-    * Identical scoring shape to [[Search.bm25Scores]].
+  /** BM25 top-k over the persisted index, (id, bm25): the one query is
+    * the |Q| = 1 case of [[probeBatch]], scored by the same core.
     */
   def probe(
       spark: SparkSession,
       index: Index,
       idCol: String,
       queryTerms: Seq[String],
-      k: Int,
-      k1: Double = 1.2,
-      b: Double = 0.75
-  ): DataFrame = {
-    def tfCol(t: String) = s"tf_${t.hashCode.toHexString}"
-    // an index with tombstones serves the LIVE corpus: the anti-join
-    // sits before the df count and tf pivot, so df shrinks with the
-    // deletes exactly as a from-scratch build over live docs would;
-    // the term filter still pushes to the scan and prunes sorted row
-    // groups under the anti-join
-    val p = liveSegment(spark, index.dir, "postings", idCol)
-      .filter(col("term").isin(queryTerms: _*))
-    val pivotAggs = first(col("dl")).as("dl") +:
-      queryTerms.map(t => sum(when(col("term") === t, col("tf")).otherwise(lit(0.0))).as(tfCol(t)))
-    val perDoc = p.groupBy(col(idCol)).agg(pivotAggs.head, pivotAggs.tail: _*)
-    // df per term: postings are unique per (term, doc), so a row count
-    // over the pruned scan is the document frequency.
-    val dfAggs = queryTerms
-      .map(t => count(when(col("term") === t, true)).cast("double").as(s"df_${tfCol(t)}"))
-    val stats = p.agg(dfAggs.head, dfAggs.tail: _*)
-      .withColumn("n", lit(index.nDocs))
-      .withColumn("avgdl", lit(index.avgdl))
-    val contribs = queryTerms.map(t => Search.bm25Term(col(tfCol(t)), col(s"df_${tfCol(t)}"), k1, b))
-    perDoc
-      .crossJoin(broadcast(stats))
-      .withColumn("bm25", round(contribs.reduce(_ + _), 5))
-      .select(col(idCol), col("bm25"))
-      .orderBy(col("bm25").desc, col(idCol))
-      .limit(k)
-  }
+      k: Int
+  ): DataFrame = bm25Scan(spark, index, idCol, Seq(0L -> queryTerms), k, batch = false)
 
   /** Batch BM25 over the persisted index — the text-side analog of
-    * [[Ann.probe]]'s batch face (offline eval / distillation-query workloads):
-    * every query's top-k in ONE pruned postings pass. The scan is
-    * pruned to the UNION of all query terms (pushed to the term-sorted
-    * layout), the query table and the per-term df table broadcast
-    * (both O(query terms)), scoring is row-wise per (query, doc,
-    * term) with one partial-agg shuffle on (query, doc), and the
-    * per-query top-k is the bounded-heap [[graft.plans.TopK]]
-    * operator — never a global sort.
+    * [[Ann.probe]]'s batch face (offline eval / distillation-query
+    * workloads): every query's top-k in ONE pruned postings pass.
+    * Output (query_id, id, bm25, rk).
     */
   def probeBatch(
       spark: SparkSession,
       index: Index,
       idCol: String,
       queries: Seq[(Long, Seq[String])],
+      k: Int
+  ): DataFrame = bm25Scan(spark, index, idCol, queries, k, batch = true)
+
+  /** The one BM25 probe body. The live postings scan is pruned to the
+    * distinct union of query terms (pushed to the term-sorted layout;
+    * the tombstone anti-join sits under it, so df shrinks with deletes
+    * exactly as a live-only rebuild's would). A batch meets its
+    * broadcast (query_id, term) table; the one query skips that join,
+    * because the `term IN` filter already is the query. The rows then
+    * hash-partition by doc — which keeps the broadcast per-term df
+    * table out of the scan stage and is the only shuffle the per-doc
+    * sum needs — and score row-wise with [[Search.bm25Term]] over the
+    * index's N / avgdl. A term repeated in a query counts once.
+    */
+  private def bm25Scan(
+      spark: SparkSession,
+      index: Index,
+      idCol: String,
+      queries: Seq[(Long, Seq[String])],
       k: Int,
-      k1: Double = 1.2,
-      b: Double = 0.75
+      batch: Boolean
   ): DataFrame = {
     import spark.implicits._
-    val allTerms = queries.flatMap(_._2).distinct
     val p = liveSegment(spark, index.dir, "postings", idCol)
-      .filter(col("term").isin(allTerms: _*))
-    val qdf = queries
-      .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
-      .toDF("query_id", "term")
+      .filter(col("term").isin(queries.flatMap(_._2).distinct: _*))
     // postings are unique per (term, doc): a pruned-scan row count per
     // term IS the document frequency
     val dfs = p.groupBy(col("term")).agg(count(lit(1)).cast("double").as("df"))
-    val scored = p
-      .join(broadcast(qdf), Seq("term"))
+    val matched =
+      if (!batch) p
+      else p.join(broadcast(queries
+        .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
+        .toDF("query_id", "term")), Seq("term"))
+    val key = if (batch) Seq("query_id") else Nil
+    val scored = matched
+      .repartition(col(idCol))
       .join(broadcast(dfs), Seq("term"))
-      .withColumn("_idf",
-        log(lit(1.0) + (lit(index.nDocs) - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("_contrib",
-        col("_idf") * col("tf") * lit(k1 + 1) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / lit(index.avgdl))))
-      .groupBy(col("query_id"), col(idCol))
-      .agg(round(sum(col("_contrib")), 5).as("bm25"))
-    graft.plans.TopK
-      .perKey(scored, Seq("query_id"), Seq(("bm25", false), (idCol, true)), k)
-      .select(col("query_id"), col(idCol), col("bm25"), col("rk"))
-      .orderBy("query_id", "rk")
+      .withColumn("n", lit(index.nDocs))
+      .withColumn("avgdl", lit(index.avgdl))
+      .groupBy((key :+ idCol).map(col): _*)
+      .agg(round(sum(Search.bm25Term(col("tf"), col("df"))), 5).as("bm25"))
+    topK(scored, key, "bm25", idCol, k)
+  }
+
+  /** The one semantic probe body: query featurization is DRIVER work
+    * (the query strings are driver data) — dims/counts/norms computed
+    * locally with the bit-identical hashedBowDimLocal and shipped as a
+    * broadcast local relation (a literal norm for the one query); the
+    * sparse integer dot products make the scores exact rationals before
+    * the one rounded division. Anti-joining docdims alone suffices:
+    * docnorms joins back inner on the id, so tombstoned docs can't
+    * resurface through the norm table.
+    */
+  private def semanticScan(
+      spark: SparkSession,
+      index: Index,
+      idCol: String,
+      queries: Seq[(Long, String)],
+      k: Int,
+      batch: Boolean
+  ): DataFrame = {
+    import spark.implicits._
+    val feats: Seq[(Long, Seq[(Long, Long)])] = queries.map { case (qid, text) =>
+      qid -> TextOps.tokenizeLocal(text).map(TextOps.hashedBowDimLocal(_))
+        .groupBy(identity).map { case (d, ts) => (d, ts.size.toLong) }.toSeq.sortBy(_._1)
+    }
+    val qss = feats.map { case (qid, ds) => (qid, ds.map(c => c._2 * c._2).sum) }
+    val key = if (batch) Seq("query_id") else Nil
+    val qd = feats.flatMap { case (qid, ds) => ds.map { case (d, c) => (qid, d, c) } }
+      .toDF("query_id", "dim", "qcnt")
+      .select((key ++ Seq("dim", "qcnt")).map(col): _*)
+    val dots = liveSegment(spark, index.dir, "docdims", idCol)
+      .join(broadcast(qd), "dim")
+      .groupBy((key :+ idCol).map(col): _*)
+      .agg(sum(col("cnt") * col("qcnt")).as("dot"))
+      .join(segment(spark, index.dir, "docnorms"), idCol)
+    val scored =
+      (if (batch) dots.join(broadcast(qss.toDF("query_id", "qss")), "query_id")
+       else dots.withColumn("qss", lit(qss.head._2)))
+        .select((key :+ idCol).map(col) :+
+          round(col("dot") / (sqrt(col("ss")) * sqrt(col("qss"))), 5).as("cos_sim"): _*)
+    topK(scored, key, "cos_sim", idCol, k)
+  }
+
+  /** Both probe bodies' heap: the one query's `orderBy.limit`, or the
+    * batch's per-query bounded heap ranked 1..k per query.
+    */
+  private def topK(scored: DataFrame, key: Seq[String], score: String, idCol: String,
+      k: Int): DataFrame = {
+    val top = graft.plans.TopK.heap(scored, key, score, ascending = false, idCol, k)
+    if (key.isEmpty) top else top.orderBy("query_id", "rk")
   }
 }

@@ -17,9 +17,14 @@ import org.apache.spark.sql.{Column, DataFrame}
   *  - global top-k goes through `orderBy(...).limit(k)` which Spark
   *    executes as TakeOrderedAndProject (per-partition heap + driver
   *    merge of k rows — no full sort shuffle);
-  *  - per-group top-k uses a window `row_number`, never a self-join;
-  *  - BM25 term statistics (df per query term, corpus N / avgdl) are
-  *    tiny aggregates joined back by broadcast.
+  *  - per-group top-k is the bounded-heap [[graft.plans.TopK]]
+  *    operator, never a self-join or a sorted window;
+  *  - every BM25 scorer over a token table (plain, weighted, phrase,
+  *    RM3, per-group) runs on one pivoted body: ONE shuffle of the
+  *    token table for doc length and per-term tf; the term statistics
+  *    (df per query term, N / avgdl per corpus or group) are tiny
+  *    aggregates joined back by broadcast; and [[bm25Term]] is the one
+  *    BM25 formula, shared with the persisted-index probe ([[Fts]]).
   */
 object Search {
 
@@ -172,54 +177,20 @@ object Search {
     * grouped-search face of the reference's library filter: one query,
     * every library's best hits.
     *
-    * Shape at scale: dl/tf shuffle on (group, doc) — co-partitioned
-    * partial aggs; per-(group, term) df and per-group stats are
-    * O(groups × query terms) and broadcast; per-group top-k is the
-    * bounded-heap operator.
+    * Shape at scale: [[bm25Pivot]] keyed by (group, doc) — one
+    * co-partitioned shuffle; per-group stats are O(groups × query
+    * terms) and broadcast; per-group top-k is the bounded-heap
+    * operator.
     */
   def bm25PerGroup(
       tokens: DataFrame,
       idCol: String,
       groupCol: String,
       queryTerms: Seq[String],
-      k: Int,
-      k1: Double = 1.2,
-      b: Double = 0.75
+      k: Int
   ): DataFrame = {
-    // One tokenize pass + one (group, doc) shuffle, the
-    // [[bm25TopKWeighted]] single-pass shape: the old dl/tf/dfs legs
-    // each re-referenced the token table, and Spark shares no common
-    // subtrees within a plan, so the corpus tokenize+explode executed
-    // 3× per action. Per-doc term counts ride the SAME aggregation as
-    // dl (one pivoted count per query term); per-group stats and dfs
-    // derive from the per-doc table (doc-count-sized, never
-    // token-sized) and broadcast back. Pivot columns are named by
-    // POSITION over the deduplicated term list — a hashCode-derived
-    // name collides for distinct terms (e.g. "Aa"/"BB") and a
-    // duplicated term would mint duplicate agg aliases; an empty term
-    // list short-circuits to the empty result the old isin-filter
-    // shape produced instead of throwing on reduce().
-    val terms = queryTerms.distinct
-    if (terms.isEmpty) {
-      return tokens.select(col(groupCol), col(idCol)).limit(0)
-        .withColumn("bm25", lit(0.0)).withColumn("rk", lit(1L))
-    }
-    val tfCols = terms.indices.map(i => s"tf_$i")
-    val perDocAggs = count(lit(1)).cast("double").as("dl") +:
-      terms.zip(tfCols).map { case (t, c) =>
-        count(when(col("term") === t, true)).cast("double").as(c)
-      }
-    val perDoc = tokens.groupBy(col(groupCol), col(idCol))
-      .agg(perDocAggs.head, perDocAggs.tail: _*)
-    val statAggs = count(lit(1)).cast("double").as("n") +: avg("dl").as("avgdl") +:
-      tfCols.map(c => count(when(col(c) > 0, true)).cast("double").as(s"df_$c"))
-    val stats = perDoc.groupBy(col(groupCol)).agg(statAggs.head, statAggs.tail: _*)
-    val contribs = tfCols.map(c => bm25Term(col(c), col(s"df_$c"), k1, b))
-    val scored = perDoc
-      .filter(tfCols.map(c => col(c) > 0).reduce(_ || _))
-      .join(broadcast(stats), Seq(groupCol))
-      .withColumn("bm25", round(contribs.reduce(_ + _), 5))
-      .select(col(groupCol), col(idCol), col("bm25"))
+    val scored = bm25Pivot(tokens, idCol, Seq(groupCol), queryTerms.map(_ -> None))
+      .select(col(groupCol), col(idCol), round(col("score"), 5).as("bm25"))
     graft.plans.TopK
       .perKey(scored, Seq(groupCol), Seq(("bm25", false), (idCol, true)), k)
       .select(col(groupCol), col(idCol), col("bm25"), col("rk"))
@@ -261,61 +232,57 @@ object Search {
     *                occurrence (pre-exploded so it can be reused).
     * @return (idCol, score) for matching docs, unrounded.
     */
-  def bm25Scores(
-      tokens: DataFrame,
-      idCol: String,
-      queryTerms: Seq[String],
-      k1: Double = 1.2,
-      b: Double = 0.75
-  ): DataFrame =
-    bm25TermScores(tokens, idCol, queryTerms.map(_ -> None), k1, b)
+  def bm25Scores(tokens: DataFrame, idCol: String, queryTerms: Seq[String]): DataFrame =
+    bm25Pivot(tokens, idCol, Nil, queryTerms.map(_ -> None))
 
-  /** One query term's BM25 contribution over the per-doc `dl` and the
-    * corpus `n` / `avgdl` columns — the one idf × tfNorm expression
-    * every BM25 scorer and the FTS probe share. A `weight` multiplies
-    * the idf first, `(w · idf) · tfNorm`, so weighted and unweighted
-    * scores keep their plans.
+  /** One query term's BM25 contribution (k1 = 1.2, b = 0.75, as every
+    * DuckDB twin writes them) over the per-doc `dl` and the corpus `n`
+    * / `avgdl` columns — the one idf × tfNorm expression every BM25
+    * scorer and the FTS probe share. A `weight` multiplies the idf
+    * first, `(w · idf) · tfNorm`, so weighted and unweighted scores keep
+    * their plans.
     */
-  private[operators] def bm25Term(
-      tf: Column, df: Column, k1: Double, b: Double, weight: Option[Double] = None): Column = {
+  private[operators] def bm25Term(tf: Column, df: Column, weight: Option[Double] = None): Column = {
+    val (k1, b) = (1.2, 0.75)
     val idf = log(lit(1.0) + (col("n") - df + 0.5) / (df + 0.5))
     val tfNorm = tf * lit(k1 + 1) /
       (tf + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
     when(tf > 0, weight.fold(idf)(w => lit(w) * idf) * tfNorm).otherwise(lit(0.0))
   }
 
-  /** [[bm25Scores]] and [[bm25WeightedScores]]: each term's contribution
-    * optionally weighted.
+  /** The one pivoted BM25 body over a token table: (groups…, id, score)
+    * for every doc matching a query term, unrounded, each term's
+    * contribution optionally weighted. ONE shuffle of the token table —
+    * doc length and a per-term tf pivot in a single map-side-combined
+    * aggregation keyed by (groups…, doc) — then the stats (N, avgdl, df
+    * per term; per group, or one corpus row for `groups` = Nil), tiny
+    * and broadcast back. Pivot columns are named by POSITION over the
+    * distinct terms (a repeated term counts once, with its first
+    * weight); no term scores no doc.
     */
-  private def bm25TermScores(
+  private def bm25Pivot(
       tokens: DataFrame,
       idCol: String,
-      termWeights: Seq[(String, Option[Double])],
-      k1: Double,
-      b: Double
+      groups: Seq[String],
+      termWeights: Seq[(String, Option[Double])]
   ): DataFrame = {
-    val terms = termWeights.map(_._1)
-    // ONE shuffle of the token table: doc length + per-query-term tf
-    // pivoted into a single map-side-combined aggregation (the pivot is
-    // |queryTerms| wide — a handful of columns).
-    def tfCol(t: String) = s"tf_${t.hashCode.toHexString}"
-    val perDocAggs = count("*").cast("double").as("dl") +:
-      terms.map(t => count(when(col("term") === t, true)).cast("double").as(tfCol(t)))
-    val perDoc = tokens.groupBy(col(idCol)).agg(perDocAggs.head, perDocAggs.tail: _*)
-
-    // Corpus stats (N, avgdl, df per term) — a one-row broadcast.
-    val statAggs = count("*").cast("double").as("n") +: avg("dl").as("avgdl") +:
-      terms.map(t => count(when(col(tfCol(t)) > 0, true)).cast("double").as(s"df_${tfCol(t)}"))
-    val stats = perDoc.agg(statAggs.head, statAggs.tail: _*)
-
-    val contribs = termWeights.map { case (t, w) =>
-      bm25Term(col(tfCol(t)), col(s"df_${tfCol(t)}"), k1, b, w)
-    }
-    perDoc
-      .filter(terms.map(t => col(tfCol(t)) > 0).reduce(_ || _))
-      .crossJoin(broadcast(stats))
-      .withColumn("score", contribs.reduce(_ + _))
-      .select(col(idCol), col("score"))
+    val keys = (groups :+ idCol).map(col)
+    val terms = termWeights.distinctBy(_._1)
+    if (terms.isEmpty) return tokens.select(keys: _*).limit(0).withColumn("score", lit(0.0))
+    val tfCols = terms.indices.map(i => s"tf_$i")
+    val perDocAggs = count(lit(1)).cast("double").as("dl") +:
+      terms.zip(tfCols).map { case ((t, _), c) =>
+        count(when(col("term") === t, true)).cast("double").as(c)
+      }
+    val perDoc = tokens.groupBy(keys: _*).agg(perDocAggs.head, perDocAggs.tail: _*)
+    val statAggs = count(lit(1)).cast("double").as("n") +: avg("dl").as("avgdl") +:
+      tfCols.map(c => count(when(col(c) > 0, true)).cast("double").as(s"df_$c"))
+    val stats = perDoc.groupBy(groups.map(col): _*).agg(statAggs.head, statAggs.tail: _*)
+    val matched = perDoc.filter(tfCols.map(c => col(c) > 0).reduce(_ || _))
+    val contribs = terms.zip(tfCols).map { case ((_, w), c) => bm25Term(col(c), col(s"df_$c"), w) }
+    (if (groups.isEmpty) matched.crossJoin(broadcast(stats))
+     else matched.join(broadcast(stats), groups))
+      .select(keys :+ contribs.reduce(_ + _).as("score"): _*)
   }
 
   /** BM25 top-k with the canonical rounded score. */
@@ -413,14 +380,8 @@ object Search {
     * expansion). Same single-shuffle pivoted shape; weights are plan
     * literals.
     */
-  def bm25WeightedScores(
-      tokens: DataFrame,
-      idCol: String,
-      termWeights: Seq[(String, Double)],
-      k1: Double = 1.2,
-      b: Double = 0.75
-  ): DataFrame =
-    bm25TermScores(tokens, idCol, termWeights.map { case (t, w) => t -> Some(w) }, k1, b)
+  def bm25WeightedScores(tokens: DataFrame, idCol: String, termWeights: Seq[(String, Double)]): DataFrame =
+    bm25Pivot(tokens, idCol, Nil, termWeights.map { case (t, w) => t -> Some(w) })
 
   /** RM3 pseudo-relevance-feedback query expansion (Lavrenko &
     * Croft 2001 relevance models; the Anserini/Indri default): run the

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
 
 /** Whole-operator extension: top-k rows per key WITHOUT sorting whole
@@ -293,4 +294,15 @@ object TopK {
     val rankAttr = AttributeReference(rankName, LongType, nullable = false)()
     GraftBridge.ofRows(spark, TopKPerKeyNode(partExprs, resolvedOrders, k, rankAttr, analyzed))
   }
+
+  /** The one single-vs-batch heap rule of the probes: with no query key
+    * the top `k` by `score` (ties to the lowest `idCol`) is an
+    * `orderBy.limit` (TakeOrderedAndProject — per-partition heap plus a
+    * driver merge of k rows); with one it is [[perKey]], ranked 1..k per
+    * key in an added `rk`.
+    */
+  def heap(df: DataFrame, key: Seq[String], score: String, ascending: Boolean, idCol: String,
+      k: Int): DataFrame =
+    if (key.nonEmpty) perKey(df, key, Seq((score, ascending), (idCol, true)), k)
+    else df.orderBy(if (ascending) col(score).asc else col(score).desc, col(idCol)).limit(k)
 }

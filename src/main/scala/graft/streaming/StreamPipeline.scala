@@ -414,20 +414,8 @@ object StreamPipeline {
   /** File-stream the events table, ts normalized to epoch-nanos longs
     * exactly like the batch loader ([[graft.Tables.events]]).
     */
-  def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    // self-contained: a TIMESTAMP(NANOS)-typed events file must load
-    // even when Tables.events hasn't set this conf on the session first
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val s = landing(spark, dir, "events.parquet", raw.schema)
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => s
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        s.withColumn("ts",
-          expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts) * 1000"))
-      case _ => s.withColumn("ts", expr("unix_micros(ts) * 1000"))
-    }
-  }
+  def eventStream(spark: SparkSession, dir: String): DataFrame = graft.Tables.tsAsNanos(
+    landing(spark, dir, "events.parquet", graft.Tables.rawEvents(spark, dir).schema))
 
   /** Per-user funnel state transition over a typed (user, ts, type)
     * stream — reusable by [[funnelSnapshot]] and the multi-batch

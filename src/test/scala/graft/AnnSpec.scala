@@ -47,7 +47,7 @@ class AnnSpec extends SparkSpec {
     val embs = Tables.embeddings(spark, sf)
     val queryDf = embs.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
     val index = Ann.build(embs, "embedding", "vec_id", k = 10, seed = 42)
-    val dir = java.nio.file.Files.createTempDirectory("annappend").toString + "/idx"
+    val dir = tempDir("annappend").toString + "/idx"
     Ann.writeIndex(index, dir)
     def probe(): Set[Long] =
       Ann.probe(Ann.liveLayout(spark, dir, "vec_id"), queryDf, "q_vec", "embedding", "vec_id",
@@ -79,7 +79,7 @@ class AnnSpec extends SparkSpec {
     val embs = Tables.embeddings(spark, sf)
     val index = Ann.build(embs, "embedding", "vec_id", k = 10, seed = 42)
     val baseCost = Ann.assignmentCost(embs, "embedding", index.centroids)
-    val dir = java.nio.file.Files.createTempDirectory("annmaint").toString + "/idx"
+    val dir = tempDir("annmaint").toString + "/idx"
     Ann.writeIndex(index, dir)
 
     // in-distribution delta: fresh ids over the SAME vectors — cost
@@ -217,8 +217,7 @@ class AnnSpec extends SparkSpec {
     val embs = Tables.embeddings(spark, sf)
     val queryDf = embs.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
     val index = Ann.buildCached(sf, embs, "embedding", "vec_id", k = 10, seed = 42)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ann_nodelete").resolve("idx").toString
+    val path = tempDir("graft_ann_nodelete").resolve("idx").toString
     Ann.writeIndex(index, path)
     // never deleted from: no sidecar, so the live face is the raw layout
     assert(!Ann.hasTombstones(path))

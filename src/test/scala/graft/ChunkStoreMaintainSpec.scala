@@ -16,7 +16,7 @@ class ChunkStoreMaintainSpec extends SparkSpec {
     val rnd = new scala.util.Random(99)
     val maxDeltas = 4
     val store = new ChunkStore(
-      java.nio.file.Files.createTempDirectory("graft_maintain").resolve("chunks").toString,
+      tempDir("graft_maintain").resolve("chunks").toString,
       "doc_id")
     val reference = scala.collection.mutable.Map[Long, String]()
     var maxObservedDeltas = 0

@@ -8,7 +8,7 @@ class ChunkStoreSpec extends SparkSpec {
 
   private def freshStore(): ChunkStore =
     new ChunkStore(
-      java.nio.file.Files.createTempDirectory("graft_store").resolve("chunks").toString,
+      tempDir("graft_store").resolve("chunks").toString,
       "doc_id")
 
   test("upsert batches resolve latest-wins on read") {

@@ -41,13 +41,13 @@ class CrossProcessCasSpec extends SparkSpec {
       .getInputArguments.asScala
       .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports"))
       .toSeq
-    val out = java.io.File.createTempFile(s"graft_racer_$tag", ".log")
+    val out = tempDir(s"graft_racer_$tag").resolve("out.log").toFile
     val cmd = (Seq(javaBin, "-Xmx1g", "-Dspark.ui.enabled=false") ++ runtimeArgs ++
       Seq("-cp", cp, "graft.tools.LogRacer", dir, tag, n.toString, gate)).asJava
     val pb = new ProcessBuilder(cmd)
     pb.redirectErrorStream(false)
     pb.redirectOutput(out)
-    pb.redirectError(java.io.File.createTempFile(s"graft_racer_err_$tag", ".log"))
+    pb.redirectError(out.toPath.resolveSibling("err.log").toFile)
     (pb.start(), out)
   }
 
@@ -68,7 +68,7 @@ class CrossProcessCasSpec extends SparkSpec {
     * either way and is retried.
     */
   private def raceOnce(): Int = {
-    val dir = Files.createTempDirectory("graft_xproc_").toString + "/idx"
+    val dir = tempDir("graft_xproc_").toString + "/idx"
     M.writeClustered(
       (0 until 20).map(i => (i.toLong, i % 4)).toDF("id", "cluster"),
       dir, "overwrite") // v1 build

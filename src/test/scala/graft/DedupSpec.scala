@@ -89,7 +89,7 @@ class DedupSpec extends SparkSpec {
     val oneShot = Dedup.minHashLshPairs(docs, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val root = java.nio.file.Files.createTempDirectory("graft_sig_spec").toString + "/sig"
+    val root = tempDir("graft_sig_spec").toString + "/sig"
     val store = new ChunkStore(root, "doc_id")
     // first batch signs a STALE doc 2; the re-ingest batch replaces it
     Dedup.appendSignatures(store, Seq(

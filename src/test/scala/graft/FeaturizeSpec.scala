@@ -92,7 +92,7 @@ class FeaturizeSpec extends SparkSpec {
     ).toDF("doc_id", "chunk_index", "chunk")
     val base = ch.filter(col("doc_id") < 10)
     val delta = ch.filter(col("doc_id") >= 10)
-    val dir = java.nio.file.Files.createTempDirectory("docemb_inc_spec").toString
+    val dir = tempDir("docemb_inc_spec").toString
     Featurize.meanPoolChunks(base, "doc_id", "chunk_index", "chunk")
       .write.mode("overwrite").parquet(dir)
     Featurize.appendDocEmbeddings(dir, delta, "doc_id", "chunk_index", "chunk")

@@ -63,8 +63,7 @@ class FreqSpec extends SparkSpec {
     // floor), distinct loud/rare populations per file so the
     // candidate sets genuinely differ across batches; the streamed
     // drain must equal the exact batch answer over the union.
-    val staging = java.nio.file.Files.createTempDirectory("graft_hh_spec")
-    graft.streaming.StreamPipeline.deleteRecursivelyOnExit(staging)
+    val staging = tempDir("graft_hh_spec")
     val all = scala.collection.mutable.ArrayBuffer.empty[String]
     (0 until 4).foreach { f =>
       val rows = (0 until 14).flatMap(i => Seq.fill(6)(s"loud${f}x$i")) ++

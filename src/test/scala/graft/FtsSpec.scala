@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.{Fts, Search}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class FtsSpec extends SparkSpec {
@@ -15,26 +16,42 @@ class FtsSpec extends SparkSpec {
     (4L, "bird bird cat dog fish")
   ).toDF("doc_id", "text")
 
-  private def fullScan(terms: Seq[String], k: Int) =
+  // "an" and "c0" share a String hashCode (3117)
+  private val edgeFixture = Seq(
+    (1L, "an c0 cat"),
+    (2L, "an an dog"),
+    (3L, "c0 cat cat"),
+    (4L, "bird")
+  ).toDF("doc_id", "text")
+
+  private def fullScan(docs: DataFrame, terms: Seq[String], k: Int) =
     Search.bm25TopK(
-      docsFixture.select(col("doc_id"),
+      docs.select(col("doc_id"),
         explode(graft.functions.TextOps.tokenize(col("text"))).as("term")),
       "doc_id", terms, k)
 
   test("index probe reproduces the full-scan BM25 scorer bit-for-bit") {
-    val dir = Files.createTempDirectory("fts_spec_").toString
-    val idx = Fts.build(docsFixture, "text", "doc_id", dir)
+    val idx = Fts.build(docsFixture, "text", "doc_id", tempDir("fts_spec_").toString)
     assert(idx.nDocs == 4.0)
     assert(idx.avgdl == (4 + 2 + 3 + 5) / 4.0)
-    for (terms <- Seq(Seq("cat"), Seq("cat", "dog"), Seq("fish", "bird", "cat"))) {
-      val probed = Fts.probe(spark, idx, "doc_id", terms, k = 10).collect().toSeq
-      val scanned = fullScan(terms, 10).collect().toSeq
+    val edge = Fts.build(edgeFixture, "text", "doc_id", tempDir("fts_spec_edge_").toString)
+    for ((docs, index, terms) <- Seq(
+           (docsFixture, idx, Seq("cat")), (docsFixture, idx, Seq("cat", "dog")),
+           (docsFixture, idx, Seq("fish", "bird", "cat")),
+           // hash-colliding pair, a repeated term (counts once), no term
+           (edgeFixture, edge, Seq("an", "c0")), (edgeFixture, edge, Seq("cat", "cat")),
+           (edgeFixture, edge, Nil))) {
+      val probed = Fts.probe(spark, index, "doc_id", terms, k = 10).collect().toSeq
+      val scanned = fullScan(docs, terms, 10).collect().toSeq
       assert(probed == scanned, s"probe != full scan for terms=$terms")
+      assert(probed.isEmpty == terms.isEmpty, s"terms=$terms: ${probed.length} rows")
     }
+    assert(Fts.probe(spark, edge, "doc_id", Seq("cat", "cat"), k = 10).collect().toSeq ==
+      Fts.probe(spark, edge, "doc_id", Seq("cat"), k = 10).collect().toSeq)
   }
 
   test("probe pushes the term filter into the postings scan") {
-    val dir = Files.createTempDirectory("fts_spec_").toString
+    val dir = tempDir("fts_spec_").toString
     val idx = Fts.build(docsFixture, "text", "doc_id", dir)
     val plan = Fts.probe(spark, idx, "doc_id", Seq("cat", "dog"), k = 10)
       .queryExecution.executedPlan.toString
@@ -48,49 +65,16 @@ class FtsSpec extends SparkSpec {
     assert(fromScratch == fromIndex)
   }
 
-  test("probeBatch equals a per-query sequence of single probes") {
-    val dir = Files.createTempDirectory("fts_spec_").toString
-    val idx = Fts.build(docsFixture, "text", "doc_id", dir)
-    val batch = Seq(0L -> Seq("cat"), 1L -> Seq("cat", "dog"), 2L -> Seq("fish", "bird"))
-    val got = Fts.probeBatch(spark, idx, "doc_id", batch, k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
-    val expected = batch.flatMap { case (qid, terms) =>
-      Fts.probe(spark, idx, "doc_id", terms, k = 3).collect().zipWithIndex.map {
-        case (r, i) => (qid, r.getLong(0), r.getDouble(1), (i + 1).toLong)
-      }
-    }
-    assert(got == expected, s"batch diverged:\n$got\nvs\n$expected")
-    // one pruned pass: the union term filter reaches the scan
-    val plan = Fts.probeBatch(spark, idx, "doc_id", batch, k = 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [In(term"))
-    assert(!plan.contains("SortMergeJoin"), "query/df tables must broadcast")
-  }
-
-  test("semanticProbeBatch equals per-query single semantic probes") {
-    val dir = Files.createTempDirectory("fts_spec_").toString
-    val idx = Fts.build(Tables.documents(spark, sf), "text", "doc_id", dir)
-    val batch = Queries.BatchSemanticQueries
-    val got = Fts.semanticProbeBatch(spark, idx, "doc_id", batch, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
-    val expected = batch.flatMap { case (qid, text) =>
-      Fts.semanticProbe(spark, idx, "doc_id", text, k = 5).collect().zipWithIndex.map {
-        case (r, i) => (qid, r.getLong(0), r.getDouble(1), (i + 1).toLong)
-      }
-    }
-    assert(got == expected, s"batch diverged:\n$got\nvs\n$expected")
-  }
-
   test("appendToIndex: base+delta probe is bit-identical to a one-shot build over the union") {
     val delta = Seq((5L, "cat cat cat cat"), (6L, "fish dog")).toDF("doc_id", "text")
     val union = docsFixture.union(delta)
 
-    val incDir = Files.createTempDirectory("fts_spec_inc_").toString
+    val incDir = tempDir("fts_spec_inc_").toString
     val base = Fts.build(docsFixture, "text", "doc_id", incDir)
     val inc = Fts.appendToIndex(base, delta, "text", "doc_id")
 
     val oneShot = Fts.build(union, "text", "doc_id",
-      Files.createTempDirectory("fts_spec_full_").toString)
+      tempDir("fts_spec_full_").toString)
     assert(inc.nDocs == oneShot.nDocs)
     assert(math.abs(inc.avgdl - oneShot.avgdl) < 1e-12)
 
@@ -130,7 +114,7 @@ class FtsSpec extends SparkSpec {
   }
 
   test("rebuild after new documents land refreshes the same index dir (store.py:197 replace=True)") {
-    val dir = Files.createTempDirectory("fts_spec_").toString
+    val dir = tempDir("fts_spec_").toString
     Fts.build(docsFixture, "text", "doc_id", dir)
     val more = docsFixture.union(Seq((5L, "cat cat cat cat")).toDF("doc_id", "text"))
     val idx2 = Fts.build(more, "text", "doc_id", dir)
@@ -140,7 +124,7 @@ class FtsSpec extends SparkSpec {
   }
 
   test("deleteFromIndex: tombstoned probe scores bit-identically to a live-only rebuild") {
-    val dir = Files.createTempDirectory("graft_fts_del").toString
+    val dir = tempDir("graft_fts_del").toString
     val full = Fts.build(docsFixture, "text", "doc_id", dir)
     val deleted = Fts.deleteFromIndex(spark, full,
       docsFixture.filter(col("doc_id") === 3L).select("doc_id"), "doc_id")
@@ -152,14 +136,14 @@ class FtsSpec extends SparkSpec {
     // from-scratch build over the live corpus: same ids AND same scores
     // (df for 'dog' shrinks from 3 to 2 — the idf must move with it)
     val live = Fts.build(docsFixture.filter(col("doc_id") =!= 3L), "text", "doc_id",
-      Files.createTempDirectory("graft_fts_live").toString)
+      tempDir("graft_fts_live").toString)
     val expect = Fts.probe(spark, live, "doc_id", Seq("cat", "dog"), k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == expect, s"tombstoned vs rebuilt diverge:\n$got\n$expect")
   }
 
   test("deleteFromIndex is idempotent: re-deleting tombstoned ids never drifts the stats") {
-    val dir = Files.createTempDirectory("graft_fts_del_idem").toString
+    val dir = tempDir("graft_fts_del_idem").toString
     val full = Fts.build(docsFixture, "text", "doc_id", dir)
     val once = Fts.deleteFromIndex(spark, full,
       docsFixture.filter(col("doc_id") === 3L).select("doc_id"), "doc_id")
@@ -178,7 +162,7 @@ class FtsSpec extends SparkSpec {
   }
 
   test("ALL probe families honor tombstones: probeBatch and the semantic sidecar probes") {
-    val dir = Files.createTempDirectory("graft_fts_del_all").toString
+    val dir = tempDir("graft_fts_del_all").toString
     val full = Fts.build(docsFixture, "text", "doc_id", dir)
     val deleted = Fts.deleteFromIndex(spark, full,
       docsFixture.filter(col("doc_id") === 4L).select("doc_id"), "doc_id")
@@ -195,7 +179,7 @@ class FtsSpec extends SparkSpec {
     assert(!semBatch.contains(4L), "semanticProbeBatch served a deleted doc")
     // batch probe scores over the live corpus equal a live-only rebuild
     val live = Fts.build(docsFixture.filter(col("doc_id") =!= 4L), "text", "doc_id",
-      Files.createTempDirectory("graft_fts_live_all").toString)
+      tempDir("graft_fts_live_all").toString)
     val got = Fts.probeBatch(spark, deleted, "doc_id", Seq(0L -> Seq("cat", "dog")), k = 10)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
     val expect = Fts.probeBatch(spark, live, "doc_id", Seq(0L -> Seq("cat", "dog")), k = 10)
@@ -204,7 +188,7 @@ class FtsSpec extends SparkSpec {
   }
 
   test("stats: live books balance through build, delete and compaction") {
-    val dir = Files.createTempDirectory("graft_fts_stats").toString
+    val dir = tempDir("graft_fts_stats").toString
     val full = Fts.build(docsFixture, "text", "doc_id", dir)
     def row(idx: Fts.Index) = Fts.stats(spark, idx, "doc_id").collect().head
     val r0 = row(full)
@@ -219,12 +203,12 @@ class FtsSpec extends SparkSpec {
     assert(r1.getLong(1) == 6L && r1.getLong(2) == 3L)
     assert(r1.getDouble(3) == (14.0 - 5.0) / 3.0)
     val compacted = Fts.compact(spark, deleted, "doc_id",
-      Files.createTempDirectory("graft_fts_stats_c").toString)
+      tempDir("graft_fts_stats_c").toString)
     assert(row(compacted) == r1, "compaction must not move the books")
   }
 
   test("maintain: the threshold policy folds the FTS layout IN PLACE; probes and stats carry") {
-    val dir = Files.createTempDirectory("graft_fts_maint").toString
+    val dir = tempDir("graft_fts_maint").toString
     val base = Fts.build(docsFixture.filter(col("doc_id") <= 2L), "text", "doc_id", dir)
     val i1 = Fts.appendToIndex(base, docsFixture.filter(col("doc_id") === 3L), "text", "doc_id")
     val i2 = Fts.appendToIndex(i1, docsFixture.filter(col("doc_id") === 4L), "text", "doc_id")
@@ -246,13 +230,13 @@ class FtsSpec extends SparkSpec {
   }
 
   test("compact: append + delete fold into a clean layout scoring bit-identically") {
-    val dir = Files.createTempDirectory("graft_fts_cmp").toString
+    val dir = tempDir("graft_fts_cmp").toString
     val base = Fts.build(docsFixture.filter(col("doc_id") <= 3L), "text", "doc_id", dir)
     val appended = Fts.appendToIndex(base,
       docsFixture.filter(col("doc_id") === 4L), "text", "doc_id")
     val deleted = Fts.deleteFromIndex(spark, appended,
       docsFixture.filter(col("doc_id") === 3L).select("doc_id"), "doc_id")
-    val out = Files.createTempDirectory("graft_fts_cmp_out").toString
+    val out = tempDir("graft_fts_cmp_out").toString
     val compacted = Fts.compact(spark, deleted, "doc_id", out)
     // stats carry over; the sidecar does NOT
     assert(compacted.nDocs == deleted.nDocs && compacted.sumDl == deleted.sumDl)
@@ -271,7 +255,7 @@ class FtsSpec extends SparkSpec {
     // ... and equals a from-scratch build over the live corpus
     val live = Fts.build(
       docsFixture.filter(col("doc_id") =!= 3L), "text", "doc_id",
-      Files.createTempDirectory("graft_fts_cmp_live").toString)
+      tempDir("graft_fts_cmp_live").toString)
     val a = Fts.probe(spark, compacted, "doc_id", Seq("cat", "dog"), k = 10).collect().toSeq
     val b = Fts.probe(spark, live, "doc_id", Seq("cat", "dog"), k = 10).collect().toSeq
     assert(a == b, s"compacted vs live rebuild diverge:\n$a\n$b")

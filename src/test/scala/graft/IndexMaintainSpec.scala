@@ -21,7 +21,7 @@ class IndexMaintainSpec extends SparkSpec {
     ids.map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
 
   private def freshLayout(): (String, Ann.Index) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_maint_").toString + "/idx"
+    val dir = tempDir("graft_maint_").toString + "/idx"
     val idx = Ann.build(corpus(0 until 60), "embedding", "vec_id", k = 4, seed = 1L)
     Ann.writeIndex(idx, dir)
     (dir, idx)

@@ -8,7 +8,7 @@ class IngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkFolder(): Path = {
-    val dir = Files.createTempDirectory("graft_ingest")
+    val dir = tempDir("graft_ingest")
     Files.writeString(dir.resolve("readme.md"), "# Readme Title\n\nsome markdown body text here")
     Files.writeString(dir.resolve("notes.txt"), "plain notes content with several words inside")
     Files.write(dir.resolve("image.png"), Array[Byte](0x50, 0x4e, 0x47, 1, 2, 3))
@@ -37,7 +37,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("html conversion strips tags/scripts, keeps structure, decodes entities") {
-    val dir = Files.createTempDirectory("graft_html")
+    val dir = tempDir("graft_html")
     Files.writeString(dir.resolve("page.html"),
       """<html><head><title>T</title><style>p{color:red}</style>
         |<script>var x = "<p>not text</p>";</script></head>
@@ -61,7 +61,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("csv conversion parses quoted fields into a markdown table") {
-    val dir = Files.createTempDirectory("graft_csv")
+    val dir = tempDir("graft_csv")
     Files.writeString(dir.resolve("data.csv"),
       "name,note,score\n\"Smith, Jane\",\"says \"\"hi\"\"\",10\nBob,\"multi\nline\",7\n")
     val text = Ingest.convert(Ingest.folder(spark, dir.toString))
@@ -74,7 +74,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("pdf conversion extracts text from plain and FlateDecode streams; images fall back to stub") {
-    val dir = Files.createTempDirectory("graft_pdf")
+    val dir = tempDir("graft_pdf")
     def pdf(content: Array[Byte], filter: String): Array[Byte] = {
       val head = (s"%PDF-1.4\n1 0 obj\n<< /Length ${content.length}$filter >>\nstream\n")
         .getBytes("ISO-8859-1")
@@ -162,7 +162,7 @@ class IngestSpec extends SparkSpec {
     assert(Convert.rtfToText("plain text".getBytes("UTF-8")).isEmpty)
 
     // end to end through the folder scan: rtf is a supported, REAL format
-    val dir = Files.createTempDirectory("graft_rtf")
+    val dir = tempDir("graft_rtf")
     Files.write(dir.resolve("memo.rtf"), rtf.getBytes("ISO-8859-1"))
     val out = Ingest.convert(Ingest.folder(spark, dir.toString))
       .select("file_type", "text").as[(String, String)].collect().toMap
@@ -181,7 +181,7 @@ class IngestSpec extends SparkSpec {
       }
       z.close(); bos.toByteArray
     }
-    val dir = Files.createTempDirectory("graft_ooxml_route")
+    val dir = tempDir("graft_ooxml_route")
     Files.write(dir.resolve("doc.docx"), zip("word/document.xml" ->
       "<w:document><w:body><w:p><w:r><w:t>Routed body</w:t></w:r></w:p></w:body></w:document>"))
     val out = Ingest.convert(Ingest.folder(spark, dir.toString))
@@ -236,7 +236,7 @@ class IngestSpec extends SparkSpec {
     assert(Convert.zipToText("plain".getBytes("UTF-8")).isEmpty)
     // routed through the ingest path: zip is Convertible, and the
     // page-split stage gives each member its own page row
-    val dir = Files.createTempDirectory("graft_zip_route")
+    val dir = tempDir("graft_zip_route")
     Files.write(dir.resolve("bundle.zip"), archive)
     val pipe = Ingest.pipeline(spark, dir.toString, library = "ziplib")
     val pageVals = pipe.select("page").as[Long].distinct().collect().sorted
@@ -244,7 +244,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("json conversion renders a readable outline and survives bad json") {
-    val dir = Files.createTempDirectory("graft_json")
+    val dir = tempDir("graft_json")
     Files.writeString(dir.resolve("doc.json"),
       """{"title": "Spec", "tags": ["a", "b"], "meta": {"pages": 3}}""")
     Files.writeString(dir.resolve("bad.json"), "{not valid json")
@@ -283,7 +283,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("page breaks and user metadata flow through to every ChunkRecord") {
-    val dir = Files.createTempDirectory("graft_paged")
+    val dir = tempDir("graft_paged")
     // three pages separated by form-feed (the converter's page delimiter)
     val pages = Seq(
       (1 to 60).map(i => s"pageone$i").mkString(" "),
@@ -328,7 +328,7 @@ class IngestSpec extends SparkSpec {
     val dir = mkFolder()
     // persist the first scan as the "store" (a real store is durable;
     // a lazily cached DataFrame would alias the mutated folder)
-    val storePath = Files.createTempDirectory("graft_store").resolve("chunks").toString
+    val storePath = tempDir("graft_store").resolve("chunks").toString
     Ingest.folder(spark, dir.toString).withColumn("library", lit("docs"))
       .write.parquet(storePath)
     val first = spark.read.parquet(storePath)

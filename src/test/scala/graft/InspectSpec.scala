@@ -12,7 +12,7 @@ class InspectSpec extends SparkSpec {
 
   test("Inspect prints pass rows and warm jobs and writes a scrubbed plan snapshot") {
     GraftFunctions.register(spark)
-    val dir = Files.createTempDirectory("graft_inspect_spec_")
+    val dir = tempDir("graft_inspect_spec_")
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(out) {
       Inspect.run(spark, Seq(sf, "ann_incremental", "--passes", "2", "--jobs",

@@ -28,7 +28,7 @@ class LayoutLogSpec extends SparkSpec {
   private object M extends IndexMaintenance
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_layoutlog_").toString + "/idx"
+    tempDir("graft_layoutlog_").toString + "/idx"
 
   private def rows(ids: Range): org.apache.spark.sql.DataFrame =
     ids.map(i => (i.toLong, i % 4)).toDF("id", "cluster")

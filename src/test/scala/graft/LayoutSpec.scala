@@ -20,8 +20,7 @@ class LayoutSpec extends SparkSpec {
     val ev = Tables.events(spark, dir).select(
       col("event_id"), col("user_id"), col("value"),
       (expr("ts DIV 60000000000") - 28401120L).as("minute"))
-    val root = java.nio.file.Files.createTempDirectory("layout_spec")
-    graft.streaming.StreamPipeline.deleteRecursivelyOnExit(root)
+    val root = tempDir("layout_spec")
 
     val zPath = root.resolve("z").toString
     Layout.zorderWrite(ev, "user_id", "minute", nFiles = 32, path = zPath)

@@ -72,7 +72,7 @@ class MatryoshkaSpec extends SparkSpec {
     val qv = rows.head._2
     val q = Seq(Tuple1(qv)).toDF("q_vec")
     val index = Ann.build(corpus, "embedding", "vec_id", k = 5, seed = 42)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mrl_spec").toString + "/idx"
+    val dir = tempDir("graft_mrl_spec").toString + "/idx"
     Matryoshka.writeIvfMrl(dir, corpus, "embedding", "vec_id", index.centroids, dPrefix = 16)
     val nProbe = 2
     val probeCells = cellsOf(index.centroids, q, nProbe)
@@ -132,7 +132,7 @@ class MatryoshkaSpec extends SparkSpec {
 
     // COMPACT: the rewritten layout serves the identical live result
     // with the tombstone sidecar gone and no anti-join needed
-    val compDir = java.nio.file.Files.createTempDirectory("graft_mrl_comp").toString + "/idx"
+    val compDir = tempDir("graft_mrl_comp").toString + "/idx"
     Matryoshka.compact(spark, dir, compDir, "vec_id")
     assert(!Matryoshka.hasTombstones(compDir), "compaction must clear the sidecar")
     val compacted = Matryoshka.probeIvf(spark, compDir, Some(corpusPlus), q,
@@ -159,7 +159,7 @@ class MatryoshkaSpec extends SparkSpec {
     }
     val corpus = rows.toDF("vec_id", "embedding")
     val index = Ann.build(corpus, "embedding", "vec_id", k = 5, seed = 42)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mrl_batch").toString + "/idx"
+    val dir = tempDir("graft_mrl_batch").toString + "/idx"
     Matryoshka.writeIvfMrl(dir, corpus, "embedding", "vec_id", index.centroids, dPrefix = 16)
     val queries = corpus.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))

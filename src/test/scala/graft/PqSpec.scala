@@ -60,8 +60,7 @@ class PqSpec extends SparkSpec {
     import graft.operators.Ann
     val index = Ann.buildCached(sf, embs, "embedding", "vec_id", k = 10, seed = 42)
     val model = Pq.train(embs, "embedding", "vec_id", m = 8, codes = 16)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_pqbatch_test").resolve("idx").toString
+    val path = tempDir("graft_pqbatch_test").resolve("idx").toString
     Pq.writeIvfPq(path, embs, "embedding", "vec_id", index.centroids, model)
     val queries = embs.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
@@ -87,7 +86,7 @@ class PqSpec extends SparkSpec {
     val index = Ann.buildCached(sf, embs, "embedding", "vec_id", k = 10, seed = 42)
     val corpus = embs.filter(col("vec_id") =!= 0)
     val model = Pq.trainResidual(corpus, "embedding", "vec_id", index.centroids, m = 8, codes = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqres").toString + "/idx"
+    val dir = tempDir("graft_pqres").toString + "/idx"
     Pq.writeIvfPqResidual(dir, corpus, "embedding", "vec_id", index.centroids, model)
     val got = Pq.probeIvf(spark, dir, index.centroids, model, queryDf,
         "q_vec", "embedding", "vec_id", nProbe = 3, k = 10)
@@ -194,7 +193,7 @@ class PqSpec extends SparkSpec {
     corpus.count()
     val index = Ann.build(corpus, "embedding", "vec_id", k = 24, seed = 42)
     val model = Pq.trainResidual(corpus, "embedding", "vec_id", index.centroids, m = 8, codes = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqrefine").toString + "/idx"
+    val dir = tempDir("graft_pqrefine").toString + "/idx"
     Pq.writeIvfPqResidual(dir, corpus, "embedding", "vec_id", index.centroids, model)
     val qids = Seq(11L, 1003L, 2077L, 4999L)
     def qDfOf(id: Long) =
@@ -238,7 +237,7 @@ class PqSpec extends SparkSpec {
     assert(model.m == 16 && model.dim == 128,
       s"default sizing must derive m = dim/8, got m=${model.m} at dim=${model.dim}")
     assert(model.codebooks.head.length == 256, "codes must default to 256")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqsized").toString + "/idx"
+    val dir = tempDir("graft_pqsized").toString + "/idx"
     Pq.writeIvfPqResidual(dir, corpus, "embedding", "vec_id", index.centroids, model)
     val qids = Seq(13L, 5003L, 11077L, 19999L)
     def qDfOf(id: Long) =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, Bq, Matryoshka, Pq, Sq}
+import graft.operators.{Ann, Bq, Fts, Matryoshka, Pq, Sq}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   * the single-query shape is a driver-latency choice, never a
   * semantic one. And every flat (unpartitioned) probe must equal its
   * family's IVF probe over every cell: the flat form is the same core
-  * with no partition filter.
+  * with no partition filter. The text probes follow the same rule:
+  * Fts's BM25 and semantic single-query probes are the |Q| = 1 batch
+  * of their core, over every index state.
   */
 class ProbeFoldSpec extends SparkSpec {
 
@@ -26,7 +28,7 @@ class ProbeFoldSpec extends SparkSpec {
     Pq.trainResidual(base, "embedding", "vec_id", index.centroids, m = 8, codes = 16)
 
   private def layoutDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_fold_$tag").resolve("idx").toString
+    tempDir(s"graft_fold_$tag").resolve("idx").toString
 
   private def tombstone(path: String): Unit =
     Ann.deleteFromIndex(spark, path,
@@ -172,4 +174,78 @@ class ProbeFoldSpec extends SparkSpec {
       assert(got == single, s"query $qid: batch $got vs single $single")
     }
   }
+
+  private lazy val docs = Tables.documents(spark, sf)
+
+  private def ftsBuild(d: DataFrame, tag: String): Fts.Index =
+    Fts.build(d, "text", "doc_id", tempDir(s"graft_fold_fts_$tag").toString)
+
+  /** index state → its FTS index; the tombstoned and compacted states
+    * drop every doc_id ≡ 3 (mod 10).
+    */
+  private lazy val ftsIndexes: Map[String, Fts.Index] = {
+    val tombstoned = Fts.deleteFromIndex(spark, ftsBuild(docs, "del"),
+      docs.filter(col("doc_id") % 10 === 3).select("doc_id"), "doc_id")
+    Map(
+      "built" -> ftsBuild(docs, "built"),
+      "appended" -> Fts.appendToIndex(ftsBuild(docs.filter(col("doc_id") % 4 =!= 1), "app"),
+        docs.filter(col("doc_id") % 4 === 1), "text", "doc_id"),
+      "tombstoned" -> tombstoned,
+      "compacted" -> Fts.compact(spark, tombstoned, "doc_id",
+        tempDir("graft_fold_fts_cmp").toString))
+  }
+
+  private def textQueryIds(family: String): Seq[Long] =
+    (if (family == "bm25") Queries.BatchTextQueries else Queries.BatchSemanticQueries).map(_._1)
+
+  /** family → one query's single probe, k = 5. */
+  private def textSingle(family: String, idx: Fts.Index, qid: Long): DataFrame =
+    if (family == "bm25")
+      Fts.probe(spark, idx, "doc_id", Queries.BatchTextQueries.toMap.apply(qid), k = 5)
+    else Fts.semanticProbe(spark, idx, "doc_id", Queries.BatchSemanticQueries.toMap.apply(qid), k = 5)
+
+  /** family → the batch probe of the queries `qids`, k = 5. */
+  private def textBatch(family: String, idx: Fts.Index, qids: Seq[Long]): DataFrame =
+    if (family == "bm25")
+      Fts.probeBatch(spark, idx, "doc_id", Queries.BatchTextQueries.filter(q => qids.contains(q._1)), k = 5)
+    else Fts.semanticProbeBatch(spark, idx, "doc_id",
+      Queries.BatchSemanticQueries.filter(q => qids.contains(q._1)), k = 5)
+
+  for (family <- Seq("bm25", "semantic");
+       state <- Seq("built", "appended", "tombstoned", "compacted"))
+    test(s"$family, $state index: single probe equals the |Q| = 1 batch") {
+      val idx = ftsIndexes(state)
+      textQueryIds(family).foreach { qid =>
+        val singleDf = textSingle(family, idx, qid)
+        assert(singleDf.queryExecution.executedPlan.toString.contains("TakeOrderedAndProject"),
+          "the one query must take the orderBy.limit path")
+        val one = singleDf.collect().toSeq
+        val ofBatch = textBatch(family, idx, Seq(qid)).drop("query_id", "rk").collect().toSeq
+        assert(one.length == 5, s"query $qid: ${one.length} rows")
+        assert(one == ofBatch, s"$family/$state query $qid:\n single: $one\n batch:  $ofBatch")
+        if (state == "tombstoned" || state == "compacted")
+          assert(one.forall(_.getLong(0) % 10 != 3), s"query $qid served a tombstoned id")
+      }
+    }
+
+  for (family <- Seq("bm25", "semantic"))
+    test(s"$family: batch probe equals per-query single probes") {
+      val idx = ftsIndexes("built")
+      val qids = textQueryIds(family)
+      val batchDf = textBatch(family, idx, qids)
+      val got = batchDf.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
+      val expected = qids.flatMap { qid =>
+        textSingle(family, idx, qid).collect().zipWithIndex.map {
+          case (r, i) => (qid, r.getLong(0), r.getDouble(1), (i + 1).toLong)
+        }
+      }
+      assert(got == expected, s"batch diverged:\n$got\nvs\n$expected")
+      if (family == "bm25") {
+        // one pruned pass: the union term filter reaches the scan
+        val plan = batchDf.queryExecution.executedPlan.toString
+        assert(plan.contains("PushedFilters: [In(term"))
+        assert(!plan.contains("SortMergeJoin"), "query/df tables must broadcast")
+      }
+    }
 }

@@ -106,7 +106,7 @@ class ProbeJobCountSpec extends SparkSpec {
         java.util.Arrays.asList(qRows.collect(): _*)), qRows.schema)
     val qCells = Ann.queryCellsLocal(qLocal, "q_vec", "query_id", index.centroids, nProbe = 3)
     val rot = Bq.rotationMatrix(64, seed = 7L)
-    val root = java.nio.file.Files.createTempDirectory("graft_inline_probe_").toString
+    val root = tempDir("graft_inline_probe_").toString
     Sq.writeIvfSq(root + "/sq", e, "embedding", "vec_id", index.centroids,
       inlineVectors = true)
     Matryoshka.writeIvfMrl(root + "/mrl", e, "embedding", "vec_id", index.centroids,
@@ -151,6 +151,18 @@ class ProbeJobCountSpec extends SparkSpec {
   test("warm semantic/bm25 probes are bounded") {
     for ((q, bound) <- Seq("semantic_indexed" -> 4, "semantic_batch" -> 7,
                            "bm25_indexed" -> 4, "hybrid_indexed" -> 5)) {
+      val n = warmJobs(q)
+      assert(n <= bound, s"$q fired $n jobs warm (bound $bound)")
+    }
+  }
+
+  test("warm event-stream snapshots take the memoized events schema") {
+    // bounds = the warm counts `runMain graft.tools.Inspect <sf0.001>
+    // stream_funnel,stream_retention,stream_paths,stream_interval_join --jobs`
+    // reports once the streamed source reuses Tables' events frame; an
+    // un-memoized schema read costs each one more job
+    for ((q, bound) <- Seq("stream_funnel" -> 5, "stream_retention" -> 4, "stream_paths" -> 3,
+                           "stream_interval_join" -> 5)) {
       val n = warmJobs(q)
       assert(n <= bound, s"$q fired $n jobs warm (bound $bound)")
     }

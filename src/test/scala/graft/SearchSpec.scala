@@ -39,6 +39,28 @@ class SearchSpec extends SparkSpec {
     assert(out(1L) > out(2L), "doc with the rare term should outrank common-only doc")
   }
 
+  test("BM25 scorers take hash-colliding terms (\"an\"/\"c0\") as two terms") {
+    assert("an".hashCode == "c0".hashCode)
+    val toks = tokens(
+      1L -> "an an dog",
+      2L -> "c0 cat",
+      3L -> "an c0 c0 bird",
+      4L -> "dog bird cat"
+    )
+    val out = Search.bm25WeightedScores(toks, "doc_id", Seq("an" -> 0.5, "c0" -> 2.0)).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // N=4, avgdl=3, df(an)=df(c0)=2 → idf = ln(1 + 2.5/2.5) = ln 2
+    def w(tf: Double, dl: Double) =
+      math.log(2.0) * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / 3.0))
+    val want = Map(1L -> 0.5 * w(2, 3), 2L -> 2.0 * w(1, 2), 3L -> (0.5 * w(1, 4) + 2.0 * w(2, 4)))
+    assert(out.keySet == want.keySet)
+    want.foreach { case (id, v) => assert(math.abs(out(id) - v) < 1e-12, s"doc $id: ${out(id)} vs $v") }
+    // RM3 runs both of its scoring passes on the pair
+    val rm3 = Search.rm3ExpandTopK(toks, "doc_id", Seq("an", "c0"), k = 4, fbDocs = 2, fbTerms = 2)
+      .collect().map(_.getLong(0)).toSeq
+    assert(rm3.nonEmpty && rm3.take(2).toSet.subsetOf(Set(1L, 2L, 3L)), rm3.toString)
+  }
+
   test("knnTopK returns the query's nearest vectors in cosine order") {
     val corpus = Seq(
       (1L, Array(1.0f, 0.0f)),

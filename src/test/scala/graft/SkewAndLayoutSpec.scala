@@ -21,7 +21,7 @@ class SkewAndLayoutSpec extends SparkSpec {
   }
 
   test("persisted ANN index prunes partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").resolve("idx").toString
+    val dir = tempDir("graft_ivf").resolve("idx").toString
     val index = Ann.buildCached(sf, Tables.embeddings(spark, sf), "embedding", "vec_id", k = 10, seed = 42)
     Ann.writeIndex(index, dir)
 

@@ -13,7 +13,7 @@ class SourceScanSpec extends SparkSpec {
   private val schema = Queries.SourceReadSchema
 
   test("jsonl round-trip is value-exact incl. quotes, backslashes, newlines, non-ascii") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_srcspec_j").toString + "/d"
+    val dir = tempDir("graft_srcspec_j").toString + "/d"
     val decorated = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("source"),
         concat(col("text"), lit(Queries.SourceDecoration)).as("text"))
@@ -30,7 +30,7 @@ class SourceScanSpec extends SparkSpec {
   }
 
   test("csv multiLine round-trip is value-exact with embedded newlines and quotes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_srcspec_c").toString + "/d"
+    val dir = tempDir("graft_srcspec_c").toString + "/d"
     val decorated = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("source"),
         concat(col("text"), lit(Queries.SourceDecoration)).as("text"))
@@ -71,7 +71,7 @@ class SourceScanSpec extends SparkSpec {
           .option("header", "true").option("multiLine", "true").option("escape", "\"")
           .option("mode", "PERMISSIVE").option("columnNameOfCorruptRecord", "_corrupt")
           .csv(p)))) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_srcspec_u_$fmt").toString + "/d"
+      val dir = tempDir(s"graft_srcspec_u_$fmt").toString + "/d"
       write(rows, dir)
       val back = read(dir).cache()
       assert(back.filter(col("_corrupt").isNotNull).count() === 0, s"$fmt corrupt")
@@ -89,7 +89,7 @@ class SourceScanSpec extends SparkSpec {
       (3L, "en", "s2", "cdata trap ]]> inside text"),
       (4L, "en", "s2", "decoration " + Queries.SourceDecoration)
     ).toDF("doc_id", "lang", "source", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_srcspec_x").toString + "/d"
+    val dir = tempDir("graft_srcspec_x").toString + "/d"
     rows.write.format("xml").option("rootTag", "docs").option("rowTag", "doc").save(dir)
     val back = spark.read.schema(schema)
       .format("xml").option("rowTag", "doc")
@@ -105,7 +105,7 @@ class SourceScanSpec extends SparkSpec {
   }
 
   test("malformed jsonl lines are counted in _corrupt, not dropped or fatal") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_srcspec_m").toString
+    val dir = tempDir("graft_srcspec_m").toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "part-bad.json"),
       ("""{"doc_id": 1, "lang": "en", "source": "s", "text": "ok"}""" + "\n" +
@@ -126,7 +126,7 @@ class SourceScanSpec extends SparkSpec {
 
   test("avro round-trip is value-exact incl. decoration, nulls and astral unicode") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_srcspec_a").toString + "/d"
+    val dir = tempDir("graft_srcspec_a").toString + "/d"
     val corpus = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("source"),
         concat(col("text"), lit(Queries.SourceDecoration)).as("text"))
@@ -157,7 +157,7 @@ class SourceScanSpec extends SparkSpec {
 
   test("avro: empty corpus round-trips to zero rows, not an error") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_srcspec_ae").toString + "/d"
+    val dir = tempDir("graft_srcspec_ae").toString + "/d"
     val empty = Seq.empty[(Long, String, String, String)]
       .toDF("doc_id", "lang", "source", "text")
     operators.Avro.write(empty, dir)
@@ -168,7 +168,7 @@ class SourceScanSpec extends SparkSpec {
 
   test("avro: projected reader schema prunes decode to the requested fields") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_srcspec_ap").toString + "/d"
+    val dir = tempDir("graft_srcspec_ap").toString + "/d"
     val rows = Seq(
       (1L, "en", "s1", "alpha body"),
       (2L, null.asInstanceOf[String], "s2", "beta body"),
@@ -212,7 +212,7 @@ class SourceScanSpec extends SparkSpec {
     // a single record larger than the default avro sync interval forces
     // multi-block framing inside one container file
     val big = ("x" * 1000 + "é日😀\n") * 3000 // ~3 MB with multibyte + newline
-    val dir = java.nio.file.Files.createTempDirectory("graft_srcspec_ab").toString + "/d"
+    val dir = tempDir("graft_srcspec_ab").toString + "/d"
     val rows = Seq((1L, "en", "s", big)).toDF("doc_id", "lang", "source", "text")
     operators.Avro.write(rows, dir)
     val back = operators.Avro.read(spark, dir, Queries.SourceReadSchema)

@@ -11,6 +11,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
 
+  /** A fresh temp dir, deleted recursively when the test JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
+      java.nio.file.Files.createTempDirectory(prefix))
+
   /** The `nProbe` IVF cells nearest a one-row query relation's `q_vec`. */
   def cellsOf(centroids: Array[Array[Double]], queryDf: DataFrame, nProbe: Int): Seq[Int] =
     graft.operators.Ann.nearestCells(centroids,

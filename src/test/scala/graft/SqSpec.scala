@@ -37,8 +37,7 @@ class SqSpec extends SparkSpec {
     val corpus = embs.filter(col("vec_id") =!= 0).select("vec_id", "embedding")
     val queryDf = embs.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
     val index = Ann.buildCached(sf, embs, "embedding", "vec_id", k = 10, seed = 42)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivfsq_test").resolve("idx").toString
+    val path = tempDir("graft_ivfsq_test").resolve("idx").toString
     Sq.writeIvfSq(path, corpus, "embedding", "vec_id", index.centroids)
 
     // the sidecar holds no full-precision vectors — codes + scale only
@@ -66,8 +65,7 @@ class SqSpec extends SparkSpec {
     import graft.operators.Ann
     val corpus = embs.select("vec_id", "embedding")
     val index = Ann.buildCached(sf, embs, "embedding", "vec_id", k = 10, seed = 42)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sqbatch_test").resolve("idx").toString
+    val path = tempDir("graft_sqbatch_test").resolve("idx").toString
     Sq.writeIvfSq(path, corpus, "embedding", "vec_id", index.centroids)
     val queries = embs.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))

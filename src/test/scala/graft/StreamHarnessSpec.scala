@@ -28,9 +28,8 @@ class StreamHarnessSpec extends SparkSpec {
     def hooks: Int = field.getDeclaringClass.synchronized {
       field.get(null).asInstanceOf[java.util.IdentityHashMap[_, _]].size
     }
-    val root = java.nio.file.Files.createTempDirectory("graft_hooks_")
     val before = hooks
-    StreamPipeline.deleteRecursivelyOnExit(root)
+    val root = tempDir("graft_hooks_") // the first registration
     (1 until 100).foreach(i => StreamPipeline.deleteRecursivelyOnExit(root.resolve(s"r$i")))
     val added = hooks - before
     assert(added <= 1, s"100 registrations added $added shutdown hooks")

@@ -33,8 +33,7 @@ class StreamLifecycleSpec extends SparkSpec {
 
   test("append stream x delete x policy compaction: probe parity at every interleaving point") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
-      java.nio.file.Files.createTempDirectory("graft_streamlife_")).toString
+    val root = tempDir("graft_streamlife_").toString
     val layout = root + "/live"
 
     val baseIds = (0L until 400L)
@@ -129,8 +128,7 @@ class StreamLifecycleSpec extends SparkSpec {
     // last fold), never by lifetime verb count — measured here at every
     // tick of a 36-batch streamed append soak.
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
-      java.nio.file.Files.createTempDirectory("graft_streamsoak_")).toString
+    val root = tempDir("graft_streamsoak_").toString
     val layout = root + "/live"
 
     val baseIds = (0L until 100L)

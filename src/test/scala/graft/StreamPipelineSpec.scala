@@ -11,15 +11,13 @@ class StreamPipelineSpec extends SparkSpec {
     val emb = Featurize.hashedBow(docs, "text", 64, Seq("doc_id"))
     val idx = Ann.buildCached(sf + "#hbow", emb, "embedding", "doc_id", k = 8, seed = 42)
 
-    val streamedDir = java.nio.file.Files
-      .createTempDirectory("graft_sp_test").toString + "/idx"
+    val streamedDir = tempDir("graft_sp_test").toString + "/idx"
     val got = StreamPipeline.ingestAndProbe(
       spark, sf, streamedDir, idx.centroids, "spark filter join stream")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
 
     // batch twin: same centroids, same corpus, written by the batch path
-    val batchDir = java.nio.file.Files
-      .createTempDirectory("graft_sp_batch").toString + "/idx"
+    val batchDir = tempDir("graft_sp_batch").toString + "/idx"
     Ann.appendToIndex(batchDir, emb.select("doc_id", "embedding"), "embedding", idx.centroids)
     val queryDf = Featurize.hashedBow(
         spark.range(1).select(lit("spark filter join stream").as("text"), col("id")),
@@ -38,8 +36,7 @@ class StreamPipelineSpec extends SparkSpec {
   test("decontaminateAndLand equals the batch decontamination over the same corpus") {
     val docs = Tables.documents(spark, sf)
     val bench = docs.filter(col("doc_id") < 10)
-    val landDir = StreamPipeline.deleteRecursivelyOnExit(
-      java.nio.file.Files.createTempDirectory("graft_decon_spec")).toString + "/landed"
+    val landDir = tempDir("graft_decon_spec").toString + "/landed"
     val streamed = StreamPipeline.decontaminateAndLand(spark, sf, bench, landDir)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getString(3))).toMap
     val batch = graft.operators.Dedup
@@ -81,8 +78,7 @@ class StreamPipelineSpec extends SparkSpec {
 
   test("upsertCdc: streamed CDC segments merge to the batch upsert→revise→delete flow") {
     val store = new graft.operators.ChunkStore(
-      StreamPipeline.deleteRecursivelyOnExit(
-        java.nio.file.Files.createTempDirectory("graft_cdc_spec")).toString + "/cs",
+      tempDir("graft_cdc_spec").toString + "/cs",
       "doc_id")
     val got = StreamPipeline.upsertCdc(spark, sf, store)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq

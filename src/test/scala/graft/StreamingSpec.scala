@@ -135,7 +135,7 @@ class StreamingSpec extends SparkSpec {
       (5L, "unrelated words only here"),
       (6L, "spark spark spark"))
     val base = docs.take(3).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("fts_stream_spec").toString
+    val dir = tempDir("fts_stream_spec").toString
     val idx = new java.util.concurrent.atomic.AtomicReference(
       Fts.build(base, "text", "doc_id", dir))
     // the delta arrives over TWO micro-batches through the streamed loop
@@ -155,7 +155,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val oneShot = Fts.probe(spark,
       Fts.build(docs.toDF("doc_id", "text"), "text", "doc_id",
-        java.nio.file.Files.createTempDirectory("fts_oneshot_spec").toString),
+        tempDir("fts_oneshot_spec").toString),
       "doc_id", terms, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(streamed == oneShot, s"streamed $streamed vs one-shot $oneShot")
@@ -176,7 +176,7 @@ class StreamingSpec extends SparkSpec {
       (4L, 0L, "window exchange"))
     // base: doc 1; docs 2+3 arrive in batch one, doc 4 in batch two —
     // a doc's chunks always travel together (the pooling purity contract)
-    val dir = java.nio.file.Files.createTempDirectory("docemb_stream_spec").toString
+    val dir = tempDir("docemb_stream_spec").toString
     Featurize.meanPoolChunks(
       ch.filter(_._1 == 1L).toDF("doc_id", "chunk_index", "chunk"),
       "doc_id", "chunk_index", "chunk")
@@ -343,7 +343,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val store = new graft.operators.ChunkStore(
-      java.nio.file.Files.createTempDirectory("graft_stream_store").resolve("chunks").toString,
+      tempDir("graft_stream_store").resolve("chunks").toString,
       "doc_id")
     val input = MemoryStream[(Long, String)]
     val q = graft.streaming.StreamPipeline.eachBatch(input.toDF().toDF("doc_id", "content")) {
@@ -366,7 +366,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Ann
     val embs = Tables.embeddings(spark, sf)
     val index = Ann.buildCached(sf, embs, "embedding", "vec_id", k = 10, seed = 42)
-    val dir = java.nio.file.Files.createTempDirectory("annstream").toString + "/idx"
+    val dir = tempDir("annstream").toString + "/idx"
     Ann.writeIndex(index, dir)
     val queryDf = embs.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
 

@@ -39,7 +39,7 @@ class SwapIsolationSpec extends SparkSpec {
   private object M extends IndexMaintenance
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft_swapiso_").toString + "/idx"
+    tempDir("graft_swapiso_").toString + "/idx"
 
   private def buildLayout(dir: String, n: Int): Unit =
     M.writeClustered(

@@ -18,7 +18,7 @@ class TombstoneStateSpec extends SparkSpec {
   private object M extends IndexMaintenance
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_tomb_spec_").toString + "/idx"
+    tempDir("graft_tomb_spec_").toString + "/idx"
 
   private def layout(dir: String, n: Int): Unit =
     (0 until n).map(i => (i.toLong, i % 4)).toDF("id", "cluster")

@@ -104,7 +104,7 @@ class TwoLevelSpec extends SparkSpec {
   test("two-level append assigns deltas exactly as the base corpus (base+delta == rebuild)") {
     val embs = Tables.embeddings(spark, sf)
     val (index, two) = Ann.buildTwoLevel(embs, "embedding", "vec_id", k, seed = 42)
-    val dir = java.nio.file.Files.createTempDirectory("twolevelappend").toString + "/idx"
+    val dir = tempDir("twolevelappend").toString + "/idx"
     Ann.writeIndex(index, dir)
     // re-append 40 vectors that already exist in the base layout under
     // shifted ids: with the hierarchical router each copy MUST land in
@@ -128,7 +128,7 @@ class TwoLevelSpec extends SparkSpec {
     val base = embs.filter(col("vec_id") % 10 =!= 7)
     val (index, two) = Ann.buildTwoLevel(base, "embedding", "vec_id", k, seed = 42)
     val model = Pq.trainResidual(base, "embedding", "vec_id", index.centroids, m = 8, codes = 16)
-    val root = java.nio.file.Files.createTempDirectory("twolevellife").toString
+    val root = tempDir("twolevellife").toString
     val dir = root + "/idx"
     Pq.writeIvfPqResidualAssigned(dir, Ann.assignTwoLevel(base, "embedding", two),
       "embedding", "vec_id", index.centroids, model)
@@ -175,7 +175,7 @@ class TwoLevelSpec extends SparkSpec {
     val embs = Tables.embeddings(spark, sf)
     val (index, two) = Ann.buildTwoLevel(embs, "embedding", "vec_id", k, seed = 42)
     val model = Pq.trainResidual(embs, "embedding", "vec_id", index.centroids, m = 8, codes = 16)
-    val dir = java.nio.file.Files.createTempDirectory("twolevellife_edge").toString + "/idx"
+    val dir = tempDir("twolevellife_edge").toString + "/idx"
     Pq.writeIvfPqResidualAssigned(dir, Ann.assignTwoLevel(embs, "embedding", two),
       "embedding", "vec_id", index.centroids, model)
     val before = spark.read.parquet(dir).count()
