@@ -531,22 +531,20 @@ object Convert {
     */
   def mediaToText(basename: String, bytes: Array[Byte]): Option[String] = {
     val noSpeech = "[transcription unavailable: no speech model in this container]"
-    Multimodal.sniff(bytes) match {
-      case "mp3" => Multimodal.parseMp3(bytes).map(m =>
-        s"# $basename\n[audio mp3: ${m.channels} ch, ${m.sampleRate} Hz, " +
-          s"${m.durationMs} ms, ${m.nFrames} frames]\n$noSpeech")
-      case "mp4" => Multimodal.parseMp4(bytes).map { m =>
-        val video = if (m.width > 0) s", video ${m.width}x${m.height}" else ""
-        val audio = if (m.channels > 0) s", audio ${m.channels} ch ${m.sampleRate} Hz" else ""
-        s"# $basename\n[media mp4: ${m.durationMs} ms$video$audio]\n$noSpeech"
-      }
-      case "ogg" => Multimodal.parseOgg(bytes).map(o =>
-        s"# $basename\n[audio ogg/${o.codec}: ${o.channels} ch, ${o.sampleRate} Hz, " +
-          s"${o.durationMs} ms]\n$noSpeech")
-      case "webp" => Multimodal.parseWebp(bytes).map { case (w, h) =>
-        s"# $basename\n[image webp: ${w}x$h]"
-      }
+    (Multimodal.sniff(bytes) match {
+      case "mp3" | "mp4" | "ogg" | "webp" => Multimodal.parse(bytes)
       case _ => None
+    }).map { m =>
+      val audio = s"${m.channels} ch, ${m.sampleRate} Hz"
+      s"# $basename\n" + (m.format match {
+        case "webp" => s"[image webp: ${m.width}x${m.height}]"
+        case "mp3" => s"[audio mp3: $audio, ${m.durationMs} ms, ${m.nFrames} frames]\n$noSpeech"
+        case "mp4" =>
+          val video = if (m.width > 0) s", video ${m.width}x${m.height}" else ""
+          val track = if (m.channels > 0) s", audio ${m.channels} ch ${m.sampleRate} Hz" else ""
+          s"[media mp4: ${m.durationMs} ms$video$track]\n$noSpeech"
+        case ogg => s"[audio $ogg: $audio, ${m.durationMs} ms]\n$noSpeech"
+      })
     }
   }
 

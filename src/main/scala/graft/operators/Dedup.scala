@@ -766,7 +766,9 @@ object Dedup {
   ): DataFrame = {
     require(bands == 4, "band layout is the 4 16-bit signature words")
     require(maxHamming < bands, "band guarantee needs maxHamming < bands")
-    val sig = simHashWords(df, textCol, idCol).cache() // O(docs) fixed-width rows
+    // O(docs) fixed-width rows, read by both band sides; per-invocation
+    // and retention-bounded like every operator-internal cache
+    val sig = saltedCached(simHashWords(df, textCol, idCol))
     val wordCols = (0 until 4).map(t => s"w$t")
     val bandKeys = wordCols.map(col)
     val banded = sig.select(

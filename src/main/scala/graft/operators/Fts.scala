@@ -296,27 +296,16 @@ object Fts extends IndexMaintenance {
     // sequentially; cached-block locks make the shared tf compute
     // exactly once). Measured on a micro-batch delta: 2.1 s of
     // back-to-back job latency → the wall of the slowest single write.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    // `concurrently` awaits every action before it rethrows a failure,
+    // so no sibling write lands files after the caller sees the error.
+    var st: org.apache.spark.sql.Row = null
     try {
-      import scala.concurrent.{Await, Future}
-      val fPost = Future {
-        postsOut.write.mode(mode).parquet(s"$outDir/postings")
-      }
-      val fDims = Future {
-        bounded(dims).write.mode(mode).parquet(s"$outDir/docdims")
-      }
-      val fNorms = Future {
-        bounded(dims.groupBy(col(idCol)).agg(sum(col("cnt") * col("cnt")).as("ss")))
-          .write.mode(mode).parquet(s"$outDir/docnorms")
-      }
-      val fStats = Future {
-        dl.agg(count("*").cast("double"), sum("dl")).head()
-      }
-      val st = Await.result(
-        for (_ <- fPost; _ <- fDims; _ <- fNorms; s <- fStats) yield s,
-        scala.concurrent.duration.Duration.Inf)
+      graft.streaming.StreamPipeline.concurrently(
+        () => postsOut.write.mode(mode).parquet(s"$outDir/postings"),
+        () => bounded(dims).write.mode(mode).parquet(s"$outDir/docdims"),
+        () => bounded(dims.groupBy(col(idCol)).agg(sum(col("cnt") * col("cnt")).as("ss")))
+          .write.mode(mode).parquet(s"$outDir/docnorms"),
+        () => st = dl.agg(count("*").cast("double"), sum("dl")).head())
       LayoutLog.commitVerb(spark, outDir,
         if (overwrite) "build" else "append", observed): Unit
       // sum over zero rows is NULL: an empty corpus/batch yields (0, 0)
@@ -326,7 +315,6 @@ object Fts extends IndexMaintenance {
       // corpus-sized tf cached (plan-keyed — a later identical build
       // could silently be served this invocation's blocks)
       tf.unpersist()
-      pool.shutdown()
     }
   }
 

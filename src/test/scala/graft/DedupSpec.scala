@@ -223,4 +223,16 @@ class DedupSpec extends SparkSpec {
     assert(pairs.contains((1L, 4L)) == (trueHam <= 3),
       s"edit pair presence inconsistent: trueHam=$trueHam pairs=$pairs")
   }
+
+  test("simHashPairs: six calls over six corpora leave at most 4 signature tables cached") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    for (c <- 1 to 6) {
+      val df = (1 to 20).map(i => (i.toLong, s"corpus$c shared words doc${i % 10}"))
+        .toDF("doc_id", "text")
+      Dedup.simHashPairs(df, "text", "doc_id").collect()
+    }
+    val pinned = sc.getPersistentRDDs.keySet -- before
+    assert(pinned.size <= 4, s"${pinned.size} of 6 signature tables still cached")
+  }
 }

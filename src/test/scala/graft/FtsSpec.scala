@@ -268,4 +268,34 @@ class FtsSpec extends SparkSpec {
     assert(nFiles(out) <= nFiles(dir),
       s"compaction must not grow the segment count: ${nFiles(out)} vs ${nFiles(dir)}")
   }
+
+  test("appendToIndex: a failed segment write returns only after every sibling write has stopped") {
+    val dir = tempDir("graft_fts_fail_")
+    val base = Fts.build(docsFixture, "text", "doc_id", dir.toString)
+    // a regular file where the postings segment dir should be: only the
+    // postings write fails, at job setup, before any of its jobs runs
+    val postings = dir.resolve("postings")
+    val old = Files.walk(postings)
+    try old.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]()).forEach(p => Files.delete(p))
+    finally old.close()
+    Files.write(postings, Array[Byte](1))
+    val delta = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    def landed(): Set[String] = {
+      val s = Files.walk(dir)
+      try s.filter(p => Files.isRegularFile(p)).map(p => dir.relativize(p).toString)
+        .toArray.map(_.toString).toSet
+      finally s.close()
+    }
+    val tracker = spark.sparkContext.statusTracker
+    intercept[Exception](Fts.appendToIndex(base, delta, "text", "doc_id"))
+    val active = tracker.getActiveJobIds.toSeq
+    val atReturn = landed()
+    // let any straggler finish before looking at the files again
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    Thread.sleep(500)
+    assert(active.isEmpty, s"jobs $active still running when the failure reached the caller")
+    assert(landed() == atReturn,
+      s"files landed after the failure returned: ${landed() -- atReturn}")
+  }
 }

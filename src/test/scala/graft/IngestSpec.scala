@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ingest, Multimodal}
+import graft.operators.Ingest
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
 
@@ -388,34 +388,6 @@ class IngestSpec extends SparkSpec {
     assert(rec.select("metadata").distinct().as[String].collect().toSeq ==
       Seq("""{"who":"test"}"""))
     assert(rec.columns.contains("embedding") && rec.count() == 3)
-  }
-
-  test("multimodal resize + frame-sample stages keep real column contracts") {
-    val dir = mkFolder()
-    val decoded = Multimodal.decodeStub(Ingest.folder(spark, dir.toString), "content")
-    val resized = Multimodal.resizeStub(decoded, maxSide = 128)
-    val r = resized.select("resized_w", "resized_h", "meta.width", "meta.height").collect()
-    r.foreach { row =>
-      assert(row.getInt(0) <= 128 && row.getInt(1) <= 128)
-      assert(row.getInt(0) > 0 && row.getInt(1) > 0)
-    }
-    val frames = Multimodal.frameSampleStub(decoded, "content", everyN = 5)
-    val perFile = frames.groupBy("source").count().collect()
-    assert(perFile.forall(_.getLong(1) >= 1))
-    // deterministic digests, unique per (source, frame)
-    assert(frames.select("frame_digest").distinct().count() == frames.count())
-  }
-
-  test("multimodal decodeStub appends typed metadata via mapPartitions") {
-    val dir = mkFolder()
-    val out = Multimodal.decodeStub(Ingest.folder(spark, dir.toString), "content")
-    assert(out.schema("meta").dataType == Multimodal.MetaSchema)
-    val meta = out.filter(col("file_type") === "png").select("meta.*").collect().head
-    assert(meta.getAs[Int]("width") > 0 && meta.getAs[Int]("n_frames") > 0)
-    // deterministic: same input → same fake decode
-    val again = Multimodal.decodeStub(Ingest.folder(spark, dir.toString), "content")
-      .filter(col("file_type") === "png").select("meta.*").collect().head
-    assert(meta == again)
   }
 
   test("media conversion: real container metadata becomes the converted text") {

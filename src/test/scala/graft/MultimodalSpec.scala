@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Multimodal
+import graft.operators.{Convert, Multimodal}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Real-decode multimodal path: JDK-codec images (PNG/BMP/animated GIF)
@@ -256,6 +257,26 @@ class MultimodalSpec extends SparkSpec {
     out.toByteArray
   }
 
+  /** The facts line [[Convert.mediaToText]] prints for a decoded meta. */
+  private def factsLine(m: Row): String = m.getString(0) match {
+    case "webp" => s"[image webp: ${m.getInt(1)}x${m.getInt(2)}]"
+    case "mp3" =>
+      s"[audio mp3: ${m.getInt(4)} ch, ${m.getInt(5)} Hz, ${m.getLong(6)} ms, ${m.getInt(3)} frames]"
+    case "mp4" =>
+      s"[media mp4: ${m.getLong(6)} ms" +
+        (if (m.getInt(1) > 0) s", video ${m.getInt(1)}x${m.getInt(2)}" else "") +
+        (if (m.getInt(4) > 0) s", audio ${m.getInt(4)} ch ${m.getInt(5)} Hz" else "") + "]"
+    case ogg => s"[audio $ogg: ${m.getInt(4)} ch, ${m.getInt(5)} Hz, ${m.getLong(6)} ms]"
+  }
+
+  /** Both readers of the parsed record agree: [[Convert.mediaToText]]
+    * prints exactly decode's facts, and no text where meta is NULL.
+    */
+  private def assertTextAgrees(payloads: Seq[(Long, Array[Byte])], metas: Map[Long, Option[Row]]): Unit =
+    for ((id, bytes) <- payloads)
+      assert(Convert.mediaToText("f", bytes).map(_.linesIterator.toSeq(1)) == metas(id).map(factsLine),
+        s"mediaToText disagrees with decode for id $id: ${metas(id)}")
+
   private def webpChunk(fourcc: String, payload: Array[Byte]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(12 + 8 + payload.length + (payload.length & 1))
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -267,12 +288,12 @@ class MultimodalSpec extends SparkSpec {
 
   test("mp3: exact frame count, duration, rate and channels from the header walk") {
     // 38 frames * 1152 samples / 44100 Hz = 0.99265... s -> 992 ms
-    val rows = Seq(
+    val payloads = Seq(
       (1L, mp3Frames(38, mono = true, id3 = false)),
       (2L, mp3Frames(38, mono = false, id3 = true, pad = 100)), // tagged + padding
       (3L, "ID3garbagewithnoframes".getBytes("US-ASCII"))
-    ).toDF("id", "content")
-    val out = Multimodal.decode(rows, "content")
+    )
+    val out = Multimodal.decode(payloads.toDF("id", "content"), "content")
       .select(col("id"), col("meta")).collect()
       .map(r => r.getLong(0) -> Option(r.getAs[org.apache.spark.sql.Row](1))).toMap
     val m1 = out(1L).get
@@ -282,6 +303,7 @@ class MultimodalSpec extends SparkSpec {
     val m2 = out(2L).get
     assert(m2.getInt(3) == 38 && m2.getInt(4) == 2, m2.toString)
     assert(out(3L).isEmpty, "tag with no frames must yield NULL meta")
+    assertTextAgrees(payloads, out)
   }
 
   // --- ISO-BMFF fixture builders: size-prefixed boxes, big-endian ---
@@ -352,8 +374,8 @@ class MultimodalSpec extends SparkSpec {
     val vid = mp4File(trak(stsdVideo(1280, 720)), trak(stsdAudio(1, 48000)))
     val hostile = box("ftyp", "isom0000".getBytes("US-ASCII")) ++
       Array[Byte](0, 0, 0, 1, 'm', 'o', 'o', 'v') // size=1 but no largesize
-    val rows = Seq((1L, m4a), (2L, vid), (3L, hostile)).toDF("id", "content")
-    val out = Multimodal.decode(rows, "content")
+    val payloads = Seq((1L, m4a), (2L, vid), (3L, hostile))
+    val out = Multimodal.decode(payloads.toDF("id", "content"), "content")
       .select(col("id"), col("meta")).collect()
       .map(r => r.getLong(0) -> Option(r.getAs[org.apache.spark.sql.Row](1))).toMap
     val a = out(1L).get
@@ -363,6 +385,7 @@ class MultimodalSpec extends SparkSpec {
     assert(v.getInt(1) == 1280 && v.getInt(2) == 720 &&
       v.getInt(4) == 1 && v.getInt(5) == 48000 && v.getLong(6) == 2500L, v.toString)
     assert(out(3L).isEmpty, "hostile largesize must yield NULL meta")
+    assertTextAgrees(payloads, out)
   }
 
   test("ogg: vorbis and opus id headers + last-granule duration from the page walk") {
@@ -373,8 +396,8 @@ class MultimodalSpec extends SparkSpec {
     val opus = oggPage(0L, opusHead(1, 312), 0) ++
       oggPage(48312L, new Array[Byte](10), 1)
     val garbage = "OggSbutnotreallyapagewalkable".getBytes("US-ASCII")
-    val rows = Seq((1L, vorb), (2L, opus), (3L, garbage)).toDF("id", "content")
-    val out = Multimodal.decode(rows, "content")
+    val payloads = Seq((1L, vorb), (2L, opus), (3L, garbage))
+    val out = Multimodal.decode(payloads.toDF("id", "content"), "content")
       .select(col("id"), col("meta")).collect()
       .map(r => r.getLong(0) -> Option(r.getAs[org.apache.spark.sql.Row](1))).toMap
     val v = out(1L).get
@@ -384,6 +407,7 @@ class MultimodalSpec extends SparkSpec {
     assert(o.getString(0) == "ogg/opus" && o.getInt(4) == 1 &&
       o.getInt(5) == 48000 && o.getLong(6) == 1000L, o.toString)
     assert(out(3L).isEmpty, "truncated page must yield NULL meta")
+    assertTextAgrees(payloads, out)
   }
 
   test("tiff decodes through the JDK codec; flac STREAMINFO walk gives exact facts") {
@@ -460,12 +484,13 @@ class MultimodalSpec extends SparkSpec {
     // VP8 lossy: 3-byte frame tag, start code 9D 01 2A, 16-bit w, h
     val vp8 = webpChunk("VP8 ", Array[Int](0, 0, 0, 0x9D, 0x01, 0x2A,
       320 & 0xff, 320 >> 8, 240 & 0xff, 240 >> 8).map(_.toByte))
-    val rows = Seq((1L, vp8l), (2L, vp8x), (3L, vp8)).toDF("id", "content")
-    val out = Multimodal.decode(rows, "content")
+    val payloads = Seq((1L, vp8l), (2L, vp8x), (3L, vp8))
+    val out = Multimodal.decode(payloads.toDF("id", "content"), "content")
       .select(col("id"), col("meta")).collect()
       .map(r => r.getLong(0) -> r.getAs[org.apache.spark.sql.Row](1)).toMap
     assert(out(1L).getString(0) == "webp" && out(1L).getInt(1) == 640 && out(1L).getInt(2) == 360)
     assert(out(2L).getInt(1) == 384 && out(2L).getInt(2) == 224)
     assert(out(3L).getInt(1) == 320 && out(3L).getInt(2) == 240)
+    assertTextAgrees(payloads, out.map { case (id, m) => id -> Option(m) })
   }
 }
