@@ -8,10 +8,13 @@ package graft
   * after a query runs, its centroids/codebooks are known driver-side
   * constants the oracle can re-apply independently.
   *
-  * [[Verify]] executes every query BEFORE dumping oracle_sql.json, so
-  * the holders are always populated in the driver's flow; if a query
-  * failed, its dynamic twin is simply omitted (driver falls back to the
-  * weaker rows-only check instead of comparing against a stale twin).
+  * One holder per FIT, not per key: the helper in [[Queries]] that
+  * fits (or fetches the memoized) model writes its holder, and every
+  * twin built on that fit is emitted as soon as any key captured it.
+  * [[Verify]] runs the selected queries BEFORE dumping oracle_sql.json
+  * and writes only the selected keys' twins, so a selected key whose
+  * query failed keeps its twin and fails the gate with its output
+  * missing, rather than slipping to the weaker rows-only check.
   */
 object OracleArtifacts {
 
@@ -28,72 +31,28 @@ object OracleArtifacts {
     */
   @volatile var retrievalEvalClusters: Option[Seq[(Long, Seq[String], Seq[Long])]] = None
 
-  /** (centroids, nProbe=5 ranked cells) from ann_recall_sweep — each
-    * smaller nProbe probes a prefix of the ranked list.
+  /** The full-corpus IVF fit (k = 10, seed = 42) every flat IVF key
+    * shares: unit-sphere centroids + query vector 0's 5 nearest cells,
+    * best first (the single-query keys probe the first 3, the recall
+    * sweep each prefix; the batch twins rank cells in SQL).
     */
-  @volatile var annSweep: Option[(Array[Array[Double]], Seq[Int])] = None
+  @volatile var ivf: Option[(Array[Array[Double]], Seq[Int])] = None
 
-  /** (unit-sphere KMeans centroids, probed cell ids) from ann_probe. */
-  @volatile var ann: Option[(Array[Array[Double]], Seq[Int])] = None
-
-  /** Same shape from ann_incremental (centroids fitted on the BASE
-    * subset only; the probe sees base + appended delta).
+  /** The same shape for the IVF fit on the lifecycle BASE subset
+    * (ann_incremental, stream_ann: the probe sees base + delta), 3 cells.
     */
   @volatile var annIncremental: Option[(Array[Array[Double]], Seq[Int])] = None
 
-  /** Same shape from ann_deleted (probe over the tombstone-filtered
-    * persisted layout).
+  /** The global PQ model (m = 8, codes = 16) + query vector 0's ADC
+    * distance table (pq_probe, ivfpq_probe, ann_batch_pq).
     */
-  @volatile var annDeleted: Option[(Array[Array[Double]], Seq[Int])] = None
+  @volatile var pq: Option[(operators.Pq.Model, Array[Array[Double]])] = None
 
-  /** Same shape from ann_compacted (probe over the rewritten live
-    * layout — same live corpus as ann_deleted, no sidecar left).
+  /** The residual PQ model (m = 8, codes = 256) trained against the
+    * [[ivf]] centroids (ivfpq_residual, ann_batch_pqr) — the twins
+    * derive the per-(query, cell) residual ADC tables in SQL.
     */
-  @volatile var annCompacted: Option[(Array[Array[Double]], Seq[Int])] = None
-
-  /** IVF centroids from ann_batch_probe (cells are per-query, computed
-    * in SQL by the twin itself).
-    */
-  @volatile var annBatch: Option[Array[Array[Double]]] = None
-
-  /** ann_batch_filtered — the batch prefiltered probe: only the fitted
-    * centroids (the label predicate is a static literal on both sides).
-    */
-  @volatile var annBatchFiltered: Option[Array[Array[Double]]] = None
-
-  /** (IVF centroids, probed cells) from ivfbq_probe — the binary-
-    * quantization leg is pure sign arithmetic, computed by the twin.
-    */
-  @volatile var ivfbq: Option[(Array[Array[Double]], Seq[Int])] = None
-
-  /** (IVF centroids, probed cells) from ann_filtered. */
-  @volatile var annFiltered: Option[(Array[Array[Double]], Seq[Int])] = None
-
-  /** IVF centroids from ann_batch_sq (per-query cells and the SQ8
-    * arithmetic are both computed in SQL by the twin itself).
-    */
-  @volatile var annBatchSq: Option[Array[Array[Double]]] = None
-
-  /** IVF centroids from ann_batch_mrl (per-query cells are computed in
-    * SQL by the twin; the MRL leg is a plain list slice).
-    */
-  @volatile var annBatchMrl: Option[Array[Array[Double]]] = None
-
-  /** (IVF centroids, PQ model) from ann_batch_pq — per-query cells,
-    * codes AND per-query ADC tables are all recomputed in SQL by the
-    * twin (batch ADC tables can't be driver literals).
-    */
-  @volatile var annBatchPq: Option[(Array[Array[Double]], operators.Pq.Model)] = None
-
-  /** ann_batch_pqr: fitted IVF centroids + RESIDUAL PQ model (the twin
-    * derives per-(query, cell) residual ADC tables in SQL from these).
-    */
-  @volatile var annBatchPqr: Option[(Array[Array[Double]], operators.Pq.Model)] = None
-
-  /** ann_batch_bq_rotated: fitted IVF centroids (rotation is a pure
-    * function of (dim, seed), regenerated by the twin).
-    */
-  @volatile var annBatchBqr: Option[Array[Array[Double]]] = None
+  @volatile var pqResidual: Option[operators.Pq.Model] = None
 
   /** ann_two_level: the fitted hierarchy (super centroids, per-super
     * sub-codebooks, flat offsets) + the probed flat cells — the twin
@@ -109,51 +68,15 @@ object OracleArtifacts {
     */
   @volatile var annTwoLevelPqr: Option[(operators.Ann.TwoLevel, operators.Pq.Model)] = None
 
-  /** ann_two_level_live / ann_two_level_compacted — the flagship
-    * LIFECYCLE pair: hierarchy + residual model fitted on the 90% BASE
-    * subset (the artifacts every maintenance verb must reuse). One
-    * twin serves both keys — delete-then-compact must equal the
-    * merge-on-read live probe — with the tombstoned ids excluded from
-    * the corpus CTE.
+  /** The two-level hierarchy + residual model fitted on the lifecycle
+    * BASE subset — the artifacts every maintenance verb must reuse:
+    * ann_two_level_live / ann_two_level_compacted (tombstoned ids
+    * excluded from the twin's corpus) and stream_ann_2l (no deletes).
     */
-  @volatile var annTwoLevelLife: Option[(operators.Ann.TwoLevel, operators.Pq.Model)] = None
-
-  /** stream_ann_2l — the streamed delta append over the two-level
-    * residual layout: base-subset fits, base ∪ delta corpus, no
-    * deletes (the twin is the lifecycle builder with an empty WHERE).
-    */
-  @volatile var annTwoLevelStream: Option[(operators.Ann.TwoLevel, operators.Pq.Model)] = None
-
-  /** (PQ model, query ADC distance table) from pq_probe. */
-  @volatile var pq: Option[(operators.Pq.Model, Array[Array[Double]])] = None
-
-  /** (IVF centroids, probed cells, PQ model, query ADC table) from
-    * ivfpq_probe.
-    */
-  @volatile var ivfpq: Option[(Array[Array[Double]], Seq[Int], operators.Pq.Model, Array[Array[Double]])] = None
-
-  /** (IVF centroids, probed cells, residual PQ model) from
-    * ivfpq_residual. At codes=256 the twin derives the per-cell query
-    * ADC tables IN SQL (lambda lists over the codebook literals, like
-    * ann_batch_pqr's) rather than inlining driver-computed tables.
-    */
-  @volatile var ivfpqResidual: Option[(Array[Array[Double]], Seq[Int], operators.Pq.Model)] = None
-
-  /** (IVF centroids, probed cells) from ivfsq_probe — the SQ8 leg is
-    * pure element-wise arithmetic, so only the IVF side needs literals.
-    */
-  @volatile var ivfsq: Option[(Array[Array[Double]], Seq[Int])] = None
-
-  /** (IVF centroids, probed cells) from ivfmrl_probe — the MRL leg is
-    * a plain list slice, so only the IVF side needs literals.
-    */
-  @volatile var ivfmrl: Option[(Array[Array[Double]], Seq[Int])] = None
+  @volatile var twoLevelBase: Option[(operators.Ann.TwoLevel, operators.Pq.Model)] = None
 
   /** Principal components (r x dim) from pca_probe's memoized fit. */
   @volatile var pca: Option[Array[Array[Double]]] = None
-
-  /** (IVF centroids, probed cells) from ivfsq_residual. */
-  @volatile var ivfsqResidual: Option[(Array[Array[Double]], Seq[Int])] = None
 
   /** (hashedBoW-space centroids, probed cells) from stream_pipeline.
     * The streamed index's content is a pure function of (corpus, fitted
@@ -167,21 +90,9 @@ object OracleArtifacts {
     */
   @volatile var semdedup: Option[Array[Array[Double]]] = None
 
-  /** KMeans centroids from cluster_topics (the ann_probe fit, reused —
-    * same data key / k / seed hits the memoized index).
-    */
-  @volatile var clusterTopics: Option[Array[Array[Double]]] = None
-
   def clear(): Unit = {
-    ann = None; annIncremental = None; annDeleted = None; annCompacted = None
-    annBatch = None; annBatchSq = None; annBatchMrl = None
-    annBatchPq = None; annBatchPqr = None; annBatchBqr = None; annTwoLevel = None
-    annTwoLevelPqr = None; annTwoLevelLife = None; annTwoLevelStream = None
-    annFiltered = None; annBatchFiltered = None; pq = None; ivfpq = None
-    ivfpqResidual = None
-    ivfsq = None; ivfbq = None; ivfmrl = None; pca = None
-    ivfsqResidual = None; streamPipeline = None
-    semdedup = None; clusterTopics = None; annSweep = None
-    retrievalEval = None; retrievalEvalClusters = None
+    retrievalEval = None; retrievalEvalClusters = None; ivf = None; annIncremental = None
+    pq = None; pqResidual = None; annTwoLevel = None; annTwoLevelPqr = None
+    twoLevelBase = None; pca = None; streamPipeline = None; semdedup = None
   }
 }

@@ -618,6 +618,79 @@ object OracleSql {
       s"($e) * ($e)"
     }.mkString(" + ")
 
+  /** `CASE cluster WHEN j THEN [centroid j literal] … END` — the
+    * per-row centroid pick of every residual twin.
+    */
+  private def centCase(cents: Array[Array[Double]]): String =
+    "CASE cluster " + cents.zipWithIndex.map { case (c, j) =>
+      s"WHEN $j THEN [${c.map(dlit).mkString(", ")}]"
+    }.mkString(" ") + " END"
+
+  /** Subspace `j`'s distance list from `vec` to every codeword, built
+    * by a list_transform LAMBDA over the codebook literal instead of
+    * one unrolled distChain per code (a ~16k-term SQL string at
+    * codes=256). The inner chain is the same left-associated
+    * accumulation as distChain / the Spark HOF fold, applied per
+    * element in list order — bit-identical doubles, compact SQL.
+    */
+  private def distLambda(model: operators.Pq.Model, vec: String, j: Int): String = {
+    val sub = model.dim / model.m
+    val cb = model.codebooks(j).map(c => "[" + c.map(dlit).mkString(", ") + "]").mkString("[", ", ", "]")
+    val terms = (0 until sub).map { i =>
+      s"($vec[${j * sub + i + 1}] - c[${i + 1}])*($vec[${j * sub + i + 1}] - c[${i + 1}])"
+    }.mkString(" + ")
+    s"list_transform($cb, c -> $terms)"
+  }
+
+  /** Residual-PQ encode columns `<code>j` (nearest codeword of each
+    * subspace of the corpus residual `rv`) and the ADC sum of the
+    * query residual `qrv`'s distance lists indexed by those codes.
+    */
+  private def residualPq(model: operators.Pq.Model, code: String): (String, String) = {
+    val encCols = (0 until model.m).map { j =>
+      s"list_indexof(${distLambda(model, "rv", j)}, list_min(${distLambda(model, "rv", j)})) - 1 AS $code$j"
+    }.mkString(",\n        ")
+    val adcExpr = (0 until model.m).map(j => s"${distLambda(model, "qrv", j)}[$code$j + 1]").mkString(" + ")
+    (encCols, adcExpr)
+  }
+
+  /** Per-QUERY cell ranking of the 8-query batch in SQL, as CTEs `<p>`,
+    * `<p>n`, `<p>d`, `<p>c0` and `<p>c`(query_id, qv, [nv,] cluster):
+    * a parallel unnest zips cluster ids with the inlined distance list
+    * from the normalized query `nv`, and row_number keeps each query's
+    * 3 nearest cells (ties to the lower id — Ann.queryCellsLocal's
+    * order). `carryNv` keeps `nv` for a residual leg.
+    */
+  private def batchCellCtes(p: String, nv: String, cents: Array[Array[Double]],
+                            carryNv: Boolean = false): String = {
+    val c = if (carryNv) s"$nv, " else ""
+    val qDists = cents.map(x => distChain(nv, 0, x)).mkString(", ")
+    s"""$p AS (SELECT vec_id AS query_id, ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id < 8),
+       |${p}n AS (SELECT query_id, qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS $nv FROM $p),
+       |${p}d AS (SELECT query_id, qv, $c[$qDists] AS dl FROM ${p}n),
+       |${p}c0 AS (SELECT query_id, qv, ${c}unnest(generate_series(0, ${cents.length - 1})) AS cluster, unnest(dl) AS d FROM ${p}d),
+       |${p}c AS (SELECT query_id, qv, ${c}cluster FROM (
+       |        SELECT query_id, qv, ${c}cluster, row_number() OVER (PARTITION BY query_id ORDER BY d, cluster) AS rn
+       |        FROM ${p}c0) WHERE rn <= 3)""".stripMargin
+  }
+
+  /** The batch twins' corpus assignment, as CTEs `<p>c`, `<p>nr`,
+    * `<p>dst` and `<p>asg`(vec_id, [label,] ev, [nv,] cluster): every
+    * embedding normalized to `nv` and assigned to its first-minimum
+    * centroid. `label` carries the label for a prefilter; `carryNv`
+    * keeps `nv` for a residual leg.
+    */
+  private def batchAsgCtes(p: String, nv: String, cents: Array[Array[Double]],
+                           label: Boolean = false, carryNv: Boolean = false): String = {
+    val l = if (label) "label, " else ""
+    val c = if (carryNv) s"$nv, " else ""
+    val cDists = cents.map(x => distChain(nv, 0, x)).mkString(", ")
+    s"""${p}c AS (SELECT vec_id, $l${dvec("embedding")} AS ev FROM embeddings),
+       |${p}nr AS (SELECT vec_id, ${l}ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS $nv FROM ${p}c),
+       |${p}dst AS (SELECT vec_id, ${l}ev, $c[$cDists] AS cdl FROM ${p}nr),
+       |${p}asg AS (SELECT vec_id, ${l}ev, ${c}CAST(list_indexof(cdl, list_min(cdl)) - 1 AS BIGINT) AS cluster FROM ${p}dst)""".stripMargin
+  }
+
   /** Twin builder for the two-level + residual-PQ batch probe chain —
     * shared by the flagship `ann_two_level_pqr` (corpus = all
     * embeddings) and the lifecycle pair `ann_two_level_live` /
@@ -638,11 +711,6 @@ object OracleSql {
                                  corpusWhere: String): String = {
     val cents = two.flat
     val dim = cents.head.length
-    val sub = model.dim / model.m
-    val qDists = cents.map(c => distChain("tpqnv", 0, c)).mkString(", ")
-    val centCase = "CASE cluster " + cents.zipWithIndex.map { case (c, j) =>
-      s"WHEN $j THEN [${c.map(dlit).mkString(", ")}]"
-    }.mkString(" ") + " END"
     val supDists = two.superCents.map(c => distChain("tpnv", 0, c)).mkString(", ")
     val subCase = "CASE tpsup " + two.subCents.zipWithIndex.map { case (subs, sp) =>
       val dl = subs.map(c => distChain("tpnv", 0, c)).mkString(", ")
@@ -651,29 +719,10 @@ object OracleSql {
     val offCase = "CASE tpsup " + two.offsets.zipWithIndex.map { case (o, sp) =>
       s"WHEN $sp THEN $o"
     }.mkString(" ") + " END"
-    def cbLit(j: Int): String =
-      "[" + model.codebooks(j).map(c => "[" + c.map(dlit).mkString(", ") + "]").mkString(", ") + "]"
-    def distLambda(vec: String, j: Int): String = {
-      val terms = (0 until sub).map { i =>
-        s"($vec[${j * sub + i + 1}] - c[${i + 1}])*($vec[${j * sub + i + 1}] - c[${i + 1}])"
-      }.mkString(" + ")
-      s"list_transform(${cbLit(j)}, c -> $terms)"
-    }
-    val encCols = (0 until model.m).map { j =>
-      s"list_indexof(${distLambda("rv", j)}, list_min(${distLambda("rv", j)})) - 1 AS tpr$j"
-    }.mkString(",\n        ")
-    val adcExpr = (0 until model.m).map { j =>
-      s"${distLambda("qrv", j)}[tpr$j + 1]"
-    }.mkString(" + ")
-    s"""WITH tpq AS (SELECT vec_id AS query_id, ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id < 8),
-       |tpqn AS (SELECT query_id, qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS tpqnv FROM tpq),
-       |tpqd AS (SELECT query_id, qv, tpqnv, [$qDists] AS dl FROM tpqn),
-       |tpqc0 AS (SELECT query_id, qv, tpqnv, unnest(generate_series(0, ${cents.length - 1})) AS cluster, unnest(dl) AS d FROM tpqd),
-       |tpqc AS (SELECT query_id, qv, tpqnv, cluster FROM (
-       |        SELECT query_id, qv, tpqnv, cluster, row_number() OVER (PARTITION BY query_id ORDER BY d, cluster) AS rn
-       |        FROM tpqc0) WHERE rn <= 3),
+    val (encCols, adcExpr) = residualPq(model, "tpr")
+    s"""WITH ${batchCellCtes("tpq", "tpqnv", cents, carryNv = true)},
        |tpqr AS (SELECT query_id, qv, cluster,
-       |        list_transform(generate_series(1, $dim), i -> tpqnv[i] - ($centCase)[i]) AS qrv FROM tpqc),
+       |        list_transform(generate_series(1, $dim), i -> tpqnv[i] - (${centCase(cents)})[i]) AS qrv FROM tpqc),
        |tpc AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings$corpusWhere),
        |tpnr AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS tpnv FROM tpc),
        |tpsupq AS (SELECT vec_id, ev, tpnv,
@@ -681,7 +730,7 @@ object OracleSql {
        |tpsubq AS (SELECT vec_id, ev, tpnv, tpsup, $subCase AS sdl FROM tpsupq),
        |tpasg AS (SELECT vec_id, ev, tpnv,
        |        CAST(($offCase) + list_indexof(sdl, list_min(sdl)) - 1 AS BIGINT) AS cluster FROM tpsubq),
-       |tpct AS (SELECT vec_id, ev, tpnv, cluster, $centCase AS cent FROM tpasg),
+       |tpct AS (SELECT vec_id, ev, tpnv, cluster, ${centCase(cents)} AS cent FROM tpasg),
        |tprs AS (SELECT vec_id, ev, cluster,
        |        list_transform(generate_series(1, $dim), i -> tpnv[i] - cent[i]) AS rv FROM tpct),
        |tpenc AS (SELECT vec_id, ev, cluster,
@@ -712,6 +761,39 @@ object OracleSql {
        |nrm AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv FROM c),
        |dst AS (SELECT vec_id, ev, [$dists] AS dl FROM nrm),
        |asg AS (SELECT vec_id, ev, CAST(list_indexof(dl, list_min(dl)) - 1 AS BIGINT) AS cluster FROM dst)""".stripMargin
+  }
+
+  /** The single-query IVF probe twin over [[annCtes]]: the probed
+    * cells' rows ranked by cosine to query vector 0, top 10. `where`
+    * is an extra corpus predicate; `labeled` joins the label and keeps
+    * `label IN (2, 5)` — both apply before the LIMIT (prefilter
+    * semantics; a postfilter twin would return fewer rows).
+    */
+  private def singleProbeSql(cents: Array[Array[Double]], cells: Seq[Int], where: String = "",
+                             labeled: Boolean = false): String = {
+    val (lblCte, lblCol, lblJoin, sep, lblWhere) =
+      if (labeled) (",\nlbl AS (SELECT vec_id, label FROM embeddings)", "label, ",
+        " JOIN lbl USING (vec_id)", "\n", " AND label IN (2, 5)")
+      else ("", "", "", " ", "")
+    s"""WITH ${annCtes(cents)}$lblCte
+       |SELECT vec_id, cluster, $lblCol${cosine("ev", "qv")} AS cos_sim
+       |FROM asg$lblJoin, q${sep}WHERE cluster IN (${cells.mkString(", ")})$where$lblWhere
+       |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
+  }
+
+  /** The single-query corpus (every embedding but query vector 0)
+    * assigned to the fitted centroids and cut to the probed `cells`, as
+    * CTEs `c`, `nrm`, `dst` and `asg`(vec_id, ev, [nv,] cluster);
+    * `carryNv` keeps the normalized vector for a residual leg.
+    */
+  private def probedAsgCtes(cents: Array[Array[Double]], cells: Seq[Int], carryNv: Boolean = false): String = {
+    val c = if (carryNv) "nv, " else ""
+    val distList = cents.map(x => distChain("nv", 0, x)).mkString(", ")
+    s"""c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
+       |nrm AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv FROM c),
+       |dst AS (SELECT vec_id, ev, $c[$distList] AS dl FROM nrm),
+       |asg AS (SELECT vec_id, ev, ${c}CAST(list_indexof(dl, list_min(dl)) - 1 AS BIGINT) AS cluster FROM dst
+       |        WHERE (list_indexof(dl, list_min(dl)) - 1) IN (${cells.mkString(", ")}))""".stripMargin
   }
 
   /** Twins generated from fitted-model constants captured at query run
@@ -775,40 +857,44 @@ object OracleSql {
            |ORDER BY n.query_id""".stripMargin
       }
     }
-    val annSweepEntries = OracleArtifacts.annSweep.toSeq.map { case (cents, cells5) =>
-      "ann_recall_sweep" -> {
-        // The centroid-assignment expression is enormous (10 centroids ×
-        // 64-dim distance chains) — MATERIALIZE it once and rank probed
-        // cells by their position m in the ranked cell list, so each
-        // nProbe=n leg is a cheap `m <= n` filter over the same rows
-        // (CTE inlining would otherwise replicate the giant expression
-        // per leg and blow the planner's memory).
-        val mCase = cells5.zipWithIndex
-          .map { case (cell, i) => s"WHEN $cell THEN ${i + 1}" }
-          .mkString("CASE cluster ", " ", " ELSE NULL END")
-        val probeLegs = (1 to 5).map { n =>
-          s"SELECT $n AS n_probe, vec_id FROM sc WHERE m <= $n ORDER BY cs DESC, vec_id LIMIT 10"
-        }.map(l => s"($l)").mkString(" UNION ALL ")
-        s"""WITH ${annCtes(cents)},
-           |sc AS MATERIALIZED (SELECT vec_id, $mCase AS m, ${cosine("ev", "qv")} AS cs FROM asg, q),
-           |ex AS MATERIALIZED (SELECT vec_id FROM c, q ORDER BY ${cosine("ev", "qv")} DESC, vec_id LIMIT 10),
-           |probes AS ($probeLegs),
-           |hits AS (SELECT n_probe, count(*) AS h FROM probes JOIN ex USING (vec_id) GROUP BY 1)
-           |SELECT CAST(10 AS BIGINT) AS top_k, CAST(n.n AS BIGINT) AS n_probe,
-           |       ROUND(CAST(COALESCE(h, 0) AS DOUBLE) / 10.0, 4) AS recall
-           |FROM (SELECT unnest([1, 2, 3, 4, 5]) AS n) n
-           |LEFT JOIN hits ON hits.n_probe = n.n ORDER BY n_probe""".stripMargin
-      }
-    }
-    val annEntries = OracleArtifacts.ann.toSeq.flatMap { case (cents, cells) =>
+    // every twin of the full-corpus IVF fit reads its one holder:
+    // centroids + query vector 0's 5 ranked cells (the single-query
+    // keys probe the first 3; the batch twins rank cells in SQL)
+    val ivf = OracleArtifacts.ivf.toSeq
+    val ivfSingleEntries = ivf.flatMap { case (cents, ranked) =>
+      val cells = ranked.take(3)
       val ctes = annCtes(cents)
       val inCells = cells.mkString(", ")
+      // The centroid-assignment expression is enormous (10 centroids ×
+      // 64-dim distance chains) — MATERIALIZE it once and rank probed
+      // cells by their position m in the ranked cell list, so each
+      // nProbe=n leg is a cheap `m <= n` filter over the same rows
+      // (CTE inlining would otherwise replicate the giant expression
+      // per leg and blow the planner's memory).
+      val mCase = ranked.zipWithIndex
+        .map { case (cell, i) => s"WHEN $cell THEN ${i + 1}" }
+        .mkString("CASE cluster ", " ", " ELSE NULL END")
+      val probeLegs = (1 to 5).map { n =>
+        s"SELECT $n AS n_probe, vec_id FROM sc WHERE m <= $n ORDER BY cs DESC, vec_id LIMIT 10"
+      }.map(l => s"($l)").mkString(" UNION ALL ")
+      // ann_deleted and ann_compacted rank the same live corpus:
+      // compaction rewrites the layout, it must not move a ranked row
+      val live = singleProbeSql(cents, cells, " AND vec_id % 10 <> 3")
       Seq(
-        "ann_probe" ->
-          s"""WITH $ctes
-             |SELECT vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim
-             |FROM asg, q WHERE cluster IN ($inCells)
-             |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+        "ann_recall_sweep" ->
+          s"""WITH $ctes,
+             |sc AS MATERIALIZED (SELECT vec_id, $mCase AS m, ${cosine("ev", "qv")} AS cs FROM asg, q),
+             |ex AS MATERIALIZED (SELECT vec_id FROM c, q ORDER BY ${cosine("ev", "qv")} DESC, vec_id LIMIT 10),
+             |probes AS ($probeLegs),
+             |hits AS (SELECT n_probe, count(*) AS h FROM probes JOIN ex USING (vec_id) GROUP BY 1)
+             |SELECT CAST(10 AS BIGINT) AS top_k, CAST(n.n AS BIGINT) AS n_probe,
+             |       ROUND(CAST(COALESCE(h, 0) AS DOUBLE) / 10.0, 4) AS recall
+             |FROM (SELECT unnest([1, 2, 3, 4, 5]) AS n) n
+             |LEFT JOIN hits ON hits.n_probe = n.n ORDER BY n_probe""".stripMargin,
+        "ann_probe" -> singleProbeSql(cents, cells),
+        "ann_deleted" -> live,
+        "ann_compacted" -> live,
+        "ann_filtered" -> singleProbeSql(cents, cells, labeled = true),
         "ann_stats" ->
           // Twin of Ann.stats: cell population re-derived from raw
           // embeddings + fitted centroid literals.
@@ -846,36 +932,195 @@ object OracleSql {
              |          ORDER BY ${cosine("ev", "qv")} DESC, vec_id LIMIT 10),
              |ex AS (SELECT vec_id FROM c, q ORDER BY ${cosine("ev", "qv")} DESC, vec_id LIMIT 10)
              |SELECT CAST(10 AS BIGINT) AS top_k, CAST(${cells.size} AS BIGINT) AS n_probe,
-             |       ROUND(CAST((SELECT count(*) FROM ex JOIN probe USING (vec_id)) AS DOUBLE) / 10.0, 4) AS recall""".stripMargin
-      )
+             |       ROUND(CAST((SELECT count(*) FROM ex JOIN probe USING (vec_id)) AS DOUBLE) / 10.0, 4) AS recall""".stripMargin,
+        "ivfsq_probe" ->
+          // Twin of Queries.ivfsqProbe: IVF assignment (fitted-centroid
+          // literals) filters to the probed cells; the SQ8 leg is pure
+          // element-wise arithmetic (scale = maxabs/127, floor(x/s + 0.5)
+          // codes — see sq_probe); approx prune to 40 then exact re-rank.
+          s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
+             |${probedAsgCtes(cents, cells)},
+             |z AS (SELECT vec_id, ev, cluster, list_max(list_transform(ev, x -> abs(x))) / 127.0 AS s FROM asg),
+             |cd AS (SELECT vec_id, ev, cluster,
+             |        CASE WHEN s > 0 THEN list_transform(ev, x -> CAST(floor(x / s + 0.5) AS DOUBLE))
+             |             ELSE list_transform(ev, x -> 0.0) END AS cv FROM z),
+             |ap AS (SELECT vec_id, cluster, ev, ${cosine("cv", "qv")} AS approx_sim
+             |       FROM cd, q ORDER BY approx_sim DESC, vec_id LIMIT 40)
+             |SELECT vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim
+             |FROM ap, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+        "ivfbq_probe" ->
+          // Twin of Queries.ivfbqProbe: IVF assignment (fitted-centroid
+          // literals) filters to the probed cells; the BQ leg is the
+          // per-dimension sign-disagreement count (see bq_probe — no
+          // packing needed in SQL); hamming cut to 40, exact re-rank.
+          s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
+             |${probedAsgCtes(cents, cells)},
+             |h AS (SELECT a.vec_id, a.ev, a.cluster,
+             |       CAST(len(list_filter(generate_series(1, 64),
+             |                            i -> (a.ev[i] > 0) <> (qv[i] > 0))) AS BIGINT) AS hamming
+             |      FROM asg a, q),
+             |cand AS (SELECT * FROM h ORDER BY hamming, vec_id LIMIT 40)
+             |SELECT vec_id, cluster, hamming, ${cosine("ev", "qv")} AS cos_sim
+             |FROM cand, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+        "ivfmrl_probe" ->
+          // Twin of Queries.ivfmrlProbe: IVF assignment (fitted-centroid
+          // literals) filters to the probed cells; the MRL leg is a plain
+          // 1-based inclusive list slice (== Spark's slice(col, 1, 16) ==
+          // the stored prefix column, which is exactly the leading float
+          // elements); prefix-cosine prune to 40, exact full-dim re-rank.
+          s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
+             |${probedAsgCtes(cents, cells)},
+             |ap AS (SELECT vec_id, cluster, ev, ${cosine("ev[1:16]", "qv[1:16]")} AS approx_sim
+             |       FROM asg, q ORDER BY approx_sim DESC, vec_id LIMIT 40)
+             |SELECT vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim
+             |FROM ap, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+        "ivfsq_residual" -> {
+          // Twin of Queries.ivfsqResidual: IVF assignment (centroid
+          // literals) → per-row centroid pick (CASE over cluster) →
+          // residual = nv − centroid → static SQ8 arithmetic over the
+          // residual → reconstruct centroid + code·scale → cosine prune →
+          // exact re-rank. A zero residual (s = 0) reconstructs to the
+          // centroid itself, matching Spark's zero-codes branch.
+          val dim = cents.head.length
+          s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
+             |${probedAsgCtes(cents, cells, carryNv = true)},
+             |ct AS (SELECT vec_id, ev, nv, cluster, ${centCase(cents)} AS cent FROM asg),
+             |rs AS (SELECT vec_id, ev, cluster, cent,
+             |        list_transform(generate_series(1, $dim), i -> nv[i] - cent[i]) AS res FROM ct),
+             |z AS (SELECT vec_id, ev, cluster, cent, res,
+             |       list_max(list_transform(res, x -> abs(x))) / 127.0 AS s FROM rs),
+             |rc AS (SELECT vec_id, ev, cluster,
+             |        CASE WHEN s > 0
+             |          THEN list_transform(generate_series(1, $dim), i -> cent[i] + CAST(floor(res[i] / s + 0.5) AS DOUBLE) * s)
+             |          ELSE cent END AS recon FROM z),
+             |ap AS (SELECT vec_id, cluster, ev, ${cosine("recon", "qv")} AS approx_sim
+             |       FROM rc, q ORDER BY approx_sim DESC, vec_id LIMIT 40)
+             |SELECT vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim
+             |FROM ap, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
+        },
+        "cluster_topics" ->
+          // Twin of Queries.clusterTopics: fitted-centroid assignment over
+          // embeddings (same CTE chain as ann_probe), doc join by id, token
+          // counts, per-cluster top-5 window with (cnt DESC, term) order.
+          s"""WITH $ctes,
+             |sz AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_docs FROM asg GROUP BY 1),
+             |tok AS (SELECT d.doc_id, a.cluster, unnest(${toks("d.text")}) AS term
+             |        FROM documents d JOIN asg a ON d.doc_id = a.vec_id),
+             |tc AS (SELECT cluster, term, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY 1, 2),
+             |rk AS (SELECT cluster, term, cnt,
+             |       CAST(row_number() OVER (PARTITION BY cluster ORDER BY cnt DESC, term) AS BIGINT) AS rank
+             |       FROM tc)
+             |SELECT rk.cluster, sz.n_docs, rk.rank, rk.term, rk.cnt
+             |FROM rk JOIN sz ON rk.cluster = sz.cluster
+             |WHERE rk.rank <= 5 ORDER BY rk.cluster, rk.rank""".stripMargin)
+    }
+    // The batch twins rank each query's cells in SQL (batchCellCtes),
+    // assign the corpus (batchAsgCtes) and join on cluster — the twin of
+    // the batch Ann.probe end to end, composed with each family's leg.
+    val ivfBatchEntries = ivf.flatMap { case (cents, _) =>
+      val batchSql =
+        s"""WITH ${batchCellCtes("bq", "qnv", cents)},
+           |${batchAsgCtes("b", "nv2", cents)},
+           |sc AS (SELECT bqc.query_id, basg.vec_id, basg.cluster, ${cosine("ev", "qv")} AS cos_sim
+           |       FROM basg JOIN bqc USING (cluster)),
+           |r AS (SELECT query_id, vec_id, cluster, cos_sim,
+           |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
+           |      FROM sc)
+           |SELECT query_id, vec_id, cluster, cos_sim, rk FROM r WHERE rk <= 5
+           |ORDER BY query_id, rk""".stripMargin
+      val rot = graft.operators.Bq.rotationMatrix(64, seed = 7L)
+      val rlit = rot.map(r => "[" + r.map(dlit).mkString(", ") + "]")
+        .mkString("[", ",\n          ", "]")
+      Seq(
+        // the persisted-layout probe is the same computation served from
+        // disk — one twin, two keys
+        "ann_batch_probe" -> batchSql,
+        "ann_batch_persisted" -> batchSql,
+        "ann_batch_filtered" ->
+          // ann_filtered's metadata predicate applied BEFORE the
+          // per-query ranking window — prefilter semantics per query (a
+          // postfilter twin would return fewer than k rows per query).
+          s"""WITH ${batchCellCtes("fbq", "fqnv", cents)},
+             |${batchAsgCtes("fb", "fnv", cents, label = true)},
+             |fsc AS (SELECT fbqc.query_id, fbasg.vec_id, fbasg.cluster, fbasg.label, ${cosine("ev", "qv")} AS cos_sim
+             |       FROM fbasg JOIN fbqc USING (cluster) WHERE label IN (2, 5)),
+             |fr AS (SELECT query_id, vec_id, cluster, label, cos_sim,
+             |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
+             |      FROM fsc)
+             |SELECT query_id, vec_id, cluster, label, cos_sim, rk FROM fr WHERE rk <= 5
+             |ORDER BY query_id, rk""".stripMargin,
+        "ann_batch_sq" ->
+          // the static SQ8 arithmetic (as ivfsq_probe) — approximate
+          // cosine on the int codes, per-query refine prune to 20, exact
+          // re-rank to 5.
+          s"""WITH ${batchCellCtes("sbq", "sqnv", cents)},
+             |${batchAsgCtes("sb", "snv", cents)},
+             |sbz AS (SELECT vec_id, ev, cluster, list_max(list_transform(ev, x -> abs(x))) / 127.0 AS s FROM sbasg),
+             |sbcd AS (SELECT vec_id, ev, cluster,
+             |        CASE WHEN s > 0 THEN list_transform(ev, x -> CAST(floor(x / s + 0.5) AS DOUBLE))
+             |             ELSE list_transform(ev, x -> 0.0) END AS cv FROM sbz),
+             |sbap AS (SELECT query_id, vec_id, cluster, ev, qv, ${cosine("cv", "qv")} AS approx_sim
+             |        FROM sbcd JOIN sbqc USING (cluster)),
+             |sbref AS (SELECT query_id, vec_id, cluster, ev, qv, approx_sim FROM (
+             |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY approx_sim DESC, vec_id) AS prn
+             |        FROM sbap) WHERE prn <= 20),
+             |sbfin AS (SELECT query_id, vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim FROM sbref),
+             |sbr AS (SELECT query_id, vec_id, cluster, approx_sim, cos_sim,
+             |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
+             |      FROM sbfin)
+             |SELECT query_id, vec_id, cluster, approx_sim, cos_sim, rk FROM sbr WHERE rk <= 5
+             |ORDER BY query_id, rk""".stripMargin,
+        "ann_batch_mrl" ->
+          // the MRL prefix leg (as ivfmrl_probe) — the stored prefix is
+          // exact leading floats, so approx_sim is a plain [1:16] slice
+          // cosine; per-query refine prune to 20, exact full-dim re-rank.
+          s"""WITH ${batchCellCtes("mbq", "mqnv", cents)},
+             |${batchAsgCtes("mb", "mnv", cents)},
+             |mbap AS (SELECT query_id, vec_id, cluster, ev, qv, ${cosine("ev[1:16]", "qv[1:16]")} AS approx_sim
+             |        FROM mbasg JOIN mbqc USING (cluster)),
+             |mbref AS (SELECT query_id, vec_id, cluster, ev, qv, approx_sim FROM (
+             |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY approx_sim DESC, vec_id) AS prn
+             |        FROM mbap) WHERE prn <= 20),
+             |mbfin AS (SELECT query_id, vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim FROM mbref),
+             |mbr AS (SELECT query_id, vec_id, cluster, approx_sim, cos_sim,
+             |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
+             |      FROM mbfin)
+             |SELECT query_id, vec_id, cluster, approx_sim, cos_sim, rk FROM mbr WHERE rk <= 5
+             |ORDER BY query_id, rk""".stripMargin,
+        "ann_batch_bq_rotated" ->
+          // bq_rotated's rotated-sign hamming (the seeded rotation is a
+          // pure function of (dim=64, seed=7), regenerated and inlined;
+          // each rotated element is one list_dot_product — the same
+          // sequential accumulation as the MatVec codegen loop), per-query
+          // hamming prune to 20, exact re-rank on the ORIGINAL vectors to 5.
+          s"""WITH rt AS (SELECT $rlit AS rm),
+             |${batchCellCtes("brq", "brqnv", cents)},
+             |brqr AS (SELECT query_id, qv, cluster,
+             |        list_transform(generate_series(1, 64), i -> list_dot_product(rm[i], qv)) AS rq FROM brqc, rt),
+             |${batchAsgCtes("br", "brnv", cents)},
+             |brrot AS (SELECT vec_id, ev, cluster,
+             |        list_transform(generate_series(1, 64), i -> list_dot_product(rm[i], ev)) AS re FROM brasg, rt),
+             |brh AS (SELECT query_id, vec_id, cluster, ev, qv,
+             |       CAST(len(list_filter(generate_series(1, 64),
+             |                            i -> (re[i] > 0) <> (rq[i] > 0))) AS BIGINT) AS hamming
+             |       FROM brrot JOIN brqr USING (cluster)),
+             |brcand AS (SELECT query_id, vec_id, cluster, ev, qv, hamming FROM (
+             |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, vec_id) AS prn
+             |        FROM brh) WHERE prn <= 20),
+             |brfin AS (SELECT query_id, vec_id, cluster, hamming, ${cosine("ev", "qv")} AS cos_sim FROM brcand),
+             |brr AS (SELECT query_id, vec_id, cluster, hamming, cos_sim,
+             |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
+             |      FROM brfin)
+             |SELECT query_id, vec_id, cluster, hamming, cos_sim, rk FROM brr WHERE rk <= 5
+             |ORDER BY query_id, rk""".stripMargin)
     }
     val annIncrEntries = OracleArtifacts.annIncremental.toSeq.flatMap { case (cents, cells) =>
-      val sql =
-        s"""WITH ${annCtes(cents)}
-           |SELECT vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim
-           |FROM asg, q WHERE cluster IN (${cells.mkString(", ")})
-           |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
+      val sql = singleProbeSql(cents, cells)
       // the stream-fed append is the same scenario landed by
       // micro-batches — one twin, two keys (like ann_batch_persisted)
       Seq("ann_incremental" -> sql, "stream_ann" -> sql)
     }
-    val annDeletedEntries = OracleArtifacts.annDeleted.toSeq.map { case (cents, cells) =>
-      "ann_deleted" ->
-        s"""WITH ${annCtes(cents)}
-           |SELECT vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim
-           |FROM asg, q WHERE cluster IN (${cells.mkString(", ")}) AND vec_id % 10 <> 3
-           |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-    }
-    val annCompactedEntries = OracleArtifacts.annCompacted.toSeq.map { case (cents, cells) =>
-      // same live corpus as ann_deleted: compaction rewrites the
-      // layout, it must not move a single ranked row
-      "ann_compacted" ->
-        s"""WITH ${annCtes(cents)}
-           |SELECT vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim
-           |FROM asg, q WHERE cluster IN (${cells.mkString(", ")}) AND vec_id % 10 <> 3
-           |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-    }
-    val pqEntries = OracleArtifacts.pq.toSeq.map { case (model, table) =>
+    val pqEntries = OracleArtifacts.pq.toSeq.flatMap { case (model, table) =>
       val sub = model.dim / model.m
       val dlCols = (0 until model.m).map { j =>
         val lists = model.codebooks(j).map(c => distChain("ev", j * sub, c)).mkString(", ")
@@ -886,308 +1131,137 @@ object OracleSql {
       val adcExpr = (0 until model.m).map { j =>
         "[" + table(j).map(dlit).mkString(", ") + s"][k$j + 1]"
       }.mkString(" + ")
-      "pq_probe" ->
+      ("pq_probe" ->
         s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
            |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
            |dst AS (SELECT vec_id, ev, $dlCols FROM c),
            |cd AS (SELECT vec_id, ev, $codeCols FROM dst),
            |cand AS (SELECT vec_id, ev FROM cd ORDER BY $adcExpr ASC, vec_id LIMIT 100)
            |SELECT vec_id, ${cosine("ev", "qv")} AS cos_sim FROM cand, q
-           |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-    }
-    val annBatchEntries = OracleArtifacts.annBatch.toSeq.flatMap { cents =>
-      // Per-QUERY cell ranking in SQL (parallel unnest zips cluster ids
-      // with the inlined per-centroid distance list; row_number picks
-      // each query's 3 nearest cells), then the corpus assignment chain
-      // joins on cluster — the twin of the in-memory batch Ann.probe end to end.
-      val qDists = cents.map(c => distChain("qnv", 0, c)).mkString(", ")
-      val cDists = cents.map(c => distChain("nv2", 0, c)).mkString(", ")
-      val batchSql =
-        s"""WITH bq AS (SELECT vec_id AS query_id, ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id < 8),
-           |bqn AS (SELECT query_id, qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS qnv FROM bq),
-           |bqd AS (SELECT query_id, qv, [$qDists] AS dl FROM bqn),
-           |bqc0 AS (SELECT query_id, qv, unnest(generate_series(0, ${cents.length - 1})) AS cluster, unnest(dl) AS d FROM bqd),
-           |bqc AS (SELECT query_id, qv, cluster FROM (
-           |        SELECT query_id, qv, cluster, row_number() OVER (PARTITION BY query_id ORDER BY d, cluster) AS rn
-           |        FROM bqc0) WHERE rn <= 3),
-           |bc AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings),
-           |bnr AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv2 FROM bc),
-           |bdst AS (SELECT vec_id, ev, [$cDists] AS cdl FROM bnr),
-           |basg AS (SELECT vec_id, ev, CAST(list_indexof(cdl, list_min(cdl)) - 1 AS BIGINT) AS cluster FROM bdst),
-           |sc AS (SELECT bqc.query_id, basg.vec_id, basg.cluster, ${cosine("ev", "qv")} AS cos_sim
-           |       FROM basg JOIN bqc USING (cluster)),
-           |r AS (SELECT query_id, vec_id, cluster, cos_sim,
-           |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-           |      FROM sc)
-           |SELECT query_id, vec_id, cluster, cos_sim, rk FROM r WHERE rk <= 5
-           |ORDER BY query_id, rk""".stripMargin
-      // the persisted-layout probe is the same computation served from
-      // disk — one twin, two keys
-      Seq("ann_batch_probe" -> batchSql, "ann_batch_persisted" -> batchSql)
-    }
-    val annBatchFilteredEntries = OracleArtifacts.annBatchFiltered.toSeq.map { cents =>
-      // Twin of Queries.annBatchFiltered: the ann_batch cell-ranking
-      // chain with ann_filtered's metadata predicate applied BEFORE the
-      // per-query ranking window — prefilter semantics per query (a
-      // postfilter twin would return fewer than k rows per query).
-      val qDists = cents.map(c => distChain("fqnv", 0, c)).mkString(", ")
-      val cDists = cents.map(c => distChain("fnv", 0, c)).mkString(", ")
-      "ann_batch_filtered" ->
-        s"""WITH fbq AS (SELECT vec_id AS query_id, ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id < 8),
-           |fbqn AS (SELECT query_id, qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS fqnv FROM fbq),
-           |fbqd AS (SELECT query_id, qv, [$qDists] AS dl FROM fbqn),
-           |fbqc0 AS (SELECT query_id, qv, unnest(generate_series(0, ${cents.length - 1})) AS cluster, unnest(dl) AS d FROM fbqd),
-           |fbqc AS (SELECT query_id, qv, cluster FROM (
-           |        SELECT query_id, qv, cluster, row_number() OVER (PARTITION BY query_id ORDER BY d, cluster) AS rn
-           |        FROM fbqc0) WHERE rn <= 3),
-           |fbc AS (SELECT vec_id, label, ${dvec("embedding")} AS ev FROM embeddings),
-           |fbnr AS (SELECT vec_id, label, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS fnv FROM fbc),
-           |fbdst AS (SELECT vec_id, label, ev, [$cDists] AS cdl FROM fbnr),
-           |fbasg AS (SELECT vec_id, label, ev, CAST(list_indexof(cdl, list_min(cdl)) - 1 AS BIGINT) AS cluster FROM fbdst),
-           |fsc AS (SELECT fbqc.query_id, fbasg.vec_id, fbasg.cluster, fbasg.label, ${cosine("ev", "qv")} AS cos_sim
-           |       FROM fbasg JOIN fbqc USING (cluster) WHERE label IN (2, 5)),
-           |fr AS (SELECT query_id, vec_id, cluster, label, cos_sim,
-           |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-           |      FROM fsc)
-           |SELECT query_id, vec_id, cluster, label, cos_sim, rk FROM fr WHERE rk <= 5
-           |ORDER BY query_id, rk""".stripMargin
-    }
-    val annFilteredEntries = OracleArtifacts.annFiltered.toSeq.map { case (cents, cells) =>
-      // Twin of Queries.annFiltered: same assignment chain as ann_probe,
-      // with the metadata prefilter applied alongside the cell filter —
-      // BEFORE the LIMIT, which is exactly the prefilter semantics the
-      // hash check pins (a postfilter twin would return fewer rows).
-      "ann_filtered" ->
-        s"""WITH ${annCtes(cents)},
-           |lbl AS (SELECT vec_id, label FROM embeddings)
-           |SELECT vec_id, cluster, label, ${cosine("ev", "qv")} AS cos_sim
-           |FROM asg JOIN lbl USING (vec_id), q
-           |WHERE cluster IN (${cells.mkString(", ")}) AND label IN (2, 5)
-           |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-    }
-    val annBatchSqEntries = OracleArtifacts.annBatchSq.toSeq.map { cents =>
-      // Twin of Queries.annBatchSq: the batch per-query cell ranking
-      // (as ann_batch_probe) composed with the static SQ8 arithmetic
-      // (as ivfsq_probe) — approximate cosine on the int codes, per-
-      // query refine prune to 20, exact re-rank to 5.
-      val qDists = cents.map(c => distChain("sqnv", 0, c)).mkString(", ")
-      val cDists = cents.map(c => distChain("snv", 0, c)).mkString(", ")
-      "ann_batch_sq" ->
-        s"""WITH sbq AS (SELECT vec_id AS query_id, ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id < 8),
-           |sbqn AS (SELECT query_id, qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS sqnv FROM sbq),
-           |sbqd AS (SELECT query_id, qv, [$qDists] AS dl FROM sbqn),
-           |sbqc0 AS (SELECT query_id, qv, unnest(generate_series(0, ${cents.length - 1})) AS cluster, unnest(dl) AS d FROM sbqd),
-           |sbqc AS (SELECT query_id, qv, cluster FROM (
-           |        SELECT query_id, qv, cluster, row_number() OVER (PARTITION BY query_id ORDER BY d, cluster) AS rn
-           |        FROM sbqc0) WHERE rn <= 3),
-           |sbc AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings),
-           |sbnr AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS snv FROM sbc),
-           |sbdst AS (SELECT vec_id, ev, [$cDists] AS cdl FROM sbnr),
-           |sbasg AS (SELECT vec_id, ev, CAST(list_indexof(cdl, list_min(cdl)) - 1 AS BIGINT) AS cluster FROM sbdst),
-           |sbz AS (SELECT vec_id, ev, cluster, list_max(list_transform(ev, x -> abs(x))) / 127.0 AS s FROM sbasg),
-           |sbcd AS (SELECT vec_id, ev, cluster,
-           |        CASE WHEN s > 0 THEN list_transform(ev, x -> CAST(floor(x / s + 0.5) AS DOUBLE))
-           |             ELSE list_transform(ev, x -> 0.0) END AS cv FROM sbz),
-           |sbap AS (SELECT query_id, vec_id, cluster, ev, qv, ${cosine("cv", "qv")} AS approx_sim
-           |        FROM sbcd JOIN sbqc USING (cluster)),
-           |sbref AS (SELECT query_id, vec_id, cluster, ev, qv, approx_sim FROM (
-           |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY approx_sim DESC, vec_id) AS prn
-           |        FROM sbap) WHERE prn <= 20),
-           |sbfin AS (SELECT query_id, vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim FROM sbref),
-           |sbr AS (SELECT query_id, vec_id, cluster, approx_sim, cos_sim,
-           |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-           |      FROM sbfin)
-           |SELECT query_id, vec_id, cluster, approx_sim, cos_sim, rk FROM sbr WHERE rk <= 5
-           |ORDER BY query_id, rk""".stripMargin
-    }
-    val annBatchMrlEntries = OracleArtifacts.annBatchMrl.toSeq.map { cents =>
-      // Twin of Queries.annBatchMrl: the batch per-query cell ranking
-      // (as ann_batch_probe) composed with the MRL prefix leg (as
-      // ivfmrl_probe) — the stored prefix is exact leading floats, so
-      // approx_sim is a plain [1:16] slice cosine; per-query refine
-      // prune to 20, exact full-dim re-rank to 5.
-      val qDists = cents.map(c => distChain("mqnv", 0, c)).mkString(", ")
-      val cDists = cents.map(c => distChain("mnv", 0, c)).mkString(", ")
-      "ann_batch_mrl" ->
-        s"""WITH mbq AS (SELECT vec_id AS query_id, ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id < 8),
-           |mbqn AS (SELECT query_id, qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS mqnv FROM mbq),
-           |mbqd AS (SELECT query_id, qv, [$qDists] AS dl FROM mbqn),
-           |mbqc0 AS (SELECT query_id, qv, unnest(generate_series(0, ${cents.length - 1})) AS cluster, unnest(dl) AS d FROM mbqd),
-           |mbqc AS (SELECT query_id, qv, cluster FROM (
-           |        SELECT query_id, qv, cluster, row_number() OVER (PARTITION BY query_id ORDER BY d, cluster) AS rn
-           |        FROM mbqc0) WHERE rn <= 3),
-           |mbc AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings),
-           |mbnr AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS mnv FROM mbc),
-           |mbdst AS (SELECT vec_id, ev, [$cDists] AS cdl FROM mbnr),
-           |mbasg AS (SELECT vec_id, ev, CAST(list_indexof(cdl, list_min(cdl)) - 1 AS BIGINT) AS cluster FROM mbdst),
-           |mbap AS (SELECT query_id, vec_id, cluster, ev, qv, ${cosine("ev[1:16]", "qv[1:16]")} AS approx_sim
-           |        FROM mbasg JOIN mbqc USING (cluster)),
-           |mbref AS (SELECT query_id, vec_id, cluster, ev, qv, approx_sim FROM (
-           |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY approx_sim DESC, vec_id) AS prn
-           |        FROM mbap) WHERE prn <= 20),
-           |mbfin AS (SELECT query_id, vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim FROM mbref),
-           |mbr AS (SELECT query_id, vec_id, cluster, approx_sim, cos_sim,
-           |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-           |      FROM mbfin)
-           |SELECT query_id, vec_id, cluster, approx_sim, cos_sim, rk FROM mbr WHERE rk <= 5
-           |ORDER BY query_id, rk""".stripMargin
-    }
-    val annBatchPqEntries = OracleArtifacts.annBatchPq.toSeq.map { case (cents, model) =>
-      // Twin of Queries.annBatchPq: per-query cell ranking (as
-      // ann_batch_probe) + the PQ encode chain (as ivfpq_probe) + the
-      // batch ADC — each query's distance table is the list of
-      // distChains from ITS subvectors to the codebook literals,
-      // indexed by the corpus row's code. Same left-to-right term
-      // order as the Spark codegen chain, so the doubles match bit
-      // for bit and the candidate cut falls identically.
-      val sub = model.dim / model.m
-      val qDists = cents.map(c => distChain("pbqnv", 0, c)).mkString(", ")
-      val cDists = cents.map(c => distChain("pbnv", 0, c)).mkString(", ")
-      val encCols = (0 until model.m).map { j =>
-        val lists = model.codebooks(j).map(c => distChain("ev", j * sub, c)).mkString(", ")
-        s"list_indexof([$lists], list_min([$lists])) - 1 AS pbk$j"
-      }.mkString(",\n        ")
-      val adcExpr = (0 until model.m).map { j =>
-        val lists = model.codebooks(j).map(c => distChain("qv", j * sub, c)).mkString(", ")
-        s"[$lists][pbk$j + 1]"
-      }.mkString(" + ")
-      "ann_batch_pq" ->
-        s"""WITH pbq AS (SELECT vec_id AS query_id, ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id < 8),
-           |pbqn AS (SELECT query_id, qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS pbqnv FROM pbq),
-           |pbqd AS (SELECT query_id, qv, [$qDists] AS dl FROM pbqn),
-           |pbqc0 AS (SELECT query_id, qv, unnest(generate_series(0, ${cents.length - 1})) AS cluster, unnest(dl) AS d FROM pbqd),
-           |pbqc AS (SELECT query_id, qv, cluster FROM (
-           |        SELECT query_id, qv, cluster, row_number() OVER (PARTITION BY query_id ORDER BY d, cluster) AS rn
-           |        FROM pbqc0) WHERE rn <= 3),
-           |pbc AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings),
-           |pbnr AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS pbnv FROM pbc),
-           |pbdst AS (SELECT vec_id, ev, [$cDists] AS cdl FROM pbnr),
-           |pbasg AS (SELECT vec_id, ev, CAST(list_indexof(cdl, list_min(cdl)) - 1 AS BIGINT) AS cluster FROM pbdst),
-           |pbenc AS (SELECT vec_id, ev, cluster,
-           |        $encCols FROM pbasg),
-           |pbj AS (SELECT query_id, vec_id, cluster, ev, qv, $adcExpr AS adc
-           |        FROM pbenc JOIN pbqc USING (cluster)),
-           |pbcand AS (SELECT query_id, vec_id, cluster, ev, qv FROM (
-           |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc, vec_id) AS prn
-           |        FROM pbj) WHERE prn <= ${5 * 10}),
-           |pbfin AS (SELECT query_id, vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim FROM pbcand),
-           |pbr AS (SELECT query_id, vec_id, cluster, cos_sim,
-           |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-           |      FROM pbfin)
-           |SELECT query_id, vec_id, cluster, cos_sim, rk FROM pbr WHERE rk <= 5
-           |ORDER BY query_id, rk""".stripMargin
-    }
-    val annBatchPqrEntries = OracleArtifacts.annBatchPqr.toSeq.map { case (cents, model) =>
-      // Twin of Queries.annBatchPqr: ann_batch_pq's per-query cell
-      // ranking + ivfpq_residual's corpus-side residual encode, with the
-      // per-(query, cell) residual ADC derived IN SQL — the query's
-      // residual qrv = qnv − centroid[cluster] (centroid literals, CASE
-      // over the probed cluster), each subspace's distance list is the
-      // distChain of qrv against the codebook literals, indexed by the
-      // corpus row's code. Same left-to-right accumulation as the Spark
-      // CentroidResidual + HOF-fold chain, so the doubles match bit for
-      // bit and both cuts fall identically.
-      val dim = cents.head.length
-      val sub = model.dim / model.m
-      val qDists = cents.map(c => distChain("prqnv", 0, c)).mkString(", ")
-      val cDists = cents.map(c => distChain("prnv", 0, c)).mkString(", ")
-      val centCase = "CASE cluster " + cents.zipWithIndex.map { case (c, j) =>
-        s"WHEN $j THEN [${c.map(dlit).mkString(", ")}]"
-      }.mkString(" ") + " END"
-      // at codes=256 the per-subspace distance lists are built by a
-      // list_transform LAMBDA over the codebook literal instead of 256
-      // unrolled distChains (a ~16k-term SQL string otherwise). The
-      // inner 8-term chain is the same left-associated accumulation as
-      // distChain / the Spark HOF fold, applied per element in list
-      // order — bit-identical doubles, compact SQL.
-      def cbLit(j: Int): String =
-        "[" + model.codebooks(j).map(c => "[" + c.map(dlit).mkString(", ") + "]").mkString(", ") + "]"
-      def distLambda(vec: String, j: Int): String = {
-        val terms = (0 until sub).map { i =>
-          s"($vec[${j * sub + i + 1}] - c[${i + 1}])*($vec[${j * sub + i + 1}] - c[${i + 1}])"
-        }.mkString(" + ")
-        s"list_transform(${cbLit(j)}, c -> $terms)"
+           |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin) +: ivf.flatMap { case (cents, ranked) =>
+        Seq(
+          "ivfpq_probe" -> {
+            // Composition of the two fitted-constant twins: IVF assignment
+            // (annCtes form, distinct names) filters to the probed cells,
+            // then the PQ ADC chain ranks and the exact cosine re-ranks.
+            val ivfDists = cents.map(c => distChain("pnv", 0, c)).mkString(",\n        ")
+            val pdlCols = (0 until model.m).map { j =>
+              val lists = model.codebooks(j).map(c => distChain("pev", j * sub, c)).mkString(", ")
+              s"[$lists] AS pdl$j"
+            }.mkString(",\n        ")
+            val pCodeCols = (0 until model.m)
+              .map(j => s"list_indexof(pdl$j, list_min(pdl$j)) - 1 AS pk$j").mkString(", ")
+            val pAdcExpr = (0 until model.m).map { j =>
+              "[" + table(j).map(dlit).mkString(", ") + s"][pk$j + 1]"
+            }.mkString(" + ")
+            s"""WITH qq AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
+               |pc AS (SELECT vec_id, ${dvec("embedding")} AS pev FROM embeddings WHERE vec_id <> 0),
+               |pnr AS (SELECT vec_id, pev, list_transform(pev, x -> x / sqrt(list_dot_product(pev, pev))) AS pnv FROM pc),
+               |pdst AS (SELECT vec_id, pev, [$ivfDists] AS pdl FROM pnr),
+               |pasg AS (SELECT vec_id, pev FROM pdst
+               |         WHERE (list_indexof(pdl, list_min(pdl)) - 1) IN (${ranked.take(3).mkString(", ")})),
+               |padc AS (SELECT vec_id, pev, $pdlCols FROM pasg),
+               |pcd AS (SELECT vec_id, pev, $pCodeCols FROM padc),
+               |pcand AS (SELECT vec_id, pev FROM pcd ORDER BY $pAdcExpr ASC, vec_id LIMIT 100)
+               |SELECT vec_id, ${cosine("pev", "qv")} AS cos_sim FROM pcand, qq
+               |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
+          },
+          "ann_batch_pq" -> {
+            // the batch cell chain + the PQ encode chain (as ivfpq_probe)
+            // + the batch ADC — each query's distance table is the list
+            // of distChains from ITS subvectors to the codebook literals,
+            // indexed by the corpus row's code. Same left-to-right term
+            // order as the Spark codegen chain, so the doubles match bit
+            // for bit and the candidate cut falls identically.
+            val encCols = (0 until model.m).map { j =>
+              val lists = model.codebooks(j).map(c => distChain("ev", j * sub, c)).mkString(", ")
+              s"list_indexof([$lists], list_min([$lists])) - 1 AS pbk$j"
+            }.mkString(",\n        ")
+            val bAdcExpr = (0 until model.m).map { j =>
+              val lists = model.codebooks(j).map(c => distChain("qv", j * sub, c)).mkString(", ")
+              s"[$lists][pbk$j + 1]"
+            }.mkString(" + ")
+            s"""WITH ${batchCellCtes("pbq", "pbqnv", cents)},
+               |${batchAsgCtes("pb", "pbnv", cents)},
+               |pbenc AS (SELECT vec_id, ev, cluster,
+               |        $encCols FROM pbasg),
+               |pbj AS (SELECT query_id, vec_id, cluster, ev, qv, $bAdcExpr AS adc
+               |        FROM pbenc JOIN pbqc USING (cluster)),
+               |pbcand AS (SELECT query_id, vec_id, cluster, ev, qv FROM (
+               |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc, vec_id) AS prn
+               |        FROM pbj) WHERE prn <= ${5 * 10}),
+               |pbfin AS (SELECT query_id, vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim FROM pbcand),
+               |pbr AS (SELECT query_id, vec_id, cluster, cos_sim,
+               |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
+               |      FROM pbfin)
+               |SELECT query_id, vec_id, cluster, cos_sim, rk FROM pbr WHERE rk <= 5
+               |ORDER BY query_id, rk""".stripMargin
+          })
       }
-      val encCols = (0 until model.m).map { j =>
-        s"list_indexof(${distLambda("rv", j)}, list_min(${distLambda("rv", j)})) - 1 AS prr$j"
-      }.mkString(",\n        ")
-      val adcExpr = (0 until model.m).map { j =>
-        s"${distLambda("qrv", j)}[prr$j + 1]"
-      }.mkString(" + ")
-      "ann_batch_pqr" ->
-        s"""WITH prq AS (SELECT vec_id AS query_id, ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id < 8),
-           |prqn AS (SELECT query_id, qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS prqnv FROM prq),
-           |prqd AS (SELECT query_id, qv, prqnv, [$qDists] AS dl FROM prqn),
-           |prqc0 AS (SELECT query_id, qv, prqnv, unnest(generate_series(0, ${cents.length - 1})) AS cluster, unnest(dl) AS d FROM prqd),
-           |prqc AS (SELECT query_id, qv, prqnv, cluster FROM (
-           |        SELECT query_id, qv, prqnv, cluster, row_number() OVER (PARTITION BY query_id ORDER BY d, cluster) AS rn
-           |        FROM prqc0) WHERE rn <= 3),
-           |prqr AS (SELECT query_id, qv, cluster,
-           |        list_transform(generate_series(1, $dim), i -> prqnv[i] - ($centCase)[i]) AS qrv FROM prqc),
-           |prc AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings),
-           |prnr AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS prnv FROM prc),
-           |prdst AS (SELECT vec_id, ev, prnv, [$cDists] AS cdl FROM prnr),
-           |prasg AS (SELECT vec_id, ev, prnv, CAST(list_indexof(cdl, list_min(cdl)) - 1 AS BIGINT) AS cluster FROM prdst),
-           |prct AS (SELECT vec_id, ev, prnv, cluster, $centCase AS cent FROM prasg),
-           |prrs AS (SELECT vec_id, ev, cluster,
-           |        list_transform(generate_series(1, $dim), i -> prnv[i] - cent[i]) AS rv FROM prct),
-           |prenc AS (SELECT vec_id, ev, cluster,
-           |        $encCols FROM prrs),
-           |prj AS (SELECT query_id, vec_id, cluster, ev, qv, $adcExpr AS adc
-           |        FROM prenc JOIN prqr USING (cluster)),
-           |prcand AS (SELECT query_id, vec_id, cluster, ev, qv FROM (
-           |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc, vec_id) AS prn
-           |        FROM prj) WHERE prn <= ${5 * 10}),
-           |prfin AS (SELECT query_id, vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim FROM prcand),
-           |prr AS (SELECT query_id, vec_id, cluster, cos_sim,
-           |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-           |      FROM prfin)
-           |SELECT query_id, vec_id, cluster, cos_sim, rk FROM prr WHERE rk <= 5
-           |ORDER BY query_id, rk""".stripMargin
     }
-    val annBatchBqrEntries = OracleArtifacts.annBatchBqr.toSeq.map { cents =>
-      // Twin of Queries.annBatchBqRotated: the batch per-query cell
-      // ranking + bq_rotated's rotated-sign hamming (the seeded rotation
-      // is a pure function of (dim=64, seed=7), regenerated and inlined;
-      // each rotated element is one list_dot_product — the same
-      // sequential accumulation as the MatVec codegen loop), per-query
-      // hamming prune to 20, exact re-rank on the ORIGINAL vectors to 5.
-      val rot = graft.operators.Bq.rotationMatrix(64, seed = 7L)
-      val rlit = rot.map(r => "[" + r.map(dlit).mkString(", ") + "]")
-        .mkString("[", ",\n          ", "]")
-      val qDists = cents.map(c => distChain("brqnv", 0, c)).mkString(", ")
-      val cDists = cents.map(c => distChain("brnv", 0, c)).mkString(", ")
-      "ann_batch_bq_rotated" ->
-        s"""WITH rt AS (SELECT $rlit AS rm),
-           |brq AS (SELECT vec_id AS query_id, ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id < 8),
-           |brqn AS (SELECT query_id, qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS brqnv FROM brq),
-           |brqd AS (SELECT query_id, qv, [$qDists] AS dl FROM brqn),
-           |brqc0 AS (SELECT query_id, qv, unnest(generate_series(0, ${cents.length - 1})) AS cluster, unnest(dl) AS d FROM brqd),
-           |brqc AS (SELECT query_id, qv, cluster FROM (
-           |        SELECT query_id, qv, cluster, row_number() OVER (PARTITION BY query_id ORDER BY d, cluster) AS rn
-           |        FROM brqc0) WHERE rn <= 3),
-           |brqr AS (SELECT query_id, qv, cluster,
-           |        list_transform(generate_series(1, 64), i -> list_dot_product(rm[i], qv)) AS rq FROM brqc, rt),
-           |brc AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings),
-           |brnr AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS brnv FROM brc),
-           |brdst AS (SELECT vec_id, ev, [$cDists] AS cdl FROM brnr),
-           |brasg AS (SELECT vec_id, ev, CAST(list_indexof(cdl, list_min(cdl)) - 1 AS BIGINT) AS cluster FROM brdst),
-           |brrot AS (SELECT vec_id, ev, cluster,
-           |        list_transform(generate_series(1, 64), i -> list_dot_product(rm[i], ev)) AS re FROM brasg, rt),
-           |brh AS (SELECT query_id, vec_id, cluster, ev, qv,
-           |       CAST(len(list_filter(generate_series(1, 64),
-           |                            i -> (re[i] > 0) <> (rq[i] > 0))) AS BIGINT) AS hamming
-           |       FROM brrot JOIN brqr USING (cluster)),
-           |brcand AS (SELECT query_id, vec_id, cluster, ev, qv, hamming FROM (
-           |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, vec_id) AS prn
-           |        FROM brh) WHERE prn <= 20),
-           |brfin AS (SELECT query_id, vec_id, cluster, hamming, ${cosine("ev", "qv")} AS cos_sim FROM brcand),
-           |brr AS (SELECT query_id, vec_id, cluster, hamming, cos_sim,
-           |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-           |      FROM brfin)
-           |SELECT query_id, vec_id, cluster, hamming, cos_sim, rk FROM brr WHERE rk <= 5
-           |ORDER BY query_id, rk""".stripMargin
-    }
+    // The residual twins: the query's residual qrv = qnv − centroid
+    // [cluster] per probed cell, the corpus's residual rv = nv −
+    // centroid[its cell], both residual-PQ legs from [[residualPq]]
+    // over the codebook literals. Same left-to-right accumulation as
+    // the Spark CentroidResidual + HOF-fold chain, so the doubles match
+    // bit for bit and both cuts fall identically.
+    val pqResEntries = for {
+      model <- OracleArtifacts.pqResidual.toSeq
+      (cents, ranked) <- ivf
+      entry <- {
+        val dim = cents.head.length
+        val cells = ranked.take(3).mkString(", ")
+        Seq(
+          "ivfpq_residual" -> {
+            // the 8×256 production point as the |Q| = 1 batch: IVF
+            // assignment filtered to the probed cells → residual encode
+            // → join the query's per-cell residual on cluster → ADC
+            // candidate cut → exact cosine re-rank.
+            val (encCols, adcExpr) = residualPq(model, "prk")
+            s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
+               |qn AS (SELECT qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS qnv FROM q),
+               |qc AS (SELECT qv, qnv, unnest([$cells]) AS cluster FROM qn),
+               |qr AS (SELECT qv, cluster,
+               |        list_transform(generate_series(1, $dim), i -> qnv[i] - (${centCase(cents)})[i]) AS qrv FROM qc),
+               |${probedAsgCtes(cents, ranked.take(3), carryNv = true)},
+               |ct AS (SELECT vec_id, ev, nv, cluster, ${centCase(cents)} AS cent FROM asg),
+               |rs AS (SELECT vec_id, ev, cluster,
+               |        list_transform(generate_series(1, $dim), i -> nv[i] - cent[i]) AS rv FROM ct),
+               |enc AS (SELECT vec_id, ev, cluster,
+               |        $encCols FROM rs),
+               |ad AS (SELECT vec_id, ev, $adcExpr AS adc FROM enc JOIN qr USING (cluster)),
+               |cand AS (SELECT vec_id, ev FROM ad ORDER BY adc ASC, vec_id LIMIT 100)
+               |SELECT vec_id, ${cosine("ev", "qv")} AS cos_sim FROM cand, q
+               |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
+          },
+          "ann_batch_pqr" -> {
+            // the batch cell chain + ivfpq_residual's corpus-side
+            // residual encode, with the per-(query, cell) residual ADC
+            // derived in SQL.
+            val (encCols, adcExpr) = residualPq(model, "prr")
+            s"""WITH ${batchCellCtes("prq", "prqnv", cents, carryNv = true)},
+               |prqr AS (SELECT query_id, qv, cluster,
+               |        list_transform(generate_series(1, $dim), i -> prqnv[i] - (${centCase(cents)})[i]) AS qrv FROM prqc),
+               |${batchAsgCtes("pr", "prnv", cents, carryNv = true)},
+               |prct AS (SELECT vec_id, ev, prnv, cluster, ${centCase(cents)} AS cent FROM prasg),
+               |prrs AS (SELECT vec_id, ev, cluster,
+               |        list_transform(generate_series(1, $dim), i -> prnv[i] - cent[i]) AS rv FROM prct),
+               |prenc AS (SELECT vec_id, ev, cluster,
+               |        $encCols FROM prrs),
+               |prj AS (SELECT query_id, vec_id, cluster, ev, qv, $adcExpr AS adc
+               |        FROM prenc JOIN prqr USING (cluster)),
+               |prcand AS (SELECT query_id, vec_id, cluster, ev, qv FROM (
+               |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc, vec_id) AS prn
+               |        FROM prj) WHERE prn <= ${5 * 10}),
+               |prfin AS (SELECT query_id, vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim FROM prcand),
+               |prr AS (SELECT query_id, vec_id, cluster, cos_sim,
+               |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
+               |      FROM prfin)
+               |SELECT query_id, vec_id, cluster, cos_sim, rk FROM prr WHERE rk <= 5
+               |ORDER BY query_id, rk""".stripMargin
+          })
+      }
+    } yield entry
     val annTwoLevelEntries = OracleArtifacts.annTwoLevel.toSeq.map { case (two, cells) =>
       // Twin of Queries.annTwoLevel: HIERARCHICAL assignment replayed
       // from the fitted hierarchy — nearest super-cell (first-min over
@@ -1224,199 +1298,17 @@ object OracleSql {
       // the full corpus (see [[twoLevelPqrTwinSql]]).
       "ann_two_level_pqr" -> twoLevelPqrTwinSql(two, model, "")
     }
-    val annTwoLevelLifeEntries = OracleArtifacts.annTwoLevelLife.toSeq.flatMap { case (two, model) =>
+    val twoLevelBaseEntries = OracleArtifacts.twoLevelBase.toSeq.flatMap { case (two, model) =>
       // The flagship LIFECYCLE pair shares ONE twin: hierarchy + model
-      // are the base-subset fits (from the artifacts), appended rows
-      // route through the same hierarchical assignment as a from-
-      // scratch write, and the tombstoned ids are excluded from the
-      // corpus — which is exactly what both the merge-on-read live
-      // probe and the compacted rewrite must serve.
-      val sql = twoLevelPqrTwinSql(two, model, " WHERE vec_id % 10 <> 3")
-      Seq("ann_two_level_live" -> sql, "ann_two_level_compacted" -> sql)
-    }
-    val annTwoLevelStreamEntries = OracleArtifacts.annTwoLevelStream.toSeq.map { case (two, model) =>
-      // stream_ann_2l: base-subset fits, base + streamed delta = the
-      // FULL corpus hierarchically assigned under those fits, no
-      // deletes — the lifecycle twin builder with no corpus predicate.
-      "stream_ann_2l" -> twoLevelPqrTwinSql(two, model, "")
-    }
-    val ivfpqEntries = OracleArtifacts.ivfpq.toSeq.map { case (cents, cells, model, table) =>
-      // Composition of the two fitted-constant twins: IVF assignment
-      // (annCtes form, distinct names) filters to the probed cells,
-      // then the PQ ADC chain ranks and the exact cosine re-ranks.
-      val sub = model.dim / model.m
-      val ivfDists = cents.map(c => distChain("pnv", 0, c)).mkString(",\n        ")
-      val dlCols = (0 until model.m).map { j =>
-        val lists = model.codebooks(j).map(c => distChain("pev", j * sub, c)).mkString(", ")
-        s"[$lists] AS pdl$j"
-      }.mkString(",\n        ")
-      val codeCols = (0 until model.m)
-        .map(j => s"list_indexof(pdl$j, list_min(pdl$j)) - 1 AS pk$j").mkString(", ")
-      val adcExpr = (0 until model.m).map { j =>
-        "[" + table(j).map(dlit).mkString(", ") + s"][pk$j + 1]"
-      }.mkString(" + ")
-      "ivfpq_probe" ->
-        s"""WITH qq AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-           |pc AS (SELECT vec_id, ${dvec("embedding")} AS pev FROM embeddings WHERE vec_id <> 0),
-           |pnr AS (SELECT vec_id, pev, list_transform(pev, x -> x / sqrt(list_dot_product(pev, pev))) AS pnv FROM pc),
-           |pdst AS (SELECT vec_id, pev, [$ivfDists] AS pdl FROM pnr),
-           |pasg AS (SELECT vec_id, pev FROM pdst
-           |         WHERE (list_indexof(pdl, list_min(pdl)) - 1) IN (${cells.mkString(", ")})),
-           |padc AS (SELECT vec_id, pev, $dlCols FROM pasg),
-           |pcd AS (SELECT vec_id, pev, $codeCols FROM padc),
-           |pcand AS (SELECT vec_id, pev FROM pcd ORDER BY $adcExpr ASC, vec_id LIMIT 100)
-           |SELECT vec_id, ${cosine("pev", "qv")} AS cos_sim FROM pcand, qq
-           |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-    }
-    val ivfsqEntries = OracleArtifacts.ivfsq.toSeq.map { case (cents, cells) =>
-      // Twin of Queries.ivfsqProbe: IVF assignment (fitted-centroid
-      // literals) filters to the probed cells; the SQ8 leg is pure
-      // element-wise arithmetic (scale = maxabs/127, floor(x/s + 0.5)
-      // codes — see sq_probe); approx prune to 40 then exact re-rank.
-      val distList = cents.map(c => distChain("nv", 0, c)).mkString(", ")
-      "ivfsq_probe" ->
-        s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-           |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-           |nrm AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv FROM c),
-           |dst AS (SELECT vec_id, ev, [$distList] AS dl FROM nrm),
-           |asg AS (SELECT vec_id, ev, CAST(list_indexof(dl, list_min(dl)) - 1 AS BIGINT) AS cluster FROM dst
-           |        WHERE (list_indexof(dl, list_min(dl)) - 1) IN (${cells.mkString(", ")})),
-           |z AS (SELECT vec_id, ev, cluster, list_max(list_transform(ev, x -> abs(x))) / 127.0 AS s FROM asg),
-           |cd AS (SELECT vec_id, ev, cluster,
-           |        CASE WHEN s > 0 THEN list_transform(ev, x -> CAST(floor(x / s + 0.5) AS DOUBLE))
-           |             ELSE list_transform(ev, x -> 0.0) END AS cv FROM z),
-           |ap AS (SELECT vec_id, cluster, ev, ${cosine("cv", "qv")} AS approx_sim
-           |       FROM cd, q ORDER BY approx_sim DESC, vec_id LIMIT 40)
-           |SELECT vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim
-           |FROM ap, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-    }
-    val ivfbqEntries = OracleArtifacts.ivfbq.toSeq.map { case (cents, cells) =>
-      // Twin of Queries.ivfbqProbe: IVF assignment (fitted-centroid
-      // literals) filters to the probed cells; the BQ leg is the
-      // per-dimension sign-disagreement count (see bq_probe — no
-      // packing needed in SQL); hamming cut to 40, exact re-rank.
-      val distList = cents.map(c => distChain("nv", 0, c)).mkString(", ")
-      "ivfbq_probe" ->
-        s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-           |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-           |nrm AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv FROM c),
-           |dst AS (SELECT vec_id, ev, [$distList] AS dl FROM nrm),
-           |asg AS (SELECT vec_id, ev, CAST(list_indexof(dl, list_min(dl)) - 1 AS BIGINT) AS cluster FROM dst
-           |        WHERE (list_indexof(dl, list_min(dl)) - 1) IN (${cells.mkString(", ")})),
-           |h AS (SELECT a.vec_id, a.ev, a.cluster,
-           |       CAST(len(list_filter(generate_series(1, 64),
-           |                            i -> (a.ev[i] > 0) <> (qv[i] > 0))) AS BIGINT) AS hamming
-           |      FROM asg a, q),
-           |cand AS (SELECT * FROM h ORDER BY hamming, vec_id LIMIT 40)
-           |SELECT vec_id, cluster, hamming, ${cosine("ev", "qv")} AS cos_sim
-           |FROM cand, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-    }
-    val ivfpqResEntries = OracleArtifacts.ivfpqResidual.toSeq.map { case (cents, cells, model) =>
-      // Twin of Queries.ivfpqResidual at the 8×256 production point
-      // (round 13 — the probe routes through the batch machinery at
-      // |Q| = 1, so the per-cell query ADC tables are no longer driver
-      // literals and the twin derives them IN SQL like ann_batch_pqr's):
-      // IVF assignment (centroid literals) filtered to the probed cells
-      // → per-row centroid pick (CASE over cluster) → residual
-      // rv = nv − cent → PQ encode via lambda-built distance lists over
-      // the codebook literals (256 codes would be a ~16k-term unrolled
-      // string otherwise) → join the query's per-cell residual qrv on
-      // cluster → ADC = Σ_j distLambda(qrv, j)[code_j + 1] → candidate
-      // cut by ADC asc → exact cosine re-rank. Same left-to-right
-      // accumulation as the Spark HOF fold throughout, so the doubles
-      // match bit for bit and both cuts fall identically.
-      val dim = cents.head.length
-      val sub = model.dim / model.m
-      val distList = cents.map(c => distChain("nv", 0, c)).mkString(", ")
-      val centCase = "CASE cluster " + cents.zipWithIndex.map { case (c, j) =>
-        s"WHEN $j THEN [${c.map(dlit).mkString(", ")}]"
-      }.mkString(" ") + " END"
-      def cbLit(j: Int): String =
-        "[" + model.codebooks(j).map(c => "[" + c.map(dlit).mkString(", ") + "]").mkString(", ") + "]"
-      def distLambda(vec: String, j: Int): String = {
-        val terms = (0 until sub).map { i =>
-          s"($vec[${j * sub + i + 1}] - c[${i + 1}])*($vec[${j * sub + i + 1}] - c[${i + 1}])"
-        }.mkString(" + ")
-        s"list_transform(${cbLit(j)}, c -> $terms)"
-      }
-      val encCols = (0 until model.m).map { j =>
-        s"list_indexof(${distLambda("rv", j)}, list_min(${distLambda("rv", j)})) - 1 AS prk$j"
-      }.mkString(",\n        ")
-      val adcExpr = (0 until model.m).map { j =>
-        s"${distLambda("qrv", j)}[prk$j + 1]"
-      }.mkString(" + ")
-      "ivfpq_residual" ->
-        s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-           |qn AS (SELECT qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS qnv FROM q),
-           |qc AS (SELECT qv, qnv, unnest([${cells.mkString(", ")}]) AS cluster FROM qn),
-           |qr AS (SELECT qv, cluster,
-           |        list_transform(generate_series(1, $dim), i -> qnv[i] - ($centCase)[i]) AS qrv FROM qc),
-           |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-           |nrm AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv FROM c),
-           |dst AS (SELECT vec_id, ev, nv, [$distList] AS dl FROM nrm),
-           |asg AS (SELECT vec_id, ev, nv, CAST(list_indexof(dl, list_min(dl)) - 1 AS BIGINT) AS cluster FROM dst
-           |        WHERE (list_indexof(dl, list_min(dl)) - 1) IN (${cells.mkString(", ")})),
-           |ct AS (SELECT vec_id, ev, nv, cluster, $centCase AS cent FROM asg),
-           |rs AS (SELECT vec_id, ev, cluster,
-           |        list_transform(generate_series(1, $dim), i -> nv[i] - cent[i]) AS rv FROM ct),
-           |enc AS (SELECT vec_id, ev, cluster,
-           |        $encCols FROM rs),
-           |ad AS (SELECT vec_id, ev, $adcExpr AS adc FROM enc JOIN qr USING (cluster)),
-           |cand AS (SELECT vec_id, ev FROM ad ORDER BY adc ASC, vec_id LIMIT 100)
-           |SELECT vec_id, ${cosine("ev", "qv")} AS cos_sim FROM cand, q
-           |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-    }
-    val ivfmrlEntries = OracleArtifacts.ivfmrl.toSeq.map { case (cents, cells) =>
-      // Twin of Queries.ivfmrlProbe: IVF assignment (fitted-centroid
-      // literals) filters to the probed cells; the MRL leg is a plain
-      // 1-based inclusive list slice (== Spark's slice(col, 1, 16) ==
-      // the stored prefix column, which is exactly the leading float
-      // elements); prefix-cosine prune to 40, exact full-dim re-rank.
-      val distList = cents.map(c => distChain("nv", 0, c)).mkString(", ")
-      "ivfmrl_probe" ->
-        s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-           |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-           |nrm AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv FROM c),
-           |dst AS (SELECT vec_id, ev, [$distList] AS dl FROM nrm),
-           |asg AS (SELECT vec_id, ev, CAST(list_indexof(dl, list_min(dl)) - 1 AS BIGINT) AS cluster FROM dst
-           |        WHERE (list_indexof(dl, list_min(dl)) - 1) IN (${cells.mkString(", ")})),
-           |ap AS (SELECT vec_id, cluster, ev, ${cosine("ev[1:16]", "qv[1:16]")} AS approx_sim
-           |       FROM asg, q ORDER BY approx_sim DESC, vec_id LIMIT 40)
-           |SELECT vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim
-           |FROM ap, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-    }
-    val ivfsqResEntries = OracleArtifacts.ivfsqResidual.toSeq.map { case (cents, cells) =>
-      // Twin of Queries.ivfsqResidual: IVF assignment (centroid
-      // literals) → per-row centroid pick (CASE over cluster) →
-      // residual = nv − centroid → static SQ8 arithmetic over the
-      // residual → reconstruct centroid + code·scale → cosine prune →
-      // exact re-rank. A zero residual (s = 0) reconstructs to the
-      // centroid itself, matching Spark's zero-codes branch.
-      val dim = cents.head.length
-      val distList = cents.map(c => distChain("nv", 0, c)).mkString(", ")
-      val centCase = "CASE cluster " + cents.zipWithIndex.map { case (c, j) =>
-        s"WHEN $j THEN [${c.map(dlit).mkString(", ")}]"
-      }.mkString(" ") + " END"
-      "ivfsq_residual" ->
-        s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-           |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-           |nrm AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv FROM c),
-           |dst AS (SELECT vec_id, ev, nv, [$distList] AS dl FROM nrm),
-           |asg AS (SELECT vec_id, ev, nv, CAST(list_indexof(dl, list_min(dl)) - 1 AS BIGINT) AS cluster FROM dst
-           |        WHERE (list_indexof(dl, list_min(dl)) - 1) IN (${cells.mkString(", ")})),
-           |ct AS (SELECT vec_id, ev, nv, cluster, $centCase AS cent FROM asg),
-           |rs AS (SELECT vec_id, ev, cluster, cent,
-           |        list_transform(generate_series(1, $dim), i -> nv[i] - cent[i]) AS res FROM ct),
-           |z AS (SELECT vec_id, ev, cluster, cent, res,
-           |       list_max(list_transform(res, x -> abs(x))) / 127.0 AS s FROM rs),
-           |rc AS (SELECT vec_id, ev, cluster,
-           |        CASE WHEN s > 0
-           |          THEN list_transform(generate_series(1, $dim), i -> cent[i] + CAST(floor(res[i] / s + 0.5) AS DOUBLE) * s)
-           |          ELSE cent END AS recon FROM z),
-           |ap AS (SELECT vec_id, cluster, ev, ${cosine("recon", "qv")} AS approx_sim
-           |       FROM rc, q ORDER BY approx_sim DESC, vec_id LIMIT 40)
-           |SELECT vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim
-           |FROM ap, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
+      // are the base-subset fits, appended rows route through the same
+      // hierarchical assignment as a from-scratch write, and the
+      // tombstoned ids are excluded from the corpus — which is exactly
+      // what both the merge-on-read live probe and the compacted
+      // rewrite must serve. stream_ann_2l: base + streamed delta = the
+      // FULL corpus under the same fits, no deletes.
+      val live = twoLevelPqrTwinSql(two, model, " WHERE vec_id % 10 <> 3")
+      Seq("ann_two_level_live" -> live, "ann_two_level_compacted" -> live,
+        "stream_ann_2l" -> twoLevelPqrTwinSql(two, model, ""))
     }
     val pcaEntries = OracleArtifacts.pca.toSeq.map { comps =>
       // Twin of Queries.pcaProbe: fitted components inlined; projection
@@ -1499,25 +1391,9 @@ object OracleSql {
            |       vec_id NOT IN (SELECT vec_id FROM rm) AS kept
            |FROM cs ORDER BY vec_id""".stripMargin
     }
-    val clusterTopicsEntries = OracleArtifacts.clusterTopics.toSeq.map { cents =>
-      // Twin of Queries.clusterTopics: fitted-centroid assignment over
-      // embeddings (same CTE chain as ann_probe), doc join by id, token
-      // counts, per-cluster top-5 window with (cnt DESC, term) order.
-      "cluster_topics" ->
-        s"""WITH ${annCtes(cents)},
-           |sz AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_docs FROM asg GROUP BY 1),
-           |tok AS (SELECT d.doc_id, a.cluster, unnest(${toks("d.text")}) AS term
-           |        FROM documents d JOIN asg a ON d.doc_id = a.vec_id),
-           |tc AS (SELECT cluster, term, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY 1, 2),
-           |rk AS (SELECT cluster, term, cnt,
-           |       CAST(row_number() OVER (PARTITION BY cluster ORDER BY cnt DESC, term) AS BIGINT) AS rank
-           |       FROM tc)
-           |SELECT rk.cluster, sz.n_docs, rk.rank, rk.term, rk.cnt
-           |FROM rk JOIN sz ON rk.cluster = sz.cluster
-           |WHERE rk.rank <= 5 ORDER BY rk.cluster, rk.rank""".stripMargin
-    }
-    (retrievalEntries ++ retrievalClusterEntries ++ annSweepEntries ++ annEntries ++ annIncrEntries ++ annDeletedEntries ++ annCompactedEntries ++ annBatchEntries ++ annFilteredEntries ++ annBatchFilteredEntries ++ annBatchSqEntries ++ annBatchMrlEntries ++ annBatchPqEntries ++ annBatchPqrEntries ++ annBatchBqrEntries ++ annTwoLevelEntries ++ annTwoLevelPqrEntries ++ annTwoLevelLifeEntries ++ annTwoLevelStreamEntries ++ pqEntries ++ ivfpqEntries ++ ivfpqResEntries ++
-      ivfbqEntries ++ ivfsqEntries ++ ivfmrlEntries ++ ivfsqResEntries ++ pcaEntries ++ streamEntries ++ semdedupEntries ++ clusterTopicsEntries)
+    (retrievalEntries ++ retrievalClusterEntries ++ ivfSingleEntries ++ ivfBatchEntries ++ annIncrEntries ++
+      pqEntries ++ pqResEntries ++ annTwoLevelEntries ++ annTwoLevelPqrEntries ++ twoLevelBaseEntries ++
+      pcaEntries ++ streamEntries ++ semdedupEntries)
       .map { case (k, v) => k -> materializeCtes(v) }.toMap
   }
 

@@ -61,15 +61,79 @@ object Queries {
   private def queryVecLocal(s: SparkSession, dir: String): DataFrame =
     localized(s, dir, "qvec", queryVecDf(s, dir))
 
-  /** The collected query vector (doubles) — zero jobs per use. */
-  private def queryVecArr(s: SparkSession, dir: String): Array[Double] =
-    Ann.queryVector(queryVecLocal(s, dir), "q_vec")
-
   /** The 8-query batch-probe set as a memoized local relation. */
   private def batchQueriesLocal(s: SparkSession, dir: String): DataFrame =
     localized(s, dir, "qbatch",
       embs(s, dir).filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_vec")))
+
+  // ── The vector-index fixture every ANN key shares: one corpus, one
+  // full-corpus IVF fit, one query vector, one 8-query batch and one
+  // scripted lifecycle. Each fitted artifact is stashed in
+  // [[OracleArtifacts]] by the helper that fits it, keyed by the fit,
+  // so [[OracleSql.dynamic]] builds every twin of that fit from one
+  // holder.
+
+  /** The probe corpus: every embedding but query vector 0, as
+    * (vec_id, [label,] embedding).
+    */
+  private def probeCorpus(s: SparkSession, dir: String, label: Boolean = false): DataFrame =
+    embs(s, dir).filter(col("vec_id") =!= 0)
+      .select((Seq("vec_id") ++ (if (label) Seq("label") else Nil) :+ "embedding").map(col): _*)
+
+  /** The `nProbe` cells nearest a one-row query relation's `q_vec`, best first. */
+  private def probeCells(centroids: Array[Array[Double]], q: DataFrame, nProbe: Int = 3): Seq[Int] =
+    Ann.nearestCells(centroids, Ann.queryVector(q, "q_vec"), nProbe)
+
+  /** The full-corpus IVF fit (k = 10, seed = 42; memoized) that every
+    * flat IVF, SQ, BQ, MRL and PQ key probes.
+    */
+  private def ivfFit(s: SparkSession, dir: String): Ann.Index =
+    Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
+
+  /** [[ivfFit]] with query vector 0's ranked cells stashed as the fit's
+    * oracle artifact (5 cells — the recall sweep's widest nProbe; a
+    * smaller nProbe probes a prefix); returns the index and the first
+    * `nProbe` cells.
+    */
+  private def ivfIndex(s: SparkSession, dir: String, nProbe: Int = 3): (Ann.Index, Seq[Int]) = {
+    val index = ivfFit(s, dir)
+    val ranked = probeCells(index.centroids, queryVecLocal(s, dir), nProbe = 5)
+    OracleArtifacts.ivf = Some((index.centroids, ranked))
+    (index, ranked.take(nProbe))
+  }
+
+  /** The 8-query batch, each query carrying its 3 nearest cells (ranked
+    * on the driver, served as a local relation).
+    */
+  private def batchCells(s: SparkSession, dir: String, centroids: Array[Array[Double]]): DataFrame =
+    Ann.queryCellsLocal(batchQueriesLocal(s, dir), "q_vec", "query_id", centroids, nProbe = 3)
+
+  /** Probe the live rows of the persisted layout at `path` with query
+    * vector 0 over `cells`, or with a [[batchCells]] batch; `labeled`
+    * prefilters to `label IN (2, 5)` inside the pruned scan and keeps
+    * the label.
+    */
+  private def liveProbe(s: SparkSession, path: String, queries: DataFrame, topK: Int,
+      cells: Seq[Int] = Nil, labeled: Boolean = false): DataFrame =
+    Ann.probe(Ann.liveLayout(s, path, "vec_id"), queries, "q_vec", "embedding", "vec_id",
+      topK = topK, cells = cells,
+      prefilter = if (labeled) Some(col("label").isin(2, 5)) else None,
+      keep = if (labeled) Seq("label") else Nil)
+
+  /** The scripted lifecycle's row sets: the 90% base every maintenance
+    * fit uses, the 10% delta appended to it, and the 10% deleted.
+    */
+  private def lifecycleBase(s: SparkSession, dir: String): DataFrame =
+    embs(s, dir).filter(col("vec_id") % 10 =!= 7)
+  private def deltaRows: Column = col("vec_id") % 10 === 7
+  private def tombstones(s: SparkSession, dir: String): DataFrame =
+    embs(s, dir).filter(col("vec_id") % 10 === 3).select("vec_id")
+
+  /** recall@10 of a probe's ids against the exact top 10 (4 dp). */
+  private def recallAt10(exact: DataFrame, probe: DataFrame): Double =
+    BigDecimal(exact.join(probe, Seq("vec_id"), "left_semi").count().toDouble / 10.0)
+      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** (doc_id, lang, source, term) token occurrence table. */
   private def tokenTable(s: SparkSession, dir: String): DataFrame =
@@ -241,7 +305,7 @@ object Queries {
 
   def knnTopK(s: SparkSession, dir: String): DataFrame =
     Search.knnTopK(
-      embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "label", "embedding"),
+      probeCorpus(s, dir, label = true),
       queryVecLocal(s, dir),
       corpusVec = "embedding", queryVec = "q_vec", idCol = "vec_id", k = 10
     ).select("vec_id", "label", "cos_sim")
@@ -252,7 +316,7 @@ object Queries {
     */
   def sqProbe(s: SparkSession, dir: String): DataFrame =
     Sq.probe(
-      embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
+      probeCorpus(s, dir),
       queryVecLocal(s, dir),
       corpusVec = "embedding", queryVec = "q_vec", idCol = "vec_id",
       k = 10, refine = 40)
@@ -266,7 +330,7 @@ object Queries {
     */
   def mmrSearch(s: SparkSession, dir: String): DataFrame =
     Search.mmrRerank(
-      embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
+      probeCorpus(s, dir),
       queryVecLocal(s, dir),
       corpusVec = "embedding", queryVec = "q_vec", idCol = "vec_id",
       k = 5, poolSize = 20, lambda = 0.7)
@@ -279,7 +343,7 @@ object Queries {
     */
   def bqProbe(s: SparkSession, dir: String): DataFrame =
     graft.operators.Bq.probe(
-      embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
+      probeCorpus(s, dir),
       queryVecLocal(s, dir),
       vecCol = "embedding", queryVec = "q_vec", idCol = "vec_id",
       k = 10, refine = 40)
@@ -298,7 +362,7 @@ object Queries {
     */
   def bqRotated(s: SparkSession, dir: String): DataFrame =
     graft.operators.Bq.probeRotated(
-      embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
+      probeCorpus(s, dir),
       queryVecLocal(s, dir),
       vecCol = "embedding", queryVec = "q_vec", idCol = "vec_id",
       rot = graft.operators.Bq.rotationMatrix(64, seed = 7L),
@@ -313,7 +377,7 @@ object Queries {
     */
   def matryoshkaProbe(s: SparkSession, dir: String): DataFrame =
     Matryoshka.probe(
-      embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
+      probeCorpus(s, dir),
       queryVecLocal(s, dir),
       corpusVec = "embedding", queryVec = "q_vec", idCol = "vec_id",
       dPrefix = 16, k = 10, refine = 40)
@@ -324,14 +388,11 @@ object Queries {
     * with 32× code compression ([[graft.operators.Bq.probeIvf]]).
     */
   def ivfbqProbe(s: SparkSession, dir: String): DataFrame = {
-    val index = Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
-    val q = queryVecLocal(s, dir)
-    val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
-    OracleArtifacts.ivfbq = Some((index.centroids, cells))
-    val corpus = embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding")
-    val path = graft.operators.LayoutCache.getOrWrite(s"ivfbq:$dir")(p =>
-      graft.operators.Bq.writeIvfBq(p, corpus, "embedding", "vec_id", index.centroids))
-    graft.operators.Bq.probeIvf(s, path, Some(corpus), q, "q_vec", "vec_id", "embedding",
+    val (index, cells) = ivfIndex(s, dir)
+    val corpus = probeCorpus(s, dir)
+    val path = LayoutCache.getOrWrite(s"ivfbq:$dir")(p =>
+      Bq.writeIvfBq(p, corpus, "embedding", "vec_id", index.centroids))
+    Bq.probeIvf(s, path, Some(corpus), queryVecLocal(s, dir), "q_vec", "vec_id", "embedding",
       cells = cells, k = 10, refine = 40)
   }
 
@@ -345,20 +406,17 @@ object Queries {
     * re-encode).
     */
   def ivfmrlProbe(s: SparkSession, dir: String): DataFrame = {
-    val index = Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
-    val q = queryVecLocal(s, dir)
-    val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
-    OracleArtifacts.ivfmrl = Some((index.centroids, cells))
-    val corpus = embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding")
-    val path = graft.operators.LayoutCache.getOrWrite(s"ivfmrl:$dir")(p =>
+    val (index, cells) = ivfIndex(s, dir)
+    val corpus = probeCorpus(s, dir)
+    val path = LayoutCache.getOrWrite(s"ivfmrl:$dir")(p =>
       Matryoshka.writeIvfMrl(p, corpus, "embedding", "vec_id", index.centroids, dPrefix = 16))
-    Matryoshka.probeIvf(s, path, Some(corpus), q, "q_vec", "vec_id", "embedding",
+    Matryoshka.probeIvf(s, path, Some(corpus), queryVecLocal(s, dir), "q_vec", "vec_id", "embedding",
       cells = cells, dPrefix = 16, k = 10, refine = 40)
   }
 
   def knnPerGroup(s: SparkSession, dir: String): DataFrame =
     Search.knnTopKPerGroup(
-      embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "label", "embedding"),
+      probeCorpus(s, dir, label = true),
       queryVecLocal(s, dir),
       corpusVec = "embedding", queryVec = "q_vec", idCol = "vec_id",
       groupCol = "label", k = 3
@@ -568,7 +626,6 @@ object Queries {
       idCol = "doc_id", groupCol = "source", QueryTerms, k = 3)
       .orderBy("source", "rk")
 
-  /** BM25 + exact-phrase boost ("filter join") — proximity-aware FTS. */
   /** The reference's full SERVING path with both persisted indexes
     * (store.py:197 FTS index + store.py:274 vector index + server.py:228
     * hybrid fusion): BM25 leg probes the term-pruned postings layout,
@@ -577,7 +634,7 @@ object Queries {
     * IVF probe from the fitted centroid literals.
     */
   def hybridIndexed(s: SparkSession, dir: String): DataFrame = {
-    val (index, cells) = annIndexAndCells(s, dir)
+    val (index, cells) = ivfIndex(s, dir)
     val fts = Fts.buildCached(dir, docs(s, dir), "text", "doc_id")
     val bm25Leg = Fts.probe(s, fts, "doc_id", QueryTerms, k = 100)
     val knnLeg = Ann.probe(index.assigned, queryVecLocal(s, dir), "q_vec", index.vecCol,
@@ -779,6 +836,7 @@ object Queries {
     Search.quantCrossRerank(docs(s, dir).select("doc_id", "text"),
       "text", "doc_id", QueryTerms, k = 10, pool = 20)
 
+  /** BM25 + exact-phrase boost ("filter join") — proximity-aware FTS. */
   def bm25Phrase(s: SparkSession, dir: String): DataFrame =
     Search.bm25PhraseTopK(docs(s, dir), "text", "doc_id",
       QueryTerms, Seq("filter", "join"), k = 10)
@@ -1272,7 +1330,7 @@ object Queries {
     */
   def lshQuery(s: SparkSession, dir: String): DataFrame =
     Lsh.query(
-      embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
+      probeCorpus(s, dir),
       queryVecLocal(s, dir),
       "embedding", "q_vec", "vec_id", dim = 64, nPlanes = 8, k = 10
     ).select("vec_id", "cos_sim")
@@ -1494,10 +1552,8 @@ object Queries {
     val queryText = "spark filter join stream"
     val emb = Featurize.hashedBow(docs(s, dir), "text", 64, Seq("doc_id"))
     val idx = Ann.buildCached(dir + "#hbow", emb, "embedding", "doc_id", k = 8, seed = 42)
-    val cells = Ann.nearestCells(
-      idx.centroids,
-      Ann.queryVector(graft.streaming.StreamPipeline.queryEmbedding(s, queryText), "q_vec"),
-      nProbe = 3)
+    val cells = probeCells(idx.centroids,
+      graft.streaming.StreamPipeline.queryEmbedding(s, queryText))
     OracleArtifacts.streamPipeline = Some((idx.centroids, cells))
     val indexDir = graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
       java.nio.file.Files.createTempDirectory("graft_stream_pipe")).toString + "/idx"
@@ -2312,9 +2368,7 @@ object Queries {
   }
 
   def clusterTopics(s: SparkSession, dir: String): DataFrame = {
-    val index = Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
-    OracleArtifacts.clusterTopics = Some(index.centroids)
-    val asg = index.assigned.select(col("vec_id").as("doc_id"), col("cluster").cast("long").as("cluster"))
+    val asg = ivfIndex(s, dir)._1.assigned.select(col("vec_id").as("doc_id"), col("cluster").cast("long").as("cluster"))
     val sizes = asg.groupBy("cluster").agg(count(lit(1)).as("n_docs"))
     val terms = docs(s, dir)
       .select(col("doc_id"), explode(TextOps.tokenize(col("text"))).as("term"))
@@ -2818,16 +2872,8 @@ object Queries {
   // artifacts, stashed in [[OracleArtifacts]] so [[OracleSql.dynamic]]
   // can inline them into DuckDB twins.
 
-  /** Build (memoized) + stash artifacts + return (index, probed cells). */
-  private def annIndexAndCells(s: SparkSession, dir: String): (Ann.Index, Seq[Int]) = {
-    val index = Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
-    val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
-    OracleArtifacts.ann = Some((index.centroids, cells))
-    (index, cells)
-  }
-
   def annProbe(s: SparkSession, dir: String): DataFrame = {
-    val (index, cells) = annIndexAndCells(s, dir)
+    val (index, cells) = ivfIndex(s, dir)
     Ann.probe(index.assigned, queryVecLocal(s, dir), "q_vec", index.vecCol, index.idCol,
       topK = 10, cells = cells)
   }
@@ -2837,7 +2883,7 @@ object Queries {
     * proving the assignment table balances.
     */
   def annStats(s: SparkSession, dir: String): DataFrame =
-    Ann.stats(annIndexAndCells(s, dir)._1)
+    Ann.stats(ivfIndex(s, dir)._1)
 
   /** PCA-reduced probe: approximate cosine in the 16-dim principal
     * subspace (fit memoized per corpus, components then constants)
@@ -2852,7 +2898,7 @@ object Queries {
     val model = Pca.fitCached(dir, embs(s, dir), "embedding", r = 16)
     OracleArtifacts.pca = Some(model.components)
     Pca.probe(
-      embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
+      probeCorpus(s, dir),
       queryVecLocal(s, dir), model,
       corpusVec = "embedding", queryVec = "q_vec", idCol = "vec_id",
       k = 10, refine = 100)
@@ -2864,13 +2910,10 @@ object Queries {
     * re-ranks exactly. Same memoized IVF fit as [[annProbe]].
     */
   def ivfsqResidual(s: SparkSession, dir: String): DataFrame = {
-    val index = Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
-    val q = queryVecLocal(s, dir)
-    val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
-    OracleArtifacts.ivfsqResidual = Some((index.centroids, cells))
+    val (index, cells) = ivfIndex(s, dir)
     Sq.residualProbe(
-      embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
-      q, index.centroids,
+      probeCorpus(s, dir),
+      queryVecLocal(s, dir), index.centroids,
       corpusVec = "embedding", queryVec = "q_vec", idCol = "vec_id",
       cells = cells, k = 10, refine = 40)
   }
@@ -2881,28 +2924,14 @@ object Queries {
     * joined back by id. Same memoized IVF fit as [[annProbe]].
     */
   def ivfsqProbe(s: SparkSession, dir: String): DataFrame = {
-    val index = Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
-    val q = queryVecLocal(s, dir)
-    val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
-    OracleArtifacts.ivfsq = Some((index.centroids, cells))
-    val corpus = embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding")
-    val path = graft.operators.LayoutCache.getOrWrite(s"ivfsq_no_qvec:$dir")(p =>
+    val (index, cells) = ivfIndex(s, dir)
+    val corpus = probeCorpus(s, dir)
+    val path = LayoutCache.getOrWrite(s"ivfsq_no_qvec:$dir")(p =>
       Sq.writeIvfSq(p, corpus, "embedding", "vec_id", index.centroids))
-    Sq.probeIvf(s, path, Some(corpus), q, "q_vec", "vec_id", "embedding",
+    Sq.probeIvf(s, path, Some(corpus), queryVecLocal(s, dir), "q_vec", "vec_id", "embedding",
       cells = cells, k = 10, refine = 40)
   }
 
-  /** Incremental index maintenance end-to-end (reference: store.py:197
-    * rebuilds its index on every upsert; the Spark-scale equivalent is
-    * delta assignment into the same partitioned layout, no rebuild):
-    * fit IVF centroids on a 90% BASE subset, persist the
-    * partitioned-by-cluster layout, [[Ann.appendToIndex]] the remaining
-    * 10% as a delta, then probe the PERSISTED layout — the probe must
-    * see base and delta rows alike. The DuckDB twin assigns base ∪ delta
-    * (= all vectors) to the base-fitted centroids inlined as literals,
-    * so the hash check proves the appended rows land in the same cells
-    * the expression assigns.
-    */
   /** Scripted-lifecycle layout builders, shared between the probe
     * queries and [[layoutCatalog]]: each is memoized under the SAME
     * [[graft.operators.LayoutCache]] key its probe uses, so the catalog
@@ -2912,33 +2941,35 @@ object Queries {
     * verb SCRIPT, not of which query triggered the build.
     */
   private def annFullLayout(s: SparkSession, dir: String): String = {
-    val index = Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
-    graft.operators.LayoutCache.getOrWrite(s"annidx_full:$dir")(p => Ann.writeIndex(index, p))
+    val index = ivfFit(s, dir)
+    LayoutCache.getOrWrite(s"annidx_full:$dir")(p => Ann.writeIndex(index, p))
   }
 
+  /** The IVF fit on the lifecycle base subset (memoized) that the
+    * incremental keys share.
+    */
+  private def incrFit(s: SparkSession, dir: String): Ann.Index =
+    Ann.buildCached(dir + "#incr-base", lifecycleBase(s, dir), "embedding", "vec_id", k = 10, seed = 42)
+
   private def annIncrLayout(s: SparkSession, dir: String): String = {
-    val all = embs(s, dir)
-    val base = all.filter(col("vec_id") % 10 =!= 7)
-    val delta = all.filter(col("vec_id") % 10 === 7)
-    val index = Ann.buildCached(dir + "#incr-base", base, "embedding", "vec_id", k = 10, seed = 42)
+    val index = incrFit(s, dir)
     // base write + delta append are the one-time maintenance events;
     // the memo leaves the per-call cost at the probe, per the
     // build-once-probe-many contract
-    graft.operators.LayoutCache.getOrWrite(s"annidx_incr:$dir") { p =>
+    LayoutCache.getOrWrite(s"annidx_incr:$dir") { p =>
       Ann.writeIndex(index, p)
-      Ann.appendToIndex(p, delta, "embedding", index.centroids)
+      Ann.appendToIndex(p, embs(s, dir).filter(deltaRows), "embedding", index.centroids)
     }
   }
 
   private def annDeletedLayout(s: SparkSession, dir: String): String = {
-    val index = Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
+    val index = ivfFit(s, dir)
     // own layout (not annidx_full): this one carries the tombstone
     // sidecar; write + delete are the one-time build, the probe is the
     // per-call cost
-    graft.operators.LayoutCache.getOrWrite(s"annidx_deleted:$dir") { p =>
+    LayoutCache.getOrWrite(s"annidx_deleted:$dir") { p =>
       Ann.writeIndex(index, p)
-      Ann.deleteFromIndex(s, p,
-        embs(s, dir).filter(col("vec_id") % 10 === 3).select("vec_id"), "vec_id")
+      Ann.deleteFromIndex(s, p, tombstones(s, dir), "vec_id")
     }
   }
 
@@ -2958,16 +2989,29 @@ object Queries {
       "ann_incremental" -> annIncrLayout(s, dir),
       "ann_deleted"     -> annDeletedLayout(s, dir)))
 
-  def annIncremental(s: SparkSession, dir: String): DataFrame = {
-    val path = annIncrLayout(s, dir)
-    val index = Ann.buildCached(dir + "#incr-base",
-      embs(s, dir).filter(col("vec_id") % 10 =!= 7), "embedding", "vec_id", k = 10, seed = 42)
-    val q = queryVecLocal(s, dir)
-    val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
+  /** Query vector 0's live probe of an incremental layout at `path`
+    * under [[incrFit]], with the base fit and its cells stashed.
+    */
+  private def incrProbe(s: SparkSession, dir: String, path: String): DataFrame = {
+    val index = incrFit(s, dir)
+    val cells = probeCells(index.centroids, queryVecLocal(s, dir))
     OracleArtifacts.annIncremental = Some((index.centroids, cells))
-    Ann.probe(Ann.liveLayout(s, path, "vec_id"), q, "q_vec", "embedding", "vec_id",
-      topK = 10, cells = cells)
+    liveProbe(s, path, queryVecLocal(s, dir), topK = 10, cells)
   }
+
+  /** Incremental index maintenance end-to-end (reference: store.py:197
+    * rebuilds its index on every upsert; the Spark-scale equivalent is
+    * delta assignment into the same partitioned layout, no rebuild):
+    * fit IVF centroids on a 90% BASE subset, persist the
+    * partitioned-by-cluster layout, [[Ann.appendToIndex]] the remaining
+    * 10% as a delta, then probe the PERSISTED layout — the probe must
+    * see base and delta rows alike. The DuckDB twin assigns base ∪ delta
+    * (= all vectors) to the base-fitted centroids inlined as literals,
+    * so the hash check proves the appended rows land in the same cells
+    * the expression assigns.
+    */
+  def annIncremental(s: SparkSession, dir: String): DataFrame =
+    incrProbe(s, dir, annIncrLayout(s, dir))
 
   /** [[annIncremental]]'s delta fed from a STREAM (the vector face of
     * [[streamBm25]]): the 10% delta arrives as micro-batches, each
@@ -2979,20 +3023,15 @@ object Queries {
     * ann_incremental's twin.
     */
   def streamAnn(s: SparkSession, dir: String): DataFrame = {
-    val base = embs(s, dir).filter(col("vec_id") % 10 =!= 7)
-    val index = Ann.buildCached(dir + "#incr-base", base, "embedding", "vec_id", k = 10, seed = 42)
-    val path = graft.operators.LayoutCache.getOrWrite(s"annidx_stream:$dir") { p =>
+    val index = incrFit(s, dir)
+    val path = LayoutCache.getOrWrite(s"annidx_stream:$dir") { p =>
       Ann.writeIndex(index, p)
       // the landing zone replays the whole embeddings table, so the
       // query-side delta predicate picks the 10% not already in base
       graft.streaming.StreamPipeline.appendToAnnIndex(s, dir, p, index.centroids,
-        deltaFilter = col("vec_id") % 10 === 7)
+        deltaFilter = deltaRows)
     }
-    val q = queryVecLocal(s, dir)
-    val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
-    OracleArtifacts.annIncremental = Some((index.centroids, cells))
-    Ann.probe(Ann.liveLayout(s, path, "vec_id"), q, "q_vec", "embedding", "vec_id",
-      topK = 10, cells = cells)
+    incrProbe(s, dir, path)
   }
 
   /** DELETE-aware persisted probe — the reference's `delete_document`
@@ -3005,13 +3044,8 @@ object Queries {
     * applied before ranking.
     */
   def annDeleted(s: SparkSession, dir: String): DataFrame = {
-    val index = Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
-    val path = annDeletedLayout(s, dir)
-    val q = queryVecLocal(s, dir)
-    val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
-    OracleArtifacts.annDeleted = Some((index.centroids, cells))
-    Ann.probe(Ann.liveLayout(s, path, "vec_id"), q, "q_vec", "embedding", "vec_id",
-      topK = 10, cells = cells)
+    val cells = ivfIndex(s, dir)._2
+    liveProbe(s, annDeletedLayout(s, dir), queryVecLocal(s, dir), topK = 10, cells)
   }
 
   /** COMPACTION closes the ANN maintenance triangle (append
@@ -3024,21 +3058,16 @@ object Queries {
     * the fitted centroid literals.
     */
   def annCompacted(s: SparkSession, dir: String): DataFrame = {
-    val index = Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
-    val path = graft.operators.LayoutCache.getOrWrite(s"annidx_compacted:$dir") { p =>
+    val (index, cells) = ivfIndex(s, dir)
+    val path = LayoutCache.getOrWrite(s"annidx_compacted:$dir") { p =>
       val staged = graft.streaming.StreamPipeline.deleteRecursivelyOnExit(
         java.nio.file.Files.createTempDirectory("graft_ann_precompact_"))
         .resolve("idx").toString
       Ann.writeIndex(index, staged)
-      Ann.deleteFromIndex(s, staged,
-        embs(s, dir).filter(col("vec_id") % 10 === 3).select("vec_id"), "vec_id")
+      Ann.deleteFromIndex(s, staged, tombstones(s, dir), "vec_id")
       Ann.compact(s, staged, p, "vec_id")
     }
-    val q = queryVecLocal(s, dir)
-    val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
-    OracleArtifacts.annCompacted = Some((index.centroids, cells))
-    Ann.probe(Ann.liveLayout(s, path, "vec_id"), q, "q_vec", "embedding", "vec_id",
-      topK = 10, cells = cells)
+    liveProbe(s, path, queryVecLocal(s, dir), topK = 10, cells)
   }
 
   /** PREFILTERED persisted-IVF probe — the reference's filtered vector
@@ -3050,30 +3079,48 @@ object Queries {
     * The twin assigns + filters + ranks the same way in SQL.
     */
   def annFiltered(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir)
-    val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
-    val q = queryVecLocal(s, dir)
-    val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
-    OracleArtifacts.annFiltered = Some((index.centroids, cells))
+    val cells = ivfIndex(s, dir)._2
     // same corpus + same fitted index as annBatchPersisted → same layout
-    val path = graft.operators.LayoutCache.getOrWrite(s"annidx_full:$dir")(p =>
-      Ann.writeIndex(index, p))
-    Ann.probe(Ann.liveLayout(s, path, "vec_id"), q, "q_vec", "embedding", "vec_id",
-      topK = 10, cells = cells, prefilter = Some(col("label").isin(2, 5)), keep = Seq("label"))
+    liveProbe(s, annFullLayout(s, dir), queryVecLocal(s, dir), topK = 10, cells, labeled = true)
   }
 
   /** IVF-PQ-style probe: PQ codes + ADC ranking + exact re-rank at
     * refine_factor=10 (reference: store.py:274, config.py:62).
     */
   def pqProbe(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir)
-    val model = Pq.trainCached(dir, e, "embedding", "vec_id", m = 8, codes = 16)
-    val qDf = queryVecLocal(s, dir)
-    OracleArtifacts.pq =
-      Some((model, Pq.distanceTable(model, Ann.queryVector(qDf, "q_vec"))))
-    Pq.adcProbe(Pq.encode(e.filter(col("vec_id") =!= 0), "embedding", model),
-      model, qDf, "q_vec", "embedding", "vec_id", k = 10, refine = 100)
+    val model = pqFit(s, dir)
+    Pq.adcProbe(Pq.encode(embs(s, dir).filter(col("vec_id") =!= 0), "embedding", model),
+      model, queryVecLocal(s, dir), "q_vec", "embedding", "vec_id", k = 10, refine = 100)
       .select("vec_id", "cos_sim")
+  }
+
+  /** The global PQ codebooks (m = 8, codes = 16; memoized) the PQ keys
+    * share, stashed with query vector 0's ADC distance table.
+    */
+  private def pqFit(s: SparkSession, dir: String): Pq.Model = {
+    val model = Pq.trainCached(dir, embs(s, dir), "embedding", "vec_id", m = 8, codes = 16)
+    OracleArtifacts.pq =
+      Some((model, Pq.distanceTable(model, Ann.queryVector(queryVecLocal(s, dir), "q_vec"))))
+    model
+  }
+
+  /** The residual PQ codebooks (m = 8 × codes = 256; memoized) trained
+    * against the full-corpus IVF fit, stashed for the residual keys.
+    */
+  private def pqResidualFit(s: SparkSession, dir: String, index: Ann.Index): Pq.Model = {
+    // m=8 x codes=256 (byte codes) is the REGISTERED default for the
+    // residual family — the round-12 operating-point study at 1M
+    // anisotropic vectors measured it at recall 0.862 (refine 25), the
+    // full-SQ8/IVF-ceiling parity point, vs 0.688 for 8x16 at the SAME
+    // 8-byte code budget (PLANS.md round-12 table). Both residual keys
+    // run as the batch probe (the single query as |Q| = 1): the
+    // per-(query, cell) ADC tables ride as broadcast-side HOF columns,
+    // never plan literals, so code count doesn't inflate the plan (the
+    // round-8 janino lesson).
+    val model = Pq.trainResidualCached(dir, embs(s, dir), "embedding", "vec_id", index.centroids,
+      m = 8, codes = 256)
+    OracleArtifacts.pqResidual = Some(model)
+    model
   }
 
   /** Batch IVF probe: 8 queries, each pruned to its own 3 nearest cells
@@ -3082,11 +3129,9 @@ object Queries {
     * mining shape at index scale).
     */
   def annBatchProbe(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir)
-    val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
-    OracleArtifacts.annBatch = Some(index.centroids)
+    val index = ivfIndex(s, dir)._1
     val qCells = Ann.queryCells(
-      e.filter(col("vec_id") < 8)
+      embs(s, dir).filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_vec")),
       "q_vec", "query_id", index.centroids, nProbe = 3)
     Ann.probe(index.assigned, qCells, "q_vec", index.vecCol, index.idCol, topK = 5)
@@ -3101,17 +3146,10 @@ object Queries {
     * fitted centroids, same ranking), so it shares that twin.
     */
   def annBatchPersisted(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir)
-    val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
-    OracleArtifacts.annBatch = Some(index.centroids)
-    val path = graft.operators.LayoutCache.getOrWrite(s"annidx_full:$dir")(p =>
-      Ann.writeIndex(index, p))
+    val index = ivfIndex(s, dir)._1
     // bounded query set: cells ranked on the driver, shipped as a local
     // relation — the warm probe is the pruned scan + heap alone
-    val qCells = Ann.queryCellsLocal(batchQueriesLocal(s, dir),
-      "q_vec", "query_id", index.centroids, nProbe = 3)
-    Ann.probe(Ann.liveLayout(s, path, "vec_id"), qCells, "q_vec", "embedding", "vec_id",
-      topK = 5)
+    liveProbe(s, annFullLayout(s, dir), batchCells(s, dir, index.centroids), topK = 5)
       .orderBy("query_id", "rk")
   }
 
@@ -3124,13 +3162,10 @@ object Queries {
     */
   def annBatchSq(s: SparkSession, dir: String): DataFrame = {
     val e = embs(s, dir)
-    val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
-    OracleArtifacts.annBatchSq = Some(index.centroids)
-    val path = graft.operators.LayoutCache.getOrWrite(s"ivfsq_full:$dir")(p =>
+    val index = ivfIndex(s, dir)._1
+    val path = LayoutCache.getOrWrite(s"ivfsq_full:$dir")(p =>
       Sq.writeIvfSq(p, e, "embedding", "vec_id", index.centroids))
-    Sq.probeIvf(s, path, Some(e.select("vec_id", "embedding")),
-      Ann.queryCellsLocal(batchQueriesLocal(s, dir), "q_vec", "query_id", index.centroids,
-        nProbe = 3),
+    Sq.probeIvf(s, path, Some(e.select("vec_id", "embedding")), batchCells(s, dir, index.centroids),
       "q_vec", "vec_id", "embedding", k = 5, refine = 20)
       .orderBy("query_id", "rk")
   }
@@ -3143,15 +3178,13 @@ object Queries {
     * The 32×-less-I/O PQ scan and batch serving compose.
     */
   def annBatchPq(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir)
-    val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
-    val model = Pq.trainCached(dir, e, "embedding", "vec_id", m = 8, codes = 16)
-    OracleArtifacts.annBatchPq = Some((index.centroids, model))
+    val index = ivfIndex(s, dir)._1
+    val model = pqFit(s, dir)
     // build-once-probe-many: the persisted IVF-PQ layout is written on
     // first probe of this corpus and reused (LayoutCache), exactly like
     // the memoized centroid fit above
-    val path = graft.operators.LayoutCache.getOrWrite(s"ivfpq_full:$dir")(p =>
-      Pq.writeIvfPq(p, e, "embedding", "vec_id", index.centroids, model))
+    val path = LayoutCache.getOrWrite(s"ivfpq_full:$dir")(p =>
+      Pq.writeIvfPq(p, embs(s, dir), "embedding", "vec_id", index.centroids, model))
     batchPqProbe(s, dir, path, index.centroids, model)
   }
 
@@ -3166,13 +3199,11 @@ object Queries {
     */
   def annBatchMrl(s: SparkSession, dir: String): DataFrame = {
     val e = embs(s, dir)
-    val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
-    OracleArtifacts.annBatchMrl = Some(index.centroids)
-    val path = graft.operators.LayoutCache.getOrWrite(s"ivfmrl_full:$dir")(p =>
+    val index = ivfIndex(s, dir)._1
+    val path = LayoutCache.getOrWrite(s"ivfmrl_full:$dir")(p =>
       Matryoshka.writeIvfMrl(p, e, "embedding", "vec_id", index.centroids, dPrefix = 16))
     Matryoshka.probeIvf(s, path, Some(e.select("vec_id", "embedding")),
-      Ann.queryCellsLocal(batchQueriesLocal(s, dir), "q_vec", "query_id", index.centroids,
-        nProbe = 3),
+      batchCells(s, dir, index.centroids),
       "q_vec", "vec_id", "embedding", dPrefix = 16, k = 5, refine = 20)
       .orderBy("query_id", "rk")
   }
@@ -3189,22 +3220,10 @@ object Queries {
     * the fitted centroid + codebook literals.
     */
   def annBatchPqr(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir)
-    val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
-    // m=8 x codes=256 (byte codes) is the REGISTERED default for the
-    // residual family — the round-12 operating-point study at 1M
-    // anisotropic vectors measured it at recall 0.862 (refine 25), the
-    // full-SQ8/IVF-ceiling parity point, vs 0.688 for 8x16 at the SAME
-    // 8-byte code budget (PLANS.md round-12 table). The single-query
-    // ivfpq_residual runs at this same 8x256 point as the |Q| = 1
-    // batch — for both, the per-(query, cell) ADC tables ride as
-    // broadcast-side HOF columns, never plan literals, so code count
-    // doesn't inflate the plan (the round-8 janino lesson).
-    val model = Pq.trainResidualCached(dir, e, "embedding", "vec_id", index.centroids,
-      m = 8, codes = 256)
-    OracleArtifacts.annBatchPqr = Some((index.centroids, model))
-    val path = graft.operators.LayoutCache.getOrWrite(s"ivfpqres_full:$dir")(p =>
-      Pq.writeIvfPqResidual(p, e, "embedding", "vec_id", index.centroids, model))
+    val index = ivfIndex(s, dir)._1
+    val model = pqResidualFit(s, dir, index)
+    val path = LayoutCache.getOrWrite(s"ivfpqres_full:$dir")(p =>
+      Pq.writeIvfPqResidual(p, embs(s, dir), "embedding", "vec_id", index.centroids, model))
     batchPqProbe(s, dir, path, index.centroids, model)
   }
 
@@ -3219,14 +3238,11 @@ object Queries {
     */
   def annBatchBqRotated(s: SparkSession, dir: String): DataFrame = {
     val e = embs(s, dir)
-    val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
-    OracleArtifacts.annBatchBqr = Some(index.centroids)
-    val rot = graft.operators.Bq.rotationMatrix(64, seed = 7L)
-    val path = graft.operators.LayoutCache.getOrWrite(s"ivfbqrot_full:$dir")(p =>
-      graft.operators.Bq.writeIvfBqRotated(p, e, "embedding", "vec_id", index.centroids, rot))
-    graft.operators.Bq.probeIvf(s, path, Some(e.select("vec_id", "embedding")),
-      Ann.queryCellsLocal(batchQueriesLocal(s, dir), "q_vec", "query_id", index.centroids,
-        nProbe = 3),
+    val index = ivfIndex(s, dir)._1
+    val rot = Bq.rotationMatrix(64, seed = 7L)
+    val path = LayoutCache.getOrWrite(s"ivfbqrot_full:$dir")(p =>
+      Bq.writeIvfBqRotated(p, e, "embedding", "vec_id", index.centroids, rot))
+    Bq.probeIvf(s, path, Some(e.select("vec_id", "embedding")), batchCells(s, dir, index.centroids),
       "q_vec", "vec_id", "embedding", rot = Some(rot), k = 5, refine = 20)
       .orderBy("query_id", "rk")
   }
@@ -3247,12 +3263,10 @@ object Queries {
   def annTwoLevel(s: SparkSession, dir: String): DataFrame = {
     val (index, two) = Ann.buildTwoLevelCached(dir + "#2l", embs(s, dir),
       "embedding", "vec_id", k = 10, seed = 42)
-    val path = graft.operators.LayoutCache.getOrWrite(s"ann2l:$dir")(p =>
-      Ann.writeIndex(index, p))
-    val cells = Ann.nearestCells(index.centroids, queryVecArr(s, dir), nProbe = 3)
+    val path = LayoutCache.getOrWrite(s"ann2l:$dir")(p => Ann.writeIndex(index, p))
+    val cells = probeCells(index.centroids, queryVecLocal(s, dir))
     OracleArtifacts.annTwoLevel = Some((two, cells))
-    Ann.probe(Ann.liveLayout(s, path, "vec_id"), queryVecLocal(s, dir), "q_vec", "embedding",
-      "vec_id", topK = 10, cells = cells)
+    liveProbe(s, path, queryVecLocal(s, dir), topK = 10, cells)
   }
 
   /** THE FLAGSHIP COMPOSITION — the full 10^9-vector serving path as
@@ -3296,15 +3310,9 @@ object Queries {
     * label join + filter before the per-query ranking window.
     */
   def annBatchFiltered(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir)
-    val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
-    OracleArtifacts.annBatchFiltered = Some(index.centroids)
-    val path = graft.operators.LayoutCache.getOrWrite(s"annidx_full:$dir")(p =>
-      Ann.writeIndex(index, p))
-    val qCells = Ann.queryCellsLocal(batchQueriesLocal(s, dir),
-      "q_vec", "query_id", index.centroids, nProbe = 3)
-    Ann.probe(Ann.liveLayout(s, path, "vec_id"), qCells, "q_vec", "embedding", "vec_id",
-      topK = 5, prefilter = Some(col("label").isin(2, 5)), keep = Seq("label"))
+    val index = ivfIndex(s, dir)._1
+    liveProbe(s, annFullLayout(s, dir), batchCells(s, dir, index.centroids), topK = 5,
+      labeled = true)
       .orderBy("query_id", "rk")
   }
 
@@ -3327,24 +3335,33 @@ object Queries {
     * its probe.
     */
   private def twoLevelLifecycleLayout(s: SparkSession, dir: String)
-      : (Ann.TwoLevel, Pq.Model, Array[Array[Double]], String) = {
-    val all = embs(s, dir)
-    val base = all.filter(col("vec_id") % 10 =!= 7)
+      : (Pq.Model, Array[Array[Double]], String) = {
+    val (cents, two, model) = twoLevelBaseFit(s, dir)
+    val path = LayoutCache.getOrWrite(s"ann2lpqr_life:$dir") { p =>
+      Pq.writeIvfPqResidualAssigned(p, Ann.assignTwoLevel(lifecycleBase(s, dir), "embedding", two),
+        "embedding", "vec_id", cents, model)
+      Pq.appendIvfPqResidualAssigned(p,
+        Ann.assignTwoLevel(embs(s, dir).filter(deltaRows), "embedding", two),
+        "embedding", "vec_id", cents, model)
+      Pq.deleteFromIndex(s, p, tombstones(s, dir), "vec_id")
+    }
+    (model, cents, path)
+  }
+
+  /** The two-level hierarchy and residual codebooks fitted on the
+    * lifecycle base subset (memoized) — the build-time artifacts every
+    * two-level maintenance key reuses — stashed once for their twins;
+    * returns (flat centroids, hierarchy, model).
+    */
+  private def twoLevelBaseFit(s: SparkSession, dir: String)
+      : (Array[Array[Double]], Ann.TwoLevel, Pq.Model) = {
+    val base = lifecycleBase(s, dir)
     val (index, two) = Ann.buildTwoLevelCached(dir + "#2l-base", base,
       "embedding", "vec_id", k = 10, seed = 42)
     val model = Pq.trainResidualCached(dir + "#2l-base", base, "embedding", "vec_id",
       index.centroids, m = 8, codes = 256)
-    val path = graft.operators.LayoutCache.getOrWrite(s"ann2lpqr_life:$dir") { p =>
-      Pq.writeIvfPqResidualAssigned(p, Ann.assignTwoLevel(base, "embedding", two),
-        "embedding", "vec_id", index.centroids, model)
-      Pq.appendIvfPqResidualAssigned(p,
-        Ann.assignTwoLevel(all.filter(col("vec_id") % 10 === 7), "embedding", two),
-        "embedding", "vec_id", index.centroids, model)
-      Pq.deleteFromIndex(s, p,
-        all.filter(col("vec_id") % 10 === 3).select("vec_id"), "vec_id")
-    }
-    OracleArtifacts.annTwoLevelLife = Some((two, model))
-    (two, model, index.centroids, path)
+    OracleArtifacts.twoLevelBase = Some((two, model))
+    (index.centroids, two, model)
   }
 
   /** The 8-query batch over a persisted IVF-PQ layout (global or
@@ -3354,8 +3371,7 @@ object Queries {
     */
   private def batchPqProbe(s: SparkSession, dir: String, path: String,
       cents: Array[Array[Double]], model: Pq.Model): DataFrame =
-    Pq.probeIvf(s, path, cents, model,
-      Ann.queryCellsLocal(batchQueriesLocal(s, dir), "q_vec", "query_id", cents, nProbe = 3),
+    Pq.probeIvf(s, path, cents, model, batchCells(s, dir, cents),
       "q_vec", "embedding", "vec_id", nProbe = 3, k = 5, refineFactor = 10)
       .drop("adc_dist")
       .orderBy("query_id", "rk")
@@ -3372,20 +3388,14 @@ object Queries {
     * exactly that (no deletes in this scenario).
     */
   def streamAnn2l(s: SparkSession, dir: String): DataFrame = {
-    val all = embs(s, dir)
-    val base = all.filter(col("vec_id") % 10 =!= 7)
-    val (index, two) = Ann.buildTwoLevelCached(dir + "#2l-base", base,
-      "embedding", "vec_id", k = 10, seed = 42)
-    val model = Pq.trainResidualCached(dir + "#2l-base", base, "embedding", "vec_id",
-      index.centroids, m = 8, codes = 256)
-    val path = graft.operators.LayoutCache.getOrWrite(s"ann2lpqr_stream:$dir") { p =>
-      Pq.writeIvfPqResidualAssigned(p, Ann.assignTwoLevel(base, "embedding", two),
-        "embedding", "vec_id", index.centroids, model)
+    val (cents, two, model) = twoLevelBaseFit(s, dir)
+    val path = LayoutCache.getOrWrite(s"ann2lpqr_stream:$dir") { p =>
+      Pq.writeIvfPqResidualAssigned(p, Ann.assignTwoLevel(lifecycleBase(s, dir), "embedding", two),
+        "embedding", "vec_id", cents, model)
       graft.streaming.StreamPipeline.appendToIvfPqResidualIndex(s, dir, p, two,
-        index.centroids, model, deltaFilter = col("vec_id") % 10 === 7)
+        cents, model, deltaFilter = deltaRows)
     }
-    OracleArtifacts.annTwoLevelStream = Some((two, model))
-    batchPqProbe(s, dir, path, index.centroids, model)
+    batchPqProbe(s, dir, path, cents, model)
   }
 
   /** LIVE probe of the maintained two-level residual layout: base +
@@ -3399,7 +3409,7 @@ object Queries {
     * visibility through the serving path at once.
     */
   def annTwoLevelLive(s: SparkSession, dir: String): DataFrame = {
-    val (_, model, cents, path) = twoLevelLifecycleLayout(s, dir)
+    val (model, cents, path) = twoLevelLifecycleLayout(s, dir)
     batchPqProbe(s, dir, path, cents, model)
   }
 
@@ -3412,8 +3422,8 @@ object Queries {
     * left to pay) must equal the live probe — both share one twin.
     */
   def annTwoLevelCompacted(s: SparkSession, dir: String): DataFrame = {
-    val (_, model, cents, path) = twoLevelLifecycleLayout(s, dir)
-    val compacted = graft.operators.LayoutCache.getOrWrite(s"ann2lpqr_life_compact:$dir")(
+    val (model, cents, path) = twoLevelLifecycleLayout(s, dir)
+    val compacted = LayoutCache.getOrWrite(s"ann2lpqr_life_compact:$dir")(
       p => Pq.compact(s, path, p, "vec_id"))
     batchPqProbe(s, dir, compacted, cents, model)
   }
@@ -3426,20 +3436,14 @@ object Queries {
     * train + one layout write.
     */
   def ivfpqProbe(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir)
-    val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
-    val model = Pq.trainCached(dir, e, "embedding", "vec_id", m = 8, codes = 16)
-    val qDf = queryVecLocal(s, dir)
+    val index = ivfIndex(s, dir)._1
+    val model = pqFit(s, dir)
     // distinct key from annBatchPq's layout: this corpus excludes the
     // query vector (vec_id != 0)
-    val path = graft.operators.LayoutCache.getOrWrite(s"ivfpq_no_qvec:$dir")(p =>
-      Pq.writeIvfPq(p, e.filter(col("vec_id") =!= 0), "embedding", "vec_id",
+    val path = LayoutCache.getOrWrite(s"ivfpq_no_qvec:$dir")(p =>
+      Pq.writeIvfPq(p, embs(s, dir).filter(col("vec_id") =!= 0), "embedding", "vec_id",
         index.centroids, model))
-    val qv = queryVecArr(s, dir)
-    OracleArtifacts.ivfpq = Some(
-      (index.centroids, Ann.nearestCells(index.centroids, qv, 3), model,
-        Pq.distanceTable(model, qv)))
-    Pq.probeIvf(s, path, index.centroids, model, qDf, "q_vec", "embedding", "vec_id",
+    Pq.probeIvf(s, path, index.centroids, model, queryVecLocal(s, dir), "q_vec", "embedding", "vec_id",
       nProbe = 3, k = 10)
       .select("vec_id", "cos_sim")
   }
@@ -3458,30 +3462,17 @@ object Queries {
     * of the top 100.
     */
   def ivfpqResidual(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir)
-    val index = Ann.buildCached(dir, e, "embedding", "vec_id", k = 10, seed = 42)
-    // registered at the PRODUCTION operating point m=8 × codes=256
-    // (round-12 study: recall 0.862 vs 0.688 for 8×16 at the same
-    // 8-byte budget, PLANS.md) — possible because Pq.probeIvf runs a
-    // residual single query as the |Q| = 1 batch: the per-cell ADC
-    // tables ride as broadcast-side HOF columns, never plan literals,
-    // so code count does not inflate the plan (the round-8 janino
-    // lesson).
-    val model = Pq.trainResidualCached(dir, e, "embedding", "vec_id", index.centroids,
-      m = 8, codes = 256)
-    val path = graft.operators.LayoutCache.getOrWrite(s"ivfpqres256_no_qvec:$dir")(p =>
-      Pq.writeIvfPqResidual(p, e.filter(col("vec_id") =!= 0), "embedding", "vec_id",
+    val index = ivfIndex(s, dir)._1
+    val model = pqResidualFit(s, dir, index)
+    val path = LayoutCache.getOrWrite(s"ivfpqres256_no_qvec:$dir")(p =>
+      Pq.writeIvfPqResidual(p, embs(s, dir).filter(col("vec_id") =!= 0), "embedding", "vec_id",
         index.centroids, model))
-    val qv = queryVecArr(s, dir)
-    val cells = Ann.nearestCells(index.centroids, qv, 3)
-    OracleArtifacts.ivfpqResidual = Some((index.centroids, cells, model))
     Pq.probeIvf(s, path, index.centroids, model, queryVecLocal(s, dir),
       "q_vec", "embedding", "vec_id", nProbe = 3, k = 10, refineFactor = 10)
       .select(col("vec_id"), col("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
   }
 
-  /** Single-row ANN quality report: probe recall@10 vs exact top-10. */
   /** The nProbe TUNING CURVE over the cached IVF index: recall@10 for
     * nProbe 1..5 against the exact top-10 — the table a team reads to
     * pick the recall/cost point before deploying an index
@@ -3493,18 +3484,13 @@ object Queries {
   def annRecallSweep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val q = queryVecLocal(s, dir)
-    val index = Ann.buildCached(dir, embs(s, dir), "embedding", "vec_id", k = 10, seed = 42)
-    val qv = Ann.queryVector(q, "q_vec")
-    val cells5 = Ann.nearestCells(index.centroids, qv, nProbe = 5)
-    OracleArtifacts.annSweep = Some((index.centroids, cells5))
+    val (index, cells5) = ivfIndex(s, dir, nProbe = 5)
     val exact = Ann.exact(embs(s, dir), q, "embedding", "q_vec", "vec_id", topK = 10)
       .select("vec_id")
     (1 to 5).map { n =>
       val probe = Ann.probe(index.assigned, q, "q_vec", index.vecCol, index.idCol, topK = 10,
         cells = cells5.take(n)).select("vec_id")
-      val hits = exact.join(probe, Seq("vec_id"), "left_semi").count()
-      (10L, n.toLong,
-        BigDecimal(hits.toDouble / 10.0).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      (10L, n.toLong, recallAt10(exact, probe))
     }.toDF("top_k", "n_probe", "recall").orderBy("n_probe")
   }
 
@@ -3516,31 +3502,26 @@ object Queries {
     */
   def bqRecallSweep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val corpus = embs(s, dir).filter(col("vec_id") =!= 0).select("vec_id", "embedding")
+    val corpus = probeCorpus(s, dir)
     val q = queryVecLocal(s, dir)
     val exact = Search.knnTopK(corpus, q, "embedding", "q_vec", "vec_id", 10)
       .select("vec_id")
     Seq(10, 20, 40, 80).map { refine =>
-      val probe = graft.operators.Bq
-        .probe(corpus, q, "embedding", "q_vec", "vec_id", k = 10, refine = refine)
+      val probe = Bq.probe(corpus, q, "embedding", "q_vec", "vec_id", k = 10, refine = refine)
         .select("vec_id")
-      val hits = exact.join(probe, Seq("vec_id"), "left_semi").count()
-      (10L, refine.toLong,
-        BigDecimal(hits.toDouble / 10.0).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      (10L, refine.toLong, recallAt10(exact, probe))
     }.toDF("top_k", "refine", "recall").orderBy("refine")
   }
 
+  /** Single-row ANN quality report: probe recall@10 vs exact top-10. */
   def annRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val q = queryVecLocal(s, dir)
-    val (index, cells) = annIndexAndCells(s, dir)
+    val (index, cells) = ivfIndex(s, dir)
     val probe = Ann.probe(index.assigned, q, "q_vec", index.vecCol, index.idCol, topK = 10,
       cells = cells).select("vec_id")
     val exact = Ann.exact(embs(s, dir), q, "embedding", "q_vec", "vec_id", topK = 10)
       .select("vec_id")
-    val hits = exact.join(probe, Seq("vec_id"), "left_semi").count()
-    val recall = BigDecimal(hits.toDouble / 10.0)
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    Seq((10L, 3L, recall)).toDF("top_k", "n_probe", "recall")
+    Seq((10L, 3L, recallAt10(exact, probe))).toDF("top_k", "n_probe", "recall")
   }
 }

@@ -24,6 +24,29 @@ object Verify {
     if (i >= 0) i else slowFirst.size
   }
 
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in builder-authored SQL would otherwise make the
+  // driver's json.load fail and silently zero the round's correctness.
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The oracle_sql.json body: every twin, or with a query-name filter
+    * only the selected keys' twins (a selected key whose query failed
+    * keeps its twin, so the gate reports its output missing).
+    */
+  private[graft] def oracleJson(only: Option[Set[String]]): String = {
+    val all = SparkEntry.oracleSql
+    only.fold(all)(keys => all.filter { case (k, _) => keys.contains(k) })
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (local
     // iteration only — the driver always passes exactly two)
@@ -66,21 +89,7 @@ object Verify {
     }
     futures.foreach(_.get())
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(only))
 
     // Determinism self-hash for the rows-only class (queries with no
     // SQL-expressible twin — softmax/layernorm/recursive-merge): the

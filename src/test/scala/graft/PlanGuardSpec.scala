@@ -19,7 +19,7 @@ import graft.plans.GraftFunctions
   */
 class PlanGuardSpec extends SparkSpec {
 
-  import PlanGuardSpec.{counts, signals, snapDir}
+  import PlanGuardSpec.{counts, fittedTwinned, signals, snapDir}
 
   test("plans_baseline snapshots exist for every registered query") {
     assert(Files.isDirectory(snapDir),
@@ -53,26 +53,23 @@ class PlanGuardSpec extends SparkSpec {
     // the transformer-transcendental class (softmax/layernorm/erf — no
     // bit-exact SQL) remains rows-only.
     val rowsOnly = Set("embed_encoder", "embed_encoder_mh", "rerank_cross")
-    // twinned at RUNTIME via OracleArtifacts fitted-constant literals
-    // (OracleSql.dynamic is empty until the query has run) — every new
-    // fitted-model query must be consciously added here or to the
-    // static map; that forced decision is this test's purpose
-    val fittedTwinned = Set(
-      "ann_probe", "ann_recall", "ann_recall_sweep", "ann_stats",
-      "ann_incremental", "ann_deleted", "ann_compacted", "ann_filtered",
-      "ann_batch_probe", "ann_batch_persisted", "ann_batch_filtered", "ann_batch_pq", "ann_batch_sq",
-      "ann_batch_mrl", "ann_batch_pqr", "ann_batch_bq_rotated", "ann_two_level",
-      "ann_two_level_pqr", "ann_two_level_live", "ann_two_level_compacted", "stream_ann_2l",
-      "ivfpq_probe", "ivfpq_residual", "ivfsq_probe", "ivfsq_residual", "ivfbq_probe", "ivfmrl_probe",
-      "pq_probe", "pca_probe", "cluster_topics", "semdedup",
-      "hybrid_indexed", "retrieval_eval", "retrieval_eval_clusters",
-      "stream_pipeline", "stream_ann")
     val untwinned =
       SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- rowsOnly -- fittedTwinned
     assert(untwinned.isEmpty,
       s"queries missing an OracleSql twin (add it, declare fitted, or document rows-only): ${untwinned.toSeq.sorted.mkString(", ")}")
     val staleRowsOnly = rowsOnly.filter(SparkEntry.oracleSql.contains)
     assert(staleRowsOnly.isEmpty, s"rows-only keys that now HAVE twins: ${staleRowsOnly.mkString(", ")}")
+  }
+
+  // OracleArtifacts holds one stash per FIT, shared by every key on
+  // that fit: each fitted key must still write the stash its own twin
+  // is built from when it runs alone
+  fittedTwinned.toSeq.sorted.foreach { name =>
+    test(s"fitted twin emitted by its own key: $name") {
+      OracleArtifacts.clear()
+      SparkEntry.queries(name)(spark, sf)
+      assert(OracleSql.dynamic.keySet.contains(name), s"$name ran alone but OracleSql.dynamic has no twin for it")
+    }
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -96,6 +93,21 @@ class PlanGuardSpec extends SparkSpec {
 
 object PlanGuardSpec {
   val snapDir = Paths.get("plans_baseline")
+
+  // twinned at RUNTIME via OracleArtifacts fitted-constant literals
+  // (OracleSql.dynamic is empty until the query has run) — every new
+  // fitted-model query must be consciously added here or to the
+  // static map; that forced decision is this test's purpose
+  val fittedTwinned: Set[String] = Set(
+    "ann_probe", "ann_recall", "ann_recall_sweep", "ann_stats",
+    "ann_incremental", "ann_deleted", "ann_compacted", "ann_filtered",
+    "ann_batch_probe", "ann_batch_persisted", "ann_batch_filtered", "ann_batch_pq", "ann_batch_sq",
+    "ann_batch_mrl", "ann_batch_pqr", "ann_batch_bq_rotated", "ann_two_level",
+    "ann_two_level_pqr", "ann_two_level_live", "ann_two_level_compacted", "stream_ann_2l",
+    "ivfpq_probe", "ivfpq_residual", "ivfsq_probe", "ivfsq_residual", "ivfbq_probe", "ivfmrl_probe",
+    "pq_probe", "pca_probe", "cluster_topics", "semdedup",
+    "hybrid_indexed", "retrieval_eval", "retrieval_eval_clusters",
+    "stream_pipeline", "stream_ann")
 
   // (signal, pattern, moreIsWorse) — mirror of tools/diff_plans.py SIGNALS
   val signals: Seq[(String, scala.util.matching.Regex, Boolean)] = Seq(
