@@ -3223,7 +3223,7 @@ object Queries {
     val index = ivfIndex(s, dir)._1
     val model = pqResidualFit(s, dir, index)
     val path = LayoutCache.getOrWrite(s"ivfpqres_full:$dir")(p =>
-      Pq.writeIvfPqResidual(p, embs(s, dir), "embedding", "vec_id", index.centroids, model))
+      Pq.writeIvfPq(p, embs(s, dir), "embedding", "vec_id", index.centroids, model))
     batchPqProbe(s, dir, path, index.centroids, model)
   }
 
@@ -3241,7 +3241,7 @@ object Queries {
     val index = ivfIndex(s, dir)._1
     val rot = Bq.rotationMatrix(64, seed = 7L)
     val path = LayoutCache.getOrWrite(s"ivfbqrot_full:$dir")(p =>
-      Bq.writeIvfBqRotated(p, e, "embedding", "vec_id", index.centroids, rot))
+      Bq.writeIvfBq(p, e, "embedding", "vec_id", index.centroids, Some(rot)))
     Bq.probeIvf(s, path, Some(e.select("vec_id", "embedding")), batchCells(s, dir, index.centroids),
       "q_vec", "vec_id", "embedding", rot = Some(rot), k = 5, refine = 20)
       .orderBy("query_id", "rk")
@@ -3343,7 +3343,7 @@ object Queries {
       Pq.appendIvfPqResidualAssigned(p,
         Ann.assignTwoLevel(embs(s, dir).filter(deltaRows), "embedding", two),
         "embedding", "vec_id", cents, model)
-      Pq.deleteFromIndex(s, p, tombstones(s, dir), "vec_id")
+      Ann.deleteFromIndex(s, p, tombstones(s, dir), "vec_id")
     }
     (model, cents, path)
   }
@@ -3416,7 +3416,7 @@ object Queries {
   /** COMPACTION closes the flagship lifecycle triangle: the tombstoned
     * delta-carrying layout from [[annTwoLevelLive]]'s scenario is
     * rewritten live-only into a fresh clustered layout
-    * ([[graft.operators.Pq.compact]] — delta files folded to one file
+    * ([[graft.operators.Ann.compact]] — delta files folded to one file
     * set per cluster, sidecar cleared, codes ride the rewrite so
     * nothing re-encodes), and the PLAIN probe over it (no anti-join
     * left to pay) must equal the live probe — both share one twin.
@@ -3424,7 +3424,7 @@ object Queries {
   def annTwoLevelCompacted(s: SparkSession, dir: String): DataFrame = {
     val (model, cents, path) = twoLevelLifecycleLayout(s, dir)
     val compacted = LayoutCache.getOrWrite(s"ann2lpqr_life_compact:$dir")(
-      p => Pq.compact(s, path, p, "vec_id"))
+      p => Ann.compact(s, path, p, "vec_id"))
     batchPqProbe(s, dir, compacted, cents, model)
   }
 
@@ -3449,7 +3449,7 @@ object Queries {
   }
 
   /** RESIDUAL IVF-PQ probe — FAISS's actual IVF,PQ form
-    * ([[graft.operators.Pq.writeIvfPqResidual]]/
+    * ([[graft.operators.Pq.writeIvfPq]] with the residual model /
     * [[graft.operators.Pq.probeIvf]]; reference:
     * store.py:274's IVF_PQ index type): codebooks train on
     * normalize(v) − centroid[cell] residuals, so the 16 codes per
@@ -3465,7 +3465,7 @@ object Queries {
     val index = ivfIndex(s, dir)._1
     val model = pqResidualFit(s, dir, index)
     val path = LayoutCache.getOrWrite(s"ivfpqres256_no_qvec:$dir")(p =>
-      Pq.writeIvfPqResidual(p, embs(s, dir).filter(col("vec_id") =!= 0), "embedding", "vec_id",
+      Pq.writeIvfPq(p, embs(s, dir).filter(col("vec_id") =!= 0), "embedding", "vec_id",
         index.centroids, model))
     Pq.probeIvf(s, path, index.centroids, model, queryVecLocal(s, dir),
       "q_vec", "embedding", "vec_id", nProbe = 3, k = 10, refineFactor = 10)

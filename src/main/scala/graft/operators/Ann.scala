@@ -373,10 +373,11 @@ object Ann extends IndexMaintenance {
     * (full [[build]]) only when drift degrades recall — see
     * [[assignmentCost]]. Layouts built by [[buildTwoLevel]] must append
     * through [[appendToIndexTwoLevel]] instead, so delta assignment
-    * matches the base corpus's hierarchical assignment.
+    * matches the base corpus's hierarchical assignment. The delta lands
+    * with the layout's columns ([[appendRows]]).
     */
   def appendToIndex(path: String, delta: DataFrame, vecCol: String, centroids: Array[Array[Double]]): Unit =
-    writeClustered(assign(delta, vecCol, centroids), path, "append")
+    writeClustered(assign(appendRows(path, delta), vecCol, centroids), path, "append")
 
   /** [[appendToIndex]] for a layout whose base corpus was assigned by
     * [[buildTwoLevel]]: deltas route through the SAME hierarchical
@@ -389,22 +390,41 @@ object Ann extends IndexMaintenance {
     * vector lands in the base vector's cluster by construction.
     */
   def appendToIndexTwoLevel(path: String, delta: DataFrame, vecCol: String, two: TwoLevel): Unit =
-    writeClustered(assignTwoLevel(delta, vecCol, two), path, "append")
+    writeClustered(assignTwoLevel(appendRows(path, delta), vecCol, two), path, "append")
 
-  /** DELETE maintenance for a persisted layout: the shared tombstone
-    * sidecar shape ([[IndexMaintenance]]) — the exact analog of the
-    * ChunkStore's tombstone segments.
+  /** `delta` narrowed to the data columns of the layout at `path` (its
+    * footer schema; the partition column is not in a data file), in the
+    * layout's order, so every data file of a layout has one schema (the
+    * layout's read schema comes from the footer of its first file). A
+    * delta missing one of them fails here, naming it; a layout with no
+    * data file yet takes the delta as it comes.
+    */
+  private def appendRows(path: String, delta: DataFrame): DataFrame =
+    LayoutCache.footerSchema(delta.sparkSession, path).fold(delta) { schema =>
+      val cols = schema.fieldNames.toSeq
+      cols.find(c => !delta.columns.contains(c)).foreach { c =>
+        throw new IllegalArgumentException(
+          s"append to $path: the delta has no column `$c` (layout columns: ${cols.mkString(", ")})")
+      }
+      delta.select(cols.map(col): _*)
+    }
+
+  /** DELETE maintenance for a persisted clustered layout of any vector
+    * family: the shared tombstone sidecar shape ([[IndexMaintenance]]) —
+    * the exact analog of the ChunkStore's tombstone segments.
     */
   def deleteFromIndex(spark: SparkSession, path: String, ids: DataFrame, idCol: String): Unit =
     appendTombstones(ids.select(idCol).distinct(), path)
 
-  /** COMPACTION — the third maintenance verb after append and delete:
-    * rewrite the LIVE rows (tombstones dropped, delta files folded back
-    * into one file set per cluster, sidecar cleared) into a fresh
-    * partitioned layout, from the index itself — the vectors ride the
-    * layout, so no corpus re-read, and the scan stays cluster-pruned.
-    * Probes over the compacted layout equal the tombstone-anti-joined
-    * live probe bit-for-bit (pinned in AnnSpec).
+  /** COMPACTION — the third maintenance verb after append and delete,
+    * for a persisted clustered layout of any vector family (IVF, SQ,
+    * MRL, BQ, PQ): rewrite the LIVE rows (tombstones dropped, delta
+    * files folded back into one file set per cluster, sidecar cleared)
+    * into a fresh partitioned layout, from the index itself — vectors
+    * and codes ride the layout, so no corpus re-read and no re-encode,
+    * and the scan stays cluster-pruned. Probes over the compacted
+    * layout equal the live probe of the tombstoned one bit-for-bit
+    * (pinned in AnnSpec and, per family, ProbeFoldSpec).
     */
   def compact(spark: SparkSession, path: String, outPath: String, idCol: String): Unit = {
     requireSeparateDir("Ann", path, outPath)

@@ -84,6 +84,17 @@ object Bq extends IndexMaintenance {
     * cluster — 8 bytes per 64 dims plus the partition key; the probe
     * compounds partition pruning with the popcount scan. Full vectors
     * stay in the base table.
+    *
+    * `rot` packs the ROTATED sign bits ([[rotateCol]]): cluster
+    * assignment stays in the ORIGINAL space (same fitted centroids and
+    * partition pruning); only the packed words change — the layout
+    * [[probeIvf]] reads with the same `rot`.
+    *
+    * `inlineVectors = true` stores the full vector next to the packed
+    * words — the bytes-vs-jobs dial (see [[Sq.writeIvfSq]]): the layout
+    * grows from 1/32 to ~1.03× the vector bytes; the batch probe drops
+    * the base-table refine join (single scan, ≤4 warm jobs —
+    * ProbeJobCountSpec).
     */
   def writeIvfBq(
       path: String,
@@ -91,12 +102,18 @@ object Bq extends IndexMaintenance {
       vecCol: String,
       idCol: String,
       centroids: Array[Array[Double]],
-      dim: Int = 64): Unit =
+      rot: Option[Array[Array[Double]]] = None,
+      dim: Int = 64,
+      inlineVectors: Boolean = false): Unit = {
+    val assigned = Ann.assign(df, vecCol, centroids)
+    // unrotated, the words pack the vector column itself (no `_rv` alias)
     writeClustered(
-      pack(Ann.assign(df, vecCol, centroids), vecCol, dim = dim)
+      rot.fold(pack(assigned, vecCol, dim = dim))(_ => packed(assigned, vecCol, "bq_w", rot, dim))
         .select(col(idCol) +: col("cluster") +:
-          (0 until nWords(dim)).map(w => col(s"bq_w$w")): _*),
+          ((0 until nWords(dim)).map(w => col(s"bq_w$w")) ++
+            (if (inlineVectors) Seq(col(vecCol)) else Nil)): _*),
       path, "overwrite")
+  }
 
   /** Exact top-k via hamming-candidate scan + cosine re-rank: scan
     * the packed codes for the `refine` hamming-nearest candidates
@@ -211,41 +228,15 @@ object Bq extends IndexMaintenance {
     Some(Ann.Shortlist("hamming", hammingExpr("bq_w", "_qw", dim), ascending = true,
       refine, base))
 
-  /** Persisted IVF+BQ layout over ROTATED sign bits: cluster assignment
-    * stays in the ORIGINAL space (same fitted centroids and partition
-    * pruning as [[writeIvfBq]]); only the packed words change.
-    *
-    * `inlineVectors = true` stores the full vector next to the packed
-    * words — the bytes-vs-jobs dial (see [[Sq.writeIvfSq]]): the layout
-    * grows from 1/32 to ~1.03× the vector bytes; the batch probe drops
-    * the base-table refine join (single scan, ≤4 warm jobs —
-    * ProbeJobCountSpec).
-    */
-  def writeIvfBqRotated(
-      path: String,
-      df: DataFrame,
-      vecCol: String,
-      idCol: String,
-      centroids: Array[Array[Double]],
-      rot: Array[Array[Double]],
-      dim: Int = 64,
-      inlineVectors: Boolean = false): Unit =
-    writeClustered(
-      packed(Ann.assign(df, vecCol, centroids), vecCol, "bq_w", Some(rot), dim)
-        .select(col(idCol) +: col("cluster") +:
-          ((0 until nWords(dim)).map(w => col(s"bq_w$w")) ++
-            (if (inlineVectors) Seq(col(vecCol)) else Nil)): _*),
-      path, "overwrite")
-
   /** Probe a persisted IVF+BQ layout ([[Ann.probe]]'s single/batch
     * contract): the cell-pruned scan reads the packed sign words (1/32
     * of the float32 bytes), XOR+popcount hamming against each query's
     * pack cuts to `refine` candidates (ties by id), and the exact
     * cosine re-rank reads the vectors from `base` by id (None: the
     * layout was written with `inlineVectors = true`). `rot` serves a
-    * [[writeIvfBqRotated]] layout: cells still come from the ORIGINAL
-    * query, only the query's pack is rotated — computed once per query
-    * row on the broadcast side with the same [[rotateCol]] /
+    * layout [[writeIvfBq]] packed with it: cells still come from the
+    * ORIGINAL query, only the query's pack is rotated — computed once
+    * per query row on the broadcast side with the same [[rotateCol]] /
     * [[packWordExpr]] chain the write used. Rotation preserves cosine,
     * so the re-rank column is bit-identical to the plain probes'.
     */

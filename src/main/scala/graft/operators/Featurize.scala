@@ -255,6 +255,40 @@ object Featurize {
     }
   }
 
+  /** The subword-id routine every encoder and cross scorer session
+    * shares: the lowercased text's pretoken words, each BPE-merged with
+    * the checked-in merges (the `bpe_tokens` tokenizer) and its subwords
+    * hashed to `floorMod(String.hashCode, vocab)` (stable across JVMs by
+    * spec), at most `cap` ids. Call once per session: the word → ids
+    * memo it holds is that session's. The BPE merge loop is the
+    * dominant per-token cost and natural corpora repeat words heavily
+    * (measured ~2× on the template-heavy test corpus); the memo is
+    * bounded so an adversarial all-unique stream cannot grow it
+    * without limit.
+    */
+  private def subwordIds(vocab: Int): (String, Int) => Array[Int] = {
+    val merges = Bpe.merges // classpath artifact, loaded once
+    val pretoken = java.util.regex.Pattern.compile(Bpe.PretokenRegex)
+    val memo = new java.util.HashMap[String, Array[Int]]()
+    val memoCap = 1 << 17
+    (text, cap) => {
+      val ids = Array.newBuilder[Int]
+      var n = 0
+      val m = pretoken.matcher(text.toLowerCase)
+      while (m.find() && n < cap) {
+        val w = m.group()
+        var wids = memo.get(w)
+        if (wids == null) {
+          wids = Bpe.encodeWord(w, merges).map(s => java.lang.Math.floorMod(s.hashCode, vocab))
+          if (memo.size < memoCap) memo.put(w, wids)
+        }
+        var i = 0
+        while (i < wids.length && n < cap) { ids += wids(i); n += 1; i += 1 }
+      }
+      ids.result()
+    }
+  }
+
   /** Token-SEQUENCE encoder factory over the checked-in
     * `graft/embed_encoder.onnx` ([[graft.functions.OnnxFixture.encoderGraph]]):
     * the reference embedder's real pipeline shape (embedder.py:21-60 —
@@ -275,37 +309,14 @@ object Featurize {
       outDims: Int = graft.functions.OnnxFixture.HeadDims
   ): () => String => Array[Double] = () => {
     val session = graft.functions.OnnxMini.load(resource) // once per partition
-    val merges = Bpe.merges // classpath artifact, loaded once
-    val vocab = graft.functions.OnnxFixture.VocabSize
-    val pretoken = java.util.regex.Pattern.compile(Bpe.PretokenRegex)
-    // word → ids memo, per partition-session: the BPE merge loop is the
-    // dominant per-token cost and natural corpora repeat words heavily
-    // (measured ~2× on the template-heavy test corpus). Bounded so an
-    // adversarial all-unique stream cannot grow it without limit.
-    val memo = new java.util.HashMap[String, Array[Double]]()
-    val memoCap = 1 << 17
+    val idsOf = subwordIds(graft.functions.OnnxFixture.VocabSize)
     text => {
-      val ids = Array.newBuilder[Double]
-      var n = 0
-      val m = pretoken.matcher(text.toLowerCase)
-      while (m.find() && n < maxLen) {
-        val w = m.group()
-        var wids = memo.get(w)
-        if (wids == null) {
-          wids = Bpe.encodeWord(w, merges)
-            .map(s => java.lang.Math.floorMod(s.hashCode, vocab).toDouble)
-          if (memo.size < memoCap) memo.put(w, wids)
-        }
-        var i = 0
-        while (i < wids.length && n < maxLen) {
-          ids += wids(i)
-          n += 1; i += 1
-        }
-      }
+      val ids = idsOf(text, maxLen).map(_.toDouble)
+      val n = ids.length
       if (n == 0) new Array[Double](outDims)
       else {
         val out = graft.functions.OnnxMini.run2d(
-          session, graft.functions.OnnxMini.Mat(n, 1, ids.result())).data
+          session, graft.functions.OnnxMini.Mat(n, 1, ids)).data
         val norm = math.sqrt(out.map(x => x * x).sum)
         if (norm > 0) out.map(_ / norm) else out
       }
@@ -329,31 +340,8 @@ object Featurize {
       maxLen: Int = 64
   ): () => String => Array[Double] = () => {
     val weights = graft.functions.QuantEncoder.loadFromOnnx(resource) // once per partition
-    val merges = Bpe.merges
-    val vocab = graft.functions.OnnxFixture.VocabSize
-    val pretoken = java.util.regex.Pattern.compile(Bpe.PretokenRegex)
-    val memo = new java.util.HashMap[String, Array[Int]]()
-    val memoCap = 1 << 17
-    text => {
-      val ids = Array.newBuilder[Int]
-      var n = 0
-      val m = pretoken.matcher(text.toLowerCase)
-      while (m.find() && n < maxLen) {
-        val w = m.group()
-        var wids = memo.get(w)
-        if (wids == null) {
-          wids = Bpe.encodeWord(w, merges)
-            .map(s => java.lang.Math.floorMod(s.hashCode, vocab))
-          if (memo.size < memoCap) memo.put(w, wids)
-        }
-        var i = 0
-        while (i < wids.length && n < maxLen) {
-          ids += wids(i)
-          n += 1; i += 1
-        }
-      }
-      graft.functions.QuantEncoder.encode(weights, ids.result())
-    }
+    val idsOf = subwordIds(graft.functions.OnnxFixture.VocabSize)
+    text => graft.functions.QuantEncoder.encode(weights, idsOf(text, maxLen))
   }
 
   /** CROSS-ENCODER scorer — (query, document) → one scalar relevance,
@@ -375,28 +363,8 @@ object Featurize {
       maxLen: Int = 64
   ): () => (String, String) => Double = () => {
     val session = graft.functions.OnnxMini.load(resource) // once per partition
-    val merges = Bpe.merges
-    val vocab = graft.functions.OnnxFixture.VocabSize - 1 // [SEP] reserved
-    val pretoken = java.util.regex.Pattern.compile(Bpe.PretokenRegex)
-    val memo = new java.util.HashMap[String, Array[Double]]()
-    val memoCap = 1 << 17
-    def idsOf(text: String, cap: Int): Array[Double] = {
-      val ids = Array.newBuilder[Double]
-      var n = 0
-      val m = pretoken.matcher(text.toLowerCase)
-      while (m.find() && n < cap) {
-        val w = m.group()
-        var wids = memo.get(w)
-        if (wids == null) {
-          wids = Bpe.encodeWord(w, merges)
-            .map(s => java.lang.Math.floorMod(s.hashCode, vocab).toDouble)
-          if (memo.size < memoCap) memo.put(w, wids)
-        }
-        var i = 0
-        while (i < wids.length && n < cap) { ids += wids(i); n += 1; i += 1 }
-      }
-      ids.result()
-    }
+    val subwords = subwordIds(graft.functions.OnnxFixture.VocabSize - 1) // [SEP] reserved
+    def idsOf(text: String, cap: Int): Array[Double] = subwords(text, cap).map(_.toDouble)
     (query, doc) => {
       val q = idsOf(query, maxLen / 4)
       val d = idsOf(doc, maxLen - q.length - 1)
@@ -423,28 +391,7 @@ object Featurize {
       maxLen: Int = 64
   ): () => (String, String) => Double = () => {
     val (weights, head) = graft.functions.QuantEncoder.loadCrossFromOnnx(resource)
-    val merges = Bpe.merges
-    val vocab = graft.functions.OnnxFixture.VocabSize - 1 // [SEP] reserved
-    val pretoken = java.util.regex.Pattern.compile(Bpe.PretokenRegex)
-    val memo = new java.util.HashMap[String, Array[Int]]()
-    val memoCap = 1 << 17
-    def idsOf(text: String, cap: Int): Array[Int] = {
-      val ids = Array.newBuilder[Int]
-      var n = 0
-      val m = pretoken.matcher(text.toLowerCase)
-      while (m.find() && n < cap) {
-        val w = m.group()
-        var wids = memo.get(w)
-        if (wids == null) {
-          wids = Bpe.encodeWord(w, merges)
-            .map(s => java.lang.Math.floorMod(s.hashCode, vocab))
-          if (memo.size < memoCap) memo.put(w, wids)
-        }
-        var i = 0
-        while (i < wids.length && n < cap) { ids += wids(i); n += 1; i += 1 }
-      }
-      ids.result()
-    }
+    val idsOf = subwordIds(graft.functions.OnnxFixture.VocabSize - 1) // [SEP] reserved
     (query, doc) => {
       val q = idsOf(query, maxLen / 4)
       val d = idsOf(doc, maxLen - q.length - 1)

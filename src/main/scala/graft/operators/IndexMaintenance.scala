@@ -6,7 +6,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 /** The shared maintenance contract of every persisted index family —
   * IVF vector layouts ([[Ann]], and the [[Pq]]/[[Sq]]/[[Bq]]/
   * [[Matryoshka]] compressed sidecars) and the BM25 postings layout
-  * ([[Fts]]). One lifecycle, four verbs, implemented ONCE:
+  * ([[Fts]]). One lifecycle, four verbs, implemented ONCE — the
+  * path-based delete and compact of every clustered vector layout are
+  * [[Ann.deleteFromIndex]] / [[Ann.compact]] over the primitives below
+  * (Fts's `Index`-typed verbs carry its stats, so they stay its own):
   *
   *  - '''write/append''' of a cluster-partitioned layout goes through
   *    [[writeClustered]]: a cluster-hash exchange BEFORE the
@@ -236,8 +239,8 @@ trait IndexMaintenance {
     *
     * Below both thresholds ingest pays NOTHING (two driver-side
     * metadata reads). Above either, the layout is compacted through
-    * the family's own `compactInto(srcDir, outDir)` (e.g.
-    * [[Ann.compact]], [[Pq.compact]] — already fenced) into a staging
+    * `compactInto(srcDir, outDir)` (for a clustered vector layout
+    * [[Ann.compact]] — already fenced) into a staging
     * dir, then SWAPPED into place the way [[Ann.maintainIndex]]'s
     * drift rebuild swaps: the layout path is stable for readers, the
     * swap is re-fenced against any verb that landed after the

@@ -81,7 +81,7 @@ object LayoutCache {
     * missing path, a plain file, a dir with no data file, or a session
     * that merges parquet schemas.
     */
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+  private[operators] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)

@@ -44,7 +44,8 @@ object Matryoshka extends IndexMaintenance {
     * tombstone delete / compact) comes from [[IndexMaintenance]] —
     * the write shares [[writeClustered]]'s cluster-hash exchange, a
     * delta is `writeClustered(assign+slice, path, "append")`, exactly
-    * the [[Ann.appendToIndex]] shape. Full-precision vectors stay in
+    * the [[Ann.appendToIndex]] shape, and delete/compact are the
+    * clustered-layout verbs of [[Ann]]. Full-precision vectors stay in
     * the base table; the refine re-rank fetches them by id.
     *
     * `inlineVectors = true` stores the full vector next to the prefix —
@@ -61,18 +62,15 @@ object Matryoshka extends IndexMaintenance {
       centroids: Array[Array[Double]],
       dPrefix: Int = 16,
       inlineVectors: Boolean = false): Unit =
-    writeClustered(
-      Ann.assign(df, vecCol, centroids)
-        .select(Seq(col(idCol), col("cluster"),
-          slice(col(vecCol), 1, dPrefix).as("mrl_prefix")) ++
-          (if (inlineVectors) Seq(col(vecCol)) else Nil): _*),
+    writeClustered(prefixRows(df, vecCol, idCol, centroids, dPrefix, inlineVectors),
       path, "overwrite")
 
   /** Incremental maintenance — the [[Ann.appendToIndex]] shape for the
     * prefix sidecar: assign ONLY the arriving batch to the existing
     * centroids, slice its prefixes, append into the partitioned layout
     * through the shared cluster-exchanged write. No rebuild; probes see
-    * the delta at the next read.
+    * the delta at the next read. Tombstone delete and compaction are
+    * [[Ann.deleteFromIndex]] / [[Ann.compact]].
     */
   def appendToIndex(
       path: String,
@@ -81,28 +79,17 @@ object Matryoshka extends IndexMaintenance {
       idCol: String,
       centroids: Array[Array[Double]],
       dPrefix: Int = 16): Unit =
-    writeClustered(
-      Ann.assign(delta, vecCol, centroids)
-        .select(col(idCol), col("cluster"),
-          slice(col(vecCol), 1, dPrefix).as("mrl_prefix")),
+    writeClustered(prefixRows(delta, vecCol, idCol, centroids, dPrefix, inlineVectors = false),
       path, "append")
 
-  /** Compaction — rewrite the LIVE face (tombstones dropped, delta
-    * files folded back to O(nlist), sidecar cleared) into a fresh
-    * directory, from the index itself. Entirely the inherited
-    * [[IndexMaintenance]] verbs.
-    */
-  def compact(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      outPath: String,
-      idCol: String): Unit = {
-    requireSeparateDir("Matryoshka", path, outPath)
-    fencedCompact(spark, "Matryoshka", path) {
-      writeClustered(liveFace(spark, path, spark.read.parquet(path), idCol),
-        outPath, "overwrite")
-    }
-  }
+  /** The persisted rows (id, cluster, mrl_prefix[, vec]) of `df`. */
+  private def prefixRows(df: DataFrame, vecCol: String, idCol: String,
+                         centroids: Array[Array[Double]], dPrefix: Int,
+                         inlineVectors: Boolean): DataFrame =
+    Ann.assign(df, vecCol, centroids)
+      .select(Seq(col(idCol), col("cluster"),
+        slice(col(vecCol), 1, dPrefix).as("mrl_prefix")) ++
+        (if (inlineVectors) Seq(col(vecCol)) else Nil): _*)
 
   /** Probe the persisted IVF+MRL layout ([[Ann.probe]]'s single/batch
     * contract): the cell-pruned scan reads the PREFIX sidecar, the

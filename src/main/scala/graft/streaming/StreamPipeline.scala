@@ -86,6 +86,8 @@ object StreamPipeline {
     * per-row function of (vector, centroids), so batch boundaries
     * cannot change the landed layout: the merged index equals
     * ann_incremental's one-shot append whatever the trigger cadence.
+    * Batches arrive with every landing-zone column; the append keeps
+    * the layout's own ([[graft.operators.Ann.appendToIndex]]).
     */
   def appendToAnnIndex(
       spark: SparkSession,
@@ -97,7 +99,7 @@ object StreamPipeline {
     // deltaFilter is the CALLER's landing-zone predicate (e.g. "only the
     // rows not already in the base index"); the operator itself appends
     // exactly what arrives
-    drain(embeddingStream(spark, dir).select("vec_id", "embedding").filter(deltaFilter)) { b =>
+    drain(embeddingStream(spark, dir).filter(deltaFilter)) { b =>
       if (!b.isEmpty) Ann.appendToIndex(path, b, "embedding", centroids)
     }
 

@@ -583,7 +583,7 @@ object ScaleCheck {
     val resModel = Pq.trainResidual(corpus, "embedding", "vec_id", idx.centroids,
       m = 8, codes = 16)
     val pqrDir = dir + "/pqres"
-    Pq.writeIvfPqResidual(pqrDir, corpus, "embedding", "vec_id", idx.centroids, resModel)
+    Pq.writeIvfPq(pqrDir, corpus, "embedding", "vec_id", idx.centroids, resModel)
     for (rf <- Seq(10, 25))
       recall(s"ivfpq_residual nProbe=4 refine=$rf") { v =>
         Pq.probeIvf(spark, pqrDir, idx.centroids, resModel, qDf(v),
@@ -602,7 +602,7 @@ object ScaleCheck {
       val rm = Pq.trainResidual(corpus, "embedding", "vec_id", idx.centroids,
         m = mm, codes = cc)
       val d = dir + s"/pqres_${mm}x$cc"
-      Pq.writeIvfPqResidual(d, corpus, "embedding", "vec_id", idx.centroids, rm)
+      Pq.writeIvfPq(d, corpus, "embedding", "vec_id", idx.centroids, rm)
       for (rf <- Seq(10, 25))
         recall(s"ivfpq_residual ${mm}x$cc nP=4 refine=$rf") { v =>
           Pq.probeIvf(spark, d, idx.centroids, rm, qDf(v),
@@ -639,7 +639,7 @@ object ScaleCheck {
 
     val rot = Bq.rotationMatrix(dim, seed = 7L)
     val bqrDir = dir + "/bqrot"
-    Bq.writeIvfBqRotated(bqrDir, corpus, "embedding", "vec_id", idx.centroids, rot)
+    Bq.writeIvfBq(bqrDir, corpus, "embedding", "vec_id", idx.centroids, Some(rot))
     for (rf <- Seq(40, 100))
       recall(s"ivfbq_rotated nProbe=4 refine=$rf") { v =>
         Bq.probeIvf(spark, bqrDir, Some(corpus), qDf(v), "q_vec", "vec_id", "embedding",
@@ -717,7 +717,7 @@ object ScaleCheck {
     val delIds = corpus.filter(col("vec_id") % 100 === 3).select("vec_id")
     val delCount = delIds.distinct().count()
     val tDel = System.nanoTime()
-    Pq.deleteFromIndex(spark, layout, delIds, "vec_id")
+    Ann.deleteFromIndex(spark, layout, delIds, "vec_id")
     println(f"[lifecycle2l] DELETE 1%% ($delCount ids -> tombstone sidecar)  ${(System.nanoTime() - tDel) / 1e9}%.2f s  (corpus-size-independent)")
 
     val qids = (0 until 8).map(q => (n / 8) * q + 13L)
@@ -761,7 +761,7 @@ object ScaleCheck {
     println(s"[lifecycle2l] appended-delta rows in the 80 results: $deltaHits (~10% of corpus is delta)")
 
     val tComp = System.nanoTime()
-    Pq.compact(spark, layout, dir + "/compacted", "vec_id")
+    Ann.compact(spark, layout, dir + "/compacted", "vec_id")
     println(f"[lifecycle2l] COMPACT (live rewrite from the layout, no re-encode)  ${(System.nanoTime() - tComp) / 1e9}%.1f s")
     val comp = probe(dir + "/compacted")
     require(comp == live, "probe(compacted) != probe(live)")
@@ -788,7 +788,7 @@ object ScaleCheck {
       val wA = (System.nanoTime() - tA) / 1e9
       val tM = System.nanoTime()
       val rep = Pq.maintainLayout(spark, mnt,
-        (s, o) => Pq.compact(spark, s, o, "vec_id"), maxDeltaAppends = 8)
+        (s, o) => Ann.compact(spark, s, o, "vec_id"), maxDeltaAppends = 8)
       val wM = (System.nanoTime() - tM) / 1e9
       println(f"[lifecycle2l] maintain batch $b%2d: append $wA%5.1f s, " +
         f"deltas ${rep.deltaAppends}%2d, compacted=${rep.compacted}%-5s " +

@@ -85,7 +85,7 @@ class AnnSpec extends SparkSpec {
     // in-distribution delta: fresh ids over the SAME vectors — cost
     // ratio is exactly 1.0, any drift factor > 1 appends
     val inDist = embs.limit(20)
-      .select((col("vec_id") + 500000L).as("vec_id"), col("embedding"))
+      .select((col("vec_id") + 500000L).as("vec_id"), col("embedding"), col("label"))
     val (cents1, rep1) = Ann.maintainIndex(spark, dir, inDist, "embedding", "vec_id",
       index.centroids, baseCost, driftFactor = 1.05)
     assert(!rep1.rebuilt && (cents1 eq index.centroids))

@@ -133,7 +133,7 @@ class MatryoshkaSpec extends SparkSpec {
     // COMPACT: the rewritten layout serves the identical live result
     // with the tombstone sidecar gone and no anti-join needed
     val compDir = tempDir("graft_mrl_comp").toString + "/idx"
-    Matryoshka.compact(spark, dir, compDir, "vec_id")
+    Ann.compact(spark, dir, compDir, "vec_id")
     assert(!Matryoshka.hasTombstones(compDir), "compaction must clear the sidecar")
     val compacted = Matryoshka.probeIvf(spark, compDir, Some(corpusPlus), q,
         "q_vec", "vec_id", "embedding", cells = probeCells, dPrefix = 16, k = 5, refine = 20)

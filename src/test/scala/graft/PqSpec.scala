@@ -87,7 +87,7 @@ class PqSpec extends SparkSpec {
     val corpus = embs.filter(col("vec_id") =!= 0)
     val model = Pq.trainResidual(corpus, "embedding", "vec_id", index.centroids, m = 8, codes = 16)
     val dir = tempDir("graft_pqres").toString + "/idx"
-    Pq.writeIvfPqResidual(dir, corpus, "embedding", "vec_id", index.centroids, model)
+    Pq.writeIvfPq(dir, corpus, "embedding", "vec_id", index.centroids, model)
     val got = Pq.probeIvf(spark, dir, index.centroids, model, queryDf,
         "q_vec", "embedding", "vec_id", nProbe = 3, k = 10)
       .collect().map(r => (r.getLong(0), r.getAs[Double]("cos_sim"))).toSeq
@@ -194,7 +194,7 @@ class PqSpec extends SparkSpec {
     val index = Ann.build(corpus, "embedding", "vec_id", k = 24, seed = 42)
     val model = Pq.trainResidual(corpus, "embedding", "vec_id", index.centroids, m = 8, codes = 16)
     val dir = tempDir("graft_pqrefine").toString + "/idx"
-    Pq.writeIvfPqResidual(dir, corpus, "embedding", "vec_id", index.centroids, model)
+    Pq.writeIvfPq(dir, corpus, "embedding", "vec_id", index.centroids, model)
     val qids = Seq(11L, 1003L, 2077L, 4999L)
     def qDfOf(id: Long) =
       corpus.filter(col("vec_id") === id).select(col("embedding").as("q_vec"))
@@ -238,7 +238,7 @@ class PqSpec extends SparkSpec {
       s"default sizing must derive m = dim/8, got m=${model.m} at dim=${model.dim}")
     assert(model.codebooks.head.length == 256, "codes must default to 256")
     val dir = tempDir("graft_pqsized").toString + "/idx"
-    Pq.writeIvfPqResidual(dir, corpus, "embedding", "vec_id", index.centroids, model)
+    Pq.writeIvfPq(dir, corpus, "embedding", "vec_id", index.centroids, model)
     val qids = Seq(13L, 5003L, 11077L, 19999L)
     def qDfOf(id: Long) =
       corpus.filter(col("vec_id") === id).select(col("embedding").as("q_vec"))

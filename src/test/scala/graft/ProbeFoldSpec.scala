@@ -34,31 +34,36 @@ class ProbeFoldSpec extends SparkSpec {
     Ann.deleteFromIndex(spark, path,
       embs.filter(col("vec_id") % 10 === 3).select("vec_id"), "vec_id")
 
-  /** family → its persisted layout, written once. */
+  /** Write `family`'s persisted layout of the whole corpus to `path`. */
+  private def writeLayout(family: String, path: String): Unit = family match {
+    case "ann" => Ann.writeIndex(index, path)
+    case "sq" => Sq.writeIvfSq(path, base, "embedding", "vec_id", index.centroids)
+    case "mrl" =>
+      Matryoshka.writeIvfMrl(path, base, "embedding", "vec_id", index.centroids, dPrefix = 16)
+    case "bq" => Bq.writeIvfBq(path, base, "embedding", "vec_id", index.centroids)
+    case "bq_rotated" => Bq.writeIvfBq(path, base, "embedding", "vec_id", index.centroids, Some(rot))
+    case "pq" => Pq.writeIvfPq(path, base, "embedding", "vec_id", index.centroids, pqModel)
+    case "pq_residual" => Pq.writeIvfPq(path, base, "embedding", "vec_id", index.centroids, pqrModel)
+  }
+
+  /** The clustered families, each with its own layout writer. */
+  private val clustered = Seq("ann", "sq", "mrl", "bq", "bq_rotated", "pq", "pq_residual")
+
+  /** family → its persisted layout, written once; `<family>_tombstoned`
+    * is its own layout with every vec_id ≡ 3 (mod 10) tombstoned.
+    */
   private lazy val layouts: Map[String, String] = {
-    val ann = layoutDir("ann")
-    Ann.writeIndex(index, ann)
-    val annDel = layoutDir("ann_del")
-    Ann.writeIndex(index, annDel)
-    tombstone(annDel)
-    val sq = layoutDir("sq")
-    Sq.writeIvfSq(sq, base, "embedding", "vec_id", index.centroids)
-    val mrl = layoutDir("mrl")
-    Matryoshka.writeIvfMrl(mrl, base, "embedding", "vec_id", index.centroids, dPrefix = 16)
-    val bq = layoutDir("bq")
-    Bq.writeIvfBq(bq, base, "embedding", "vec_id", index.centroids)
-    val bqRot = layoutDir("bq_rot")
-    Bq.writeIvfBqRotated(bqRot, base, "embedding", "vec_id", index.centroids, rot)
-    val pq = layoutDir("pq")
-    Pq.writeIvfPq(pq, base, "embedding", "vec_id", index.centroids, pqModel)
-    val pqr = layoutDir("pqr")
-    Pq.writeIvfPqResidual(pqr, base, "embedding", "vec_id", index.centroids, pqrModel)
-    val pqrDel = layoutDir("pqr_del")
-    Pq.writeIvfPqResidual(pqrDel, base, "embedding", "vec_id", index.centroids, pqrModel)
-    tombstone(pqrDel)
-    Map("ann" -> ann, "ann_tombstoned" -> annDel, "sq" -> sq, "mrl" -> mrl, "bq" -> bq,
-      "bq_rotated" -> bqRot, "pq" -> pq, "pq_residual" -> pqr,
-      "pq_residual_tombstoned" -> pqrDel)
+    def written(family: String, tag: String): String = {
+      val dir = layoutDir(tag)
+      writeLayout(family, dir)
+      dir
+    }
+    val tombstoned = Seq("ann", "pq_residual").map { family =>
+      val dir = written(family, family + "_del")
+      tombstone(dir)
+      (family + "_tombstoned") -> dir
+    }
+    clustered.map(f => f -> written(f, f)).toMap ++ tombstoned
   }
 
   private type Probe = (DataFrame, Seq[Int]) => DataFrame
@@ -66,8 +71,10 @@ class ProbeFoldSpec extends SparkSpec {
   /** family → IVF probe(query relation, one query's cells). PQ ranks its
     * own 3 cells (`nProbe`), the same ones [[cellsOf]] picks.
     */
-  private def ivf(family: String): Probe = {
-    val path = layouts(family)
+  private def ivf(family: String): Probe = ivfAt(family, layouts(family))
+
+  /** [[ivf]] over the `family` layout at `path`. */
+  private def ivfAt(family: String, path: String): Probe = {
     def pqOver(model: Pq.Model): Probe = (q, _) =>
       Pq.probeIvf(spark, path, index.centroids, model, q, "q_vec", "embedding", "vec_id",
         nProbe = 3, k = 5, refineFactor = 4)
@@ -147,6 +154,38 @@ class ProbeFoldSpec extends SparkSpec {
         assert(got == want, s"$family query $qid:\n flat: $got\n ivf:  $want")
       }
     }
+
+  for (family <- clustered)
+    test(s"$family: tombstone, then the one compact into a fresh dir, serves the live rows") {
+      val src = layoutDir(s"${family}_cmp_src")
+      writeLayout(family, src)
+      tombstone(src)
+      val out = layoutDir(s"${family}_cmp_out")
+      Ann.compact(spark, src, out, "vec_id")
+      assert(!Ann.hasTombstones(out), "compaction must clear the sidecar")
+      def rows(df: DataFrame) = df.orderBy("vec_id").collect().toSeq
+      val live = rows(Ann.liveLayout(spark, src, "vec_id"))
+      assert(live.nonEmpty && live.forall(_.getAs[Long]("vec_id") % 10 != 3))
+      assert(rows(spark.read.parquet(out)) == live, s"$family: compacted rows != live rows")
+      (0L until 4L).foreach { qid =>
+        val q = queryOf(qid)
+        val cells = cellsOf(index.centroids, q, 3)
+        val want = ivfAt(family, src)(q, cells).collect().toSeq
+        val got = ivfAt(family, out)(q, cells).collect().toSeq
+        assert(got.length == 5, s"query $qid: ${got.length} rows")
+        assert(got == want, s"$family query $qid:\n compacted: $got\n tombstoned: $want")
+      }
+    }
+
+  test("writeIvfPq with a residual model writes the residual codes row for row") {
+    val dir = layoutDir("pqr_write")
+    Pq.writeIvfPq(dir, base, "embedding", "vec_id", index.centroids, pqrModel)
+    def rows(df: DataFrame) = df.select("vec_id", "codes", "cluster").orderBy("vec_id").collect().toSeq
+    val want = rows(Pq.encodeResidual(Ann.assign(base, "embedding", index.centroids), "embedding",
+      index.centroids, pqrModel))
+    assert(want.nonEmpty)
+    assert(rows(spark.read.parquet(dir)) == want, "the layout must carry the residual codes")
+  }
 
   test("a local batch with query-side columns still prunes its cells statically") {
     // BQ packs each query and PQ adds its ADC tables on the query side:

@@ -111,7 +111,7 @@ class ProbeJobCountSpec extends SparkSpec {
       inlineVectors = true)
     Matryoshka.writeIvfMrl(root + "/mrl", e, "embedding", "vec_id", index.centroids,
       dPrefix = 16, inlineVectors = true)
-    Bq.writeIvfBqRotated(root + "/bq", e, "embedding", "vec_id", index.centroids, rot,
+    Bq.writeIvfBq(root + "/bq", e, "embedding", "vec_id", index.centroids, Some(rot),
       inlineVectors = true)
     val variants: Seq[(String, () => org.apache.spark.sql.DataFrame, String)] = Seq(
       ("sq_inline", () => Sq.probeIvf(spark, root + "/sq", None, qCells, "q_vec", "vec_id",

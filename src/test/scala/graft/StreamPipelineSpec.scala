@@ -33,6 +33,34 @@ class StreamPipelineSpec extends SparkSpec {
     assert(got.map(_._3).sliding(2).forall(p => p.head >= p.last))
   }
 
+  test("appendToAnnIndex lands the base layout's schema: every data file's footer is equal") {
+    val e = Tables.embeddings(spark, sf)
+    val idx = Ann.build(e.filter(col("vec_id") % 10 =!= 7), "embedding", "vec_id", k = 10,
+      seed = 42)
+    val dir = tempDir("graft_sp_schema").toString + "/idx"
+    Ann.writeIndex(idx, dir)
+    StreamPipeline.appendToAnnIndex(spark, sf, dir, idx.centroids,
+      deltaFilter = col("vec_id") % 10 === 7)
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val files = root.getFileSystem(conf).listFiles(root, true)
+    val schemas = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.toString.contains("/_"))
+      .map { p =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+        try p -> reader.getFooter.getFileMetaData.getSchema finally reader.close()
+      }.toSeq
+    assert(schemas.size > 10, s"base and delta files expected, got ${schemas.size}")
+    assert(schemas.map(_._2).distinct.size == 1,
+      s"mixed footer schemas:\n${schemas.map { case (p, s) => s"${p.getName}: $s" }.mkString("\n")}")
+    assert(spark.read.parquet(dir).count() == e.count())
+    // a delta without one of the layout's columns fails, naming it
+    val err = intercept[IllegalArgumentException](
+      Ann.appendToIndex(dir, e.select("vec_id", "embedding"), "embedding", idx.centroids))
+    assert(err.getMessage.contains("`label`"), err.getMessage)
+  }
+
   test("decontaminateAndLand equals the batch decontamination over the same corpus") {
     val docs = Tables.documents(spark, sf)
     val bench = docs.filter(col("doc_id") < 10)

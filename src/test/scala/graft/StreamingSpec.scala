@@ -372,12 +372,13 @@ class StreamingSpec extends SparkSpec {
 
     // stream in a near-copy of the query vector under a fresh id
     val qVec = queryDf.as[Seq[Float]].head()
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.StreamPipeline.eachBatch(input.toDF().toDF("vec_id", "embedding")) {
+    val input = MemoryStream[(Long, Seq[Float], Int)]
+    val q = graft.streaming.StreamPipeline.eachBatch(
+        input.toDF().toDF("vec_id", "embedding", "label")) {
       b => if (!b.isEmpty) Ann.appendToIndex(dir, b, "embedding", index.centroids)
     }
     try {
-      input.addData((888888L, qVec))
+      input.addData((888888L, qVec, 0))
       q.processAllAvailable()
     } finally q.stop()
 

@@ -111,7 +111,7 @@ class TwoLevelSpec extends SparkSpec {
     // its original's cluster (the flat appendToIndex can disagree on
     // boundary vectors — the drift the two-level-aware verb closes)
     val delta = embs.filter(col("vec_id") < 40)
-      .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
+      .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"), col("label"))
     Ann.appendToIndexTwoLevel(dir, delta, "embedding", two)
     val stored = spark.read.parquet(dir)
       .select(col("vec_id"), col("cluster").cast("int"))
