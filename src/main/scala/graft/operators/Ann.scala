@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.VectorOps
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -396,8 +397,9 @@ object Ann extends IndexMaintenance {
     * footer schema; the partition column is not in a data file), in the
     * layout's order, so every data file of a layout has one schema (the
     * layout's read schema comes from the footer of its first file). A
-    * delta missing one of them fails here, naming it; a layout with no
-    * data file yet takes the delta as it comes.
+    * delta missing one of them, or holding one under another type
+    * (nullability aside), fails here, naming it; a layout with no data
+    * file yet takes the delta as it comes.
     */
   private def appendRows(path: String, delta: DataFrame): DataFrame =
     LayoutCache.footerSchema(delta.sparkSession, path).fold(delta) { schema =>
@@ -405,6 +407,11 @@ object Ann extends IndexMaintenance {
       cols.find(c => !delta.columns.contains(c)).foreach { c =>
         throw new IllegalArgumentException(
           s"append to $path: the delta has no column `$c` (layout columns: ${cols.mkString(", ")})")
+      }
+      schema.fields.find(f => !DataTypeUtils.equalsIgnoreNullability(delta.schema(f.name).dataType,
+          f.dataType)).foreach { f =>
+        throw new IllegalArgumentException(s"append to $path: the delta's column `${f.name}` is " +
+          s"${delta.schema(f.name).dataType.simpleString}, the layout's is ${f.dataType.simpleString}")
       }
       delta.select(cols.map(col): _*)
     }

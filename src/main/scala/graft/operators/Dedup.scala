@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.{TextOps, VectorOps}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Deduplication suite for LLM training-data pipelines.
   *
@@ -43,20 +43,37 @@ object Dedup {
       minDocs: Int = 2
   ): DataFrame = {
     val toksDf = df.select(col(idCol), TextOps.tokenize(col(textCol)).as("_toks"))
-    val tok = TextOps.posexplodeShingles(toksDf, col("_toks"), "pos", "tok", col(idCol))
-    val gr = TextOps.posexplodeShingles(
-        toksDf.select(col(idCol), TextOps.rawShingles(col("_toks"), n).as("_sh")),
-        col("_sh"), "gpos", "gram", col(idCol))
-      .select(col(idCol), col("gpos"), md5(col("gram")).as("g"))
+    val gr = gramRows(toksDf, idCol, n)
     val dup = gr.select(col(idCol), col("g")).distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= minDocs).select("g")
-    val covered = gr.join(dup, "g")
+    rebuild(toksDf, coverage(gr, dup, idCol, n), idCol).orderBy(idCol)
+  }
+
+  /** (id, gpos, g): each document's n-grams of `_toks` at their start
+    * positions, md5-hashed as a top-level projection.
+    */
+  private def gramRows(toks: DataFrame, idCol: String, n: Int): DataFrame =
+    TextOps.posexplodeShingles(
+        toks.select(col(idCol), TextOps.rawShingles(col("_toks"), n).as("_sh")),
+        col("_sh"), "gpos", "gram", col(idCol))
+      .select(col(idCol), col("gpos"), md5(col("gram")).as("g"))
+
+  /** Distinct (id, pos) token positions covered by a gram of `grams`
+    * (one column `g`; the caller picks the join: a shuffle for a
+    * corpus-sized set, a broadcast for a benchmark's).
+    */
+  private def coverage(gr: DataFrame, grams: DataFrame, idCol: String, n: Int): DataFrame =
+    gr.join(grams, "g")
       .select(col(idCol), explode(sequence(col("gpos"), col("gpos") + (n - 1))).as("pos"))
       .distinct()
-      .withColumn("_cov", lit(true))
-    tok
-      .join(covered, Seq(idCol, "pos"), "left")
+
+  /** Each document of `toks` (id, _toks) rebuilt from its tokens NOT in
+    * `covered`, in order: (id, n_tokens, dropped_tokens, clean_text).
+    */
+  private def rebuild(toks: DataFrame, covered: DataFrame, idCol: String): DataFrame =
+    TextOps.posexplodeShingles(toks, col("_toks"), "pos", "tok", col(idCol))
+      .join(covered.withColumn("_cov", lit(true)), Seq(idCol, "pos"), "left")
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).as("n_tokens"),
@@ -65,8 +82,6 @@ object Dedup {
           transform(
             sort_array(collect_list(when(col("_cov").isNull, struct(col("pos"), col("tok"))))),
             s => s.getField("tok"))).as("clean_text"))
-      .orderBy(idCol)
-  }
 
   /** Span-level benchmark decontamination — [[duplicatedSpanRemoval]]'s
     * machinery pointed at an EXTERNAL gram set (Lee et al. 2021 §5 note
@@ -112,13 +127,8 @@ object Dedup {
       n: Int,
       normalize: org.apache.spark.sql.Column => org.apache.spark.sql.Column
   ): DataFrame =
-    TextOps.explodeShingles(
-        benchmark
-          .select(TextOps.tokenize(normalize(col(textCol))).as("_btoks"))
-          .select(TextOps.rawShingles(col("_btoks"), n).as("_sh")),
-        col("_sh"), "gram")
-      .select(md5(col("gram")).as("g"))
-      .distinct()
+    shingleHashes(benchmark.select(lit(0L).as("_id"), normalize(col(textCol)).as("_t")), "_t", "_id", n)
+      .select("g").distinct()
 
   /** The benchmark gram set as a bounded driver artifact (distinct md5
     * hashes — same O as [[decontaminateSpans]]'s broadcast, under the
@@ -186,31 +196,14 @@ object Dedup {
     val toksDf = corpus
       .select(col(idCol), TextOps.tokenize(normalize(col(textCol))).as("_toks"))
       .filter(size(col("_toks")) > 0) // empty docs had no token rows before either
-    val gr = TextOps.posexplodeShingles(
-        toksDf.select(col(idCol), TextOps.rawShingles(col("_toks"), n).as("_sh")),
-        col("_sh"), "gpos", "gram", col(idCol))
-      .select(col(idCol), col("gpos"), md5(col("gram")).as("g"))
     // covPairs has TWO consumers (contaminated-id set + the rebuild's
     // anti-coverage join); like toksDf it is NOT cached — the same
     // round-17 measurement covers it (the gram pipeline re-runs are
     // pipelined map work + one hash join, cheaper at every measured
     // scale than materializing and rereading the pair set).
-    val covPairs = gr.join(broadcast(benchGrams), "g")
-      .select(col(idCol), explode(sequence(col("gpos"), col("gpos") + (n - 1))).as("pos"))
-      .distinct()
+    val covPairs = coverage(gramRows(toksDf, idCol, n), broadcast(benchGrams), idCol, n)
     val contaminatedIds = covPairs.select(col(idCol)).distinct()
-    val rebuilt = TextOps.posexplodeShingles(
-        toksDf.join(contaminatedIds, Seq(idCol), "left_semi"),
-        col("_toks"), "pos", "tok", col(idCol))
-      .join(covPairs.withColumn("_cov", lit(true)), Seq(idCol, "pos"), "left")
-      .groupBy(col(idCol))
-      .agg(
-        count(lit(1)).as("n_tokens"),
-        sum(when(col("_cov"), 1L).otherwise(0L)).as("dropped_tokens"),
-        concat_ws(" ",
-          transform(
-            sort_array(collect_list(when(col("_cov").isNull, struct(col("pos"), col("tok"))))),
-            s => s.getField("tok"))).as("clean_text"))
+    val rebuilt = rebuild(toksDf.join(contaminatedIds, Seq(idCol), "left_semi"), covPairs, idCol)
     val clean = toksDf
       .join(contaminatedIds, Seq(idCol), "left_anti")
       .select(col(idCol),
@@ -238,16 +231,6 @@ object Dedup {
     df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** MinHash + banded-LSH near-duplicate pairs with exact-Jaccard verify.
-    *
-    * Pipeline: tokens → k-shingles (md5) → `numHashes` min-hashes →
-    * bands of 2 → candidate pairs share ≥1 band key → verified Jaccard
-    * over distinct shingle sets, keep pairs ≥ threshold.
-    *
-    * The band join is the only shuffle of pair-like data and its
-    * cardinality is |bucket|² summed over buckets — at 100 TB the band
-    * keys keep buckets tiny, so the all-pairs blow-up never happens.
-    */
   /** Per-document MinHash signature table: (id, h0..h{n-1}, sh) — the
     * min-hashes plus the md5-shingle set the verify step needs. One
     * row per (doc, distinct shingle) into ONE hash-partitioned
@@ -268,16 +251,24 @@ object Dedup {
       shingleK: Int = 3
   ): DataFrame = {
     require(numHashes % 2 == 0, "bands of 2 need an even numHashes")
-    val shRows = TextOps.explodeShingles(
-        df.select(col(idCol), TextOps.tokenize(col(textCol)).as("_toks")),
-        array_distinct(TextOps.rawShingles(col("_toks"), shingleK)), "raw", col(idCol))
-      .select(col(idCol), md5(col("raw")).as("shm"))
     val minCols = (0 until numHashes).map { seed =>
-      min(md5(concat(lit(s"$seed:"), col("shm")))).as(s"h$seed")
+      min(md5(concat(lit(s"$seed:"), col("g")))).as(s"h$seed")
     }
-    val aggCols = minCols :+ collect_set(col("shm")).as("sh")
-    shRows.groupBy(col(idCol)).agg(aggCols.head, aggCols.tail: _*)
+    val aggCols = minCols :+ collect_set(col("g")).as("sh")
+    shingleHashes(df, textCol, idCol, shingleK).groupBy(col(idCol)).agg(aggCols.head, aggCols.tail: _*)
   }
+
+  /** (id, g): one row per DISTINCT k-shingle of each document, md5'd.
+    * The raw shingles are exploded and hashed as a top-level projection:
+    * md5 inside a transform lambda runs interpreted (HOFs are codegen
+    * fallbacks — see TextOps.shingles' own caveat) and measured 6×
+    * slower (36 s vs 5.5 s for containment's postings at sf0.1).
+    */
+  private def shingleHashes(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
+    TextOps.explodeShingles(
+        df.select(col(idCol), TextOps.tokenize(col(textCol)).as("_toks")),
+        array_distinct(TextOps.rawShingles(col("_toks"), k)), "_raw", col(idCol))
+      .select(col(idCol), md5(col("_raw")).as("g"))
 
   /** Banded candidate generation + exact-Jaccard verify over a
     * signature table shaped like [[minHashSignatures]]'s output.
@@ -291,23 +282,22 @@ object Dedup {
     val bandCols = (0 until numHashes by 2).map { i =>
       md5(concat(col(s"h$i"), col(s"h${i + 1}")))
     }
-    val banded = sig.select(col(idCol), posexplode(array(bandCols: _*)).as(Seq("band", "key")))
-
-    // Candidate pairs: same (band, key), ordered ids, distinct.
-    val a = banded.select(col("band"), col("key"), col(idCol).as("id_a"))
-    val b = banded.select(col("band"), col("key"), col(idCol).as("id_b"))
-    val candidates = a
-      .join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-
-    verifyJaccard(candidates, sig.select(col(idCol), col("sh")), idCol, threshold)
+    joinBack(bandedPairs(sig, idCol, bandCols), sig, idCol, Seq("sh"))
+      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  // newest-corpus signature-table cache slot (see minHashLshPairs)
-  private val lastSig = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-
+  /** MinHash + banded-LSH near-duplicate pairs with exact-Jaccard verify.
+    *
+    * Pipeline: tokens → k-shingles (md5) → `numHashes` min-hashes →
+    * bands of 2 → candidate pairs share ≥1 band key → verified Jaccard
+    * over distinct shingle sets, keep pairs ≥ threshold.
+    *
+    * The band join is the only shuffle of pair-like data and its
+    * cardinality is |bucket|² summed over buckets — at 100 TB the band
+    * keys keep buckets tiny, so the all-pairs blow-up never happens.
+    */
   def minHashLshPairs(
       df: DataFrame,
       textCol: String,
@@ -316,21 +306,10 @@ object Dedup {
       shingleK: Int = 3,
       threshold: Double = 0.3
   ): DataFrame = {
-    // read 3x below (bands + both verify sides); O(docs) rows. Plain
-    // plan-keyed cache, intentionally shared across invocations over
-    // the SAME corpus (the signature table is index-like state — the
-    // batch face of the ChunkStore-persisted incremental variant), but
-    // retention was UNBOUNDED before round 17: nothing ever unpersisted
-    // it, so a long-lived driver sweeping many corpora accumulated one
-    // cached signature table per corpus forever. Keep exactly the
-    // NEWEST corpus's table: a different-plan invocation evicts the
-    // previous one (recompute, never break), a same-plan invocation
-    // keeps sharing the entry as before.
-    val sig = minHashSignatures(df, textCol, idCol, numHashes, shingleK).cache()
-    val prev = lastSig.getAndSet(sig)
-    if (prev != null &&
-        !prev.queryExecution.analyzed.sameResult(sig.queryExecution.analyzed))
-      prev.unpersist(false)
+    // read 3x below (bands + both verify sides); O(docs) rows, cached
+    // per call. A signature table that should outlive the call belongs
+    // in a ChunkStore store: appendSignatures, then pairsFromSignatures.
+    val sig = saltedCached(minHashSignatures(df, textCol, idCol, numHashes, shingleK))
     pairsFromSignatures(sig, idCol, numHashes, threshold)
   }
 
@@ -353,24 +332,54 @@ object Dedup {
     store.upsert(
       minHashSignatures(delta, textCol, store.keyCol, numHashes, shingleK), parts)
 
-  /** Exact Jaccard over md5-shingle sets for given candidate pairs. */
-  private def verifyJaccard(
-      candidates: DataFrame,
-      withShingles: DataFrame, // (idCol, sh: array<string> distinct)
-      idCol: String,
-      threshold: Double
-  ): DataFrame = {
-    val sa = withShingles.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
-    val sb = withShingles.select(col(idCol).as("id_b"), col("sh").as("sh_b"))
-    candidates
-      .join(sa, "id_a")
-      .join(sb, "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("uni", (size(col("sh_a")) + size(col("sh_b"))).cast("double") - col("inter"))
-      .withColumn("jaccard", round(col("inter") / col("uni"), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+  /** Exact Jaccard of two distinct-element sets, rounded to 4 places —
+    * the one formula of every Jaccard-verified pair generator.
+    */
+  private def jaccard(a: Column, b: Column): Column = {
+    val inter = size(array_intersect(a, b)).cast("double")
+    round(inter / ((size(a) + size(b)).cast("double") - inter), 4)
   }
+
+  /** The one candidate-pair rule of every pair generator (REPOSE's
+    * scheme: prune locally per block, then verify exactly). `rows`
+    * carries a block `key`, an `id` and a `payload`; both sides alias
+    * the id as `id_a` / `id_b` and each payload column `p` as `p_a` /
+    * `p_b`, join on the key, and keep each unordered pair once
+    * (`id_a < id_b`) or, for an asymmetric relation (`ordered`), both
+    * orders (`id_a =!= id_b`). An empty key pairs all rows: the caller
+    * bounds the block. The join is the only shuffle of pair-like data;
+    * its cardinality is |block|² summed over blocks.
+    */
+  private def blockedPairs(
+      rows: DataFrame,
+      key: Seq[String],
+      id: String,
+      payload: Seq[String] = Nil,
+      ordered: Boolean = false
+  ): DataFrame =
+    side(rows, "a", id, payload, key).join(side(rows, "b", id, payload, key), key)
+      .filter(if (ordered) col("id_a") =!= col("id_b") else col("id_a") < col("id_b"))
+
+  /** Candidate pairs sharing any band key (one column of `bands` per
+    * band), each pair once with its `payload`: a pair sharing several
+    * bands is one candidate.
+    */
+  private def bandedPairs(sig: DataFrame, id: String, bands: Seq[Column],
+      payload: Seq[String] = Nil): DataFrame = {
+    val banded = sig.select((col(id) +: payload.map(col)) :+
+      posexplode(array(bands: _*)).as(Seq("band", "key")): _*)
+    blockedPairs(banded, Seq("band", "key"), id, payload).drop("band", "key").distinct()
+  }
+
+  /** `payload` carried back onto id pairs by two id-keyed joins against
+    * `rows` — for payloads too large to ride the block join.
+    */
+  private def joinBack(pairs: DataFrame, rows: DataFrame, id: String, payload: Seq[String]): DataFrame =
+    pairs.join(side(rows, "a", id, payload), "id_a").join(side(rows, "b", id, payload), "id_b")
+
+  private def side(rows: DataFrame, s: String, id: String, payload: Seq[String],
+      key: Seq[String] = Nil): DataFrame =
+    rows.select(key.map(col) ++ (col(id).as(s"id_$s") +: payload.map(p => col(p).as(s"${p}_$s"))): _*)
 
   /** Blocked pairwise n-gram Jaccard: all pairs *within a block* only.
     * Pass a small blocking predicate/projection; never run unblocked at
@@ -400,14 +409,8 @@ object Dedup {
     val s = df
       .select(col(idCol), TextOps.tokenize(col(textCol)).as("_toks"))
       .select(col(idCol), array_distinct(TextOps.shingles(col("_toks"), shingleK)).as("sh"))
-    val sa = s.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
-    val sb = s.select(col(idCol).as("id_b"), col("sh").as("sh_b"))
-    sa.crossJoin(sb)
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("uni", (size(col("sh_a")) + size(col("sh_b"))).cast("double") - col("inter"))
-      .withColumn("jaccard", round(col("inter") / col("uni"), 4))
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    blockedPairs(s, Nil, idCol, Seq("sh"))
+      .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
   }
 
   /** Edit-distance similarity self-join by deletion-neighborhood
@@ -491,30 +494,12 @@ object Dedup {
       .select(col("_id"), explode(neighborhood).as("_v"))
       .select(col("_id"), xxhash64(col("_v")).as("_vh"))
       .repartition(col("_vh"))
-    val cand = variants.select(col("_vh"), col("_id").as("id_a"))
-      .join(variants.select(col("_vh"), col("_id").as("id_b")), "_vh")
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    cand
-      .join(base.select(col("_id").as("id_a"), col("_s").as("_sa")), "id_a")
-      .join(base.select(col("_id").as("id_b"), col("_s").as("_sb")), "id_b")
-      .filter(abs(length(col("_sa")) - length(col("_sb"))) <= maxDist)
-      .withColumn("dist", levenshtein(col("_sa"), col("_sb")))
+    val cand = blockedPairs(variants, Seq("_vh"), "_id").select("id_a", "id_b").distinct()
+    joinBack(cand, base, "_id", Seq("_s"))
+      .filter(abs(length(col("_s_a")) - length(col("_s_b"))) <= maxDist)
+      .withColumn("dist", levenshtein(col("_s_a"), col("_s_b")))
       .filter(col("dist") <= maxDist)
       .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
-  }
-
-  // Bounded retention for operator-internal persisted DataFrames:
-  // the newest few stay cached, older ones unpersist (non-blocking) —
-  // a long-lived driver sweeping many corpora cannot accumulate
-  // cached postings forever, and an evicted entry merely recomputes.
-  private val retained = new java.util.ArrayDeque[DataFrame]()
-  private[graft] def retainCached(dfc: DataFrame, max: Int = 4): DataFrame = {
-    retained.synchronized {
-      retained.addLast(dfc)
-      while (retained.size > max) retained.removeFirst().unpersist(false)
-    }
-    dfc
   }
 
   /** Persist an operator-internal DataFrame PROVABLY per-invocation:
@@ -526,18 +511,25 @@ object Dedup {
     * this). The salt column takes a name none of the caller's columns
     * has (case-insensitively, as Spark resolves names) and is dropped
     * before the frame is handed back, so consumers see the original
-    * schema and values; retention stays bounded via [[retainCached]].
+    * schema and values.
+    *
+    * Retention is bounded: the newest 4 salted frames stay cached, older
+    * ones unpersist (non-blocking) — the CacheManager holds cached
+    * blocks by strong reference, so a long-lived driver sweeping many
+    * corpora would otherwise accumulate them forever; an evicted entry's
+    * consumers merely recompute.
     */
   private val invNonce = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] def saltedCached(
-      dfc: DataFrame,
-      level: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
+  private val retained = new java.util.ArrayDeque[DataFrame]()
+  private[graft] def saltedCached(dfc: DataFrame): DataFrame = {
     val salt = Iterator.iterate("_inv")("_" + _)
       .find(n => !dfc.columns.exists(_.equalsIgnoreCase(n))).get
     val salted = dfc.withColumn(salt, lit(invNonce.incrementAndGet()))
-      .persist(level)
-    retainCached(salted)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    retained.synchronized {
+      retained.addLast(salted)
+      while (retained.size > 4) retained.removeFirst().unpersist(false)
+    }
     salted.drop(salt)
   }
 
@@ -597,66 +589,50 @@ object Dedup {
       shingleK: Int = 3,
       hotDf: Long = 10000L
   ): DataFrame = {
-    // explode the RAW shingles and hash as a top-level projection:
-    // md5 inside a transform lambda runs interpreted (HOFs are codegen
-    // fallbacks — see TextOps.shingles' own caveat) and measured 6×
-    // slower here (36 s vs 5.5 s for the postings at sf0.1).
     // persist: the postings feed the df guard, the size leg and both
     // join sides (4 consumers — previously 4 rebuilds); materialized
-    // by the topDf action, and nonce-salted so a later invocation
-    // (e.g. a bench warm rep) can never be served this call's cache.
-    // Retention is BOUNDED: the CacheManager holds cached blocks by
-    // strong reference (MEMORY_AND_DISK spills under pressure, it
-    // does not drop), so each call registers its postings in a small
-    // queue that unpersists the oldest — an evicted entry's
-    // downstream consumers recompute, never break.
-    val ex = saltedCached(TextOps.explodeShingles(
-        df.select(col(idCol).as("_id"), TextOps.tokenize(col(textCol)).as("_toks")),
-        array_distinct(TextOps.rawShingles(col("_toks"), shingleK)), "_raw", col("_id"))
-      .select(col("_id"), md5(col("_raw")).as("g")))
+    // by the topDf action, per call and retention-bounded.
+    val ex = saltedCached(
+      shingleHashes(df.select(col(idCol).as("_id"), col(textCol)), textCol, "_id", shingleK))
     val sizes = ex.groupBy(col("_id")).agg(count(lit(1)).cast("double").as("_na"))
     val dfs = ex.groupBy("g").agg(count(lit(1)).as("_df"))
     val topDf = dfs.agg(max(col("_df"))).first().getLong(0)
+    // (id_a, id_b, _c): shared postings per ordered pair
+    def coCounts(postings: DataFrame): DataFrame =
+      blockedPairs(postings, Seq("g"), "_id", ordered = true)
+        .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("_c"))
     val pairCounts =
-      if (topDf <= hotDf) {
-        // fast path: every shingle is rare — one co-occurrence join
-        ex.select(col("g"), col("_id").as("id_a"))
-          .join(ex.select(col("g"), col("_id").as("id_b")), "g")
-          .filter(col("id_a") =!= col("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("_c"))
-      } else {
+      if (topDf <= hotDf) coCounts(ex) // fast path: every shingle is rare
+      else {
         val exD = ex.join(dfs, "g")
-        val rare = exD.filter(col("_df") <= hotDf).select("_id", "g")
         val hot = exD.filter(col("_df") > hotDf).select("_id", "g")
-        val rareCnt = rare.select(col("g"), col("_id").as("id_a"))
-          .join(rare.select(col("g"), col("_id").as("id_b")), "g")
-          .filter(col("id_a") =!= col("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("_cr"))
-        val hotSets = hot.groupBy(col("_id")).agg(collect_set(col("g")).as("_hs"))
+        val rareCnt = coCounts(exD.filter(col("_df") <= hotDf))
+        // every doc's hot-shingle set (empty when it has none)
+        val hotSets = exD.groupBy(col("_id"))
+          .agg(collect_set(when(col("_df") > hotDf, col("g"))).as("_hs"))
         // prefix probes: per-doc df-ascending rank (window keyed by doc
         // id — never partition-less); prefix width ⌊(1−τ+5e-5)·na⌋+2
         // absorbs the round(…,4) boundary slack
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("_id")).orderBy(col("_df"), col("g"))
+        val w = Window.partitionBy(col("_id")).orderBy(col("_df"), col("g"))
         val prefixHot = exD
           .withColumn("_rk", row_number().over(w))
           .join(sizes, "_id")
           .filter(col("_rk") <= floor(lit(1.0 - tau + 5e-5) * col("_na")) + 2)
           .filter(col("_df") > hotDf)
           .select("_id", "g")
-        val probePairs = prefixHot.select(col("g"), col("_id").as("id_a"))
-          .join(hot.select(col("g"), col("_id").as("id_b")), "g")
-          .filter(col("id_a") =!= col("id_b"))
+        // prefix entries probe the hot postings: the hot self-join with
+        // the left side narrowed to the prefix (the `_p` tag filters
+        // push down into the union, so each side scans one branch)
+        val probePairs = blockedPairs(
+            prefixHot.withColumn("_p", lit(true)).unionByName(hot.withColumn("_p", lit(false))),
+            Seq("g"), "_id", Seq("_p"), ordered = true)
+          .filter(col("_p_a") && !col("_p_b"))
           .select("id_a", "id_b").distinct()
-        rareCnt.select("id_a", "id_b").unionByName(probePairs).distinct()
+        val pairs = rareCnt.select("id_a", "id_b").unionByName(probePairs).distinct()
           .join(rareCnt, Seq("id_a", "id_b"), "left")
-          .join(hotSets.select(col("_id").as("id_a"), col("_hs").as("_ha")), Seq("id_a"), "left")
-          .join(hotSets.select(col("_id").as("id_b"), col("_hs").as("_hb")), Seq("id_b"), "left")
+        joinBack(pairs, hotSets, "_id", Seq("_hs"))
           .select(col("id_a"), col("id_b"),
-            (coalesce(col("_cr"), lit(0L)) +
-              coalesce(size(array_intersect(col("_ha"), col("_hb"))), lit(0)).cast("long"))
+            (coalesce(col("_c"), lit(0L)) + size(array_intersect(col("_hs_a"), col("_hs_b"))))
               .as("_c"))
       }
     pairCounts
@@ -678,16 +654,9 @@ object Dedup {
     df.groupBy(graft.functions.UrlOps.canonicalizeUrl(col(urlCol)).as("canonical_url"))
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_dups"))
 
-  /** 64-bit SimHash signature per row, rendered as a 64-char '0'/'1'
-    * string, computed with ONE md5 per token: explode → md5 as a
-    * top-level codegen'd column → 16 hex-digit values → 64 bit-sums in
-    * a single partial-agg-friendly hash aggregation. Bit j is the sign
-    * of Σ_tokens (±1), i.e. set when more than half the token hashes
-    * have bit j set. Rows with zero tokens produce no signature (the
-    * explode drops them) — identical on the DuckDB side.
-    */
-  /** Shared sign-sum aggregation: (idCol, _n, _c0.._c63) — bit j is set
-    * iff 2·_cj > _n.
+  /** Shared sign-sum aggregation: (idCol, _b0.._b63) — bit j is set
+    * iff 2·c_j > n, c_j counting the token hashes with bit j set among
+    * the document's n tokens.
     *
     * The 64 per-bit counts are accumulated BIT-SLICED: each hex digit
     * expands to one long with four 15-bit fields (one per bit), so the
@@ -716,17 +685,24 @@ object Dedup {
       sum(sliced).as(s"_s$p")
     }
     val aggd = digits.groupBy(col(idCol)).agg(count(lit(1)).as("_n"), slicedSums: _*)
-    val unpacked = (0 until 64).map { j =>
+    val bits = (0 until 64).map { j =>
       val p = j / 4 + 1
       val k = 3 - j % 4
-      shiftright(col(s"_s$p"), 15 * k).bitwiseAND(lit(32767L)).as(s"_c$j")
+      (shiftright(col(s"_s$p"), 15 * k).bitwiseAND(lit(32767L)) * 2 > col("_n")).as(s"_b$j")
     }
-    aggd.select(col(idCol) +: col("_n") +: unpacked: _*)
+    aggd.select(col(idCol) +: bits: _*)
   }
 
+  /** 64-bit SimHash signature per row, rendered as a 64-char '0'/'1'
+    * string, computed with ONE md5 per token: explode → md5 as a
+    * top-level codegen'd column → 16 hex-digit values → 64 bit-sums in
+    * a single partial-agg-friendly hash aggregation. Bit j is the sign
+    * of Σ_tokens (±1), i.e. set when more than half the token hashes
+    * have bit j set. Rows with zero tokens produce no signature (the
+    * explode drops them) — identical on the DuckDB side.
+    */
   def simHash64(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val sig = concat((0 until 64).map(j =>
-      when(col(s"_c$j") * 2 > col("_n"), lit("1")).otherwise(lit("0"))): _*)
+    val sig = concat((0 until 64).map(j => when(col(s"_b$j"), lit("1")).otherwise(lit("0"))): _*)
     simHashAgg(df, textCol, idCol).select(col(idCol), sig.as("simhash64"))
   }
 
@@ -740,7 +716,7 @@ object Dedup {
     val words = (0 until 4).map { t =>
       (0 until 16).map { b =>
         val j = t * 16 + b
-        when(col(s"_c$j") * 2 > col("_n"), lit(1 << (15 - b))).otherwise(lit(0))
+        when(col(s"_b$j"), lit(1 << (15 - b))).otherwise(lit(0))
       }.reduce(_ + _).as(s"w$t")
     }
     simHashAgg(df, textCol, idCol).select(col(idCol) +: words: _*)
@@ -770,21 +746,9 @@ object Dedup {
     // and retention-bounded like every operator-internal cache
     val sig = saltedCached(simHashWords(df, textCol, idCol))
     val wordCols = (0 until 4).map(t => s"w$t")
-    val bandKeys = wordCols.map(col)
-    val banded = sig.select(
-      (col(idCol) +: wordCols.map(col)) :+
-        posexplode(array(bandKeys: _*)).as(Seq("band", "key")): _*
-    )
-    val a = banded.select(col("band") +: col("key") +: col(idCol).as("id_a") +:
-      wordCols.map(w => col(w).as(s"${w}_a")): _*)
-    val b = banded.select(col("band") +: col("key") +: col(idCol).as("id_b") +:
-      wordCols.map(w => col(w).as(s"${w}_b")): _*)
-    val candidates = a
-      .join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select(Seq(col("id_a"), col("id_b")) ++
-        wordCols.flatMap(w => Seq(col(s"${w}_a"), col(s"${w}_b"))): _*)
-      .distinct()
+    // the 16-bit words are the band keys and ride the band join as the
+    // payload (fixed-width, no join-back)
+    val candidates = bandedPairs(sig, idCol, wordCols.map(col), wordCols)
     // O(candidates) verify — 4 xor+popcount ops per pair, all codegen.
     val ham = wordCols
       .map(w => bit_count(col(s"${w}_a").bitwiseXOR(col(s"${w}_b"))))
@@ -822,7 +786,7 @@ object Dedup {
     import spark.implicits._
     val edgesOne = pairs
       .select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
-      .distinct().cache()
+      .distinct().cache() // read by the count and one branch; unpersisted in both below
     val nPairs = edgesOne.count()
     if (nPairs <= localThreshold) {
       val es = edgesOne.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -854,11 +818,8 @@ object Dedup {
       .unionAll(edgesOne.select(col("v").as("u"), col("u").as("v")))
       .distinct().localCheckpoint()
     edgesOne.unpersist()
-    var labels = edges.select(col("u").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+    @annotation.tailrec
+    def propagate(labels: DataFrame, iter: Int): DataFrame = if (iter >= maxIter) labels else {
       val nbrMin = edges
         .join(labels.select(col("id").as("v"), col("lbl").as("vlbl")), "v")
         .groupBy(col("u").as("id"))
@@ -875,11 +836,11 @@ object Dedup {
         .join(labels.select(col("id"), col("lbl").as("_old")), "id")
         .filter(col("lbl") =!= col("_old"))
         .count()
-      labels = updated
-      converged = changed == 0
-      iter += 1
+      if (changed == 0) updated else propagate(updated, iter + 1)
     }
-    labels.select(col("id"), col("lbl").as("cluster_id"))
+    propagate(edges.select(col("u").as("id")).distinct()
+        .withColumn("lbl", col("id")).localCheckpoint(), 0)
+      .select(col("id"), col("lbl").as("cluster_id"))
   }
 
   /** CANONICAL selection — the step after cluster resolution that
@@ -913,8 +874,7 @@ object Dedup {
       .select(col(idCol), col("quality"))
       .join(clusters.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster_id")).orderBy(col("quality").desc, col(idCol))
+    val w = Window.partitionBy(col("cluster_id")).orderBy(col("quality").desc, col(idCol))
     member
       .withColumn("canonical_id", first(col(idCol)).over(w))
       .select(col(idCol), col("cluster_id"), col("canonical_id"),
@@ -956,16 +916,11 @@ object Dedup {
       .join(centDf, Seq("cluster"))
       .withColumn("centroid_sim", VectorOps.cosineFastRounded(col(vecCol), col("cv")))
       .drop("cv")
-    val l = scored.select(
-      col("cluster"), col(idCol).as("id_a"), col(vecCol).as("v_a"), col("centroid_sim").as("cs_a"))
-    val r = scored.select(
-      col("cluster"), col(idCol).as("id_b"), col(vecCol).as("v_b"), col("centroid_sim").as("cs_b"))
-    val removed = l
-      .join(r, Seq("cluster"))
-      .filter(col("id_a") =!= col("id_b"))
-      .filter(VectorOps.cosineFastRounded(col("v_a"), col("v_b")) >= threshold)
-      .filter(col("cs_b") < col("cs_a") ||
-        (col("cs_b") === col("cs_a") && col("id_b") < col("id_a")))
+    val (csA, csB) = (col("centroid_sim_a"), col("centroid_sim_b"))
+    val removed = blockedPairs(scored, Seq("cluster"), idCol, Seq(vecCol, "centroid_sim"),
+        ordered = true)
+      .filter(VectorOps.cosineFastRounded(col(s"${vecCol}_a"), col(s"${vecCol}_b")) >= threshold)
+      .filter(csB < csA || (csB === csA && col("id_b") < col("id_a")))
       .select(col("id_a").as(idCol)).distinct()
       .withColumn("_rm", lit(true))
     scored
@@ -988,11 +943,8 @@ object Dedup {
     // O(pairs) hot path: the native codegen'd cosine_sim expression —
     // one fused loop per pair, no interpreted HOF fallback.
     graft.plans.GraftFunctions.register(df.sparkSession)
-    val a = df.select(col(blockCol), col(idCol).as("id_a"), col(vecCol).as("v_a"))
-    val b = df.select(col(blockCol), col(idCol).as("id_b"), col(vecCol).as("v_b"))
-    a.join(b, Seq(blockCol))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col("v_a"), col("v_b")))
+    blockedPairs(df, Seq(blockCol), idCol, Seq(vecCol))
+      .withColumn("cos_sim", VectorOps.cosineFastRounded(col(s"${vecCol}_a"), col(s"${vecCol}_b")))
       .filter(col("cos_sim") >= threshold)
       .select(col(blockCol), col("id_a"), col("id_b"), col("cos_sim"))
   }

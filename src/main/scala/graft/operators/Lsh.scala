@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.VectorOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -76,7 +75,8 @@ object Lsh {
     }
 
   /** Candidate near-dup pairs: same bucket only (never all-pairs),
-    * verified by exact cosine ≥ threshold.
+    * verified by exact cosine ≥ threshold —
+    * [[Dedup.embeddingNearDupPairs]] blocked by the computed bucket.
     */
   def nearDupPairs(
       df: DataFrame,
@@ -85,21 +85,11 @@ object Lsh {
       dim: Int,
       nPlanes: Int,
       threshold: Double
-  ): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    val bucketed = df.select(
-      col(idCol), col(vecCol).as("v"),
-      bucket(col(vecCol), dim, nPlanes).as("bkt")
-    )
-    val a = bucketed.select(col("bkt"), col(idCol).as("id_a"), col("v").as("v_a"))
-    val b = bucketed.select(col("bkt"), col(idCol).as("id_b"), col("v").as("v_b"))
-    a.join(b, Seq("bkt"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos_sim", VectorOps.cosineFastRounded(col("v_a"), col("v_b")))
-      .filter(col("cos_sim") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos_sim"))
-      .distinct()
-  }
+  ): DataFrame =
+    Dedup.embeddingNearDupPairs(
+        df.select(col(idCol), col(vecCol), bucket(col(vecCol), dim, nPlanes).as("_bkt")),
+        vecCol, idCol, "_bkt", threshold)
+      .drop("_bkt")
 
   /** Multi-probe query: top-k among vectors in the query's probe
     * buckets (bucket pruning instead of a corpus scan).

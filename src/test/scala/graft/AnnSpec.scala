@@ -59,7 +59,7 @@ class AnnSpec extends SparkSpec {
     // Upsert a near-copy of the query vector under a fresh id: it must
     // land in the query's own cell and dominate the probe's top-k.
     val delta = queryDf
-      .select(lit(999999L).as("vec_id"), lit("new").as("label"), col("q_vec").as("embedding"))
+      .select(lit(999999L).as("vec_id"), lit(-1).as("label"), col("q_vec").as("embedding"))
     Ann.appendToIndex(dir, delta, "embedding", index.centroids)
 
     val after = probe()

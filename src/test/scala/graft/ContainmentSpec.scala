@@ -11,23 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class ContainmentSpec extends SparkSpec {
   import spark.implicits._
-
-  private def brute(df: DataFrame, tau: Double): Seq[(Long, Long, Double)] = {
-    val sh = df
-      .select(col("id"), TextOps.tokenize(col("s")).as("_t"))
-      .select(col("id"), array_distinct(TextOps.shingles(col("_t"))).as("sh"))
-      .filter(size(col("sh")) > 0)
-    sh.select(col("id").as("id_a"), col("sh").as("sa"))
-      .crossJoin(sh.select(col("id").as("id_b"), col("sh").as("sb")))
-      .filter(col("id_a") =!= col("id_b"))
-      .withColumn("c", round(
-        size(array_intersect(col("sa"), col("sb"))).cast("double") /
-          size(col("sa")).cast("double"), 4))
-      .filter(col("c") >= tau)
-      .select("id_a", "id_b", "c")
-      .orderBy("id_a", "id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-  }
+  import ContainmentSpec.brute
 
   test("equals brute force, including a doc of corpus-ubiquitous shingles") {
     val common = "the quick brown fox jumps over the lazy dog again and again"
@@ -131,5 +115,25 @@ class ContainmentSpec extends SparkSpec {
     val hybrid = Dedup.containmentPairs(df, "s", "id", 0.7, hotDf = 1L)
       .orderBy("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(fast == hybrid)
+  }
+}
+
+object ContainmentSpec {
+  /** All-pairs containment over (id, s), rounded as the operator rounds. */
+  def brute(df: DataFrame, tau: Double): Seq[(Long, Long, Double)] = {
+    val sh = df
+      .select(col("id"), TextOps.tokenize(col("s")).as("_t"))
+      .select(col("id"), array_distinct(TextOps.shingles(col("_t"))).as("sh"))
+      .filter(size(col("sh")) > 0)
+    sh.select(col("id").as("id_a"), col("sh").as("sa"))
+      .crossJoin(sh.select(col("id").as("id_b"), col("sh").as("sb")))
+      .filter(col("id_a") =!= col("id_b"))
+      .withColumn("c", round(
+        size(array_intersect(col("sa"), col("sb"))).cast("double") /
+          size(col("sa")).cast("double"), 4))
+      .filter(col("c") >= tau)
+      .select("id_a", "id_b", "c")
+      .orderBy("id_a", "id_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
   }
 }

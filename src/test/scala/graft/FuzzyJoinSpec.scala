@@ -11,16 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class FuzzyJoinSpec extends SparkSpec {
   import spark.implicits._
-
-  private def brute(df: DataFrame, textCol: String, idCol: String, t: Int) = {
-    val a = df.select(col(idCol).as("id_a"), col(textCol).as("_sa"))
-    val b = df.select(col(idCol).as("id_b"), col(textCol).as("_sb"))
-    a.crossJoin(b)
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("dist", levenshtein(col("_sa"), col("_sb")))
-      .filter(col("dist") <= t)
-      .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
-  }
+  import FuzzyJoinSpec.brute
 
   private def check(df: DataFrame, t: Int): Unit = {
     val got = Dedup.editDistanceJoin(df, "s", "id", maxDist = t)
@@ -73,5 +64,18 @@ class FuzzyJoinSpec extends SparkSpec {
       Dedup.editDistanceJoin(df, "s", "id", maxDist = 3)
     }
     assert(e.getMessage.contains("maxDist"))
+  }
+}
+
+object FuzzyJoinSpec {
+  /** All-pairs Levenshtein join: (id_a, id_b, dist) with id_a < id_b. */
+  def brute(df: DataFrame, textCol: String, idCol: String, t: Int): DataFrame = {
+    val a = df.select(col(idCol).as("id_a"), col(textCol).as("_sa"))
+    val b = df.select(col(idCol).as("id_b"), col(textCol).as("_sb"))
+    a.crossJoin(b)
+      .filter(col("id_a") < col("id_b"))
+      .withColumn("dist", levenshtein(col("_sa"), col("_sb")))
+      .filter(col("dist") <= t)
+      .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
   }
 }

@@ -59,6 +59,13 @@ class StreamPipelineSpec extends SparkSpec {
     val err = intercept[IllegalArgumentException](
       Ann.appendToIndex(dir, e.select("vec_id", "embedding"), "embedding", idx.centroids))
     assert(err.getMessage.contains("`label`"), err.getMessage)
+    // a delta holding one of them under another type fails, naming the
+    // column and both types
+    val typed = intercept[IllegalArgumentException](Ann.appendToIndex(dir,
+      e.select(col("vec_id"), col("embedding"), col("label").cast("string").as("label")),
+      "embedding", idx.centroids))
+    Seq("`label`", "string", "int").foreach(w => assert(typed.getMessage.contains(w), typed.getMessage))
+    assert(spark.read.parquet(dir).count() == e.count(), "a refused delta lands nothing")
   }
 
   test("decontaminateAndLand equals the batch decontamination over the same corpus") {
