@@ -24,12 +24,26 @@ object OracleSql {
   private def cosine(a: String, b: String): String =
     s"ROUND(list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 5)"
 
+  /** Hashed bag-of-words dimension of term `t` (first md5 byte mod 64)
+    * — twin of TextOps.hashedBowDim.
+    */
+  private def bowDim(t: String): String =
+    s"CAST(((strpos('0123456789abcdef', substr(md5($t), 1, 1)) - 1) * 16" +
+      s" + strpos('0123456789abcdef', substr(md5($t), 2, 1)) - 1) % 64 AS BIGINT)"
+
+  /** Count of dimensions whose signs disagree (strict > 0 on both
+    * sides) — Bq's Hamming distance over the packed sign bits, with no
+    * packing needed in SQL.
+    */
+  private def hamming(a: String, b: String): String =
+    s"CAST(len(list_filter(generate_series(1, 64), i -> ($a[i] > 0) <> ($b[i] > 0))) AS BIGINT)"
+
   /** 3-token md5 shingles (distinct) — twin of TextOps.shingles + array_distinct. */
   private val shingleExpr: String =
     "list_distinct(CASE WHEN len(toks) >= 3 THEN list_transform(generate_series(1, len(toks) - 2), " +
       "i -> md5(toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) ELSE [] END)"
 
-  /** min-hash for one seed — twin of TextOps.minHash. */
+  /** min-hash for one seed — twin of Dedup.minHashSignatures' `h<seed>`. */
   private def minHash(seed: Int): String =
     s"list_min(list_transform(sh, s -> md5('$seed:' || s)))"
 
@@ -341,30 +355,27 @@ object OracleSql {
 
 
 
-  /** Quality-score CTE (qs: doc_id, lang, n_tokens, stop_ratio,
-    * quality) — shared by quality_score and quality_filter.
-    */
   private lazy val enStopList: String =
     graft.operators.TextAnalysis.StopwordsByLang.toMap.apply("en")
       .map(w => s"'$w'").mkString("[", ", ", "]")
 
-  private lazy val qualityCte: String = {
-    val en = enStopList
-    s"""tkq AS (SELECT doc_id, lang, ${toks()} AS toks FROM documents),
-       |cq AS (SELECT doc_id, lang, toks,
+  /** Quality-score CTEs over `src` (… → `qs`: doc_id, [lang,] n_tokens,
+    * stop_ratio, quality) — twin of TextAnalysis.qualityScore; shared by
+    * quality_score, quality_filter and the curation twins.
+    */
+  private def qualityCte(src: String, lang: Boolean = true): String = {
+    val l = if (lang) "lang, " else ""
+    s"""tkq AS (SELECT doc_id, $l${toks()} AS toks FROM $src),
+       |cq AS (SELECT doc_id, ${l}toks,
        |       CASE WHEN len(toks) > 0
-       |            THEN CAST(len(list_filter(toks, t -> list_contains($en, t))) AS DOUBLE) / CAST(len(toks) AS DOUBLE)
+       |            THEN CAST(len(list_filter(toks, t -> list_contains($enStopList, t))) AS DOUBLE) / CAST(len(toks) AS DOUBLE)
        |            ELSE 0.0 END AS sr
        |      FROM tkq),
-       |qs AS (SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tokens, ROUND(sr, 4) AS stop_ratio,
+       |qs AS (SELECT doc_id, ${l}CAST(len(toks) AS BIGINT) AS n_tokens, ROUND(sr, 4) AS stop_ratio,
        |        ROUND(least(1.0, CAST(len(toks) AS DOUBLE) / 64.0) * 0.5 + least(1.0, sr * 5.0) * 0.5, 4) AS quality
        |       FROM cq)""".stripMargin
   }
 
-  /** MinHash-LSH pair CTE chain (corpus plant → shingles → signatures →
-    * bands → verified pairs in `ver`) — shared by dedup_minhash_lsh and
-    * dedup_clusters.
-    */
   /** MinHash banded-LSH pair CTE chain over any (doc_id, text) source
     * CTE — yields `tk`/`shx`/`shf`/`sig`/`bands`/`cand`/`ver`; callers
     * filter `ver` by their Jaccard threshold.
@@ -391,14 +402,91 @@ object OracleSql {
        |               / (CAST(len(sa.sh) + len(sb.sh) AS DOUBLE) - CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)), 4) AS jaccard
        |        FROM cand JOIN shf sa ON cand.id_a = sa.doc_id JOIN shf sb ON cand.id_b = sb.doc_id)""".stripMargin
 
-  private lazy val minhashPairCtes: String =
+  /** The planted near-dup corpus (twin of Queries.corpusWithNearDups)
+    * as `corpus(doc_id, text)`: every document plus, for docs < 25, a
+    * copy without its last 5 tokens at id + 10000.
+    */
+  private lazy val nearDupCorpus: String =
     s"""corpus AS (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
        |  SELECT doc_id + 10000 AS doc_id,
        |         array_to_string(toks[1 : greatest(len(toks) - 5, 1)], ' ') AS text
-       |  FROM (SELECT doc_id, ${toks()} AS toks FROM documents WHERE doc_id < 25)),
-       |${minhashPairBody("corpus")}""".stripMargin
+       |  FROM (SELECT doc_id, ${toks()} AS toks FROM documents WHERE doc_id < 25))""".stripMargin
+
+  /** The minhash pair chain over [[nearDupCorpus]] — shared by the
+    * dedup_minhash_lsh and dedup_clusters families.
+    */
+  private lazy val minhashPairCtes: String = s"$nearDupCorpus,\n${minhashPairBody("corpus")}"
+
+  /** Twin of Dedup.duplicateClusters over `ver`'s pairs with Jaccard >=
+    * 0.3: the undirected edges `e`, their reachability closure `r` (a
+    * recursive CTE — the statement opens WITH RECURSIVE) and each
+    * node's component id, its min reachable id, in `cl(id, cluster_id)`.
+    */
+  private val componentCtes: String =
+    """p AS (SELECT id_a, id_b FROM ver WHERE jaccard >= 0.3),
+      |e AS (SELECT id_a AS u, id_b AS v FROM p UNION SELECT id_b, id_a FROM p),
+      |nodes AS (SELECT DISTINCT u AS id FROM e),
+      |r AS (
+      |  SELECT id AS u, id AS v FROM nodes
+      |  UNION
+      |  SELECT r.u, e.v FROM r JOIN e ON r.v = e.u
+      |),
+      |cl AS (SELECT u AS id, min(v) AS cluster_id FROM r GROUP BY u)""".stripMargin
+
+  /** The embeddings plus planted near-dups (vec_id < 20 → +10000, first
+    * component +0.05) as `corpus(vec_id, [label,] emb)` — twin of
+    * Queries.embCorpusWithNearDups.
+    */
+  private def embNearDupCorpus(label: Boolean): String = {
+    val l = if (label) "label, " else ""
+    s"""${corpusCte(if (label) "vec_id, label" else "vec_id", "", "e", "emb")},
+       |corpus AS (
+       |  SELECT vec_id, ${l}emb FROM e
+       |  UNION ALL
+       |  SELECT vec_id + 10000 AS vec_id, ${l}list_prepend(emb[1] + 0.05, emb[2:64]) AS emb
+       |  FROM e WHERE vec_id < 20)""".stripMargin
+  }
+
+  /** The benchmark's distinct 3-shingles `bs(shm)` (docs < 10). */
+  private lazy val benchShingles: String =
+    s"""bt AS (SELECT ${toks()} AS toks FROM documents WHERE doc_id < 10),
+       |bs AS (SELECT DISTINCT unnest($shingleExpr) AS shm FROM bt)""".stripMargin
+
+  /** Every 10-token window of `toks`, space-joined (1-based start i) —
+    * Dedup's span gram.
+    */
+  private val spanGrams: String = "CASE WHEN len(toks) >= 10 THEN list_transform(generate_series(1, len(toks) - 9), " +
+    "i -> array_to_string(toks[i:i+9], ' ')) ELSE [] END"
+
+  /** Twin of Dedup's span rebuild (n = 10): `gramRows` (each md5'd
+    * 10-gram of `t(doc_id, toks)` with its 1-based start), `coverage`
+    * (every token position a gram in the `bad` set covers) and
+    * `rebuild` (the uncovered tokens re-joined in order; string_agg
+    * skips the NULL covered ones). A twin supplies its token source `t`
+    * among its `ctes` and the SELECT of its bad grams `g`.
+    */
+  private def spanRebuildSql(ctes: String, bad: String): String =
+    s"""WITH $ctes,
+       |tok AS (SELECT doc_id, unnest(toks) AS tok, unnest(generate_series(1, len(toks))) AS pos FROM t),
+       |gr AS (SELECT doc_id, md5(unnest($spanGrams)) AS g,
+       |        unnest(CASE WHEN len(toks) >= 10 THEN generate_series(1, len(toks) - 9) ELSE [] END) AS gpos
+       |       FROM t),
+       |bad AS ($bad),
+       |cov AS (SELECT DISTINCT gr.doc_id, gr.gpos + o.off AS pos
+       |        FROM gr JOIN bad USING (g) CROSS JOIN generate_series(0, 9) AS o(off))
+       |SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+       |       CAST(sum(CASE WHEN cov.pos IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS dropped_tokens,
+       |       COALESCE(string_agg(CASE WHEN cov.pos IS NULL THEN tok END, ' ' ORDER BY tok.pos), '') AS clean_text
+       |FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos
+       |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin
+
+  /** The benchmark's gram set (docs < 10, tokens of `text`) — the bad
+    * set of the decontamination twins.
+    */
+  private def benchmarkGrams(text: String): String =
+    s"SELECT DISTINCT md5(unnest($spanGrams)) AS g FROM (SELECT ${toks(text)} AS toks FROM documents WHERE doc_id < 10)"
 
   /** Hyperplane-LSH signature — twin of Lsh.bucket. The md5-derived
     * integer weights are computed once driver-side ([[graft.operators.Lsh.plane]])
@@ -450,24 +538,25 @@ object OracleSql {
        |        CAST(least(32, n - st) AS BIGINT) AS chunk_tokens
        |       FROM ch0)""".stripMargin
 
+  /** The semantic sidecar's document side: per-doc dimension counts
+    * `dd` and squared norms `dn` (twin of Fts's docdims; exact
+    * integers on both sides).
+    */
+  private lazy val semanticDocCtes: String =
+    s"""tok AS (SELECT doc_id, unnest(${toks()}) AS term FROM documents),
+       |d AS (SELECT doc_id, ${bowDim("term")} AS dim FROM tok),
+       |dd AS (SELECT doc_id, dim, CAST(count(*) AS BIGINT) AS cnt FROM d GROUP BY doc_id, dim),
+       |dn AS (SELECT doc_id, sum(cnt * cnt) AS ss FROM dd GROUP BY doc_id)""".stripMargin
+
   /** Twin of Queries.semanticSearch AND Fts.semanticProbe (the sidecar
     * is a pure function of the corpus): dims/counts are exact integers
     * on both sides; the only floating math is the final dot/(sqrt·sqrt),
     * identical expression shape → bit-identical.
     */
   private lazy val semanticTwin: String =
-    s"""WITH tok AS (SELECT doc_id, unnest(${toks()}) AS term FROM documents),
-       |d AS (SELECT doc_id,
-       |       CAST(((strpos('0123456789abcdef', substr(md5(term), 1, 1)) - 1) * 16
-       |             + strpos('0123456789abcdef', substr(md5(term), 2, 1)) - 1) % 64 AS BIGINT) AS dim
-       |      FROM tok),
-       |dd AS (SELECT doc_id, dim, CAST(count(*) AS BIGINT) AS cnt FROM d GROUP BY doc_id, dim),
+    s"""WITH $semanticDocCtes,
        |qt AS (SELECT unnest(${toks("'spark filter join stream'")}) AS term),
-       |qd AS (SELECT CAST(((strpos('0123456789abcdef', substr(md5(term), 1, 1)) - 1) * 16
-       |              + strpos('0123456789abcdef', substr(md5(term), 2, 1)) - 1) % 64 AS BIGINT) AS dim,
-       |              CAST(count(*) AS BIGINT) AS qcnt
-       |       FROM qt GROUP BY 1),
-       |dn AS (SELECT doc_id, sum(cnt * cnt) AS ss FROM dd GROUP BY doc_id),
+       |qd AS (SELECT ${bowDim("term")} AS dim, CAST(count(*) AS BIGINT) AS qcnt FROM qt GROUP BY 1),
        |qn AS (SELECT sum(qcnt * qcnt) AS qss FROM qd),
        |dt AS (SELECT dd.doc_id, sum(dd.cnt * qd.qcnt) AS dot FROM dd JOIN qd USING (dim) GROUP BY dd.doc_id)
        |SELECT dt.doc_id, ROUND(dt.dot / (sqrt(dn.ss) * sqrt(qn.qss)), 5) AS cos_sim
@@ -482,90 +571,127 @@ object OracleSql {
   private lazy val semanticBatchSql: String = {
     val qValues = Queries.BatchSemanticQueries
       .map { case (qid, t) => s"($qid, '$t')" }.mkString(", ")
-    val dimExpr = (t: String) =>
-      s"CAST(((strpos('0123456789abcdef', substr(md5($t), 1, 1)) - 1) * 16" +
-        s" + strpos('0123456789abcdef', substr(md5($t), 2, 1)) - 1) % 64 AS BIGINT)"
-    s"""WITH tok AS (SELECT doc_id, unnest(${toks()}) AS term FROM documents),
-       |d AS (SELECT doc_id, ${dimExpr("term")} AS dim FROM tok),
-       |dd AS (SELECT doc_id, dim, CAST(count(*) AS BIGINT) AS cnt FROM d GROUP BY doc_id, dim),
-       |qq AS (SELECT * FROM (VALUES $qValues) AS t(query_id, qtext)),
+    s"""WITH $semanticDocCtes,
+       |qq AS (SELECT CAST(query_id AS BIGINT) AS query_id, qtext FROM (VALUES $qValues) AS t(query_id, qtext)),
        |qtok AS (SELECT query_id, unnest(${toks("qtext")}) AS term FROM qq),
-       |qd AS (SELECT query_id, ${dimExpr("term")} AS dim, CAST(count(*) AS BIGINT) AS qcnt
+       |qd AS (SELECT query_id, ${bowDim("term")} AS dim, CAST(count(*) AS BIGINT) AS qcnt
        |       FROM qtok GROUP BY 1, 2),
-       |dn AS (SELECT doc_id, sum(cnt * cnt) AS ss FROM dd GROUP BY doc_id),
        |qn AS (SELECT query_id, sum(qcnt * qcnt) AS qss FROM qd GROUP BY query_id),
        |dt AS (SELECT qd.query_id, dd.doc_id, sum(dd.cnt * qd.qcnt) AS dot
        |       FROM dd JOIN qd USING (dim) GROUP BY qd.query_id, dd.doc_id),
        |sc AS (SELECT dt.query_id, dt.doc_id,
        |        ROUND(dt.dot / (sqrt(dn.ss) * sqrt(qn.qss)), 5) AS cos_sim
        |       FROM dt JOIN dn USING (doc_id) JOIN qn USING (query_id)),
-       |r AS (SELECT query_id, doc_id, cos_sim,
-       |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, doc_id) AS BIGINT) AS rk FROM sc)
-       |SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, cos_sim, rk FROM r
-       |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
+       |${rankedTopK("sc", "query_id", "doc_id, cos_sim", "cos_sim DESC, doc_id", 5)}""".stripMargin
   }
 
-  /** BM25 scoring CTEs (k1=1.2, b=0.75) — twin of Search.bm25Scores,
-    * over `documents` restricted by `where` (empty = whole corpus; a
-    * tombstone predicate for the delete-maintenance twin).
+  /** Twin of graft.plans.TopK.heap: `src`'s rows ranked within each `key`
+    * by `order` as `rk`, the top `k` of each key in (key, rk) order.
     */
-  private def bm25CteOver(where: String): String =
-    s"""tok AS (SELECT doc_id, unnest(${toks()}) AS term FROM documents $where),
-       |dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dl FROM tok GROUP BY doc_id),
-       |st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM dl),
-       |qt AS (SELECT doc_id, term FROM tok WHERE term IN ($queryTermsSql)),
-       |tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf FROM qt GROUP BY doc_id, term),
-       |dfq AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM qt GROUP BY term),
-       |sc AS (SELECT tf.doc_id,
-       |        SUM( ln(1.0 + (st.n - dfq.df + 0.5) / (dfq.df + 0.5))
-       |             * tf.tf * (1.2 + 1) / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / st.avgdl)) ) AS score
-       |       FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN st
-       |       GROUP BY tf.doc_id)""".stripMargin
+  private def rankedTopK(src: String, key: String, cols: String, order: String, k: Int): String =
+    s"""r AS (SELECT $key, $cols,
+       |      CAST(row_number() OVER (PARTITION BY $key ORDER BY $order) AS BIGINT) AS rk FROM $src)
+       |SELECT $key, $cols, rk FROM r WHERE rk <= $k ORDER BY $key, rk""".stripMargin
 
-  private val bm25Cte: String = bm25CteOver("")
+  /** The query side of a [[bm25Chain]]: the postings kept (terms IN
+    * `terms`, a literal list or a subquery), the CTEs and join that
+    * attach each term's query id (a batch) or weight, and the `key` and
+    * `weight` as they enter the score.
+    */
+  private final case class Bm25Query(terms: String, ctes: String = "", join: String = "",
+                                     key: String = "", weight: String = "")
 
-  /** Twin of Fts.probeBatch over Queries.BatchTextQueries: the same
-    * scoring CTEs as bm25Cte, parameterized per query via a VALUES
-    * table (the per-query df/idf and length norms are identical — the
-    * batch only adds the query_id grouping dimension).
-    */
-  /** Batch-BM25 SELECT over literal (query_id, terms) values — shared
-    * by the static bm25_batch twin and the dynamic retrieval_eval twin
-    * (whose query set is captured from the corpus at run time).
-    */
-  /** The batch-BM25 scoring CTE chain (… → `sc(query_id, doc_id,
-    * bm25)`) over an arbitrary (doc_id, text) source — `documents` for
-    * the static twins, the planted near-dup corpus for the
-    * cluster-eval twin.
-    */
-  private def bm25BatchScoreCtes(queries: Seq[(Long, Seq[String])], src: String): String = {
+  /** The fixed Queries.QueryTerms — Search.bm25Scores' one query. */
+  private lazy val fixedTerms = Bm25Query(queryTermsSql)
+
+  /** A batch of (query_id, terms) as a VALUES table `qq` — Fts.probeBatch. */
+  private def batchTerms(queries: Seq[(Long, Seq[String])]): Bm25Query = {
     val qValues = queries
       .flatMap { case (qid, ts) => ts.distinct.map(t => s"($qid, '$t')") }
       .mkString(", ")
-    val allTerms = queries.flatMap(_._2).distinct
-      .map(t => s"'$t'").mkString(", ")
-    s"""tok AS (SELECT doc_id, unnest(${toks()}) AS term FROM $src),
-       |dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dl FROM tok GROUP BY doc_id),
-       |st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM dl),
-       |qq AS (SELECT * FROM (VALUES $qValues) AS t(query_id, term)),
-       |qt AS (SELECT doc_id, term FROM tok WHERE term IN ($allTerms)),
-       |tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf FROM qt GROUP BY doc_id, term),
-       |dfq AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM qt GROUP BY term),
-       |sc AS (SELECT qq.query_id, tf.doc_id,
-       |        ROUND(SUM( ln(1.0 + (st.n - dfq.df + 0.5) / (dfq.df + 0.5))
-       |             * tf.tf * (1.2 + 1) / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / st.avgdl)) ), 5) AS bm25
-       |       FROM tf JOIN qq USING (term) JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN st
-       |       GROUP BY qq.query_id, tf.doc_id)""".stripMargin
+    Bm25Query(queries.flatMap(_._2).distinct.map(t => s"'$t'").mkString(", "),
+      s"qq AS (SELECT CAST(query_id AS BIGINT) AS query_id, term FROM (VALUES $qValues) AS t(query_id, term)),\n",
+      " JOIN qq USING (term)", "qq.query_id, ")
   }
 
+  /** Terms weighted by a `(term, qw)` CTE already in the statement —
+    * Search.bm25WeightedScores (RM3's second round).
+    */
+  private def weightedTerms(table: String): Bm25Query =
+    Bm25Query(s"SELECT term FROM $table", join = s" JOIN $table USING (term)", weight = s"$table.qw * ")
+
+  /** The corpus half of [[bm25Chain]]: `src`'s tokens `tok`, per-doc
+    * lengths `dl` and the corpus stats `st` (N, avgdl) — per `group`
+    * when one is given (each group its own sub-corpus).
+    */
+  private def bm25Corpus(src: String, group: String = ""): String = {
+    val g = if (group.isEmpty) "" else s"$group, "
+    val by = if (group.isEmpty) "" else s" GROUP BY $group"
+    s"""tok AS (SELECT ${g}doc_id, unnest(${toks()}) AS term FROM $src),
+       |dl AS (SELECT ${g}doc_id, CAST(count(*) AS DOUBLE) AS dl FROM tok GROUP BY ${g}doc_id),
+       |st AS (SELECT ${g}CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM dl$by)""".stripMargin
+  }
+
+  /** The scoring half of [[bm25Chain]] over `tok`/`dl`/`st`: the query
+    * side's postings `qt`, term frequencies `tf`, document frequencies
+    * `dfq` and the summed Search.bm25Term (k1 = 1.2, b = 0.75) per
+    * (query?, group?, doc) in `sc` — `score`, or `bm25` rounded to 5
+    * places. `suffix` names a second scoring pass over the same corpus.
+    */
+  private def bm25Score(q: Bm25Query, group: String = "", rounded: Boolean = false,
+                        suffix: String = ""): String = {
+    val g = if (group.isEmpty) "" else s"$group, "
+    val (qt, tf, dfq, sc) = (s"qt$suffix", s"tf$suffix", s"dfq$suffix", s"sc$suffix")
+    val id = s"${q.key}${if (group.isEmpty) "" else s"$tf.$group, "}$tf.doc_id"
+    val (open, close) = if (rounded) ("ROUND(", ", 5) AS bm25") else ("", " AS score")
+    val st = if (group.isEmpty) "CROSS JOIN st" else s"JOIN st USING ($group)"
+    s"""${q.ctes}$qt AS (SELECT ${g}doc_id, term FROM tok WHERE term IN (${q.terms})),
+       |$tf AS (SELECT ${g}doc_id, term, CAST(count(*) AS DOUBLE) AS tf FROM $qt GROUP BY ${g}doc_id, term),
+       |$dfq AS (SELECT ${g}term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM $qt GROUP BY ${g}term),
+       |$sc AS (SELECT $id,
+       |        ${open}SUM( ${q.weight}ln(1.0 + (st.n - $dfq.df + 0.5) / ($dfq.df + 0.5))
+       |             * $tf.tf * (1.2 + 1) / ($tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / st.avgdl)) )$close
+       |       FROM $tf${q.join} JOIN $dfq USING (${g}term) JOIN dl USING (${g}doc_id) $st
+       |       GROUP BY $id)""".stripMargin
+  }
+
+  /** BM25 scoring CTEs — twin of Search.bm25Term and the scorers built
+    * on it (Search.bm25Scores, bm25PerGroup, Fts.probe/probeBatch) —
+    * over `src`: (doc_id, text[, group]) rows, restricted by the caller
+    * (a tombstone predicate for the delete-maintenance twins).
+    */
+  private def bm25Chain(src: String, q: Bm25Query = fixedTerms, group: String = "",
+                        rounded: Boolean = false): String =
+    s"${bm25Corpus(src, group)},\n${bm25Score(q, group, rounded)}"
+
+  private lazy val bm25Cte: String = bm25Chain("documents")
+
+  /** Batch-BM25 top-k over literal (query_id, terms) values — shared by
+    * the static bm25_batch twin and the dynamic retrieval_eval twin
+    * (whose query set is captured from the corpus at run time).
+    */
   private def bm25BatchSelect(queries: Seq[(Long, Seq[String])], k: Int): String =
-    s"""WITH ${bm25BatchScoreCtes(queries, "documents")},
-       |r AS (SELECT query_id, doc_id, bm25,
-       |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, doc_id) AS BIGINT) AS rk FROM sc)
-       |SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, bm25, rk FROM r
-       |WHERE rk <= $k ORDER BY query_id, rk""".stripMargin
+    s"""WITH ${bm25Chain("documents", batchTerms(queries), rounded = true)},
+       |${rankedTopK("sc", "query_id", "doc_id, bm25", "bm25 DESC, doc_id", k)}""".stripMargin
 
   private lazy val bm25BatchSql: String = bm25BatchSelect(Queries.BatchTextQueries, 5)
+
+  /** Twin of Search.rrfFuse (k = 60) fusing the BM25 top 100 with a vector
+    * leg's top 100: `k100` selects (doc_id, cos_sim) over the `ctes`.
+    */
+  private def rrfSql(ctes: String, k100: String): String =
+    s"""WITH $bm25Cte,
+       |b100 AS (SELECT doc_id, ROUND(score, 5) AS bm25 FROM sc ORDER BY bm25 DESC, doc_id LIMIT 100),
+       |$ctes,
+       |k100 AS ($k100
+       |         ORDER BY cos_sim DESC, doc_id LIMIT 100),
+       |ra AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS rk_a FROM b100),
+       |rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY cos_sim DESC, doc_id) AS BIGINT) AS rk_b FROM k100)
+       |SELECT doc_id,
+       |       ROUND(COALESCE(1.0 / (60 + rk_a), 0) + COALESCE(1.0 / (60 + rk_b), 0), 6) AS rrf,
+       |       rk_a, rk_b
+       |FROM ra FULL OUTER JOIN rb USING (doc_id)
+       |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin
 
   /** Twin of Featurize.meanPoolChunks over the shared chunk CTE (no
     * ORDER BY — composable). Each chunk's unit-vector component is
@@ -577,10 +703,7 @@ object OracleSql {
   private lazy val docEmbeddingSelect: String =
     s"""WITH $chunkCte,
        |tok AS (SELECT doc_id, chunk_index, unnest(${toks("chunk")}) AS term FROM ch),
-       |d AS (SELECT doc_id, chunk_index,
-       |       CAST(((strpos('0123456789abcdef', substr(md5(term), 1, 1)) - 1) * 16
-       |             + strpos('0123456789abcdef', substr(md5(term), 2, 1)) - 1) % 64 AS BIGINT) AS dim
-       |      FROM tok),
+       |d AS (SELECT doc_id, chunk_index, ${bowDim("term")} AS dim FROM tok),
        |cd AS (SELECT doc_id, chunk_index, dim, CAST(count(*) AS BIGINT) AS cnt
        |       FROM d GROUP BY 1, 2, 3),
        |cn AS (SELECT doc_id, chunk_index, sum(cnt * cnt) AS ss FROM cd GROUP BY 1, 2),
@@ -592,9 +715,85 @@ object OracleSql {
        |SELECT s.doc_id, s.dim, ROUND(CAST(sv AS DOUBLE) / sqrt(CAST(ss2 AS DOUBLE)), 5) AS v
        |FROM s JOIN n ON s.doc_id = n.doc_id""".stripMargin
 
-  private val knnCte: String =
-    s"""q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-       |c AS (SELECT vec_id, label, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0)""".stripMargin
+  /** Every vector but query vector 0 — the single-query corpus. */
+  private val notQuery = " WHERE vec_id <> 0"
+
+  /** Query vector 0 as `q(qv)` — the query side of every single-query
+    * vector twin.
+    */
+  private val queryCte: String =
+    s"q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0)"
+
+  /** A vector CTE `name(cols, vec)` over `embeddings`, the embedding as
+    * doubles, rows kept by `where` — every vector twin's corpus side (by
+    * default `c(vec_id, ev)`: every vector but query vector 0) and the
+    * batch query side ([[batchQueries]]).
+    */
+  private def corpusCte(cols: String = "vec_id", where: String = notQuery,
+                        name: String = "c", vec: String = "ev"): String =
+    s"$name AS (SELECT $cols, ${dvec("embedding")} AS $vec FROM embeddings$where)"
+
+  /** The 8-query batch of the batch probes: vectors 0 … 7. */
+  private val batchQueries = " WHERE vec_id < 8"
+
+  private val knnCte: String = s"$queryCte,\n${corpusCte("vec_id, label")}"
+
+  /** Twin of Sq.quantize's static SQ8 codes over `src`'s `ev` (scale =
+    * maxabs/127, code = floor(x/s + 0.5); pure element-wise IEEE
+    * arithmetic, so codes are bit-identical across engines), as CTEs
+    * `z` and `cd(…, cv)`. The positive scale cancels in the cosine, so
+    * the approximate score uses the integer codes directly.
+    */
+  private def sqCtes(src: String): String =
+    s"""z AS (SELECT *, list_max(list_transform(ev, x -> abs(x))) / 127.0 AS s FROM $src),
+       |cd AS (SELECT *,
+       |        CASE WHEN s > 0 THEN list_transform(ev, x -> CAST(floor(x / s + 0.5) AS DOUBLE))
+       |             ELSE list_transform(ev, x -> 0.0) END AS cv FROM z)""".stripMargin
+
+  /** The seeded rotation of Bq.probeRotated — a pure function of
+    * (dim = 64, seed = 7), regenerated here and inlined as `rt(rm)`.
+    */
+  private lazy val rotationCte: String = {
+    val rot = graft.operators.Bq.rotationMatrix(64, seed = 7L)
+    s"rt AS (SELECT ${rot.map(r => "[" + r.map(dlit).mkString(", ") + "]").mkString("[", ",\n          ", "]")} AS rm)"
+  }
+
+  /** `v` rotated by [[rotationCte]]: each element one list_dot_product,
+    * the same sequential accumulation as the MatVec codegen loop.
+    */
+  private def rotate(v: String): String =
+    s"list_transform(generate_series(1, 64), i -> list_dot_product(rm[i], $v))"
+
+  /** Twin of Ann.probeScan's shortlist tail over a family's `scan`
+    * CTEs: the approximate `score` (named `name`, best first — ascending
+    * for a distance) cut to `refine` candidates per query, then the
+    * exact cosine re-rank to `k`. `from` is the scored relation joined
+    * to its query: `q`'s one row for the single query (`ORDER BY …
+    * LIMIT` heaps), a batch's per-query cells on cluster (`prn`/`rk`
+    * windows). `cols` carries layout columns (cluster) on the single
+    * path — a batch always carries cluster; `show` keeps the score in
+    * the output.
+    */
+  private def shortlistSql(scan: String, from: String, score: String, name: String,
+                           ascending: Boolean, refine: Int, k: Int, cols: String = "",
+                           show: Boolean = true, batch: Boolean = false): String = {
+    val order = s"$name${if (ascending) "" else " DESC"}, vec_id"
+    val shown = if (show) s"$name, " else ""
+    if (!batch)
+      s"""WITH $scan,
+         |refine AS (SELECT vec_id, ${cols}ev, $score AS $name
+         |        FROM $from ORDER BY $order LIMIT $refine)
+         |SELECT vec_id, $cols$shown${cosine("ev", "qv")} AS cos_sim
+         |FROM refine, q ORDER BY cos_sim DESC, vec_id LIMIT $k""".stripMargin
+    else
+      s"""WITH $scan,
+         |scored AS (SELECT query_id, vec_id, cluster, ev, qv, $score AS $name FROM $from),
+         |refine AS (SELECT query_id, vec_id, cluster, ev, qv, $name FROM (
+         |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY $order) AS prn
+         |        FROM scored) WHERE prn <= $refine),
+         |k AS (SELECT query_id, vec_id, cluster, $shown${cosine("ev", "qv")} AS cos_sim FROM refine),
+         |${rankedTopK("k", "query_id", s"vec_id, cluster, ${shown}cos_sim", "cos_sim DESC, vec_id", k)}""".stripMargin
+  }
 
   // ── Dynamic twins: fitted-model artifacts inlined as literals ────────
 
@@ -642,53 +841,120 @@ object OracleSql {
     s"list_transform($cb, c -> $terms)"
   }
 
-  /** Residual-PQ encode columns `<code>j` (nearest codeword of each
-    * subspace of the corpus residual `rv`) and the ADC sum of the
-    * query residual `qrv`'s distance lists indexed by those codes.
+  /** PQ codes `k<j>` of `src`'s `ev` (per subspace, the first minimum of
+    * the sequential distance chains to the codebook literals — twin of
+    * Pq.encode), as CTEs `pdl` and `enc(cols, k0 …)`.
     */
-  private def residualPq(model: operators.Pq.Model, code: String): (String, String) = {
-    val encCols = (0 until model.m).map { j =>
-      s"list_indexof(${distLambda(model, "rv", j)}, list_min(${distLambda(model, "rv", j)})) - 1 AS $code$j"
+  private def pqEncCtes(model: operators.Pq.Model, src: String, cols: String): String = {
+    val sub = model.dim / model.m
+    val dlCols = (0 until model.m).map { j =>
+      s"[${model.codebooks(j).map(c => distChain("ev", j * sub, c)).mkString(", ")}] AS dl$j"
     }.mkString(",\n        ")
-    val adcExpr = (0 until model.m).map(j => s"${distLambda(model, "qrv", j)}[$code$j + 1]").mkString(" + ")
-    (encCols, adcExpr)
+    val codeCols = (0 until model.m).map(j => s"list_indexof(dl$j, list_min(dl$j)) - 1 AS k$j").mkString(", ")
+    s"""pdl AS (SELECT $cols, $dlCols FROM $src),
+       |enc AS (SELECT $cols, $codeCols FROM pdl)""".stripMargin
   }
 
-  /** Per-QUERY cell ranking of the 8-query batch in SQL, as CTEs `<p>`,
-    * `<p>n`, `<p>d`, `<p>c0` and `<p>c`(query_id, qv, [nv,] cluster):
-    * a parallel unnest zips cluster ids with the inlined distance list
-    * from the normalized query `nv`, and row_number keeps each query's
+  /** The ADC sum over codes `k<j>`: subspace j's query distance list
+    * (`dists(j)`) indexed by the row's code.
+    */
+  private def adcSum(m: Int, dists: Int => String): String =
+    (0 until m).map(j => s"${dists(j)}[k$j + 1]").mkString(" + ")
+
+  /** The residual-PQ leg over `asg(vec_id, ev, nv, cluster)`: the
+    * query's residual `qrv` = qnv − centroid[cluster] per probed cell of
+    * `qc` (`key` = its query id, if any) in `qr`, the corpus residual
+    * `rv` = nv − centroid[its cell] in `ct`/`rs`, its codes `k<j>` in
+    * `enc`; and the ADC sum of qrv's distance lists indexed by those
+    * codes. Same left-to-right accumulation as the Spark
+    * CentroidResidual + HOF-fold chain, so the doubles match bit for bit
+    * and the candidate cut falls identically.
+    */
+  private def residualPq(model: operators.Pq.Model, cents: Array[Array[Double]], key: String): (String, String) = {
+    val dim = cents.head.length
+    val encCols = (0 until model.m).map { j =>
+      s"list_indexof(${distLambda(model, "rv", j)}, list_min(${distLambda(model, "rv", j)})) - 1 AS k$j"
+    }.mkString(",\n        ")
+    (s"""qr AS (SELECT ${key}qv, cluster,
+        |        list_transform(generate_series(1, $dim), i -> qnv[i] - (${centCase(cents)})[i]) AS qrv FROM qc),
+        |${residualCtes(cents)},
+        |enc AS (SELECT vec_id, ev, cluster,
+        |        $encCols FROM rs)""".stripMargin,
+      adcSum(model.m, j => distLambda(model, "qrv", j)))
+  }
+
+  /** Each assigned row's centroid `cent` and residual `rv` = nv − cent,
+    * as CTEs `ct` and `rs(vec_id, ev, cluster, cent, rv)` over `asg`.
+    */
+  private def residualCtes(cents: Array[Array[Double]]): String =
+    s"""ct AS (SELECT vec_id, ev, nv, cluster, ${centCase(cents)} AS cent FROM asg),
+       |rs AS (SELECT vec_id, ev, cluster, cent,
+       |        list_transform(generate_series(1, ${cents.head.length}), i -> nv[i] - cent[i]) AS rv FROM ct)""".stripMargin
+
+  /** Per-QUERY cell ranking of the 8-query batch in SQL, as CTEs `q`,
+    * `qn`, `qd`, `qc0` and `qc(query_id, qv, [qnv,] cluster)`: a
+    * parallel unnest zips cluster ids with the inlined distance list
+    * from the normalized query `qnv`, and row_number keeps each query's
     * 3 nearest cells (ties to the lower id — Ann.queryCellsLocal's
-    * order). `carryNv` keeps `nv` for a residual leg.
+    * order). `carryNv` keeps `qnv` for a residual leg.
     */
-  private def batchCellCtes(p: String, nv: String, cents: Array[Array[Double]],
-                            carryNv: Boolean = false): String = {
-    val c = if (carryNv) s"$nv, " else ""
-    val qDists = cents.map(x => distChain(nv, 0, x)).mkString(", ")
-    s"""$p AS (SELECT vec_id AS query_id, ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id < 8),
-       |${p}n AS (SELECT query_id, qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS $nv FROM $p),
-       |${p}d AS (SELECT query_id, qv, $c[$qDists] AS dl FROM ${p}n),
-       |${p}c0 AS (SELECT query_id, qv, ${c}unnest(generate_series(0, ${cents.length - 1})) AS cluster, unnest(dl) AS d FROM ${p}d),
-       |${p}c AS (SELECT query_id, qv, ${c}cluster FROM (
+  private def batchCellCtes(cents: Array[Array[Double]], carryNv: Boolean = false): String = {
+    val c = if (carryNv) "qnv, " else ""
+    val qDists = cents.map(x => distChain("qnv", 0, x)).mkString(", ")
+    s"""${corpusCte("vec_id AS query_id", batchQueries, "q", "qv")},
+       |qn AS (SELECT query_id, qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS qnv FROM q),
+       |qd AS (SELECT query_id, qv, $c[$qDists] AS dl FROM qn),
+       |qc0 AS (SELECT query_id, qv, ${c}unnest(generate_series(0, ${cents.length - 1})) AS cluster, unnest(dl) AS d FROM qd),
+       |qc AS (SELECT query_id, qv, ${c}cluster FROM (
        |        SELECT query_id, qv, ${c}cluster, row_number() OVER (PARTITION BY query_id ORDER BY d, cluster) AS rn
-       |        FROM ${p}c0) WHERE rn <= 3)""".stripMargin
+       |        FROM qc0) WHERE rn <= 3)""".stripMargin
   }
 
-  /** The batch twins' corpus assignment, as CTEs `<p>c`, `<p>nr`,
-    * `<p>dst` and `<p>asg`(vec_id, [label,] ev, [nv,] cluster): every
-    * embedding normalized to `nv` and assigned to its first-minimum
-    * centroid. `label` carries the label for a prefilter; `carryNv`
-    * keeps `nv` for a residual leg.
+  /** IVF assignment over `embeddings` (restricted by `where`) with the
+    * fitted unit-sphere centroids inlined, as CTEs `c`, `nrm`, `dst`
+    * and `asg(vec_id, [label,] ev, [nv,] cluster)`. Twin of Ann.assign:
+    * normalize, per-centroid sequential squared distance, first-minimum
+    * tie-break (list_indexof finds the first occurrence of the minimum,
+    * matching the strict-< codegen loop). `cells` keeps only the probed
+    * cells; `label` carries the label for a prefilter, `carryNv` the
+    * normalized vector for a residual leg.
     */
-  private def batchAsgCtes(p: String, nv: String, cents: Array[Array[Double]],
-                           label: Boolean = false, carryNv: Boolean = false): String = {
+  private def asgCtes(cents: Array[Array[Double]], where: String = "", cells: Seq[Int] = Nil,
+                      label: Boolean = false, carryNv: Boolean = false): String = {
     val l = if (label) "label, " else ""
-    val c = if (carryNv) s"$nv, " else ""
-    val cDists = cents.map(x => distChain(nv, 0, x)).mkString(", ")
-    s"""${p}c AS (SELECT vec_id, $l${dvec("embedding")} AS ev FROM embeddings),
-       |${p}nr AS (SELECT vec_id, ${l}ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS $nv FROM ${p}c),
-       |${p}dst AS (SELECT vec_id, ${l}ev, $c[$cDists] AS cdl FROM ${p}nr),
-       |${p}asg AS (SELECT vec_id, ${l}ev, ${c}CAST(list_indexof(cdl, list_min(cdl)) - 1 AS BIGINT) AS cluster FROM ${p}dst)""".stripMargin
+    val c = if (carryNv) "nv, " else ""
+    val dists = cents.map(x => distChain("nv", 0, x)).mkString(", ")
+    val cut =
+      if (cells.isEmpty) ""
+      else s"\n        WHERE (list_indexof(dl, list_min(dl)) - 1) IN (${cells.mkString(", ")})"
+    s"""${corpusCte(if (label) "vec_id, label" else "vec_id", where)},
+       |nrm AS (SELECT vec_id, ${l}ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv FROM c),
+       |dst AS (SELECT vec_id, ${l}ev, $c[$dists] AS dl FROM nrm),
+       |asg AS (SELECT vec_id, ${l}ev, ${c}CAST(list_indexof(dl, list_min(dl)) - 1 AS BIGINT) AS cluster FROM dst$cut)""".stripMargin
+  }
+
+  /** HIERARCHICAL assignment replayed from a fitted two-level hierarchy
+    * over `embeddings` (restricted by `where`), as CTEs `c`, `nrm`,
+    * `sup`, `sub` and `asg(vec_id, ev, nv, cluster)`: nearest super-cell
+    * (first minimum over the super distance list), then the nearest
+    * sub-cell WITHIN that super (CASE over supers, each with its own sub
+    * distance list), flat id = offset[super] + sub index. Same
+    * normalize / sequential squared distance / strict-< first minimum
+    * as every assignment twin and as the NearestCentroidTwoLevel loop.
+    */
+  private def twoLevelAsgCtes(two: operators.Ann.TwoLevel, where: String): String = {
+    val supDists = two.superCents.map(c => distChain("nv", 0, c)).mkString(", ")
+    val subCase = "CASE tsup " + two.subCents.zipWithIndex.map { case (subs, sp) =>
+      s"WHEN $sp THEN [${subs.map(c => distChain("nv", 0, c)).mkString(", ")}]"
+    }.mkString(" ") + " END"
+    val offCase = "CASE tsup " + two.offsets.zipWithIndex.map { case (o, sp) => s"WHEN $sp THEN $o" }.mkString(" ") + " END"
+    s"""${corpusCte(where = where)},
+       |nrm AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv FROM c),
+       |sup AS (SELECT vec_id, ev, nv,
+       |        CAST(list_indexof([$supDists], list_min([$supDists])) - 1 AS BIGINT) AS tsup FROM nrm),
+       |sub AS (SELECT vec_id, ev, nv, tsup, $subCase AS sdl FROM sup),
+       |asg AS (SELECT vec_id, ev, nv,
+       |        CAST(($offCase) + list_indexof(sdl, list_min(sdl)) - 1 AS BIGINT) AS cluster FROM sub)""".stripMargin
   }
 
   /** Twin builder for the two-level + residual-PQ batch probe chain —
@@ -697,103 +963,34 @@ object OracleSql {
     * `ann_two_level_compacted` (corpus excludes the tombstoned ids via
     * `corpusWhere`; hierarchy + model fitted on the base subset arrive
     * through the artifacts, so one builder replays every scenario).
-    * Chain: the QUERY side ranks cells FLAT over the concatenated
-    * codebook (what Ann.queryCellsLocal does) and residual-shifts per
-    * probed cell; the CORPUS side assigns HIERARCHICALLY (nearest
-    * super, then nearest sub within it, flat id = offset + sub index),
+    * The QUERY side ranks cells FLAT over the concatenated codebook
+    * (what Ann.queryCellsLocal does) and residual-shifts per probed
+    * cell; the CORPUS side assigns HIERARCHICALLY ([[twoLevelAsgCtes]]),
     * residual-encodes against the flat codebook entry of its cell
-    * (lambda-built distance lists at codes=256), and ADC-ranks. Same
-    * left-associated accumulation as the Spark CentroidResidual + HOF
-    * folds, so doubles match bit for bit and both cuts fall
-    * identically.
+    * (lambda-built distance lists at codes=256), and ADC-ranks.
     */
   private def twoLevelPqrTwinSql(two: operators.Ann.TwoLevel, model: operators.Pq.Model,
                                  corpusWhere: String): String = {
-    val cents = two.flat
-    val dim = cents.head.length
-    val supDists = two.superCents.map(c => distChain("tpnv", 0, c)).mkString(", ")
-    val subCase = "CASE tpsup " + two.subCents.zipWithIndex.map { case (subs, sp) =>
-      val dl = subs.map(c => distChain("tpnv", 0, c)).mkString(", ")
-      s"WHEN $sp THEN [$dl]"
-    }.mkString(" ") + " END"
-    val offCase = "CASE tpsup " + two.offsets.zipWithIndex.map { case (o, sp) =>
-      s"WHEN $sp THEN $o"
-    }.mkString(" ") + " END"
-    val (encCols, adcExpr) = residualPq(model, "tpr")
-    s"""WITH ${batchCellCtes("tpq", "tpqnv", cents, carryNv = true)},
-       |tpqr AS (SELECT query_id, qv, cluster,
-       |        list_transform(generate_series(1, $dim), i -> tpqnv[i] - (${centCase(cents)})[i]) AS qrv FROM tpqc),
-       |tpc AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings$corpusWhere),
-       |tpnr AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS tpnv FROM tpc),
-       |tpsupq AS (SELECT vec_id, ev, tpnv,
-       |        CAST(list_indexof([$supDists], list_min([$supDists])) - 1 AS BIGINT) AS tpsup FROM tpnr),
-       |tpsubq AS (SELECT vec_id, ev, tpnv, tpsup, $subCase AS sdl FROM tpsupq),
-       |tpasg AS (SELECT vec_id, ev, tpnv,
-       |        CAST(($offCase) + list_indexof(sdl, list_min(sdl)) - 1 AS BIGINT) AS cluster FROM tpsubq),
-       |tpct AS (SELECT vec_id, ev, tpnv, cluster, ${centCase(cents)} AS cent FROM tpasg),
-       |tprs AS (SELECT vec_id, ev, cluster,
-       |        list_transform(generate_series(1, $dim), i -> tpnv[i] - cent[i]) AS rv FROM tpct),
-       |tpenc AS (SELECT vec_id, ev, cluster,
-       |        $encCols FROM tprs),
-       |tpj AS (SELECT query_id, vec_id, cluster, ev, qv, $adcExpr AS adc
-       |        FROM tpenc JOIN tpqr USING (cluster)),
-       |tpcand AS (SELECT query_id, vec_id, cluster, ev, qv FROM (
-       |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc, vec_id) AS prn
-       |        FROM tpj) WHERE prn <= ${5 * 10}),
-       |tpfin AS (SELECT query_id, vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim FROM tpcand),
-       |tprk AS (SELECT query_id, vec_id, cluster, cos_sim,
-       |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |      FROM tpfin)
-       |SELECT query_id, vec_id, cluster, cos_sim, rk FROM tprk WHERE rk <= 5
-       |ORDER BY query_id, rk""".stripMargin
+    val (resCtes, adc) = residualPq(model, two.flat, "query_id, ")
+    shortlistSql(s"${batchCellCtes(two.flat, carryNv = true)},\n${twoLevelAsgCtes(two, corpusWhere)},\n$resCtes",
+      "enc JOIN qr USING (cluster)", adc, "adc", ascending = true, refine = 5 * 10, k = 5,
+      show = false, batch = true)
   }
 
-  /** IVF assignment CTE chain over `embeddings` with the fitted
-    * unit-sphere centroids inlined; yields asg(vec_id, ev, cluster).
-    * Twin of Ann.assign: normalize, per-centroid sequential squared
-    * distance, first-minimum tie-break (list_indexof finds the first
-    * occurrence of the minimum, matching the strict-< codegen loop).
-    */
-  private def annCtes(centroids: Array[Array[Double]]): String = {
-    val dists = centroids.map(c => distChain("nv", 0, c)).mkString(",\n        ")
-    s"""q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-       |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings),
-       |nrm AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv FROM c),
-       |dst AS (SELECT vec_id, ev, [$dists] AS dl FROM nrm),
-       |asg AS (SELECT vec_id, ev, CAST(list_indexof(dl, list_min(dl)) - 1 AS BIGINT) AS cluster FROM dst)""".stripMargin
-  }
-
-  /** The single-query IVF probe twin over [[annCtes]]: the probed
-    * cells' rows ranked by cosine to query vector 0, top 10. `where`
-    * is an extra corpus predicate; `labeled` joins the label and keeps
-    * `label IN (2, 5)` — both apply before the LIMIT (prefilter
-    * semantics; a postfilter twin would return fewer rows).
+  /** The single-query IVF probe twin over [[asgCtes]]: the probed
+    * cells' rows ranked by cosine to query vector 0, top 10. `where` is
+    * an extra corpus predicate; `labeled` keeps `label IN (2, 5)` — both
+    * apply before the LIMIT (prefilter semantics; a postfilter twin
+    * would return fewer rows).
     */
   private def singleProbeSql(cents: Array[Array[Double]], cells: Seq[Int], where: String = "",
                              labeled: Boolean = false): String = {
-    val (lblCte, lblCol, lblJoin, sep, lblWhere) =
-      if (labeled) (",\nlbl AS (SELECT vec_id, label FROM embeddings)", "label, ",
-        " JOIN lbl USING (vec_id)", "\n", " AND label IN (2, 5)")
-      else ("", "", "", " ", "")
-    s"""WITH ${annCtes(cents)}$lblCte
+    val (lblCol, lblWhere) = if (labeled) ("label, ", " WHERE label IN (2, 5)") else ("", "")
+    s"""WITH $queryCte,
+       |${asgCtes(cents, where, cells, label = labeled)}
        |SELECT vec_id, cluster, $lblCol${cosine("ev", "qv")} AS cos_sim
-       |FROM asg$lblJoin, q${sep}WHERE cluster IN (${cells.mkString(", ")})$where$lblWhere
+       |FROM asg, q$lblWhere
        |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-  }
-
-  /** The single-query corpus (every embedding but query vector 0)
-    * assigned to the fitted centroids and cut to the probed `cells`, as
-    * CTEs `c`, `nrm`, `dst` and `asg`(vec_id, ev, [nv,] cluster);
-    * `carryNv` keeps the normalized vector for a residual leg.
-    */
-  private def probedAsgCtes(cents: Array[Array[Double]], cells: Seq[Int], carryNv: Boolean = false): String = {
-    val c = if (carryNv) "nv, " else ""
-    val distList = cents.map(x => distChain("nv", 0, x)).mkString(", ")
-    s"""c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-       |nrm AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS nv FROM c),
-       |dst AS (SELECT vec_id, ev, $c[$distList] AS dl FROM nrm),
-       |asg AS (SELECT vec_id, ev, ${c}CAST(list_indexof(dl, list_min(dl)) - 1 AS BIGINT) AS cluster FROM dst
-       |        WHERE (list_indexof(dl, list_min(dl)) - 1) IN (${cells.mkString(", ")}))""".stripMargin
   }
 
   /** Twins generated from fitted-model constants captured at query run
@@ -830,13 +1027,8 @@ object OracleSql {
         val nrelValues = qs
           .map { case (q, _, rs) => s"(CAST($q AS BIGINT), CAST(${rs.size} AS BIGINT))" }
           .mkString(", ")
-        s"""WITH corpus AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 10000 AS doc_id,
-           |         array_to_string(toks[1 : greatest(len(toks) - 5, 1)], ' ') AS text
-           |  FROM (SELECT doc_id, ${toks()} AS toks FROM documents WHERE doc_id < 25)),
-           |${bm25BatchScoreCtes(qs.map(q => (q._1, q._2)), "corpus")},
+        s"""WITH $nearDupCorpus,
+           |${bm25Chain("corpus", batchTerms(qs.map(q => (q._1, q._2))), rounded = true)},
            |ranked AS (SELECT query_id, doc_id, bm25,
            |           CAST(row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, doc_id) AS BIGINT) AS rk2
            |           FROM sc WHERE doc_id <> query_id),
@@ -863,8 +1055,12 @@ object OracleSql {
     val ivf = OracleArtifacts.ivf.toSeq
     val ivfSingleEntries = ivf.flatMap { case (cents, ranked) =>
       val cells = ranked.take(3)
-      val ctes = annCtes(cents)
+      val ctes = s"$queryCte,\n${asgCtes(cents)}"
       val inCells = cells.mkString(", ")
+      // the shortlist legs probe every vector but the query itself
+      val probed = s"$queryCte,\n${asgCtes(cents, notQuery, cells)}"
+      def probeShortlist(scan: String, from: String, score: String, name: String, ascending: Boolean) =
+        shortlistSql(scan, from, score, name, ascending, refine = 40, k = 10, cols = "cluster, ")
       // The centroid-assignment expression is enormous (10 centroids ×
       // 64-dim distance chains) — MATERIALIZE it once and rank probed
       // cells by their position m in the ranked cell list, so each
@@ -879,7 +1075,7 @@ object OracleSql {
       }.map(l => s"($l)").mkString(" UNION ALL ")
       // ann_deleted and ann_compacted rank the same live corpus:
       // compaction rewrites the layout, it must not move a ranked row
-      val live = singleProbeSql(cents, cells, " AND vec_id % 10 <> 3")
+      val live = singleProbeSql(cents, cells, " WHERE vec_id % 10 <> 3")
       Seq(
         "ann_recall_sweep" ->
           s"""WITH $ctes,
@@ -913,19 +1109,7 @@ object OracleSql {
           // postings layout is a pure function of the corpus — proven
           // separately by bm25_indexed), IVF probe from the centroid
           // literals, RRF identical to hybrid_rrf's twin.
-          s"""WITH $bm25Cte,
-             |b100 AS (SELECT doc_id, ROUND(score, 5) AS bm25 FROM sc ORDER BY bm25 DESC, doc_id LIMIT 100),
-             |$ctes,
-             |k100 AS (SELECT vec_id AS doc_id, ${cosine("ev", "qv")} AS cos_sim
-             |         FROM asg, q WHERE cluster IN ($inCells)
-             |         ORDER BY cos_sim DESC, doc_id LIMIT 100),
-             |ra AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS rk_a FROM b100),
-             |rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY cos_sim DESC, doc_id) AS BIGINT) AS rk_b FROM k100)
-             |SELECT doc_id,
-             |       ROUND(COALESCE(1.0 / (60 + rk_a), 0) + COALESCE(1.0 / (60 + rk_b), 0), 6) AS rrf,
-             |       rk_a, rk_b
-             |FROM ra FULL OUTER JOIN rb USING (doc_id)
-             |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
+          rrfSql(ctes, s"SELECT vec_id AS doc_id, ${cosine("ev", "qv")} AS cos_sim\n         FROM asg, q WHERE cluster IN ($inCells)"),
         "ann_recall" ->
           s"""WITH $ctes,
              |probe AS (SELECT vec_id FROM asg, q WHERE cluster IN ($inCells)
@@ -933,47 +1117,15 @@ object OracleSql {
              |ex AS (SELECT vec_id FROM c, q ORDER BY ${cosine("ev", "qv")} DESC, vec_id LIMIT 10)
              |SELECT CAST(10 AS BIGINT) AS top_k, CAST(${cells.size} AS BIGINT) AS n_probe,
              |       ROUND(CAST((SELECT count(*) FROM ex JOIN probe USING (vec_id)) AS DOUBLE) / 10.0, 4) AS recall""".stripMargin,
+        // Twins of Queries.ivfsqProbe / ivfbqProbe / ivfmrlProbe: the IVF
+        // assignment (fitted-centroid literals) filters to the probed
+        // cells, then each family's leg as its flat twin (sq_probe,
+        // bq_probe, matryoshka_probe) — approx prune to 40, exact re-rank.
         "ivfsq_probe" ->
-          // Twin of Queries.ivfsqProbe: IVF assignment (fitted-centroid
-          // literals) filters to the probed cells; the SQ8 leg is pure
-          // element-wise arithmetic (scale = maxabs/127, floor(x/s + 0.5)
-          // codes — see sq_probe); approx prune to 40 then exact re-rank.
-          s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-             |${probedAsgCtes(cents, cells)},
-             |z AS (SELECT vec_id, ev, cluster, list_max(list_transform(ev, x -> abs(x))) / 127.0 AS s FROM asg),
-             |cd AS (SELECT vec_id, ev, cluster,
-             |        CASE WHEN s > 0 THEN list_transform(ev, x -> CAST(floor(x / s + 0.5) AS DOUBLE))
-             |             ELSE list_transform(ev, x -> 0.0) END AS cv FROM z),
-             |ap AS (SELECT vec_id, cluster, ev, ${cosine("cv", "qv")} AS approx_sim
-             |       FROM cd, q ORDER BY approx_sim DESC, vec_id LIMIT 40)
-             |SELECT vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim
-             |FROM ap, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
-        "ivfbq_probe" ->
-          // Twin of Queries.ivfbqProbe: IVF assignment (fitted-centroid
-          // literals) filters to the probed cells; the BQ leg is the
-          // per-dimension sign-disagreement count (see bq_probe — no
-          // packing needed in SQL); hamming cut to 40, exact re-rank.
-          s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-             |${probedAsgCtes(cents, cells)},
-             |h AS (SELECT a.vec_id, a.ev, a.cluster,
-             |       CAST(len(list_filter(generate_series(1, 64),
-             |                            i -> (a.ev[i] > 0) <> (qv[i] > 0))) AS BIGINT) AS hamming
-             |      FROM asg a, q),
-             |cand AS (SELECT * FROM h ORDER BY hamming, vec_id LIMIT 40)
-             |SELECT vec_id, cluster, hamming, ${cosine("ev", "qv")} AS cos_sim
-             |FROM cand, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+          probeShortlist(s"$probed,\n${sqCtes("asg")}", "cd, q", cosine("cv", "qv"), "approx_sim", ascending = false),
+        "ivfbq_probe" -> probeShortlist(probed, "asg, q", hamming("ev", "qv"), "hamming", ascending = true),
         "ivfmrl_probe" ->
-          // Twin of Queries.ivfmrlProbe: IVF assignment (fitted-centroid
-          // literals) filters to the probed cells; the MRL leg is a plain
-          // 1-based inclusive list slice (== Spark's slice(col, 1, 16) ==
-          // the stored prefix column, which is exactly the leading float
-          // elements); prefix-cosine prune to 40, exact full-dim re-rank.
-          s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-             |${probedAsgCtes(cents, cells)},
-             |ap AS (SELECT vec_id, cluster, ev, ${cosine("ev[1:16]", "qv[1:16]")} AS approx_sim
-             |       FROM asg, q ORDER BY approx_sim DESC, vec_id LIMIT 40)
-             |SELECT vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim
-             |FROM ap, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+          probeShortlist(probed, "asg, q", cosine("ev[1:16]", "qv[1:16]"), "approx_sim", ascending = false),
         "ivfsq_residual" -> {
           // Twin of Queries.ivfsqResidual: IVF assignment (centroid
           // literals) → per-row centroid pick (CASE over cluster) →
@@ -982,21 +1134,16 @@ object OracleSql {
           // exact re-rank. A zero residual (s = 0) reconstructs to the
           // centroid itself, matching Spark's zero-codes branch.
           val dim = cents.head.length
-          s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-             |${probedAsgCtes(cents, cells, carryNv = true)},
-             |ct AS (SELECT vec_id, ev, nv, cluster, ${centCase(cents)} AS cent FROM asg),
-             |rs AS (SELECT vec_id, ev, cluster, cent,
-             |        list_transform(generate_series(1, $dim), i -> nv[i] - cent[i]) AS res FROM ct),
-             |z AS (SELECT vec_id, ev, cluster, cent, res,
-             |       list_max(list_transform(res, x -> abs(x))) / 127.0 AS s FROM rs),
-             |rc AS (SELECT vec_id, ev, cluster,
-             |        CASE WHEN s > 0
-             |          THEN list_transform(generate_series(1, $dim), i -> cent[i] + CAST(floor(res[i] / s + 0.5) AS DOUBLE) * s)
-             |          ELSE cent END AS recon FROM z),
-             |ap AS (SELECT vec_id, cluster, ev, ${cosine("recon", "qv")} AS approx_sim
-             |       FROM rc, q ORDER BY approx_sim DESC, vec_id LIMIT 40)
-             |SELECT vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim
-             |FROM ap, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
+          probeShortlist(
+            s"""$queryCte,
+               |${asgCtes(cents, notQuery, cells, carryNv = true)},
+               |${residualCtes(cents)},
+               |z AS (SELECT *, list_max(list_transform(rv, x -> abs(x))) / 127.0 AS s FROM rs),
+               |rc AS (SELECT vec_id, ev, cluster,
+               |        CASE WHEN s > 0
+               |          THEN list_transform(generate_series(1, $dim), i -> cent[i] + CAST(floor(rv[i] / s + 0.5) AS DOUBLE) * s)
+               |          ELSE cent END AS recon FROM z)""".stripMargin,
+            "rc, q", cosine("recon", "qv"), "approx_sim", ascending = false)
         },
         "cluster_topics" ->
           // Twin of Queries.clusterTopics: fitted-centroid assignment over
@@ -1015,104 +1162,49 @@ object OracleSql {
              |WHERE rk.rank <= 5 ORDER BY rk.cluster, rk.rank""".stripMargin)
     }
     // The batch twins rank each query's cells in SQL (batchCellCtes),
-    // assign the corpus (batchAsgCtes) and join on cluster — the twin of
-    // the batch Ann.probe end to end, composed with each family's leg.
+    // assign the corpus (asgCtes) and join on cluster — the twin of the
+    // batch Ann.probe end to end, composed with each family's leg.
     val ivfBatchEntries = ivf.flatMap { case (cents, _) =>
-      val batchSql =
-        s"""WITH ${batchCellCtes("bq", "qnv", cents)},
-           |${batchAsgCtes("b", "nv2", cents)},
-           |sc AS (SELECT bqc.query_id, basg.vec_id, basg.cluster, ${cosine("ev", "qv")} AS cos_sim
-           |       FROM basg JOIN bqc USING (cluster)),
-           |r AS (SELECT query_id, vec_id, cluster, cos_sim,
-           |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-           |      FROM sc)
-           |SELECT query_id, vec_id, cluster, cos_sim, rk FROM r WHERE rk <= 5
-           |ORDER BY query_id, rk""".stripMargin
-      val rot = graft.operators.Bq.rotationMatrix(64, seed = 7L)
-      val rlit = rot.map(r => "[" + r.map(dlit).mkString(", ") + "]")
-        .mkString("[", ",\n          ", "]")
+      val cellsAsg = s"${batchCellCtes(cents)},\n${asgCtes(cents)}"
+      def batchShortlist(scan: String, from: String, score: String, name: String, ascending: Boolean) =
+        shortlistSql(scan, from, score, name, ascending, refine = 20, k = 5, batch = true)
+      def batchProbe(label: Boolean): String = {
+        val (l, pred) = if (label) ("label, ", " WHERE label IN (2, 5)") else ("", "")
+        s"""WITH ${batchCellCtes(cents)},
+           |${asgCtes(cents, label = label)},
+           |sc AS (SELECT qc.query_id, asg.vec_id, asg.cluster, $l${cosine("ev", "qv")} AS cos_sim
+           |       FROM asg JOIN qc USING (cluster)$pred),
+           |${rankedTopK("sc", "query_id", s"vec_id, cluster, ${l}cos_sim", "cos_sim DESC, vec_id", 5)}""".stripMargin
+      }
+      val batchSql = batchProbe(label = false)
       Seq(
         // the persisted-layout probe is the same computation served from
         // disk — one twin, two keys
         "ann_batch_probe" -> batchSql,
         "ann_batch_persisted" -> batchSql,
-        "ann_batch_filtered" ->
-          // ann_filtered's metadata predicate applied BEFORE the
-          // per-query ranking window — prefilter semantics per query (a
-          // postfilter twin would return fewer than k rows per query).
-          s"""WITH ${batchCellCtes("fbq", "fqnv", cents)},
-             |${batchAsgCtes("fb", "fnv", cents, label = true)},
-             |fsc AS (SELECT fbqc.query_id, fbasg.vec_id, fbasg.cluster, fbasg.label, ${cosine("ev", "qv")} AS cos_sim
-             |       FROM fbasg JOIN fbqc USING (cluster) WHERE label IN (2, 5)),
-             |fr AS (SELECT query_id, vec_id, cluster, label, cos_sim,
-             |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-             |      FROM fsc)
-             |SELECT query_id, vec_id, cluster, label, cos_sim, rk FROM fr WHERE rk <= 5
-             |ORDER BY query_id, rk""".stripMargin,
+        // ann_filtered's metadata predicate applied BEFORE the per-query
+        // ranking window — prefilter semantics per query (a postfilter
+        // twin would return fewer than k rows per query).
+        "ann_batch_filtered" -> batchProbe(label = true),
+        // the static SQ8 arithmetic (as ivfsq_probe) — approximate cosine
+        // on the int codes, per-query refine prune to 20, exact re-rank to 5
         "ann_batch_sq" ->
-          // the static SQ8 arithmetic (as ivfsq_probe) — approximate
-          // cosine on the int codes, per-query refine prune to 20, exact
-          // re-rank to 5.
-          s"""WITH ${batchCellCtes("sbq", "sqnv", cents)},
-             |${batchAsgCtes("sb", "snv", cents)},
-             |sbz AS (SELECT vec_id, ev, cluster, list_max(list_transform(ev, x -> abs(x))) / 127.0 AS s FROM sbasg),
-             |sbcd AS (SELECT vec_id, ev, cluster,
-             |        CASE WHEN s > 0 THEN list_transform(ev, x -> CAST(floor(x / s + 0.5) AS DOUBLE))
-             |             ELSE list_transform(ev, x -> 0.0) END AS cv FROM sbz),
-             |sbap AS (SELECT query_id, vec_id, cluster, ev, qv, ${cosine("cv", "qv")} AS approx_sim
-             |        FROM sbcd JOIN sbqc USING (cluster)),
-             |sbref AS (SELECT query_id, vec_id, cluster, ev, qv, approx_sim FROM (
-             |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY approx_sim DESC, vec_id) AS prn
-             |        FROM sbap) WHERE prn <= 20),
-             |sbfin AS (SELECT query_id, vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim FROM sbref),
-             |sbr AS (SELECT query_id, vec_id, cluster, approx_sim, cos_sim,
-             |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-             |      FROM sbfin)
-             |SELECT query_id, vec_id, cluster, approx_sim, cos_sim, rk FROM sbr WHERE rk <= 5
-             |ORDER BY query_id, rk""".stripMargin,
+          batchShortlist(s"$cellsAsg,\n${sqCtes("asg")}", "cd JOIN qc USING (cluster)", cosine("cv", "qv"),
+            "approx_sim", ascending = false),
+        // the MRL prefix leg (as ivfmrl_probe): the stored prefix is exact
+        // leading floats, so approx_sim is a plain [1:16] slice cosine
         "ann_batch_mrl" ->
-          // the MRL prefix leg (as ivfmrl_probe) — the stored prefix is
-          // exact leading floats, so approx_sim is a plain [1:16] slice
-          // cosine; per-query refine prune to 20, exact full-dim re-rank.
-          s"""WITH ${batchCellCtes("mbq", "mqnv", cents)},
-             |${batchAsgCtes("mb", "mnv", cents)},
-             |mbap AS (SELECT query_id, vec_id, cluster, ev, qv, ${cosine("ev[1:16]", "qv[1:16]")} AS approx_sim
-             |        FROM mbasg JOIN mbqc USING (cluster)),
-             |mbref AS (SELECT query_id, vec_id, cluster, ev, qv, approx_sim FROM (
-             |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY approx_sim DESC, vec_id) AS prn
-             |        FROM mbap) WHERE prn <= 20),
-             |mbfin AS (SELECT query_id, vec_id, cluster, approx_sim, ${cosine("ev", "qv")} AS cos_sim FROM mbref),
-             |mbr AS (SELECT query_id, vec_id, cluster, approx_sim, cos_sim,
-             |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-             |      FROM mbfin)
-             |SELECT query_id, vec_id, cluster, approx_sim, cos_sim, rk FROM mbr WHERE rk <= 5
-             |ORDER BY query_id, rk""".stripMargin,
+          batchShortlist(cellsAsg, "asg JOIN qc USING (cluster)", cosine("ev[1:16]", "qv[1:16]"),
+            "approx_sim", ascending = false),
+        // bq_rotated's rotated-sign hamming, per-query hamming prune to
+        // 20, exact re-rank on the ORIGINAL vectors to 5
         "ann_batch_bq_rotated" ->
-          // bq_rotated's rotated-sign hamming (the seeded rotation is a
-          // pure function of (dim=64, seed=7), regenerated and inlined;
-          // each rotated element is one list_dot_product — the same
-          // sequential accumulation as the MatVec codegen loop), per-query
-          // hamming prune to 20, exact re-rank on the ORIGINAL vectors to 5.
-          s"""WITH rt AS (SELECT $rlit AS rm),
-             |${batchCellCtes("brq", "brqnv", cents)},
-             |brqr AS (SELECT query_id, qv, cluster,
-             |        list_transform(generate_series(1, 64), i -> list_dot_product(rm[i], qv)) AS rq FROM brqc, rt),
-             |${batchAsgCtes("br", "brnv", cents)},
-             |brrot AS (SELECT vec_id, ev, cluster,
-             |        list_transform(generate_series(1, 64), i -> list_dot_product(rm[i], ev)) AS re FROM brasg, rt),
-             |brh AS (SELECT query_id, vec_id, cluster, ev, qv,
-             |       CAST(len(list_filter(generate_series(1, 64),
-             |                            i -> (re[i] > 0) <> (rq[i] > 0))) AS BIGINT) AS hamming
-             |       FROM brrot JOIN brqr USING (cluster)),
-             |brcand AS (SELECT query_id, vec_id, cluster, ev, qv, hamming FROM (
-             |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, vec_id) AS prn
-             |        FROM brh) WHERE prn <= 20),
-             |brfin AS (SELECT query_id, vec_id, cluster, hamming, ${cosine("ev", "qv")} AS cos_sim FROM brcand),
-             |brr AS (SELECT query_id, vec_id, cluster, hamming, cos_sim,
-             |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-             |      FROM brfin)
-             |SELECT query_id, vec_id, cluster, hamming, cos_sim, rk FROM brr WHERE rk <= 5
-             |ORDER BY query_id, rk""".stripMargin)
+          batchShortlist(
+            s"""$rotationCte,
+               |$cellsAsg,
+               |qr AS (SELECT query_id, qv, cluster, ${rotate("qv")} AS rq FROM qc, rt),
+               |rot AS (SELECT vec_id, ev, cluster, ${rotate("ev")} AS re FROM asg, rt)""".stripMargin,
+            "rot JOIN qr USING (cluster)", hamming("re", "rq"), "hamming", ascending = true))
     }
     val annIncrEntries = OracleArtifacts.annIncremental.toSeq.flatMap { case (cents, cells) =>
       val sql = singleProbeSql(cents, cells)
@@ -1122,175 +1214,70 @@ object OracleSql {
     }
     val pqEntries = OracleArtifacts.pq.toSeq.flatMap { case (model, table) =>
       val sub = model.dim / model.m
-      val dlCols = (0 until model.m).map { j =>
-        val lists = model.codebooks(j).map(c => distChain("ev", j * sub, c)).mkString(", ")
-        s"[$lists] AS dl$j"
-      }.mkString(",\n        ")
-      val codeCols = (0 until model.m)
-        .map(j => s"list_indexof(dl$j, list_min(dl$j)) - 1 AS k$j").mkString(", ")
-      val adcExpr = (0 until model.m).map { j =>
-        "[" + table(j).map(dlit).mkString(", ") + s"][k$j + 1]"
-      }.mkString(" + ")
-      ("pq_probe" ->
-        s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-           |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-           |dst AS (SELECT vec_id, ev, $dlCols FROM c),
-           |cd AS (SELECT vec_id, ev, $codeCols FROM dst),
-           |cand AS (SELECT vec_id, ev FROM cd ORDER BY $adcExpr ASC, vec_id LIMIT 100)
-           |SELECT vec_id, ${cosine("ev", "qv")} AS cos_sim FROM cand, q
-           |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin) +: ivf.flatMap { case (cents, ranked) =>
+      // the single query's ADC: Pq's driver-side distance table literal,
+      // indexed by the row's codes; exact cosine re-rank of the top 100
+      def singlePq(scan: String) = shortlistSql(scan, "enc",
+        adcSum(model.m, j => "[" + table(j).map(dlit).mkString(", ") + "]"), "adc",
+        ascending = true, refine = 100, k = 10, show = false)
+      ("pq_probe" -> singlePq(s"$queryCte,\n${corpusCte()},\n${pqEncCtes(model, "c", "vec_id, ev")}")) +:
+        ivf.flatMap { case (cents, ranked) =>
         Seq(
-          "ivfpq_probe" -> {
-            // Composition of the two fitted-constant twins: IVF assignment
-            // (annCtes form, distinct names) filters to the probed cells,
-            // then the PQ ADC chain ranks and the exact cosine re-ranks.
-            val ivfDists = cents.map(c => distChain("pnv", 0, c)).mkString(",\n        ")
-            val pdlCols = (0 until model.m).map { j =>
-              val lists = model.codebooks(j).map(c => distChain("pev", j * sub, c)).mkString(", ")
-              s"[$lists] AS pdl$j"
-            }.mkString(",\n        ")
-            val pCodeCols = (0 until model.m)
-              .map(j => s"list_indexof(pdl$j, list_min(pdl$j)) - 1 AS pk$j").mkString(", ")
-            val pAdcExpr = (0 until model.m).map { j =>
-              "[" + table(j).map(dlit).mkString(", ") + s"][pk$j + 1]"
-            }.mkString(" + ")
-            s"""WITH qq AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-               |pc AS (SELECT vec_id, ${dvec("embedding")} AS pev FROM embeddings WHERE vec_id <> 0),
-               |pnr AS (SELECT vec_id, pev, list_transform(pev, x -> x / sqrt(list_dot_product(pev, pev))) AS pnv FROM pc),
-               |pdst AS (SELECT vec_id, pev, [$ivfDists] AS pdl FROM pnr),
-               |pasg AS (SELECT vec_id, pev FROM pdst
-               |         WHERE (list_indexof(pdl, list_min(pdl)) - 1) IN (${ranked.take(3).mkString(", ")})),
-               |padc AS (SELECT vec_id, pev, $pdlCols FROM pasg),
-               |pcd AS (SELECT vec_id, pev, $pCodeCols FROM padc),
-               |pcand AS (SELECT vec_id, pev FROM pcd ORDER BY $pAdcExpr ASC, vec_id LIMIT 100)
-               |SELECT vec_id, ${cosine("pev", "qv")} AS cos_sim FROM pcand, qq
-               |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-          },
-          "ann_batch_pq" -> {
-            // the batch cell chain + the PQ encode chain (as ivfpq_probe)
-            // + the batch ADC — each query's distance table is the list
-            // of distChains from ITS subvectors to the codebook literals,
-            // indexed by the corpus row's code. Same left-to-right term
-            // order as the Spark codegen chain, so the doubles match bit
-            // for bit and the candidate cut falls identically.
-            val encCols = (0 until model.m).map { j =>
-              val lists = model.codebooks(j).map(c => distChain("ev", j * sub, c)).mkString(", ")
-              s"list_indexof([$lists], list_min([$lists])) - 1 AS pbk$j"
-            }.mkString(",\n        ")
-            val bAdcExpr = (0 until model.m).map { j =>
-              val lists = model.codebooks(j).map(c => distChain("qv", j * sub, c)).mkString(", ")
-              s"[$lists][pbk$j + 1]"
-            }.mkString(" + ")
-            s"""WITH ${batchCellCtes("pbq", "pbqnv", cents)},
-               |${batchAsgCtes("pb", "pbnv", cents)},
-               |pbenc AS (SELECT vec_id, ev, cluster,
-               |        $encCols FROM pbasg),
-               |pbj AS (SELECT query_id, vec_id, cluster, ev, qv, $bAdcExpr AS adc
-               |        FROM pbenc JOIN pbqc USING (cluster)),
-               |pbcand AS (SELECT query_id, vec_id, cluster, ev, qv FROM (
-               |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc, vec_id) AS prn
-               |        FROM pbj) WHERE prn <= ${5 * 10}),
-               |pbfin AS (SELECT query_id, vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim FROM pbcand),
-               |pbr AS (SELECT query_id, vec_id, cluster, cos_sim,
-               |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-               |      FROM pbfin)
-               |SELECT query_id, vec_id, cluster, cos_sim, rk FROM pbr WHERE rk <= 5
-               |ORDER BY query_id, rk""".stripMargin
-          })
+          // Composition of the two fitted-constant twins: IVF assignment
+          // filters to the probed cells, then the PQ ADC chain ranks and
+          // the exact cosine re-ranks.
+          "ivfpq_probe" ->
+            singlePq(s"$queryCte,\n${asgCtes(cents, notQuery, ranked.take(3))},\n${pqEncCtes(model, "asg", "vec_id, ev")}"),
+          // the batch cell chain + the PQ encode chain + the batch ADC —
+          // each query's distance table is the list of distChains from
+          // ITS subvectors to the codebook literals, indexed by the corpus
+          // row's code. Same left-to-right term order as the Spark codegen
+          // chain, so the doubles match bit for bit and the candidate cut
+          // falls identically.
+          "ann_batch_pq" ->
+            shortlistSql(s"${batchCellCtes(cents)},\n${asgCtes(cents)},\n${pqEncCtes(model, "asg", "vec_id, ev, cluster")}",
+              "enc JOIN qc USING (cluster)",
+              adcSum(model.m, j => "[" + model.codebooks(j).map(c => distChain("qv", j * sub, c)).mkString(", ") + "]"),
+              "adc", ascending = true, refine = 5 * 10, k = 5, show = false, batch = true))
       }
     }
-    // The residual twins: the query's residual qrv = qnv − centroid
-    // [cluster] per probed cell, the corpus's residual rv = nv −
-    // centroid[its cell], both residual-PQ legs from [[residualPq]]
-    // over the codebook literals. Same left-to-right accumulation as
-    // the Spark CentroidResidual + HOF-fold chain, so the doubles match
-    // bit for bit and both cuts fall identically.
+    // The residual twins: both residual-PQ legs from [[residualPq]] over
+    // the codebook literals.
     val pqResEntries = for {
       model <- OracleArtifacts.pqResidual.toSeq
       (cents, ranked) <- ivf
       entry <- {
-        val dim = cents.head.length
-        val cells = ranked.take(3).mkString(", ")
+        val cells = ranked.take(3)
+        val (single, adc) = residualPq(model, cents, "")
         Seq(
-          "ivfpq_residual" -> {
-            // the 8×256 production point as the |Q| = 1 batch: IVF
-            // assignment filtered to the probed cells → residual encode
-            // → join the query's per-cell residual on cluster → ADC
-            // candidate cut → exact cosine re-rank.
-            val (encCols, adcExpr) = residualPq(model, "prk")
-            s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
+          // the 8×256 production point as the |Q| = 1 batch: IVF
+          // assignment filtered to the probed cells → residual encode →
+          // join the query's per-cell residual on cluster → ADC candidate
+          // cut → exact cosine re-rank.
+          "ivfpq_residual" -> shortlistSql(
+            s"""$queryCte,
                |qn AS (SELECT qv, list_transform(qv, x -> x / sqrt(list_dot_product(qv, qv))) AS qnv FROM q),
-               |qc AS (SELECT qv, qnv, unnest([$cells]) AS cluster FROM qn),
-               |qr AS (SELECT qv, cluster,
-               |        list_transform(generate_series(1, $dim), i -> qnv[i] - (${centCase(cents)})[i]) AS qrv FROM qc),
-               |${probedAsgCtes(cents, ranked.take(3), carryNv = true)},
-               |ct AS (SELECT vec_id, ev, nv, cluster, ${centCase(cents)} AS cent FROM asg),
-               |rs AS (SELECT vec_id, ev, cluster,
-               |        list_transform(generate_series(1, $dim), i -> nv[i] - cent[i]) AS rv FROM ct),
-               |enc AS (SELECT vec_id, ev, cluster,
-               |        $encCols FROM rs),
-               |ad AS (SELECT vec_id, ev, $adcExpr AS adc FROM enc JOIN qr USING (cluster)),
-               |cand AS (SELECT vec_id, ev FROM ad ORDER BY adc ASC, vec_id LIMIT 100)
-               |SELECT vec_id, ${cosine("ev", "qv")} AS cos_sim FROM cand, q
-               |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-          },
-          "ann_batch_pqr" -> {
-            // the batch cell chain + ivfpq_residual's corpus-side
-            // residual encode, with the per-(query, cell) residual ADC
-            // derived in SQL.
-            val (encCols, adcExpr) = residualPq(model, "prr")
-            s"""WITH ${batchCellCtes("prq", "prqnv", cents, carryNv = true)},
-               |prqr AS (SELECT query_id, qv, cluster,
-               |        list_transform(generate_series(1, $dim), i -> prqnv[i] - (${centCase(cents)})[i]) AS qrv FROM prqc),
-               |${batchAsgCtes("pr", "prnv", cents, carryNv = true)},
-               |prct AS (SELECT vec_id, ev, prnv, cluster, ${centCase(cents)} AS cent FROM prasg),
-               |prrs AS (SELECT vec_id, ev, cluster,
-               |        list_transform(generate_series(1, $dim), i -> prnv[i] - cent[i]) AS rv FROM prct),
-               |prenc AS (SELECT vec_id, ev, cluster,
-               |        $encCols FROM prrs),
-               |prj AS (SELECT query_id, vec_id, cluster, ev, qv, $adcExpr AS adc
-               |        FROM prenc JOIN prqr USING (cluster)),
-               |prcand AS (SELECT query_id, vec_id, cluster, ev, qv FROM (
-               |        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc, vec_id) AS prn
-               |        FROM prj) WHERE prn <= ${5 * 10}),
-               |prfin AS (SELECT query_id, vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim FROM prcand),
-               |prr AS (SELECT query_id, vec_id, cluster, cos_sim,
-               |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-               |      FROM prfin)
-               |SELECT query_id, vec_id, cluster, cos_sim, rk FROM prr WHERE rk <= 5
-               |ORDER BY query_id, rk""".stripMargin
-          })
+               |qc AS (SELECT qv, qnv, unnest([${cells.mkString(", ")}]) AS cluster FROM qn),
+               |${asgCtes(cents, notQuery, cells, carryNv = true)},
+               |$single""".stripMargin,
+            "enc JOIN qr USING (cluster)", adc, "adc", ascending = true, refine = 100, k = 10, show = false),
+          // the batch cell chain + ivfpq_residual's corpus-side residual
+          // encode, with the per-(query, cell) residual ADC derived in SQL.
+          "ann_batch_pqr" -> shortlistSql(
+            s"${batchCellCtes(cents, carryNv = true)},\n${asgCtes(cents, carryNv = true)},\n" +
+              residualPq(model, cents, "query_id, ")._1,
+            "enc JOIN qr USING (cluster)", adc, "adc", ascending = true, refine = 5 * 10, k = 5,
+            show = false, batch = true))
       }
     } yield entry
     val annTwoLevelEntries = OracleArtifacts.annTwoLevel.toSeq.map { case (two, cells) =>
-      // Twin of Queries.annTwoLevel: HIERARCHICAL assignment replayed
-      // from the fitted hierarchy — nearest super-cell (first-min over
-      // the super distance list), then nearest sub-cell WITHIN that
-      // super (CASE over supers, each with its own sub distance list),
-      // flat id = offset[super] + sub index. Same normalize / sequential
-      // squared distance / strict-< first-minimum as every assignment
-      // twin (and as the NearestCentroidTwoLevel loop). The probe then
-      // filters to the driver-ranked flat cells and ranks cosine.
-      val supDists = two.superCents.map(c => distChain("tnv", 0, c)).mkString(", ")
-      val subCase = "CASE tsup " + two.subCents.zipWithIndex.map { case (subs, sp) =>
-        val dl = subs.map(c => distChain("tnv", 0, c)).mkString(", ")
-        s"WHEN $sp THEN [$dl]"
-      }.mkString(" ") + " END"
-      val offCase = "CASE tsup " + two.offsets.zipWithIndex.map { case (o, sp) =>
-        s"WHEN $sp THEN $o"
-      }.mkString(" ") + " END"
+      // Twin of Queries.annTwoLevel: the HIERARCHICAL assignment replayed
+      // from the fitted hierarchy ([[twoLevelAsgCtes]]), filtered to the
+      // driver-ranked flat cells, ranked by cosine.
       "ann_two_level" ->
-        s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-           |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings),
-           |nrm AS (SELECT vec_id, ev, list_transform(ev, x -> x / sqrt(list_dot_product(ev, ev))) AS tnv FROM c),
-           |sup AS (SELECT vec_id, ev, tnv,
-           |        CAST(list_indexof([$supDists], list_min([$supDists])) - 1 AS BIGINT) AS tsup FROM nrm),
-           |sub AS (SELECT vec_id, ev, tsup, $subCase AS sdl FROM sup),
-           |asg AS (SELECT vec_id, ev,
-           |        CAST(($offCase) + list_indexof(sdl, list_min(sdl)) - 1 AS BIGINT) AS cluster FROM sub
-           |        ),
-           |pr AS (SELECT vec_id, ev, cluster FROM asg WHERE cluster IN (${cells.mkString(", ")}))
-           |SELECT vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim FROM pr, q
+        s"""WITH $queryCte,
+           |${twoLevelAsgCtes(two, "")}
+           |SELECT vec_id, cluster, ${cosine("ev", "qv")} AS cos_sim FROM asg, q
+           |WHERE cluster IN (${cells.mkString(", ")})
            |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
     }
     val annTwoLevelPqrEntries = OracleArtifacts.annTwoLevelPqr.toSeq.map { case (two, model) =>
@@ -1317,15 +1304,12 @@ object OracleSql {
       // prune to 40, exact full-dim re-rank.
       def proj(vec: String): String =
         "[" + comps.map(c => s"list_dot_product($vec, [${c.map(dlit).mkString(", ")}])").mkString(", ") + "]"
-      "pca_probe" ->
-        s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-           |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-           |qp AS (SELECT qv, ${proj("qv")} AS qpv FROM q),
-           |cp AS (SELECT vec_id, ev, ${proj("ev")} AS pv FROM c),
-           |ap AS (SELECT vec_id, ev, ${cosine("pv", "qpv")} AS approx_sim
-           |       FROM cp, qp ORDER BY approx_sim DESC, vec_id LIMIT 100)
-           |SELECT vec_id, approx_sim, ${cosine("ev", "qv")} AS cos_sim
-           |FROM ap, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
+      "pca_probe" -> shortlistSql(
+        s"""$queryCte,
+           |${corpusCte()},
+           |qp AS (SELECT ${proj("qv")} AS qpv FROM q),
+           |cp AS (SELECT vec_id, ev, ${proj("ev")} AS pv FROM c)""".stripMargin,
+        "cp, qp", cosine("pv", "qpv"), "approx_sim", ascending = false, refine = 100, k = 10)
     }
     val streamEntries = OracleArtifacts.streamPipeline.toSeq.map { case (cents, cells) =>
       // Twin of Queries.streamPipeline: the stream-landed index equals
@@ -1334,14 +1318,11 @@ object OracleSql {
       // construction in dim order (grid left-join — exact twin of
       // Featurize.hashedBow's 0..63 map lookup), L2 normalize, the
       // NearestCentroid distance chain, cell filter, cosine top-k.
-      def dimExpr(t: String): String =
-        s"CAST(((strpos('0123456789abcdef', substr(md5($t), 1, 1)) - 1) * 16" +
-          s" + strpos('0123456789abcdef', substr(md5($t), 2, 1)) - 1) % 64 AS BIGINT)"
       val distList = cents.map(c => distChain("nv", 0, c)).mkString(", ")
       "stream_pipeline" ->
         s"""WITH dims AS (SELECT unnest(generate_series(0, 63)) AS dim),
            |tok AS (SELECT doc_id, unnest(${toks()}) AS term FROM documents),
-           |dd AS (SELECT doc_id, ${dimExpr("term")} AS dim, CAST(count(*) AS DOUBLE) AS cnt FROM tok GROUP BY 1, 2),
+           |dd AS (SELECT doc_id, ${bowDim("term")} AS dim, CAST(count(*) AS DOUBLE) AS cnt FROM tok GROUP BY 1, 2),
            |ids AS (SELECT DISTINCT doc_id FROM documents),
            |grid AS (SELECT ids.doc_id, dims.dim FROM ids CROSS JOIN dims),
            |raw AS (SELECT g.doc_id, list(coalesce(dd.cnt, 0.0e0) ORDER BY g.dim) AS rv
@@ -1349,7 +1330,7 @@ object OracleSql {
            |        GROUP BY g.doc_id),
            |emb AS (SELECT doc_id, list_transform(rv, x -> x / sqrt(list_dot_product(rv, rv))) AS ev FROM raw),
            |qtok AS (SELECT unnest(${toks("'spark filter join stream'")}) AS term),
-           |qdd AS (SELECT ${dimExpr("term")} AS dim, CAST(count(*) AS DOUBLE) AS cnt FROM qtok GROUP BY 1),
+           |qdd AS (SELECT ${bowDim("term")} AS dim, CAST(count(*) AS DOUBLE) AS cnt FROM qtok GROUP BY 1),
            |qraw AS (SELECT list(coalesce(qdd.cnt, 0.0e0) ORDER BY dims.dim) AS rv
            |         FROM dims LEFT JOIN qdd ON dims.dim = qdd.dim),
            |q AS (SELECT list_transform(rv, x -> x / sqrt(list_dot_product(rv, rv))) AS qv FROM qraw),
@@ -1370,12 +1351,7 @@ object OracleSql {
         s"(CAST($i AS BIGINT), [${c.map(dlit).mkString(", ")}])"
       }.mkString(",\n        ")
       "semdedup" ->
-        s"""WITH e AS (SELECT vec_id, ${dvec("embedding")} AS emb FROM embeddings),
-           |corpus AS (
-           |  SELECT vec_id, emb FROM e
-           |  UNION ALL
-           |  SELECT vec_id + 10000 AS vec_id, list_prepend(emb[1] + 0.05, emb[2:64]) AS emb
-           |  FROM e WHERE vec_id < 20),
+        s"""WITH ${embNearDupCorpus(label = false)},
            |nrm AS (SELECT vec_id, emb AS ev, list_transform(emb, x -> x / sqrt(list_dot_product(emb, emb))) AS nv FROM corpus),
            |dst AS (SELECT vec_id, ev, [$distList] AS dl FROM nrm),
            |asg AS (SELECT vec_id, ev, CAST(list_indexof(dl, list_min(dl)) - 1 AS BIGINT) AS cluster FROM dst),
@@ -1412,6 +1388,113 @@ object OracleSql {
     */
   private def materializeCtes(sql: String): String =
     sql.replaceAll("(\\w+) AS \\(", "$1 AS MATERIALIZED (")
+
+  /** BM25 top 10 over the whole corpus — twin of Search.bm25TopK and of
+    * every index that must score like it (see the keys sharing it).
+    */
+  private lazy val bm25TopKTwin: String =
+    s"""WITH $bm25Cte
+       |SELECT doc_id, ROUND(score, 5) AS bm25 FROM sc ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin
+
+  /** [[bm25TopKTwin]] over the LIVE corpus (every doc_id % 10 = 3
+    * tombstoned).
+    */
+  private lazy val bm25LiveTwin: String =
+    s"""WITH ${bm25Chain("documents WHERE doc_id % 10 <> 3")}
+       |SELECT doc_id, ROUND(score, 5) AS bm25 FROM sc ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin
+
+  /** Twin of TextAnalysis.contamination: each corpus doc's (doc_id >= 10)
+    * 3-shingles checked against the benchmark's ([[benchShingles]]).
+    */
+  private lazy val contaminationTwin: String =
+    s"""WITH $benchShingles,
+       |ct AS (SELECT doc_id, ${toks()} AS toks FROM documents WHERE doc_id >= 10),
+       |cs AS (SELECT doc_id, unnest($shingleExpr) AS shm FROM ct)
+       |SELECT cs.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
+       |       CAST(count(bs.shm) AS BIGINT) AS n_contaminated,
+       |       ROUND(CAST(count(bs.shm) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4) AS ratio
+       |FROM cs LEFT JOIN bs ON cs.shm = bs.shm
+       |GROUP BY cs.doc_id ORDER BY cs.doc_id""".stripMargin
+
+  /** Twin of Lm.perplexity's per-doc scoring, as CTEs … → `s(doc_id,
+    * n_tokens, ppl)`: the checked-in bigram LM is constants, inlined as
+    * two VALUES tables (dlit keeps the precomputed log-probs DOUBLE —
+    * score-time arithmetic is pure +/× on both sides, the rounded exp
+    * absorbs sum-order ulps). Shared by perplexity_filter and mix_doremi.
+    */
+  private lazy val lmPplCtes: String = {
+    val m = graft.operators.Lm.model
+    val uniValues = m.uni.map { case (w, lp) => s"('$w', ${dlit(lp)})" }.mkString(", ")
+    val biValues = m.bi.map { case (bg, lp) => s"('$bg', ${dlit(lp)})" }.mkString(", ")
+    s"""t AS (SELECT doc_id, ${toks()} AS toks FROM documents),
+       |p AS (SELECT doc_id, NULL AS bg, toks[1] AS w FROM t WHERE len(toks) >= 1
+       |      UNION ALL
+       |      SELECT doc_id, toks[i] || ' ' || toks[i+1] AS bg, toks[i+1] AS w
+       |      FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t WHERE len(toks) >= 2)),
+       |uni AS (SELECT * FROM (VALUES $uniValues) AS u(w, ulp)),
+       |bi AS (SELECT * FROM (VALUES $biValues) AS b(bg, blp)),
+       |lp AS (SELECT p.doc_id,
+       |        CASE WHEN p.bg IS NULL THEN COALESCE(uni.ulp, ${dlit(m.oovLp)})
+       |             ELSE COALESCE(bi.blp, ${dlit(m.backoffLp)} + COALESCE(uni.ulp, ${dlit(m.oovLp)})) END AS lp
+       |       FROM p LEFT JOIN uni ON p.w = uni.w LEFT JOIN bi ON p.bg = bi.bg),
+       |s AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+       |       ROUND(exp(-sum(lp) / count(*)), 5) AS ppl
+       |      FROM lp GROUP BY doc_id)""".stripMargin
+  }
+
+  /** The chunk store's replayed modification rules (upsert-wins for
+    * %7==3) over the documents `where` keeps.
+    */
+  private def chunkstoreState(where: String): String =
+    s"""SELECT doc_id,
+       |       CASE WHEN doc_id % 7 = 3 THEN 'xx' ELSE lang END AS lang,
+       |       md5(CASE WHEN doc_id % 7 = 3 THEN upper(text) ELSE text END) AS content_hash
+       |FROM documents$where ORDER BY doc_id""".stripMargin
+
+  /** Per-doc token counts `t` and their global running start offset `c`
+    * — twin of Packing.packSequences' prefix sum.
+    */
+  private lazy val packCtes: String =
+    s"""t AS (SELECT doc_id, CAST(len(${toks()}) AS BIGINT) AS n_tokens FROM documents),
+       |c AS (SELECT doc_id, n_tokens,
+       |       CAST(sum(n_tokens) OVER (ORDER BY doc_id
+       |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS BIGINT) AS start_offset
+       |      FROM t)""".stripMargin
+
+  /** Twin of Packing's token shards over `src`'s chunks (doc_id,
+    * chunk_index, chunk_tokens) built by `ctes`: a per-doc running token
+    * sum cut into 64-token shards.
+    */
+  private def shardSql(ctes: String, src: String): String =
+    s"""WITH $ctes,
+       |sh AS (SELECT doc_id, chunk_index, chunk_tokens,
+       |        CAST(floor((sum(chunk_tokens) OVER (PARTITION BY doc_id ORDER BY chunk_index
+       |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - chunk_tokens) / 64) AS BIGINT) AS shard_id
+       |       FROM $src)
+       |SELECT doc_id, shard_id, CAST(count(*) AS BIGINT) AS n_chunks,
+       |       CAST(sum(chunk_tokens) AS BIGINT) AS shard_tokens
+       |FROM sh GROUP BY doc_id, shard_id ORDER BY doc_id, shard_id""".stripMargin
+
+  /** Twin of Queries.eventsSessionize: per-user time order, a new session
+    * after a gap over 30 minutes, as CTEs … → `s(user_id, event_id,
+    * event_type, t, sid)`.
+    */
+  private val sessionCtes: String =
+    """o AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS t FROM events),
+      |l AS (SELECT user_id, event_id, event_type, t,
+      |       lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id) AS pt FROM o),
+      |m AS (SELECT user_id, event_id, event_type, t,
+      |       CASE WHEN pt IS NULL OR t - pt > 1800000 THEN 1 ELSE 0 END AS brk FROM l),
+      |s AS (SELECT user_id, event_id, event_type, t,
+      |       SUM(brk) OVER (PARTITION BY user_id ORDER BY t, event_id
+      |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM m)""".stripMargin
+
+  /** 1-based positions of the phrase "filter join" in `toks` — twin of
+    * the phrase-position scan under phrase_search and Search.bm25PhraseTopK.
+    */
+  private val phrasePositions: String =
+    "CASE WHEN len(toks) >= 2 THEN list_filter(generate_series(1, len(toks) - 1), " +
+      "i -> toks[i] = 'filter' AND toks[i+1] = 'join') ELSE [] END"
 
   /** Twin of the JSONL/CSV source round-trips: recompute the decorated
     * corpus fingerprint straight from parquet — the Spark side must
@@ -1481,32 +1564,20 @@ object OracleSql {
          |FROM c, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
 
     "sq_probe" ->
-      // Twin of Sq.probe (k=10, refine=40). Quantization is pure
-      // element-wise IEEE arithmetic (scale = maxabs/127, code =
-      // floor(x/s + 0.5)) so codes are bit-identical across engines —
-      // no fitted constants. The positive scale cancels in the cosine,
-      // so the approximate score uses the raw integer codes directly.
-      s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-         |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-         |z AS (SELECT vec_id, ev, list_max(list_transform(ev, x -> abs(x))) / 127.0 AS s FROM c),
-         |cd AS (SELECT vec_id, ev,
-         |        CASE WHEN s > 0 THEN list_transform(ev, x -> CAST(floor(x / s + 0.5) AS DOUBLE))
-         |             ELSE list_transform(ev, x -> 0.0) END AS cv FROM z),
-         |ap AS (SELECT vec_id, ev, ${cosine("cv", "qv")} AS approx_sim
-         |       FROM cd, q ORDER BY approx_sim DESC, vec_id LIMIT 40)
-         |SELECT vec_id, approx_sim, ${cosine("ev", "qv")} AS cos_sim
-         |FROM ap, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+      // Twin of Sq.probe (k=10, refine=40): the static SQ8 codes
+      // ([[sqCtes]]) rank the candidates, exact cosine re-ranks them. No
+      // fitted constants.
+      shortlistSql(s"$queryCte,\n${corpusCte()},\n${sqCtes("c")}", "cd, q", cosine("cv", "qv"),
+        "approx_sim", ascending = false, refine = 40, k = 10),
 
     "bq_recall_sweep" ->
       // Twin of Queries.bqRecallSweep: hamming + cosine materialized
       // once, each refine leg a cheap rn <= r filter (the
       // ann_recall_sweep MATERIALIZED pattern), recall vs the exact
       // top-10 of the same rounded-cosine convention.
-      s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-         |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-         |sc AS MATERIALIZED (SELECT vec_id,
-         |       CAST(len(list_filter(generate_series(1, 64),
-         |                            i -> (ev[i] > 0) <> (qv[i] > 0))) AS BIGINT) AS hamming,
+      s"""WITH $queryCte,
+         |${corpusCte()},
+         |sc AS MATERIALIZED (SELECT vec_id, ${hamming("ev", "qv")} AS hamming,
          |       ${cosine("ev", "qv")} AS cs FROM c, q),
          |rk AS MATERIALIZED (SELECT vec_id, cs,
          |       row_number() OVER (ORDER BY hamming, vec_id) AS rn FROM sc),
@@ -1543,8 +1614,8 @@ object OracleSql {
            |       FROM m$j ORDER BY mmr DESC, vec_id LIMIT 1),
            |sel$j AS (SELECT * FROM sel${j - 1} UNION ALL SELECT * FROM s$j)""".stripMargin
       }.mkString(",\n")
-      s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-         |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
+      s"""WITH $queryCte,
+         |${corpusCte()},
          |cand AS (SELECT vec_id, ev, ${cosine("ev", "qv")} AS rel
          |         FROM c, q ORDER BY rel DESC, vec_id LIMIT 20),
          |s1 AS (SELECT vec_id, ev, rel, CAST(1 AS BIGINT) AS rk, rel AS mmr
@@ -1555,104 +1626,62 @@ object OracleSql {
     },
 
     "bq_probe" ->
-      // Twin of Bq.probe (k=10, refine=40): hamming = count of
-      // dimensions whose SIGNS disagree (strict > 0 on both sides —
-      // no packing needed in SQL, the bit count IS the disagreement
-      // count), candidate cut by (hamming, vec_id), exact cosine
-      // re-rank over the candidates.
-      s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-         |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-         |h AS (SELECT vec_id, ev, qv,
-         |       CAST(len(list_filter(generate_series(1, 64),
-         |                            i -> (ev[i] > 0) <> (qv[i] > 0))) AS BIGINT) AS hamming
-         |       FROM c, q),
-         |cand AS (SELECT * FROM h ORDER BY hamming, vec_id LIMIT 40)
-         |SELECT vec_id, hamming, ${cosine("ev", "qv")} AS cos_sim
-         |FROM cand ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+      // Twin of Bq.probe (k=10, refine=40): candidate cut by (hamming,
+      // vec_id), exact cosine re-rank over the candidates.
+      shortlistSql(s"$queryCte,\n${corpusCte()}", "c, q", hamming("ev", "qv"), "hamming",
+        ascending = true, refine = 40, k = 10),
 
     "bq_rotated" ->
-      // Twin of Bq.probeRotated (k=10, refine=40): the seeded rotation
-      // matrix is a PURE function of (dim=64, seed=7), regenerated here
-      // and inlined as a list-of-lists literal; each rotated element is
-      // one list_dot_product (same sequential accumulation as the
-      // MatVec codegen loop), hamming = rotated-sign disagreements,
-      // exact cosine re-rank on the ORIGINAL vectors.
-      {
-        val rot = graft.operators.Bq.rotationMatrix(64, seed = 7L)
-        val rlit = rot.map(r => "[" + r.map(dlit).mkString(", ") + "]").mkString("[", ",\n          ", "]")
-        s"""WITH rt AS (SELECT $rlit AS rm),
-           |q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-           |qr AS (SELECT qv, list_transform(generate_series(1, 64), i -> list_dot_product(rm[i], qv)) AS rq FROM q, rt),
-           |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-           |cr AS (SELECT vec_id, ev, list_transform(generate_series(1, 64), i -> list_dot_product(rm[i], ev)) AS re FROM c, rt),
-           |h AS (SELECT vec_id, ev, qv,
-           |       CAST(len(list_filter(generate_series(1, 64),
-           |                            i -> (re[i] > 0) <> (rq[i] > 0))) AS BIGINT) AS hamming
-           |       FROM cr, qr),
-           |cand AS (SELECT * FROM h ORDER BY hamming, vec_id LIMIT 40)
-           |SELECT vec_id, hamming, ${cosine("ev", "qv")} AS cos_sim
-           |FROM cand ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-      },
+      // Twin of Bq.probeRotated (k=10, refine=40): hamming over the
+      // rotated signs ([[rotationCte]]), exact cosine re-rank on the
+      // ORIGINAL vectors.
+      shortlistSql(
+        s"""$rotationCte,
+           |$queryCte,
+           |qr AS (SELECT ${rotate("qv")} AS rq FROM q, rt),
+           |${corpusCte()},
+           |cr AS (SELECT vec_id, ev, ${rotate("ev")} AS re FROM c, rt)""".stripMargin,
+        "cr, qr", hamming("re", "rq"), "hamming", ascending = true, refine = 40, k = 10),
 
     "matryoshka_probe" ->
       // Twin of Matryoshka.probe (dPrefix=16, k=10, refine=40): the
       // approximate stage is the same cosine over the 16-element list
       // prefix (1-based inclusive slice == Spark's slice(col,1,16)),
-      // candidate cut by (approx_sim DESC, vec_id), exact full-dim
-      // re-rank over the 40 candidates. No fitted constants.
-      s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-         |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
-         |a AS (SELECT vec_id, ev, qv, ${cosine("ev[1:16]", "qv[1:16]")} AS approx_sim
-         |      FROM c, q ORDER BY approx_sim DESC, vec_id LIMIT 40)
-         |SELECT vec_id, approx_sim, ${cosine("ev", "qv")} AS cos_sim
-         |FROM a ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+      // exact full-dim re-rank over the 40 candidates. No fitted
+      // constants.
+      shortlistSql(s"$queryCte,\n${corpusCte()}", "c, q", cosine("ev[1:16]", "qv[1:16]"), "approx_sim",
+        ascending = false, refine = 40, k = 10),
 
     "knn_pergroup" ->
       s"""WITH $knnCte,
          |s AS (SELECT vec_id, label, ${cosine("ev", "qv")} AS cos_sim FROM c, q),
-         |r AS (SELECT label, vec_id, cos_sim,
-         |       CAST(row_number() OVER (PARTITION BY label ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk FROM s)
-         |SELECT label, vec_id, cos_sim, rk FROM r WHERE rk <= 3 ORDER BY label, rk""".stripMargin,
+         |${rankedTopK("s", "label", "vec_id, cos_sim", "cos_sim DESC, vec_id", 3)}""".stripMargin,
 
     "knn_batch" ->
-      s"""WITH qs AS (SELECT vec_id AS query_id, ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id < 8),
-         |cs AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings),
+      s"""WITH ${corpusCte("vec_id AS query_id", batchQueries, "qs", "qv")},
+         |${corpusCte(where = "", name = "cs")},
          |sc AS (SELECT qs.query_id, cs.vec_id, ${cosine("ev", "qv")} AS cos_sim
          |       FROM cs, qs WHERE cs.vec_id <> qs.query_id),
-         |r AS (SELECT query_id, vec_id, cos_sim,
-         |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-         |      FROM sc)
-         |SELECT query_id, vec_id, cos_sim, rk FROM r WHERE rk <= 3 ORDER BY query_id, rk""".stripMargin,
+         |${rankedTopK("sc", "query_id", "vec_id, cos_sim", "cos_sim DESC, vec_id", 3)}""".stripMargin,
 
     "hard_negatives" ->
       // Twin of Queries.hardNegatives: knn_batch with the label
       // inequality replacing the self-exclusion.
-      s"""WITH qs AS (SELECT vec_id AS anchor_id, label AS a_label, ${dvec("embedding")} AS qv
-         |           FROM embeddings WHERE vec_id < 8),
-         |cs AS (SELECT vec_id, label, ${dvec("embedding")} AS ev FROM embeddings),
+      s"""WITH ${corpusCte("vec_id AS anchor_id, label AS a_label", batchQueries, "qs", "qv")},
+         |${corpusCte("vec_id, label", "", "cs")},
          |sc AS (SELECT qs.anchor_id, cs.vec_id, ${cosine("ev", "qv")} AS cos_sim
          |       FROM cs, qs WHERE cs.label <> qs.a_label),
-         |r AS (SELECT anchor_id, vec_id, cos_sim,
-         |       CAST(row_number() OVER (PARTITION BY anchor_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-         |      FROM sc)
-         |SELECT anchor_id, vec_id, cos_sim, rk FROM r WHERE rk <= 3 ORDER BY anchor_id, rk""".stripMargin,
+         |${rankedTopK("sc", "anchor_id", "vec_id, cos_sim", "cos_sim DESC, vec_id", 3)}""".stripMargin,
 
     "phrase_search" ->
       s"""WITH tk AS (SELECT doc_id, ${toks()} AS toks FROM documents),
-         |p AS (SELECT doc_id,
-         |        CASE WHEN len(toks) >= 2
-         |             THEN list_filter(generate_series(1, len(toks) - 1),
-         |                    i -> toks[i] = 'filter' AND toks[i+1] = 'join')
-         |             ELSE [] END AS pos
-         |      FROM tk)
+         |p AS (SELECT doc_id, $phrasePositions AS pos FROM tk)
          |SELECT doc_id, CAST(len(pos) AS BIGINT) AS phrase_count,
          |       CAST(list_min(pos) AS BIGINT) AS first_pos
          |FROM p WHERE len(pos) > 0
          |ORDER BY phrase_count DESC, doc_id LIMIT 20""".stripMargin,
 
-    "bm25_topk" ->
-      s"""WITH $bm25Cte
-         |SELECT doc_id, ROUND(score, 5) AS bm25 FROM sc ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin,
+    "bm25_topk" -> bm25TopKTwin,
 
     "query_expand" ->
       // Full two-round RM3 twin: round-1 BM25 (same CTEs as bm25_topk),
@@ -1676,22 +1705,14 @@ object OracleSql {
          |              ROUND(0.5 / ${Queries.QueryTerms.size}, 8) AS qw
          |       UNION ALL
          |       SELECT term, ROUND(0.5 * w / (SELECT SUM(w) FROM exp5), 8) FROM exp5),
-         |qt2 AS (SELECT tok.doc_id, tok.term FROM tok JOIN wq ON tok.term = wq.term),
-         |tf2 AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf FROM qt2 GROUP BY doc_id, term),
-         |df2 AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM qt2 GROUP BY term),
-         |sc2 AS (SELECT tf2.doc_id,
-         |        SUM( wq.qw * ln(1.0 + (st.n - df2.df + 0.5) / (df2.df + 0.5))
-         |             * tf2.tf * (1.2 + 1) / (tf2.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / st.avgdl)) ) AS score
-         |        FROM tf2 JOIN df2 USING (term) JOIN wq USING (term) JOIN dl USING (doc_id) CROSS JOIN st
-         |        GROUP BY tf2.doc_id)
+         |${bm25Score(weightedTerms("wq"), suffix = "2")}
          |SELECT doc_id, ROUND(score, 5) AS rm3 FROM sc2 ORDER BY rm3 DESC, doc_id LIMIT 10""".stripMargin,
 
     "bm25_indexed" ->
       // Same twin as bm25_topk: the persisted-index probe must reproduce
       // the full-scan scorer bit-for-bit (index contents are a pure
       // function of the corpus).
-      s"""WITH $bm25Cte
-         |SELECT doc_id, ROUND(score, 5) AS bm25 FROM sc ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin,
+      bm25TopKTwin,
 
     "snippet_extract" ->
       // Twin of Queries.snippetExtract: bm25 top-10 + first query-term
@@ -1712,31 +1733,14 @@ object OracleSql {
     "bm25_pergroup" ->
       // Twin of Search.bm25PerGroup: every CTE of the bm25 chain gains
       // the group key — each source is its own sub-corpus.
-      s"""WITH tok AS (SELECT source, doc_id, unnest(${toks()}) AS term FROM documents),
-         |dl AS (SELECT source, doc_id, CAST(count(*) AS DOUBLE) AS dl FROM tok GROUP BY 1, 2),
-         |st AS (SELECT source, CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM dl GROUP BY 1),
-         |qt AS (SELECT source, doc_id, term FROM tok WHERE term IN ($queryTermsSql)),
-         |tf AS (SELECT source, doc_id, term, CAST(count(*) AS DOUBLE) AS tf FROM qt GROUP BY 1, 2, 3),
-         |dfq AS (SELECT source, term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM qt GROUP BY 1, 2),
-         |sc AS (SELECT tf.source, tf.doc_id,
-         |        ROUND(SUM( ln(1.0 + (st.n - dfq.df + 0.5) / (dfq.df + 0.5))
-         |             * tf.tf * (1.2 + 1) / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / st.avgdl)) ), 5) AS bm25
-         |       FROM tf
-         |       JOIN dfq ON tf.source = dfq.source AND tf.term = dfq.term
-         |       JOIN dl ON tf.source = dl.source AND tf.doc_id = dl.doc_id
-         |       JOIN st ON tf.source = st.source
-         |       GROUP BY 1, 2),
-         |r AS (SELECT source, doc_id, bm25,
-         |       CAST(row_number() OVER (PARTITION BY source ORDER BY bm25 DESC, doc_id) AS BIGINT) AS rk
-         |      FROM sc)
-         |SELECT source, doc_id, bm25, rk FROM r WHERE rk <= 3 ORDER BY source, rk""".stripMargin,
+      s"""WITH ${bm25Chain("documents", group = "source", rounded = true)},
+         |${rankedTopK("sc", "source", "doc_id, bm25", "bm25 DESC, doc_id", 3)}""".stripMargin,
 
     "bm25_incremental" ->
       // Same twin again: a base+delta appended index must score the
       // union corpus bit-identically to a one-shot build (df from the
       // pruned union scan, weighted-mean avgdl).
-      s"""WITH $bm25Cte
-         |SELECT doc_id, ROUND(score, 5) AS bm25 FROM sc ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin,
+      bm25TopKTwin,
 
     "bm25_batch" -> bm25BatchSql,
 
@@ -1744,48 +1748,29 @@ object OracleSql {
       // Twin of the tombstone-maintained index: BM25 over the LIVE
       // corpus — df/N/avgdl all shrink with the deletes, which is what
       // the anti-joined probe + exact stat decrements reproduce.
-      s"""WITH ${bm25CteOver("WHERE doc_id % 10 <> 3")}
-         |SELECT doc_id, ROUND(score, 5) AS bm25 FROM sc ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin,
+      bm25LiveTwin,
 
     "bm25_compacted" ->
       // Same live corpus as bm25_deleted: compaction rewrites the
       // layout, it must not move a single score.
-      s"""WITH ${bm25CteOver("WHERE doc_id % 10 <> 3")}
-         |SELECT doc_id, ROUND(score, 5) AS bm25 FROM sc ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin,
+      bm25LiveTwin,
 
     "bm25_phrase" ->
       s"""WITH $bm25Cte,
          |tkp AS (SELECT doc_id, ${toks()} AS toks FROM documents),
-         |pp AS (SELECT doc_id,
-         |        CASE WHEN len(toks) >= 2
-         |             THEN CAST(len(list_filter(generate_series(1, len(toks) - 1),
-         |                          i -> toks[i] = 'filter' AND toks[i+1] = 'join')) AS DOUBLE)
-         |             ELSE 0.0 END AS pc
-         |       FROM tkp)
+         |pp AS (SELECT doc_id, CAST(len($phrasePositions) AS DOUBLE) AS pc FROM tkp)
          |SELECT sc.doc_id, ROUND(sc.score + 0.5 * ln(1.0 + pp.pc), 5) AS bm25p
          |FROM sc JOIN pp ON sc.doc_id = pp.doc_id
          |ORDER BY bm25p DESC, sc.doc_id LIMIT 10""".stripMargin,
 
     "hybrid_rrf" ->
-      s"""WITH $bm25Cte,
-         |b100 AS (SELECT doc_id, ROUND(score, 5) AS bm25 FROM sc ORDER BY bm25 DESC, doc_id LIMIT 100),
-         |qv AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-         |cv AS (SELECT vec_id AS doc_id, ${dvec("embedding")} AS ev FROM embeddings),
-         |k100 AS (SELECT doc_id, ${cosine("ev", "qv")} AS cos_sim FROM cv, qv
-         |         ORDER BY cos_sim DESC, doc_id LIMIT 100),
-         |ra AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS rk_a FROM b100),
-         |rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY cos_sim DESC, doc_id) AS BIGINT) AS rk_b FROM k100)
-         |SELECT doc_id,
-         |       ROUND(COALESCE(1.0 / (60 + rk_a), 0) + COALESCE(1.0 / (60 + rk_b), 0), 6) AS rrf,
-         |       rk_a, rk_b
-         |FROM ra FULL OUTER JOIN rb USING (doc_id)
-         |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
+      rrfSql(s"$queryCte,\n${corpusCte("vec_id AS doc_id", "")}",
+        s"SELECT doc_id, ${cosine("ev", "qv")} AS cos_sim FROM c, q"),
 
     "filtered_search" ->
       s"""WITH f AS (SELECT doc_id FROM documents WHERE lang = 'en' AND n_chars > 200),
-         |q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-         |c AS (SELECT e.vec_id, e.label, ${dvec("e.embedding")} AS ev
-         |      FROM embeddings e JOIN f ON e.vec_id = f.doc_id)
+         |$queryCte,
+         |${corpusCte("vec_id, label", " JOIN f ON vec_id = f.doc_id")}
          |SELECT vec_id, label, ${cosine("ev", "qv")} AS cos_sim
          |FROM c, q ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
 
@@ -1907,43 +1892,20 @@ object OracleSql {
 
     "dedup_clusters" ->
       s"""WITH RECURSIVE $minhashPairCtes,
-         |p AS (SELECT id_a, id_b FROM ver WHERE jaccard >= 0.3),
-         |e AS (SELECT id_a AS u, id_b AS v FROM p UNION SELECT id_b, id_a FROM p),
-         |nodes AS (SELECT DISTINCT u AS id FROM e),
-         |r AS (
-         |  SELECT id AS u, id AS v FROM nodes
-         |  UNION
-         |  SELECT r.u, e.v FROM r JOIN e ON r.v = e.u
-         |)
-         |SELECT u AS id, min(v) AS cluster_id FROM r GROUP BY u ORDER BY id""".stripMargin,
+         |$componentCtes
+         |SELECT id, cluster_id FROM cl ORDER BY id""".stripMargin,
 
     "dedup_canonical" ->
       // Clusters re-derived with the recursive dedup_clusters chain,
       // quality re-derived over the SAME planted corpus (originals +
       // truncated near-dups), canonical = argmax(quality, min id).
       s"""WITH RECURSIVE $minhashPairCtes,
-         |p AS (SELECT id_a, id_b FROM ver WHERE jaccard >= 0.3),
-         |e AS (SELECT id_a AS u, id_b AS v FROM p UNION SELECT id_b, id_a FROM p),
-         |nodes AS (SELECT DISTINCT u AS id FROM e),
-         |r AS (
-         |  SELECT id AS u, id AS v FROM nodes
-         |  UNION
-         |  SELECT r.u, e.v FROM r JOIN e ON r.v = e.u
-         |),
-         |cl AS (SELECT u AS id, min(v) AS cluster_id FROM r GROUP BY u),
-         |tkc AS (SELECT doc_id, ${toks()} AS toks FROM corpus),
-         |qc AS (SELECT doc_id,
-         |        CASE WHEN len(toks) > 0
-         |             THEN CAST(len(list_filter(toks, t -> list_contains($enStopList, t))) AS DOUBLE) / CAST(len(toks) AS DOUBLE)
-         |             ELSE 0.0 END AS sr, len(toks) AS n
-         |       FROM tkc),
-         |qs2 AS (SELECT doc_id,
-         |         ROUND(least(1.0, CAST(n AS DOUBLE) / 64.0) * 0.5 + least(1.0, sr * 5.0) * 0.5, 4) AS quality
-         |        FROM qc),
+         |$componentCtes,
+         |${qualityCte("corpus", lang = false)},
          |m AS (SELECT corpus.doc_id AS doc_id,
-         |       COALESCE(cl.cluster_id, corpus.doc_id) AS cluster_id, qs2.quality
+         |       COALESCE(cl.cluster_id, corpus.doc_id) AS cluster_id, qs.quality
          |      FROM corpus LEFT JOIN cl ON corpus.doc_id = cl.id
-         |      JOIN qs2 ON corpus.doc_id = qs2.doc_id),
+         |      JOIN qs ON corpus.doc_id = qs.doc_id),
          |rk AS (SELECT doc_id, cluster_id, quality,
          |        row_number() OVER (PARTITION BY cluster_id ORDER BY quality DESC, doc_id) AS _rk
          |       FROM m),
@@ -1964,12 +1926,7 @@ object OracleSql {
          |ORDER BY jaccard DESC, id_a, id_b LIMIT 50""".stripMargin,
 
     "dedup_embedding" ->
-      s"""WITH e AS (SELECT vec_id, label, ${dvec("embedding")} AS emb FROM embeddings),
-         |corpus AS (
-         |  SELECT vec_id, label, emb FROM e
-         |  UNION ALL
-         |  SELECT vec_id + 10000 AS vec_id, label, list_prepend(emb[1] + 0.05, emb[2:64]) AS emb
-         |  FROM e WHERE vec_id < 20)
+      s"""WITH ${embNearDupCorpus(label = true)}
          |SELECT a.label AS label, a.vec_id AS id_a, b.vec_id AS id_b,
          |       ${cosine("a.emb", "b.emb")} AS cos_sim
          |FROM corpus a JOIN corpus b ON a.label = b.label AND a.vec_id < b.vec_id
@@ -1977,12 +1934,7 @@ object OracleSql {
          |ORDER BY label, id_a, id_b""".stripMargin,
 
     "lsh_pairs" ->
-      s"""WITH e AS (SELECT vec_id, ${dvec("embedding")} AS emb FROM embeddings),
-         |corpus AS (
-         |  SELECT vec_id, emb FROM e
-         |  UNION ALL
-         |  SELECT vec_id + 10000 AS vec_id, list_prepend(emb[1] + 0.05, emb[2:64]) AS emb
-         |  FROM e WHERE vec_id < 20),
+      s"""WITH ${embNearDupCorpus(label = false)},
          |b AS (SELECT vec_id, emb, ${lshSig("emb", 64, 8)} AS bkt FROM corpus)
          |SELECT a.vec_id AS id_a, c.vec_id AS id_b, ${cosine("a.emb", "c.emb")} AS cos_sim
          |FROM b a JOIN b c ON a.bkt = c.bkt AND a.vec_id < c.vec_id
@@ -1990,8 +1942,8 @@ object OracleSql {
          |ORDER BY id_a, id_b""".stripMargin,
 
     "lsh_query" ->
-      s"""WITH q AS (SELECT ${dvec("embedding")} AS qv FROM embeddings WHERE vec_id = 0),
-         |c AS (SELECT vec_id, ${dvec("embedding")} AS ev FROM embeddings WHERE vec_id <> 0),
+      s"""WITH $queryCte,
+         |${corpusCte()},
          |qs AS (SELECT ${lshSig("qv", 64, 8)} AS qsig FROM q),
          |cs AS (SELECT vec_id, ev, ${lshSig("ev", 64, 8)} AS sig FROM c),
          |cand AS (SELECT vec_id, ev FROM cs, qs
@@ -2042,10 +1994,7 @@ object OracleSql {
       val values = w.zipWithIndex
         .map { case (wt, d) => s"($d, ${dlit(wt)})" }.mkString(", ")
       s"""WITH tok AS (SELECT doc_id, unnest(${toks()}) AS term FROM documents),
-         |d AS (SELECT doc_id,
-         |       CAST(((strpos('0123456789abcdef', substr(md5(term), 1, 1)) - 1) * 16
-         |             + strpos('0123456789abcdef', substr(md5(term), 2, 1)) - 1) % 64 AS BIGINT) AS dim
-         |      FROM tok),
+         |d AS (SELECT doc_id, ${bowDim("term")} AS dim FROM tok),
          |dd AS (SELECT doc_id, dim, CAST(count(*) AS BIGINT) AS cnt FROM d GROUP BY doc_id, dim),
          |w AS (SELECT * FROM (VALUES $values) AS t(dim, w)),
          |z AS (SELECT doc_id, sum(w.w * dd.cnt) AS z FROM dd JOIN w USING (dim) GROUP BY doc_id)
@@ -2056,26 +2005,10 @@ object OracleSql {
     },
 
     "span_dedup" ->
-      // Twin of Dedup.duplicatedSpanRemoval (n=10, minDocs=2). Parallel
-      // unnests zip gram text with its 1-based start; coverage expands
-      // via a constant generate_series table; string_agg skips the
-      // NULL (covered) tokens.
-      s"""WITH t AS (SELECT doc_id, ${toks()} AS toks FROM documents),
-         |tok AS (SELECT doc_id, unnest(toks) AS tok, unnest(generate_series(1, len(toks))) AS pos FROM t),
-         |gr AS (SELECT doc_id,
-         |        md5(unnest(CASE WHEN len(toks) >= 10
-         |          THEN list_transform(generate_series(1, len(toks) - 9), i -> array_to_string(toks[i:i+9], ' '))
-         |          ELSE [] END)) AS g,
-         |        unnest(CASE WHEN len(toks) >= 10 THEN generate_series(1, len(toks) - 9) ELSE [] END) AS gpos
-         |       FROM t),
-         |dup AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS c FROM gr GROUP BY g) WHERE c >= 2),
-         |cov AS (SELECT DISTINCT gr.doc_id, gr.gpos + o.off AS pos
-         |        FROM gr JOIN dup USING (g) CROSS JOIN generate_series(0, 9) AS o(off))
-         |SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |       CAST(sum(CASE WHEN cov.pos IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS dropped_tokens,
-         |       COALESCE(string_agg(CASE WHEN cov.pos IS NULL THEN tok END, ' ' ORDER BY tok.pos), '') AS clean_text
-         |FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos
-         |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin,
+      // Twin of Dedup.duplicatedSpanRemoval (n=10, minDocs=2): the bad
+      // grams are those shared by >= 2 documents.
+      spanRebuildSql(s"t AS (SELECT doc_id, ${toks()} AS toks FROM documents)",
+        "SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS c FROM gr GROUP BY g) WHERE c >= 2"),
 
     "decontaminate_xlingual" -> {
       import graft.functions.TextOps.{CyrillicAlphabet, DiacriticFrom, DiacriticTo, LatinAlphabet}
@@ -2084,67 +2017,30 @@ object OracleSql {
       // pipeline over script-folded tokens on BOTH sides.
       def fold(e: String): String =
         s"translate(translate(lower($e), '$DiacriticFrom', '$DiacriticTo'), '$CyrillicAlphabet', '$LatinAlphabet')"
-      s"""WITH bt0 AS (SELECT doc_id, ${toks()} AS btoks FROM documents WHERE doc_id < 10),
-         |snip AS (SELECT doc_id AS b,
-         |          translate(array_to_string(btoks[1:12], ' '), '$LatinAlphabet', '$CyrillicAlphabet') AS cyr
-         |         FROM bt0),
-         |corpus AS (SELECT d.doc_id,
-         |        d.text || CASE WHEN d.doc_id % 17 = 3 THEN ' ' || s.cyr ELSE '' END AS text
-         |       FROM documents d JOIN snip s ON s.b = d.doc_id % 10 WHERE d.doc_id >= 10),
-         |t AS (SELECT doc_id, ${toks(fold("text"))} AS toks FROM corpus),
-         |tok AS (SELECT doc_id, unnest(toks) AS tok, unnest(generate_series(1, len(toks))) AS pos FROM t),
-         |gr AS (SELECT doc_id,
-         |        md5(unnest(CASE WHEN len(toks) >= 10
-         |          THEN list_transform(generate_series(1, len(toks) - 9), i -> array_to_string(toks[i:i+9], ' '))
-         |          ELSE [] END)) AS g,
-         |        unnest(CASE WHEN len(toks) >= 10 THEN generate_series(1, len(toks) - 9) ELSE [] END) AS gpos
-         |       FROM t),
-         |bt AS (SELECT ${toks(fold("text"))} AS toks FROM documents WHERE doc_id < 10),
-         |bg AS (SELECT DISTINCT md5(unnest(CASE WHEN len(toks) >= 10
-         |          THEN list_transform(generate_series(1, len(toks) - 9), i -> array_to_string(toks[i:i+9], ' '))
-         |          ELSE [] END)) AS g FROM bt),
-         |cov AS (SELECT DISTINCT gr.doc_id, gr.gpos + o.off AS pos
-         |        FROM gr JOIN bg USING (g) CROSS JOIN generate_series(0, 9) AS o(off)),
-         |res AS (SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |       CAST(sum(CASE WHEN cov.pos IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS dropped_tokens,
-         |       COALESCE(string_agg(CASE WHEN cov.pos IS NULL THEN tok END, ' ' ORDER BY tok.pos), '') AS clean_text
-         |FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos
-         |GROUP BY tok.doc_id)
-         |SELECT * FROM res ORDER BY doc_id""".stripMargin
+      spanRebuildSql(
+        s"""bt0 AS (SELECT doc_id, ${toks()} AS btoks FROM documents WHERE doc_id < 10),
+           |snip AS (SELECT doc_id AS b,
+           |          translate(array_to_string(btoks[1:12], ' '), '$LatinAlphabet', '$CyrillicAlphabet') AS cyr
+           |         FROM bt0),
+           |corpus AS (SELECT d.doc_id,
+           |        d.text || CASE WHEN d.doc_id % 17 = 3 THEN ' ' || s.cyr ELSE '' END AS text
+           |       FROM documents d JOIN snip s ON s.b = d.doc_id % 10 WHERE d.doc_id >= 10),
+           |t AS (SELECT doc_id, ${toks(fold("text"))} AS toks FROM corpus)""".stripMargin,
+        benchmarkGrams(fold("text")))
     },
 
     "decontaminate_spans" ->
       // Twin of Dedup.decontaminateSpans (n=10, benchmark = doc_id<10,
       // corpus = doc_id>=10): span_dedup's reassembly with the dup set
       // replaced by the benchmark gram set.
-      s"""WITH t AS (SELECT doc_id, ${toks()} AS toks FROM documents WHERE doc_id >= 10),
-         |tok AS (SELECT doc_id, unnest(toks) AS tok, unnest(generate_series(1, len(toks))) AS pos FROM t),
-         |gr AS (SELECT doc_id,
-         |        md5(unnest(CASE WHEN len(toks) >= 10
-         |          THEN list_transform(generate_series(1, len(toks) - 9), i -> array_to_string(toks[i:i+9], ' '))
-         |          ELSE [] END)) AS g,
-         |        unnest(CASE WHEN len(toks) >= 10 THEN generate_series(1, len(toks) - 9) ELSE [] END) AS gpos
-         |       FROM t),
-         |bt AS (SELECT ${toks()} AS toks FROM documents WHERE doc_id < 10),
-         |bg AS (SELECT DISTINCT md5(unnest(CASE WHEN len(toks) >= 10
-         |          THEN list_transform(generate_series(1, len(toks) - 9), i -> array_to_string(toks[i:i+9], ' '))
-         |          ELSE [] END)) AS g FROM bt),
-         |cov AS (SELECT DISTINCT gr.doc_id, gr.gpos + o.off AS pos
-         |        FROM gr JOIN bg USING (g) CROSS JOIN generate_series(0, 9) AS o(off))
-         |SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |       CAST(sum(CASE WHEN cov.pos IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS dropped_tokens,
-         |       COALESCE(string_agg(CASE WHEN cov.pos IS NULL THEN tok END, ' ' ORDER BY tok.pos), '') AS clean_text
-         |FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos
-         |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin,
+      spanRebuildSql(s"t AS (SELECT doc_id, ${toks()} AS toks FROM documents WHERE doc_id >= 10)",
+        benchmarkGrams("text")),
 
     "chunkstore_read" ->
       // Twin of Queries.chunkstoreRead: replay the deterministic
       // modification rules (upsert-wins for %7==3, tombstone for
       // %13==5) directly over documents.
-      """SELECT doc_id,
-        |       CASE WHEN doc_id % 7 = 3 THEN 'xx' ELSE lang END AS lang,
-        |       md5(CASE WHEN doc_id % 7 = 3 THEN upper(text) ELSE text END) AS content_hash
-        |FROM documents WHERE doc_id % 13 <> 5 ORDER BY doc_id""".stripMargin,
+      chunkstoreState(" WHERE doc_id % 13 <> 5"),
 
     "chunkstore_changes" ->
       // Twin of Queries.chunkstoreChanges: v1→v4 changes under the
@@ -2163,10 +2059,7 @@ object OracleSql {
       // Twin of Queries.chunkstoreTimeTravel: manifest v2's state is the
       // chunkstore_read replay WITHOUT the delete clause — time travel
       // must restore the rows the v3 tombstones removed.
-      """SELECT doc_id,
-        |       CASE WHEN doc_id % 7 = 3 THEN 'xx' ELSE lang END AS lang,
-        |       md5(CASE WHEN doc_id % 7 = 3 THEN upper(text) ELSE text END) AS content_hash
-        |FROM documents ORDER BY doc_id""".stripMargin,
+      chunkstoreState(""),
 
     "line_dedup" ->
       // Twin of TextAnalysis.lineDedup (minDocs=3). string_agg skips the
@@ -2268,25 +2161,10 @@ object OracleSql {
       // collapsed EG closed form exp(k·η·excess) and the smoothed
       // normalization — every constant inlined with dlit so the
       // double arithmetic is cross-engine identical.
-      val m = graft.operators.Lm.model
-      val uniValues = m.uni.map { case (w, lp) => s"('$w', ${dlit(lp)})" }.mkString(", ")
-      val biValues = m.bi.map { case (bg, lp) => s"('$bg', ${dlit(lp)})" }.mkString(", ")
       val kEta = dlit(0.5 * 5)
       val oneMinusEps = dlit(1 - 0.2)
       val eps = dlit(0.2)
-      s"""WITH t AS (SELECT doc_id, ${toks()} AS toks FROM documents),
-         |p AS (SELECT doc_id, NULL AS bg, toks[1] AS w FROM t WHERE len(toks) >= 1
-         |      UNION ALL
-         |      SELECT doc_id, toks[i] || ' ' || toks[i+1] AS bg, toks[i+1] AS w
-         |      FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t WHERE len(toks) >= 2)),
-         |uni AS (SELECT * FROM (VALUES $uniValues) AS u(w, ulp)),
-         |bi AS (SELECT * FROM (VALUES $biValues) AS b(bg, blp)),
-         |lp AS (SELECT p.doc_id,
-         |        CASE WHEN p.bg IS NULL THEN COALESCE(uni.ulp, ${dlit(m.oovLp)})
-         |             ELSE COALESCE(bi.blp, ${dlit(m.backoffLp)} + COALESCE(uni.ulp, ${dlit(m.oovLp)})) END AS lp
-         |       FROM p LEFT JOIN uni ON p.w = uni.w LEFT JOIN bi ON p.bg = bi.bg),
-         |s AS (SELECT doc_id, ROUND(exp(-sum(lp) / count(*)), 5) AS ppl
-         |      FROM lp GROUP BY doc_id),
+      s"""WITH $lmPplCtes,
          |d2 AS (SELECT d.source, ln(s.ppl) AS nll
          |       FROM s JOIN documents d ON s.doc_id = d.doc_id WHERE s.ppl IS NOT NULL),
          |dom AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -2401,7 +2279,7 @@ object OracleSql {
       // (exact BIGINT sums in any order), same left-fold norms, the
       // identity (|Σu|² − Σ|u|²)/(n(n−1)) replayed per label; the two
       // final divisions doubles at 5 dp.
-      s"""WITH v AS (SELECT label, ${dvec("embedding")} AS ev FROM embeddings),
+      s"""WITH ${corpusCte("label", "", "v")},
          |nn AS (SELECT label, ev, sqrt(list_dot_product(ev, ev)) AS nrm FROM v),
          |q AS (SELECT label, CAST(round(nrm * 1e6) AS BIGINT) AS nmic,
          |        list_transform(ev, x -> CASE WHEN nrm > 0
@@ -2448,22 +2326,7 @@ object OracleSql {
       // sides, the rounded exp absorbs sum-order ulps). Buckets compare
       // the ROUNDED ppl so the split is portable.
       val m = graft.operators.Lm.model
-      val uniValues = m.uni.map { case (w, lp) => s"('$w', ${dlit(lp)})" }.mkString(", ")
-      val biValues = m.bi.map { case (bg, lp) => s"('$bg', ${dlit(lp)})" }.mkString(", ")
-      s"""WITH t AS (SELECT doc_id, ${toks()} AS toks FROM documents),
-         |p AS (SELECT doc_id, NULL AS bg, toks[1] AS w FROM t WHERE len(toks) >= 1
-         |      UNION ALL
-         |      SELECT doc_id, toks[i] || ' ' || toks[i+1] AS bg, toks[i+1] AS w
-         |      FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t WHERE len(toks) >= 2)),
-         |uni AS (SELECT * FROM (VALUES $uniValues) AS u(w, ulp)),
-         |bi AS (SELECT * FROM (VALUES $biValues) AS b(bg, blp)),
-         |lp AS (SELECT p.doc_id,
-         |        CASE WHEN p.bg IS NULL THEN COALESCE(uni.ulp, ${dlit(m.oovLp)})
-         |             ELSE COALESCE(bi.blp, ${dlit(m.backoffLp)} + COALESCE(uni.ulp, ${dlit(m.oovLp)})) END AS lp
-         |       FROM p LEFT JOIN uni ON p.w = uni.w LEFT JOIN bi ON p.bg = bi.bg),
-         |s AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |       ROUND(exp(-sum(lp) / count(*)), 5) AS ppl
-         |      FROM lp GROUP BY doc_id)
+      s"""WITH $lmPplCtes
          |SELECT d.doc_id, COALESCE(s.n_tokens, 0) AS n_tokens, s.ppl,
          |       CASE WHEN s.ppl IS NULL THEN 'empty'
          |            WHEN s.ppl <= ${dlit(m.tHead)} THEN 'head'
@@ -2597,9 +2460,7 @@ object OracleSql {
     "token_topk" ->
       s"""WITH tok AS (SELECT source, unnest(${toks()}) AS term FROM documents),
          |g AS (SELECT source, term, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY source, term),
-         |r AS (SELECT source, term, cnt,
-         |       CAST(row_number() OVER (PARTITION BY source ORDER BY cnt DESC, term) AS BIGINT) AS rk FROM g)
-         |SELECT source, term, cnt, rk FROM r WHERE rk <= 5 ORDER BY source, rk""".stripMargin,
+         |${rankedTopK("g", "source", "term, cnt", "cnt DESC, term", 5)}""".stripMargin,
 
     "keyword_topk" ->
       // Twin of TextAnalysis.keywordsPerDoc: tf·ln(1 + N/df), top-3 per doc.
@@ -2610,10 +2471,7 @@ object OracleSql {
          |sc AS (SELECT tf.doc_id, tf.term,
          |        ROUND(CAST(tf.tf AS DOUBLE) * ln(1.0 + n.n / dfq.df), 5) AS tfidf
          |       FROM tf JOIN dfq USING (term) CROSS JOIN n),
-         |r AS (SELECT doc_id, term, tfidf,
-         |       CAST(row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS BIGINT) AS rk
-         |      FROM sc)
-         |SELECT doc_id, term, tfidf, rk FROM r WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin,
+         |${rankedTopK("sc", "doc_id", "term, tfidf", "tfidf DESC, term", 3)}""".stripMargin,
 
     "corpus_drift" ->
       // Twin of TextAnalysis.corpusDrift over the even/odd doc-id
@@ -2660,11 +2518,11 @@ object OracleSql {
          |FROM m""".stripMargin,
 
     "quality_score" ->
-      s"""WITH $qualityCte
+      s"""WITH ${qualityCte("documents")}
          |SELECT doc_id, n_tokens, stop_ratio, quality FROM qs ORDER BY doc_id""".stripMargin,
 
     "quality_filter" ->
-      s"""WITH $qualityCte,
+      s"""WITH ${qualityCte("documents")},
          |r AS (SELECT lang, doc_id, quality,
          |       ROUND(percent_rank() OVER (PARTITION BY lang ORDER BY quality, doc_id), 6) AS q_rank
          |      FROM qs)
@@ -2691,17 +2549,11 @@ object OracleSql {
          |d AS (SELECT a.a_id, q5.doc_id, sum(q5.vq * a.aq) AS dot
          |      FROM q5 JOIN a USING (dim) WHERE q5.doc_id <> a.a_id GROUP BY 1, 2),
          |sc AS (SELECT a_id, doc_id, ROUND(CAST(dot AS DOUBLE) / 10000000000.0, 5) AS sim FROM d),
-         |r AS (SELECT a_id, doc_id, sim,
-         |       CAST(row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, doc_id) AS BIGINT) AS rk
-         |      FROM sc)
-         |SELECT a_id, doc_id, sim, rk FROM r WHERE rk <= 3 ORDER BY a_id, rk""".stripMargin,
+         |${rankedTopK("sc", "a_id", "doc_id, sim", "sim DESC, doc_id", 3)}""".stripMargin,
 
     "embed_hashed_bow" ->
       s"""WITH tok AS (SELECT doc_id, unnest(${toks()}) AS term FROM documents),
-         |d AS (SELECT doc_id,
-         |       CAST(((strpos('0123456789abcdef', substr(md5(term), 1, 1)) - 1) * 16
-         |             + strpos('0123456789abcdef', substr(md5(term), 2, 1)) - 1) % 64 AS BIGINT) AS dim
-         |      FROM tok)
+         |d AS (SELECT doc_id, ${bowDim("term")} AS dim FROM tok)
          |SELECT doc_id, dim, CAST(count(*) AS BIGINT) AS cnt
          |FROM d GROUP BY doc_id, dim ORDER BY doc_id, dim""".stripMargin,
 
@@ -2720,10 +2572,7 @@ object OracleSql {
         yield s"($j, $k, $w.0e0)").mkString(", ")
       val b2v = (0 until InputDims).map(k => s"($k, ${b2(k)}.0e0)").mkString(", ")
       s"""WITH tok AS (SELECT doc_id, unnest(${toks("'search_document: ' || text")}) AS term FROM documents),
-         |bow AS (SELECT doc_id,
-         |        CAST(((strpos('0123456789abcdef', substr(md5(term), 1, 1)) - 1) * 16
-         |              + strpos('0123456789abcdef', substr(md5(term), 2, 1)) - 1) % 64 AS BIGINT) AS dim,
-         |        CAST(count(*) AS DOUBLE) AS cnt
+         |bow AS (SELECT doc_id, ${bowDim("term")} AS dim, CAST(count(*) AS DOUBLE) AS cnt
          |       FROM tok GROUP BY 1, 2),
          |w1(i, j, w) AS (SELECT * FROM (VALUES $w1v)),
          |b1t(j, b) AS (SELECT * FROM (VALUES $b1v)),
@@ -2840,9 +2689,6 @@ object OracleSql {
       // max, fixed-order sum (term order) so both engines add the same
       // doubles left to right. All counts exact integers until the one
       // cnt/sqrt(ss) division, same expression shape both sides.
-      val dimExpr = (t: String) =>
-        s"CAST(((strpos('0123456789abcdef', substr(md5($t), 1, 1)) - 1) * 16" +
-          s" + strpos('0123456789abcdef', substr(md5($t), 2, 1)) - 1) % 64 AS BIGINT)"
       val terms = Seq("spark", "filter", "join", "stream")
       val maxCols = terms.zipWithIndex.map { case (t, i) =>
         s"max(CASE WHEN term = '$t' THEN sim END) AS m$i"
@@ -2850,10 +2696,10 @@ object OracleSql {
       val sumExpr = terms.indices.map(i => s"COALESCE(m$i, 0.0)").mkString(" + ")
       s"""WITH $chunkCte,
          |mst AS (SELECT doc_id, chunk_index, unnest(${toks("chunk")}) AS tok FROM ch),
-         |msd AS (SELECT doc_id, chunk_index, ${dimExpr("tok")} AS dim FROM mst),
+         |msd AS (SELECT doc_id, chunk_index, ${bowDim("tok")} AS dim FROM mst),
          |msc AS (SELECT doc_id, chunk_index, dim, CAST(count(*) AS BIGINT) AS cnt FROM msd GROUP BY doc_id, chunk_index, dim),
          |msn AS (SELECT doc_id, chunk_index, CAST(sum(cnt * cnt) AS DOUBLE) AS ss FROM msc GROUP BY doc_id, chunk_index),
-         |msq AS (SELECT term, ${dimExpr("term")} AS dim FROM (SELECT unnest(${toks("'spark filter join stream'")}) AS term)),
+         |msq AS (SELECT term, ${bowDim("term")} AS dim FROM (SELECT unnest(${toks("'spark filter join stream'")}) AS term)),
          |mss AS (SELECT c.doc_id, q.term, CAST(c.cnt AS DOUBLE) / sqrt(n.ss) AS sim
          |        FROM msc c JOIN msq q USING (dim)
          |        JOIN msn n ON c.doc_id = n.doc_id AND c.chunk_index = n.chunk_index),
@@ -2875,10 +2721,7 @@ object OracleSql {
 
     "embed_tfidf" ->
       s"""WITH tok AS (SELECT doc_id, unnest(${toks()}) AS term FROM documents),
-         |d AS (SELECT doc_id,
-         |       CAST(((strpos('0123456789abcdef', substr(md5(term), 1, 1)) - 1) * 16
-         |             + strpos('0123456789abcdef', substr(md5(term), 2, 1)) - 1) % 64 AS BIGINT) AS dim
-         |      FROM tok),
+         |d AS (SELECT doc_id, ${bowDim("term")} AS dim FROM tok),
          |tf AS (SELECT doc_id, dim, CAST(count(*) AS BIGINT) AS tf FROM d GROUP BY doc_id, dim),
          |dfreq AS (SELECT dim, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY dim),
          |nn AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n FROM tf)
@@ -2914,14 +2757,7 @@ object OracleSql {
       // Sequence packing over the REAL-BPE chunk table: the full
       // chunk_token_budget twin as a nested-WITH CTE, then the same
       // running-sum shard window token_shards uses (budget 64).
-      s"""WITH ctb AS ($chunkTokenBudgetSql),
-         |shb AS (SELECT doc_id, chunk_index, chunk_tokens,
-         |        CAST(floor((sum(chunk_tokens) OVER (PARTITION BY doc_id ORDER BY chunk_index
-         |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - chunk_tokens) / 64) AS BIGINT) AS shard_id
-         |        FROM ctb)
-         |SELECT doc_id, shard_id, CAST(count(*) AS BIGINT) AS n_chunks,
-         |       CAST(sum(chunk_tokens) AS BIGINT) AS shard_tokens
-         |FROM shb GROUP BY doc_id, shard_id ORDER BY doc_id, shard_id""".stripMargin,
+      shardSql(s"ctb AS ($chunkTokenBudgetSql)", "ctb"),
 
     "token_counts" ->
       s"""WITH $bpeEncCtes,
@@ -2992,29 +2828,14 @@ object OracleSql {
          |        SELECT doc_id, min(doc_id) OVER (PARTITION BY sha256(text)) AS keeper FROM uni)
          |       WHERE doc_id <> keeper),
          |${minhashPairBody("uni")},
-         |pp AS (SELECT id_a, id_b FROM ver WHERE jaccard >= 0.3),
-         |ee AS (SELECT id_a AS u, id_b AS v FROM pp UNION SELECT id_b, id_a FROM pp),
-         |nodes AS (SELECT DISTINCT u AS id FROM ee),
-         |rr AS (
-         |  SELECT id AS u, id AS v FROM nodes
-         |  UNION
-         |  SELECT rr.u, ee.v FROM rr JOIN ee ON rr.v = ee.u),
-         |nd AS (SELECT u AS doc_id FROM rr GROUP BY u HAVING u <> min(v)),
-         |bt AS (SELECT ${toks()} AS toks FROM documents WHERE doc_id < 10),
-         |bs AS (SELECT DISTINCT unnest($shingleExpr) AS shm FROM bt),
+         |$componentCtes,
+         |nd AS (SELECT id AS doc_id FROM cl WHERE id <> cluster_id),
+         |$benchShingles,
          |cs AS (SELECT doc_id, unnest(sh) AS shm FROM shx),
          |ctm AS (SELECT cs.doc_id FROM cs LEFT JOIN bs ON cs.shm = bs.shm
          |        GROUP BY cs.doc_id
          |        HAVING ROUND(CAST(count(bs.shm) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4) >= 0.2),
-         |cq AS (SELECT u.doc_id, u.lang, tk.toks,
-         |        CASE WHEN len(tk.toks) > 0
-         |             THEN CAST(len(list_filter(tk.toks, t -> list_contains($enStopList, t))) AS DOUBLE)
-         |                  / CAST(len(tk.toks) AS DOUBLE)
-         |             ELSE 0.0 END AS sr
-         |       FROM uni u JOIN tk ON u.doc_id = tk.doc_id),
-         |qs AS (SELECT doc_id, lang,
-         |        ROUND(least(1.0, CAST(len(toks) AS DOUBLE) / 64.0) * 0.5 + least(1.0, sr * 5.0) * 0.5, 4) AS quality
-         |       FROM cq),
+         |${qualityCte("uni")},
          |qr AS (SELECT doc_id,
          |        ROUND(percent_rank() OVER (PARTITION BY lang ORDER BY quality, doc_id), 6) AS q_rank
          |       FROM qs),
@@ -3079,37 +2900,21 @@ object OracleSql {
         |FROM r JOIN q USING (lang) WHERE mix_rank <= keep_g
         |ORDER BY lang, mix_rank""".stripMargin,
 
-    "token_shards" ->
-      s"""WITH $chunkCte,
-         |sh AS (SELECT doc_id, chunk_index, chunk_tokens,
-         |        CAST(floor((sum(chunk_tokens) OVER (PARTITION BY doc_id ORDER BY chunk_index
-         |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - chunk_tokens) / 64) AS BIGINT) AS shard_id
-         |       FROM ch)
-         |SELECT doc_id, shard_id, CAST(count(*) AS BIGINT) AS n_chunks,
-         |       CAST(sum(chunk_tokens) AS BIGINT) AS shard_tokens
-         |FROM sh GROUP BY doc_id, shard_id ORDER BY doc_id, shard_id""".stripMargin,
+    "token_shards" -> shardSql(chunkCte, "ch"),
 
     "pack_sequences" ->
       // Twin of Packing.packSequences: the literal single-threaded
       // global window the Spark side refuses to run — DuckDB's fine at
       // oracle scale, and equality proves the two-phase distributed
       // prefix sum IS that window.
-      s"""WITH t AS (SELECT doc_id, CAST(len(${toks()}) AS BIGINT) AS n_tokens FROM documents),
-         |c AS (SELECT doc_id, n_tokens,
-         |       CAST(sum(n_tokens) OVER (ORDER BY doc_id
-         |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS BIGINT) AS start_offset
-         |      FROM t)
+      s"""WITH $packCtes
          |SELECT doc_id, n_tokens, start_offset,
          |       CAST(start_offset // 2048 AS BIGINT) AS seq_id,
          |       (start_offset % 2048) + n_tokens > 2048 AS spans
          |FROM c ORDER BY doc_id""".stripMargin,
 
     "pack_stats" ->
-      s"""WITH t AS (SELECT doc_id, CAST(len(${toks()}) AS BIGINT) AS n_tokens FROM documents),
-         |c AS (SELECT doc_id, n_tokens,
-         |       CAST(sum(n_tokens) OVER (ORDER BY doc_id
-         |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS BIGINT) AS start_offset
-         |      FROM t),
+      s"""WITH $packCtes,
          |p AS (SELECT doc_id, n_tokens, CAST(start_offset // 2048 AS BIGINT) AS seq_id,
          |       (start_offset % 2048) + n_tokens > 2048 AS spans FROM c)
          |SELECT seq_id, CAST(count(*) AS BIGINT) AS n_docs,
@@ -3160,31 +2965,14 @@ object OracleSql {
         |      '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g')) AS scrubbed_hash
         |FROM m ORDER BY doc_id""".stripMargin,
 
-    "contamination_check" ->
-      s"""WITH bt AS (SELECT ${toks()} AS toks FROM documents WHERE doc_id < 10),
-         |bs AS (SELECT DISTINCT unnest($shingleExpr) AS shm FROM bt),
-         |ct AS (SELECT doc_id, ${toks()} AS toks FROM documents WHERE doc_id >= 10),
-         |cs AS (SELECT doc_id, unnest($shingleExpr) AS shm FROM ct)
-         |SELECT cs.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-         |       CAST(count(bs.shm) AS BIGINT) AS n_contaminated,
-         |       ROUND(CAST(count(bs.shm) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4) AS ratio
-         |FROM cs LEFT JOIN bs ON cs.shm = bs.shm
-         |GROUP BY cs.doc_id ORDER BY cs.doc_id""".stripMargin,
+    "contamination_check" -> contaminationTwin,
 
     "bloom_decontaminate" ->
       // Same twin as contamination_check: the Bloom prefilter is
       // exactness-preserving (no false negatives; false positives die
       // in the confirm join), so the scale path must reproduce the
       // exact report bit-for-bit.
-      s"""WITH bt AS (SELECT ${toks()} AS toks FROM documents WHERE doc_id < 10),
-         |bs AS (SELECT DISTINCT unnest($shingleExpr) AS shm FROM bt),
-         |ct AS (SELECT doc_id, ${toks()} AS toks FROM documents WHERE doc_id >= 10),
-         |cs AS (SELECT doc_id, unnest($shingleExpr) AS shm FROM ct)
-         |SELECT cs.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-         |       CAST(count(bs.shm) AS BIGINT) AS n_contaminated,
-         |       ROUND(CAST(count(bs.shm) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4) AS ratio
-         |FROM cs LEFT JOIN bs ON cs.shm = bs.shm
-         |GROUP BY cs.doc_id ORDER BY cs.doc_id""".stripMargin,
+      contaminationTwin,
 
     "containment_pairs" ->
       // Brute-force all-pairs twin over the same documents+excerpts
@@ -3479,14 +3267,7 @@ object OracleSql {
       // Same sessionization CTEs as events_sessionize, then two leads
       // over the same user-ordered window; a path counts only when all
       // three steps share the user's session id.
-      """WITH o AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS t FROM events),
-        |l AS (SELECT user_id, event_id, event_type, t,
-        |       lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id) AS pt FROM o),
-        |m AS (SELECT user_id, event_id, event_type, t,
-        |       CASE WHEN pt IS NULL OR t - pt > 1800000 THEN 1 ELSE 0 END AS brk FROM l),
-        |s AS (SELECT user_id, event_id, event_type, t,
-        |       SUM(brk) OVER (PARTITION BY user_id ORDER BY t, event_id
-        |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM m),
+      s"""WITH $sessionCtes,
         |p AS (SELECT user_id, sid, event_type AS s0,
         |       lead(event_type, 1) OVER w AS s1, lead(event_type, 2) OVER w AS s2,
         |       lead(sid, 1) OVER w AS g1, lead(sid, 2) OVER w AS g2
@@ -3498,13 +3279,7 @@ object OracleSql {
         |GROUP BY 1 ORDER BY occurrences DESC, path LIMIT 20""".stripMargin,
 
     "events_sessionize" ->
-      """WITH o AS (SELECT user_id, event_id, epoch_ms(ts) AS t FROM events),
-        |l AS (SELECT user_id, event_id, t, lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id) AS pt FROM o),
-        |m AS (SELECT user_id, t, event_id,
-        |       CASE WHEN pt IS NULL OR t - pt > 1800000 THEN 1 ELSE 0 END AS brk FROM l),
-        |s AS (SELECT user_id,
-        |       SUM(brk) OVER (PARTITION BY user_id ORDER BY t, event_id
-        |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM m)
+      s"""WITH $sessionCtes
         |SELECT user_id, CAST(count(DISTINCT sid) AS BIGINT) AS sessions,
         |       CAST(count(*) AS BIGINT) AS events,
         |       ROUND(CAST(count(*) AS DOUBLE) / CAST(count(DISTINCT sid) AS DOUBLE), 4) AS avg_session_events

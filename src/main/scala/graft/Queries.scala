@@ -774,11 +774,7 @@ object Queries {
     import org.apache.spark.sql.expressions.Window
     val corpus = corpusWithNearDups(s, dir)
     val idx = Fts.buildCached(s"$dir#neardup", corpus, "text", "doc_id")
-    val grouped = selectEvalClusters(
-      Dedup.duplicateClusters(
-        Dedup.minHashLshPairs(corpus, "text", "doc_id",
-          numHashes = 8, shingleK = 3, threshold = 0.3)),
-      maxClusters = 16)
+    val grouped = selectEvalClusters(Dedup.duplicateClusters(nearDupPairs(s, dir)), maxClusters = 16)
     val srcIds = grouped.map(_._1)
     val srcTok = corpus.filter(col("doc_id").isin(srcIds: _*))
       .select(col("doc_id"), TextOps.tokenize(col("text")).as("t"))
@@ -1198,10 +1194,16 @@ object Queries {
     * shares. At 100 TB this is the difference between re-signing the
     * corpus on every ingest and signing only the new batch.
     */
-  def dedupMinhashIncremental(s: SparkSession, dir: String): DataFrame = {
-    // the two delta ingests are one-time maintenance on the persisted
-    // signature store; per-call cost is the banded sweep over the
-    // merged store (build-once-sweep-many)
+  def dedupMinhashIncremental(s: SparkSession, dir: String): DataFrame =
+    nearDupPairs(s, dir).orderBy("id_a", "id_b")
+
+  /** The near-dup pairs of [[corpusWithNearDups]], swept from the
+    * persisted signature store. The two delta ingests are one-time
+    * maintenance on that store; per-call cost is the banded sweep over
+    * the merged store (build-once-sweep-many), so the cluster keys
+    * read their pairs here instead of re-signing the corpus each call.
+    */
+  private def nearDupPairs(s: SparkSession, dir: String): DataFrame = {
     val root = graft.operators.LayoutCache.getOrWrite(s"sigstore:$dir") { p =>
       val c = corpusWithNearDups(s, dir)
       val store = new ChunkStore(p, "doc_id")
@@ -1210,7 +1212,6 @@ object Queries {
     }
     Dedup.pairsFromSignatures(new ChunkStore(root, "doc_id").read(s),
       "doc_id", numHashes = 8, threshold = 0.3)
-      .orderBy("id_a", "id_b")
   }
 
   /** [[dedupMinhashLsh]] fed from a STREAM: documents arrive as
@@ -1249,10 +1250,7 @@ object Queries {
     * graph — every near-dup doc mapped to its cluster's min id.
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    Dedup.duplicateClusters(
-      Dedup.minHashLshPairs(corpusWithNearDups(s, dir), "text", "doc_id",
-        numHashes = 8, shingleK = 3, threshold = 0.3)
-    ).orderBy("id")
+    Dedup.duplicateClusters(nearDupPairs(s, dir)).orderBy("id")
 
   /** Canonical selection over the resolved near-dup clusters
     * ([[Dedup.canonicalPerCluster]]): each cluster keeps its
@@ -1261,14 +1259,10 @@ object Queries {
     * The twin re-derives clusters (the recursive dedup_clusters CTE)
     * AND quality over the same planted corpus.
     */
-  def dedupCanonical(s: SparkSession, dir: String): DataFrame = {
-    val corpus = corpusWithNearDups(s, dir)
-    val clusters = Dedup.duplicateClusters(
-      Dedup.minHashLshPairs(corpus, "text", "doc_id",
-        numHashes = 8, shingleK = 3, threshold = 0.3))
-    Dedup.canonicalPerCluster(corpus, clusters, "text", "doc_id")
+  def dedupCanonical(s: SparkSession, dir: String): DataFrame =
+    Dedup.canonicalPerCluster(corpusWithNearDups(s, dir),
+      Dedup.duplicateClusters(nearDupPairs(s, dir)), "text", "doc_id")
       .orderBy("doc_id")
-  }
 
   def simNgramJaccard(s: SparkSession, dir: String): DataFrame =
     Dedup.ngramJaccardPairs(

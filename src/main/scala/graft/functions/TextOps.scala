@@ -118,21 +118,6 @@ object TextOps {
     df.select(keep :+ posexplode_outer(arr).as(Seq(posOut, out)): _*)
       .filter(col(out).isNotNull)
 
-  /** One min-hash value: lexicographic min over `md5(seed:shingle)`.
-    * md5 re-keyed per seed is a valid min-wise independent family and —
-    * crucially — computes identically in DuckDB for the oracle.
-    */
-  def minHash(shingleArr: Column, seed: Int): Column =
-    array_min(transform(shingleArr, s => md5(concat(lit(s"$seed:"), s))))
-
-  /** LSH band keys from 2-row bands over `numHashes` min-hashes. */
-  def bandKeys(shingleArr: Column, numHashes: Int): Seq[Column] = {
-    require(numHashes % 2 == 0, "bands of 2 need an even numHashes")
-    (0 until numHashes by 2).map { i =>
-      md5(concat(minHash(shingleArr, i), minHash(shingleArr, i + 1)))
-    }
-  }
-
   /** Hashed bag-of-words dimension for a term: 6 bits of md5 → [0, 64).
     * Twin of a feature-hashing embedder (reference: embedder.py:41) —
     * deterministic, vocabulary-free, and cheap at any scale.

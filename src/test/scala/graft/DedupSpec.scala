@@ -68,6 +68,15 @@ class DedupSpec extends SparkSpec {
     assert(math.abs(pairs.head._3 - BigDecimal(53.0 / 58.0).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble) < 1e-9)
   }
 
+  test("minHashSignatures is order-insensitive over the shingle set") {
+    // "a b c a b" and "b c a b c" shingle to the same set {abc, bca, cab}
+    // in a different order: every min-hash (and so every band) agrees
+    val df = Seq((1L, "a b c a b"), (2L, "b c a b c")).toDF("doc_id", "text")
+    val sig = Dedup.minHashSignatures(df, "text", "doc_id").orderBy("doc_id")
+      .select((0 until 8).map(i => col(s"h$i")): _*).collect().map(_.toSeq)
+    assert(sig(0) == sig(1), s"${sig(0)} vs ${sig(1)}")
+  }
+
   test("ngramJaccardPairs computes exact set Jaccard") {
     val df = Seq(
       (1L, "a b c d e"),   // shingles: abc bcd cde

@@ -103,12 +103,4 @@ class TextOpsSpec extends SparkSpec {
     assert(dims.forall(d => d >= 0 && d < 64))
     assert(dims(0) == dims(4), "same term must hash to the same dim")
   }
-
-  test("minHash is order-insensitive over the shingle set") {
-    val a = Seq(Tuple1(Seq("s1", "s2", "s3"))).toDF("sh")
-    val b = Seq(Tuple1(Seq("s3", "s1", "s2"))).toDF("sh")
-    val ha = a.select(TextOps.minHash(col("sh"), 0)).as[String].head()
-    val hb = b.select(TextOps.minHash(col("sh"), 0)).as[String].head()
-    assert(ha == hb)
-  }
 }
