@@ -156,7 +156,7 @@ class ChunkStore(val root: String, val keyCol: String) {
 
   private def readSegments(spark: SparkSession, segs: Seq[Segment]): DataFrame = {
     val all = segs.map { s =>
-      spark.read.parquet(s"$root/${s.dir}").withColumn("_delta", lit(s.seq))
+      LayoutCache.readFooted(spark, s"$root/${s.dir}").withColumn("_delta", lit(s.seq))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCol).orderBy(col("_delta").desc)

@@ -68,8 +68,14 @@ object LayoutCache {
     * retention limit (round-12 advice).
     */
   def readCached(spark: SparkSession, path: String): DataFrame =
-    readCache.computeIfAbsent((Caches.sessionId(spark), path),
-      _ => footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path)))
+    readCache.computeIfAbsent((Caches.sessionId(spark), path), _ => readFooted(spark, path))
+
+  /** `spark.read.parquet(path)` with the schema taken from
+    * [[footerSchema]] — no inference job — for a dir whose files never
+    * change once written (a layout, a ChunkStore segment).
+    */
+  private[operators] def readFooted(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   /** The data schema of the layout dir at `path`, read on the driver
     * from the footer of its first visible data file: the schema Spark's

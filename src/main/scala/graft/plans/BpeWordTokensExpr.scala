@@ -10,13 +10,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * merge table (reference: chunker.py:24 `_get_tokenizer` — token
   * budgets come from a real tokenizer, not whitespace counts).
   *
-  * The merge table rides along as a codegen reference object (same
-  * pattern as [[PqEncode]]); the generated code is a single static call,
-  * so the projection stays inside whole-stage codegen. Merges apply in
-  * rank order with left-to-right non-overlapping passes — semantics
-  * shared exactly with [[graft.operators.Bpe.encodeWord]] and the DuckDB
-  * twin's `replace()` chain (see Bpe's scaladoc for the equivalence with
-  * best-rank-first encoding).
+  * The merge table rides inside the expression, which the generated
+  * code holds as a reference object (same pattern as [[PqEncode]]) and
+  * calls once per row, so the projection stays inside whole-stage
+  * codegen. Merges apply in rank order with left-to-right
+  * non-overlapping passes — semantics shared exactly with
+  * [[graft.operators.Bpe.encodeWord]] and the DuckDB twin's `replace()`
+  * chain (see Bpe's scaladoc for the equivalence with best-rank-first
+  * encoding).
   */
 case class BpeWordTokens(child: Expression, merges: Array[Array[String]])
     extends UnaryExpression {
@@ -28,14 +29,15 @@ case class BpeWordTokens(child: Expression, merges: Array[Array[String]])
     case t          => TypeCheckResult.TypeCheckFailure(s"bpe_word_tokens expects string, got $t")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    BpeWordTokens.count(input.asInstanceOf[UTF8String], merges)
+  /** The per-row kernel, shared by eval and generated code. */
+  def count(word: UTF8String): Int = BpeWordTokens.countStr(word.toString, merges)
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val m = ctx.addReferenceObj("bpeMerges", merges, "java.lang.String[][]")
-      s"${ev.value} = graft.plans.BpeWordTokens$$.MODULE$$.count($c, $m);"
-    })
+  override def nullSafeEval(input: Any): Any = count(input.asInstanceOf[UTF8String])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bpeWordTokens", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.count($c);")
+  }
 
   // structural equality over array contents (see [[ExprArrayEq]])
   override def equals(other: Any): Boolean = other match {
@@ -49,10 +51,6 @@ case class BpeWordTokens(child: Expression, merges: Array[Array[String]])
 }
 
 object BpeWordTokens {
-
-  /** Static worker shared by eval and generated code. */
-  def count(word: UTF8String, merges: Array[Array[String]]): Int =
-    countStr(word.toString, merges)
 
   private[plans] def countStr(word: String, merges: Array[Array[String]]): Int = {
     var syms = graft.operators.Bpe.codePointSyms(word)
@@ -90,14 +88,20 @@ case class BpeTextTokens(child: Expression, merges: Array[Array[String]])
     case t          => TypeCheckResult.TypeCheckFailure(s"bpe_text_tokens expects string, got $t")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    BpeTextTokens.count(input.asInstanceOf[UTF8String], merges)
+  /** The per-row kernel, shared by eval and generated code. */
+  def count(text: UTF8String): Long = {
+    val m = BpeTextTokens.pretoken.matcher(text.toString)
+    var total = 0L
+    while (m.find()) total += BpeWordTokens.countStr(m.group(), merges)
+    total
+  }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val m = ctx.addReferenceObj("bpeMerges", merges, "java.lang.String[][]")
-      s"${ev.value} = graft.plans.BpeTextTokens$$.MODULE$$.count($c, $m);"
-    })
+  override def nullSafeEval(input: Any): Any = count(input.asInstanceOf[UTF8String])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bpeTextTokens", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.count($c);")
+  }
 
   // structural equality over array contents (see [[ExprArrayEq]])
   override def equals(other: Any): Boolean = other match {
@@ -111,15 +115,6 @@ case class BpeTextTokens(child: Expression, merges: Array[Array[String]])
 }
 
 object BpeTextTokens {
-
   private val pretoken =
     java.util.regex.Pattern.compile(graft.operators.Bpe.PretokenRegex)
-
-  /** Static worker shared by eval and generated code. */
-  def count(text: UTF8String, merges: Array[Array[String]]): Long = {
-    val m = pretoken.matcher(text.toString)
-    var total = 0L
-    while (m.find()) total += BpeWordTokens.countStr(m.group(), merges)
-    total
-  }
 }

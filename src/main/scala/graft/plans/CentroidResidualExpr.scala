@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   * nlist × dim literal nodes into the plan — fine at the 10-cell
   * correctness scale, a round-8-class plan-size blowup at the √N cells
   * a 10⁹-vector layout needs. Here the table rides along as one
-  * reference object and the generated code is a two-line loop.
+  * reference object and the generated code is one call to [[residual]].
   *
   * Numerics match the composable form and the DuckDB twin exactly:
   * norm = sqrt of the sequential left-to-right Σx² in doubles, each
@@ -52,62 +52,27 @@ case class CentroidResidual(
         s"centroid_residual expects (array<float|double>, int cluster), got ($a, $c)")
   }
 
-  private def isFloat: Boolean =
-    vec.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  private def isLongCluster: Boolean = cluster.dataType == LongType
-
-  override def nullSafeEval(v0: Any, c0: Any): Any = {
-    val v = v0.asInstanceOf[ArrayData]
-    val c = if (isLongCluster) c0.asInstanceOf[Long].toInt else c0.asInstanceOf[Int]
-    val cent = centroids(c)
+  /** The per-row kernel, shared by eval and generated code. */
+  def residual(v: ArrayData, cluster: Int): ArrayData = {
+    val t = Vec.elemType(vec)
+    val cent = centroids(cluster)
     val n = math.min(dim, v.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      s += x * x
-      i += 1
-    }
-    val norm = math.sqrt(s)
+    val norm = Vec.norm(v, n, t)
     val out = new Array[Double](n)
-    i = 0
-    while (i < n) {
-      val x = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      out(i) = x / norm - cent(i)
-      i += 1
-    }
+    var i = 0
+    while (i < n) { out(i) = Vec.at(v, i, t) / norm - cent(i); i += 1 }
     new GenericArrayData(out)
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, cl) => {
-      val tbl = ctx.addReferenceObj("residualCentroids", centroids, "double[][]")
-      val cent = ctx.freshName("cent")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val norm = ctx.freshName("norm")
-      val out = ctx.freshName("out")
-      val x = ctx.freshName("x")
-      val getX = if (isFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |double[] $cent = $tbl[(int) $cl];
-         |int $n = java.lang.Math.min($dim, $a.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $getX;
-         |  $s += $x * $x;
-         |}
-         |double $norm = java.lang.Math.sqrt($s);
-         |double[] $out = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $getX;
-         |  $out[$i] = $x / $norm - $cent[$i];
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  override def nullSafeEval(v: Any, c: Any): Any = residual(v.asInstanceOf[ArrayData], c match {
+    case l: Long => l.toInt
+    case i       => i.asInstanceOf[Int]
+  })
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("centroidResidual", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, (a, cl) => s"${ev.value} = $ref.residual($a, (int) $cl);")
+  }
 
   // structural equality over array contents (see [[ExprArrayEq]])
   override def equals(other: Any): Boolean = other match {

@@ -9,13 +9,14 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression: cosine similarity over two numeric
-  * arrays, one fused loop, whole-stage-codegen'd.
+  * arrays, one fused loop, inside whole-stage codegen.
   *
   * The composed HOF form (`aggregate(zip_with(...))`, VectorOps.cosine)
   * is expression-tree-interpreted (higher-order functions are codegen
-  * fallbacks) and walks each vector three times. This expression emits
-  * a single Java loop accumulating dot/|a|²/|b|² — the hot-path form
-  * for O(pairs) similarity stages.
+  * fallbacks) and walks each vector three times. This expression's
+  * generated code is one call to a precompiled loop ([[cosine]])
+  * accumulating dot/|a|²/|b|² — the hot-path form for O(pairs)
+  * similarity stages.
   *
   * Numerics are IDENTICAL to the HOF form (same element order, same
   * IEEE ops: per-element double promotion, sequential sums, final
@@ -38,90 +39,56 @@ case class CosineSimilarity(left: Expression, right: Expression)
         s"cosine_sim expects two numeric arrays, got ${left.dataType} / ${right.dataType}")
   }
 
-  private def elemType(e: Expression): NumericType =
-    e.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[NumericType]
+  /** The per-row kernel, shared by eval and generated code: one fused
+    * loop over `[0, min(|a|, |b|))`. It ignores null elements; callers
+    * test [[hasNullElement]] first when the schema allows them.
+    */
+  def cosine(a: ArrayData, b: ArrayData): Double = {
+    val lt = Vec.elemType(left)
+    val rt = Vec.elemType(right)
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = Vec.at(a, i, lt)
+      val y = Vec.at(b, i, rt)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    // zip_with pads the shorter side with null, so the HOF form is
+    // null on unequal lengths; callers pass equal lengths in practice
+    // and the norms here cover [0, n) only
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Whether a null element in `[0, min(|a|, |b|))` null-poisons the
+    * result, exactly like the HOF form (zip_with product null →
+    * aggregate propagates null).
+    */
+  def hasNullElement(a: ArrayData, b: ArrayData): Boolean = {
+    val n = math.min(a.numElements(), b.numElements())
+    var i = 0
+    while (i < n && !a.isNullAt(i) && !b.isNullAt(i)) i += 1
+    i < n
+  }
+
+  private def mayHaveNullElements: Boolean = Vec.containsNull(left) || Vec.containsNull(right)
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    val lt = elemType(left)
-    val rt = elemType(right)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      if (mayHaveNullElements && (a.isNullAt(i) || b.isNullAt(i))) return null
-      val x = numericAt(a, i, lt)
-      val y = numericAt(b, i, rt)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    // Also accumulate the tail of the longer norm, mirroring the HOF
-    // semantics? zip_with pads with null -> product null -> aggregate
-    // propagates null; HOF cosine on unequal lengths is null-poisoned.
-    // We instead require equal lengths in practice; norms use [0, n).
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    if (mayHaveNullElements && hasNullElement(a, b)) null else cosine(a, b)
   }
 
-  private def numericAt(arr: ArrayData, i: Int, t: NumericType): Double = t match {
-    case FloatType   => arr.getFloat(i).toDouble
-    case DoubleType  => arr.getDouble(i)
-    case IntegerType => arr.getInt(i).toDouble
-    case LongType    => arr.getLong(i).toDouble
-    case ShortType   => arr.getShort(i).toDouble
-    case _           => arr.getByte(i).toDouble
+  // the null test is only compiled in when the schema allows null
+  // elements; the common containsNull=false case is one call
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("cosineSim", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      if (mayHaveNullElements)
+        s"if ($ref.hasNullElement($a, $b)) { ${ev.isNull} = true; } else { ${ev.value} = $ref.cosine($a, $b); }"
+      else s"${ev.value} = $ref.cosine($a, $b);")
   }
-
-  /** Whether either input array may contain null elements — when true,
-    * a null element must null-poison the result, exactly like the HOF
-    * form (zip_with product null → aggregate propagates null).
-    */
-  private def mayHaveNullElements: Boolean = Seq(left, right).exists {
-    _.dataType match {
-      case ArrayType(_, containsNull) => containsNull
-      case _                          => false
-    }
-  }
-
-  private def javaGetter(t: NumericType, arr: String, i: String): String = t match {
-    case FloatType   => s"(double) $arr.getFloat($i)"
-    case DoubleType  => s"$arr.getDouble($i)"
-    case IntegerType => s"(double) $arr.getInt($i)"
-    case LongType    => s"(double) $arr.getLong($i)"
-    case ShortType   => s"(double) $arr.getShort($i)"
-    case _           => s"(double) $arr.getByte($i)"
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      // null-element poisoning only compiled in when the schema allows
-      // null elements — the common containsNull=false case stays a
-      // branch-free fused loop.
-      val nullCheck =
-        if (mayHaveNullElements)
-          s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
-        else ""
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $nullCheck
-         |  double $x = ${javaGetter(elemType(left), a, i)};
-         |  double $y = ${javaGetter(elemType(right), b, i)};
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -134,44 +101,31 @@ case class CosineSimilarity(left: Expression, right: Expression)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.cosineSimDescriptor)
-    ext.injectFunction(GraftFunctions.phrasePositionsDescriptor)
-    ext.injectFunction(GraftFunctions.normTextDescriptor)
+    GraftFunctions.functions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
   }
 }
 
 object GraftFunctions {
-  val cosineSimDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("cosine_sim"),
-    new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
+  private def function(name: String, cls: Class[_], arity: Int)(build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(cls.getName, name),
     (children: Seq[Expression]) => {
-      require(children.length == 2, "cosine_sim takes exactly 2 arguments")
-      CosineSimilarity(children.head, children(1))
-    }
-  )
+      require(children.length == arity,
+        s"$name takes exactly $arity argument${if (arity == 1) "" else "s"}")
+      build(children)
+    })
 
-  val phrasePositionsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("phrase_positions"),
-    new ExpressionInfo(classOf[PhrasePositions].getName, "phrase_positions"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "phrase_positions takes exactly 2 arguments")
-      PhrasePositions(children.head, children(1))
-    }
-  )
-
-  val normTextDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("norm_text"),
-    new ExpressionInfo(classOf[NormalizeText].getName, "norm_text"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "norm_text takes exactly 1 argument")
-      NormalizeText(children.head)
-    }
-  )
+  /** The SQL functions both registrations install. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    function("cosine_sim", classOf[CosineSimilarity], 2)(c => CosineSimilarity(c.head, c(1))),
+    function("phrase_positions", classOf[PhrasePositions], 2)(c => PhrasePositions(c.head, c(1))),
+    function("norm_text", classOf[NormalizeText], 1)(c => NormalizeText(c.head)))
 
   /** Register on an already-constructed session (driver-owned sessions). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(cosineSimDescriptor, phrasePositionsDescriptor, normTextDescriptor).foreach { case (id, info, builder) =>
+    functions.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
     ensureStrategy(spark)

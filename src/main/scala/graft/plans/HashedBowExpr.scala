@@ -24,26 +24,10 @@ case class HashedBow(child: Expression, dims: Int) extends UnaryExpression {
     case t => TypeCheckResult.TypeCheckFailure(s"hashed_bow expects array<string>, got $t")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    HashedBow.compute(input.asInstanceOf[ArrayData], dims)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.HashedBow$$.MODULE$$.compute($c, $dims);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object HashedBow {
-
-  private val mdTL: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-
-  /** Static worker shared by eval and generated code. */
-  def compute(tokens: ArrayData, dims: Int): ArrayData = {
+  /** The per-row kernel, shared by eval and generated code. */
+  def bow(tokens: ArrayData): ArrayData = {
     val counts = new Array[Double](dims)
-    val md = mdTL.get()
+    val md = HashedBow.mdTL.get()
     val n = tokens.numElements()
     var i = 0
     while (i < n) {
@@ -64,4 +48,19 @@ object HashedBow {
     }
     new GenericArrayData(counts)
   }
+
+  override def nullSafeEval(input: Any): Any = bow(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("hashedBow", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.bow($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object HashedBow {
+  private val mdTL: ThreadLocal[java.security.MessageDigest] =
+    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 }

@@ -11,8 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * '0'/'1' char per plane, bit i = sign of the sequential dot product
   * of the vector with integer plane i.
   *
-  * The plane matrix rides along as a codegen reference object; the
-  * generated code is one fused two-level loop per row. Replaces
+  * The plane matrix rides inside the expression, which the generated
+  * code holds as a reference object and calls once per row ([[sig]]:
+  * one pass over the vector per plane). Replaces
   * nPlanes separate interpreted `aggregate(zip_with(...))` HOF passes
   * (each a codegen fallback) — the form that matters when bucketing
   * every vector of a 100 TB corpus.
@@ -30,21 +31,12 @@ case class HyperplaneSig(child: Expression, planes: Array[Array[Int]])
 
   override def dataType: DataType = StringType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"hyperplane_sig expects array<float|double>, got $t")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = Vec.expectFloatArray(child, "hyperplane_sig")
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  private def mayHaveNullElements: Boolean = child.dataType match {
-    case ArrayType(_, containsNull) => containsNull
-    case _                          => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  /** The per-row kernel, shared by eval and generated code. */
+  def sig(v: ArrayData): UTF8String = {
+    val t = Vec.elemType(child)
+    val nulls = Vec.containsNull(child)
     val n = math.min(dim, v.numElements())
     val chars = new Array[Char](planes.length)
     var i = 0
@@ -53,10 +45,7 @@ case class HyperplaneSig(child: Expression, planes: Array[Array[Int]])
       var dot = 0.0
       var d = 0
       while (d < n) {
-        val x =
-          if (mayHaveNullElements && v.isNullAt(d)) Double.NaN
-          else if (isFloat) v.getFloat(d).toDouble
-          else v.getDouble(d)
+        val x = if (nulls && v.isNullAt(d)) Double.NaN else Vec.at(v, d, t)
         dot += x * w(d)
         d += 1
       }
@@ -66,36 +55,12 @@ case class HyperplaneSig(child: Expression, planes: Array[Array[Int]])
     UTF8String.fromString(new String(chars))
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val pl = ctx.addReferenceObj("lshPlanes", planes, "int[][]")
-      val chars = ctx.freshName("chars")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val w = ctx.freshName("w")
-      val x = ctx.freshName("x")
-      val getX =
-        if (mayHaveNullElements)
-          s"double $x = $a.isNullAt($d) ? Double.NaN : ${if (isFloat) s"(double) $a.getFloat($d)" else s"$a.getDouble($d)"};"
-        else
-          s"double $x = ${if (isFloat) s"(double) $a.getFloat($d)" else s"$a.getDouble($d)"};"
-      s"""
-         |int $n = java.lang.Math.min($dim, $a.numElements());
-         |char[] $chars = new char[${planes.length}];
-         |for (int $i = 0; $i < ${planes.length}; $i++) {
-         |  int[] $w = $pl[$i];
-         |  double $dot = 0.0;
-         |  for (int $d = 0; $d < $n; $d++) {
-         |    $getX
-         |    $dot += $x * $w[$d];
-         |  }
-         |  $chars[$i] = ($dot >= 0) ? '1' : '0';
-         |}
-         |${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(new String($chars));
-       """.stripMargin
-    })
+  override def nullSafeEval(input: Any): Any = sig(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("hyperplaneSig", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.sig($a);")
+  }
 
   // structural equality over array contents (see [[ExprArrayEq]])
   override def equals(other: Any): Boolean = other match {

@@ -18,8 +18,9 @@ import org.apache.spark.sql.types._
   * on an axis-aligned low-rank corpus (BqSpec), the standard
   * production pre-transform (FAISS OPQ/rotation family).
   *
-  * The matrix rides as one codegen reference object (dim² doubles —
-  * 32 KB at dim 64); the composable `transform`/`aggregate` form would
+  * The matrix (dim² doubles — 32 KB at dim 64) rides inside the
+  * expression, which the generated code holds as one reference object
+  * and calls once per row ([[mul]]); the composable `transform`/`aggregate` form would
   * either inline dim² literal nodes or re-evaluate whole-row folds per
   * element (both measured plan hazards — see PLANS.md round-8/9/11).
   */
@@ -31,16 +32,11 @@ case class MatVec(child: Expression, matrix: Array[Array[Double]])
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"mat_vec expects array<float|double>, got $t")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = Vec.expectFloatArray(child, "mat_vec")
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  /** The per-row kernel, shared by eval and generated code. */
+  def mul(v: ArrayData): ArrayData = {
+    val t = Vec.elemType(child)
     val n = math.min(cols, v.numElements())
     val out = new Array[Double](rows)
     var i = 0
@@ -48,41 +44,19 @@ case class MatVec(child: Expression, matrix: Array[Array[Double]])
       val row = matrix(i)
       var acc = 0.0
       var j = 0
-      while (j < n) {
-        val x = if (isFloat) v.getFloat(j).toDouble else v.getDouble(j)
-        acc += row(j) * x
-        j += 1
-      }
+      while (j < n) { acc += row(j) * Vec.at(v, j, t); j += 1 }
       out(i) = acc
       i += 1
     }
     new GenericArrayData(out)
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val m = ctx.addReferenceObj("matVecMatrix", matrix, "double[][]")
-      val out = ctx.freshName("out")
-      val row = ctx.freshName("row")
-      val acc = ctx.freshName("acc")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val getX = if (isFloat) s"(double) $a.getFloat($j)" else s"$a.getDouble($j)"
-      s"""
-         |int $n = java.lang.Math.min($cols, $a.numElements());
-         |double[] $out = new double[$rows];
-         |for (int $i = 0; $i < $rows; $i++) {
-         |  double[] $row = $m[$i];
-         |  double $acc = 0.0;
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    $acc += $row[$j] * ($getX);
-         |  }
-         |  $out[$i] = $acc;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  override def nullSafeEval(input: Any): Any = mul(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("matVec", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.mul($a);")
+  }
 
   // structural equality over array contents (see [[ExprArrayEq]])
   override def equals(other: Any): Boolean = other match {

@@ -20,8 +20,8 @@ import org.apache.spark.sql.types._
   * reproduces the assignment bit-for-bit. This is what makes the IVF
   * probe hash-verifiable against DuckDB, unlike MLlib's
   * `KMeansModel.transform` (whose fastSquaredDistance short-cuts are not
-  * SQL-replicable). Centroids ride along as a codegen reference object,
-  * same pattern as [[PqEncode]].
+  * SQL-replicable). The expression rides along as a codegen reference
+  * object and the generated code is one call to [[nearest]].
   */
 case class NearestCentroid(
     child: Expression,
@@ -33,82 +33,20 @@ case class NearestCentroid(
 
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"nearest_centroid expects array<float|double>, got $t")
+  override def checkInputDataTypes(): TypeCheckResult = Vec.expectFloatArray(child, "nearest_centroid")
+
+  /** The per-row kernel, shared by eval and generated code. */
+  def nearest(v: ArrayData): Int = {
+    val t = Vec.elemType(child)
+    Vec.argmin(v, t, 0, dim, if (normalizeInput) Vec.norm(v, dim, t) else 1.0, centroids)
   }
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  override def nullSafeEval(input: Any): Any = nearest(input.asInstanceOf[ArrayData])
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    def at(i: Int): Double = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-    var norm = 1.0
-    if (normalizeInput) {
-      var s = 0.0; var i = 0
-      while (i < dim) { val x = at(i); s += x * x; i += 1 }
-      norm = math.sqrt(s)
-    }
-    var best = 0; var bestD = Double.MaxValue
-    var c = 0
-    while (c < centroids.length) {
-      val cc = centroids(c)
-      var d = 0.0; var i = 0
-      while (i < dim) {
-        val t = (if (normalizeInput) at(i) / norm else at(i)) - cc(i)
-        d += t * t
-        i += 1
-      }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("nearestCentroid", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.nearest($a);")
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cents = ctx.addReferenceObj("centroids", centroids, "double[][]")
-      val norm = ctx.freshName("norm")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      val x = ctx.freshName("x")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val cc = ctx.freshName("cc")
-      def getter(idx: String) =
-        if (isFloat) s"(double) $a.getFloat($idx)" else s"$a.getDouble($idx)"
-      val normCode =
-        if (normalizeInput)
-          s"""
-             |double $s = 0.0;
-             |for (int $i = 0; $i < $dim; $i++) {
-             |  double $x = ${getter(i)};
-             |  $s += $x * $x;
-             |}
-             |$norm = java.lang.Math.sqrt($s);
-           """.stripMargin
-        else ""
-      val elem = if (normalizeInput) s"${getter(i)} / $norm" else getter(i)
-      s"""
-         |double $norm = 1.0;
-         |$normCode
-         |int $best = 0; double $bestD = Double.MAX_VALUE;
-         |for (int $c = 0; $c < ${centroids.length}; $c++) {
-         |  double[] $cc = $cents[$c];
-         |  double $d = 0.0;
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    double $t = ($elem) - $cc[$i];
-         |    $d += $t * $t;
-         |  }
-         |  if ($d < $bestD) { $bestD = $d; $best = $c; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
 
   // structural equality over array contents (see [[ExprArrayEq]])
   override def equals(other: Any): Boolean = other match {

@@ -2,15 +2,16 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression: TWO-LEVEL nearest-centroid assignment —
   * nearest super-cell first (√k candidates), then nearest sub-cell
   * WITHIN that super (k_s candidates), returning the flat-codebook id
-  * `offset(super) + sub`. One tight codegen'd loop pair with the norm
-  * computed once.
+  * `offset(super) + sub`. One precompiled kernel ([[assign]]) normalizes
+  * the vector once, then runs the shared nearest-centroid loop at both
+  * levels; the generated code is one call to it.
   *
   * Exists because the compositional alternative — a CASE over √k
   * [[NearestCentroid]] branches — measured SLOWER than the flat O(k)
@@ -35,96 +36,25 @@ case class NearestCentroidTwoLevel(
 
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"nearest_centroid_2l expects array<float|double>, got $t")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = Vec.expectFloatArray(child, "nearest_centroid_2l")
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    def at(i: Int): Double = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-    var s = 0.0
+  /** The per-row kernel, shared by eval and generated code. */
+  def assign(v: ArrayData): Int = {
+    val t = Vec.elemType(child)
+    val norm = Vec.norm(v, dim, t)
+    val u = UnsafeArrayData.createFreshArray(dim, 8)
     var i = 0
-    while (i < dim) { val x = at(i); s += x * x; i += 1 }
-    val norm = math.sqrt(s)
-    val u = new Array[Double](dim)
-    i = 0
-    while (i < dim) { u(i) = at(i) / norm; i += 1 }
-    def nearest(cs: Array[Array[Double]]): Int = {
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < cs.length) {
-        val cc = cs(c)
-        var d = 0.0; var j = 0
-        while (j < dim) { val t = u(j) - cc(j); d += t * t; j += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
-    val sp = nearest(superCents)
-    offsets(sp) + nearest(subCents(sp))
+    while (i < dim) { u.setDouble(i, Vec.at(v, i, t) / norm); i += 1 }
+    val sp = Vec.argmin(u, DoubleType, 0, dim, 1.0, superCents)
+    offsets(sp) + Vec.argmin(u, DoubleType, 0, dim, 1.0, subCents(sp))
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val sup = ctx.addReferenceObj("superCents", superCents, "double[][]")
-      val sub = ctx.addReferenceObj("subCents", subCents, "double[][][]")
-      val off = ctx.addReferenceObj("offsets", offsets, "int[]")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val u = ctx.freshName("u")
-      val x = ctx.freshName("x")
-      val cs = ctx.freshName("cs")
-      val c = ctx.freshName("c")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      val cc = ctx.freshName("cc")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val sp = ctx.freshName("sp")
-      def getter(idx: String) =
-        if (isFloat) s"(double) $a.getFloat($idx)" else s"$a.getDouble($idx)"
-      // the inner nearest loop, emitted twice (super then sub) over a
-      // local double[][] — identical arithmetic to NearestCentroid
-      def nearestLoop(cands: String): String =
-        s"""
-           |$best = 0; $bestD = Double.MAX_VALUE;
-           |for (int $c = 0; $c < $cands.length; $c++) {
-           |  double[] $cc = $cands[$c];
-           |  double $d = 0.0;
-           |  for (int $j = 0; $j < $dim; $j++) {
-           |    double $t = $u[$j] - $cc[$j];
-           |    $d += $t * $t;
-           |  }
-           |  if ($d < $bestD) { $bestD = $d; $best = $c; }
-           |}
-         """.stripMargin
-      val nrm = ctx.freshName("nrm")
-      s"""
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $dim; $i++) {
-         |  double $x = ${getter(i)};
-         |  $s += $x * $x;
-         |}
-         |double $nrm = java.lang.Math.sqrt($s);
-         |double[] $u = new double[$dim];
-         |for (int $i = 0; $i < $dim; $i++) {
-         |  $u[$i] = ${getter(i)} / $nrm;
-         |}
-         |int $best; double $bestD;
-         |double[][] $cs = $sup;
-         |${nearestLoop(cs)}
-         |int $sp = $best;
-         |$cs = $sub[$sp];
-         |${nearestLoop(cs)}
-         |${ev.value} = $off[$sp] + $best;
-       """.stripMargin
-    })
+  override def nullSafeEval(input: Any): Any = assign(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("nearestCentroid2l", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.assign($a);")
+  }
 
   // structural equality over array contents (see [[ExprArrayEq]])
   override def equals(other: Any): Boolean = other match {

@@ -16,9 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   2. control characters and whitespace runs collapse to one space;
   *   3. trim.
   *
-  * Runs inside whole-stage codegen as one static call per row (the
-  * work is the NFC pass + one precompiled-regex replace; generated
-  * code stays small). The DuckDB twin is
+  * Runs inside whole-stage codegen as one call per row to
+  * [[normalize]] (the work is the NFC pass + one precompiled-regex
+  * replace; generated code stays small). The DuckDB twin is
   * `trim(regexp_replace(nfc_normalize(s), '[\s\x00-\x1f\x7f]+', ' ', 'g'))`
   * — NFC is a Unicode spec, so both engines produce identical bytes.
   */
@@ -31,11 +31,18 @@ case class NormalizeText(child: Expression) extends UnaryExpression {
     case t => TypeCheckResult.TypeCheckFailure(s"norm_text expects a string, got $t")
   }
 
-  override def nullSafeEval(s: Any): Any =
-    NormalizeText.normalize(s.asInstanceOf[UTF8String])
+  /** The per-row kernel, shared by eval and generated code. */
+  def normalize(s: UTF8String): UTF8String = {
+    val nfc = java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFC)
+    UTF8String.fromString(NormalizeText.runs.matcher(nfc).replaceAll(" ").trim)
+  }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NormalizeText.normalize($c)")
+  override def nullSafeEval(s: Any): Any = normalize(s.asInstanceOf[UTF8String])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("normText", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.normalize($c);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -45,10 +52,4 @@ object NormalizeText {
   // \s is ASCII whitespace in both Java and RE2; every other control in
   // [\x00-\x1f\x7f] is covered explicitly so the two engines agree
   private val runs = java.util.regex.Pattern.compile("[\\s\\x00-\\x1f\\x7f]+")
-
-  /** Static per-row kernel shared by eval and codegen. */
-  def normalize(s: UTF8String): UTF8String = {
-    val nfc = java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFC)
-    UTF8String.fromString(runs.matcher(nfc).replaceAll(" ").trim)
-  }
 }

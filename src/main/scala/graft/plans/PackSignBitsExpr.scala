@@ -30,60 +30,28 @@ case class PackSignBits(child: Expression, word: Int, dim: Int)
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"pack_sign_bits expects array<float|double>, got $t")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = Vec.expectFloatArray(child, "pack_sign_bits")
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  private def mayHaveNullElements: Boolean = child.dataType match {
-    case ArrayType(_, containsNull) => containsNull
-    case _                          => false
-  }
-
-  private def lo: Int = word * 64
-  private def hi: Int = math.min(dim, word * 64 + 64)
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = math.min(hi, v.numElements())
+  /** The per-row kernel, shared by eval and generated code. */
+  def pack(v: ArrayData): Long = {
+    val t = Vec.elemType(child)
+    val nulls = Vec.containsNull(child)
+    val n = math.min(math.min(dim, word * 64 + 64), v.numElements())
     var bits = 0L
-    var i = lo
+    var i = word * 64
     while (i < n) {
-      val positive =
-        if (mayHaveNullElements && v.isNullAt(i)) false
-        else if (isFloat) v.getFloat(i) > 0f
-        else v.getDouble(i) > 0d
-      if (positive) bits |= 1L << (i % 64)
+      if (!(nulls && v.isNullAt(i)) && Vec.at(v, i, t) > 0) bits |= 1L << (i % 64)
       i += 1
     }
     bits
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val bits = ctx.freshName("bits")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val pos = ctx.freshName("pos")
-      val test =
-        if (isFloat) s"$a.getFloat($i) > 0f"
-        else s"$a.getDouble($i) > 0d"
-      val posExpr =
-        if (mayHaveNullElements) s"!$a.isNullAt($i) && ($test)"
-        else test
-      s"""
-         |long $bits = 0L;
-         |int $n = java.lang.Math.min($hi, $a.numElements());
-         |for (int $i = $lo; $i < $n; $i++) {
-         |  boolean $pos = $posExpr;
-         |  if ($pos) $bits |= 1L << ($i % 64);
-         |}
-         |${ev.value} = $bits;
-       """.stripMargin
-    })
+  override def nullSafeEval(input: Any): Any = pack(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("packSignBits", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.pack($a);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -2,17 +2,57 @@ package graft
 
 import graft.functions.TextOps
 import graft.operators.{Dedup, Lsh, Pq}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
 import org.apache.spark.sql.functions._
 
 /** Randomized (seeded, deterministic) equivalence properties for the
   * native codegen expressions against straightforward reference
   * implementations — the guard that keeps `doGenCode` and
-  * `nullSafeEval` honest as they evolve.
+  * `nullSafeEval` honest as they evolve. Every select runs through
+  * [[evalEqCodegen]], so each property also holds eval ≡ codegen.
   */
 class ExpressionPropertySpec extends SparkSpec {
   import spark.implicits._
 
   private val rnd = new scala.util.Random(1234)
+
+  /** Rows of `select`, built and run twice: with whole-stage codegen on
+    * and a CODEGEN_ONLY factory without fallback (a node that whole-stage
+    * codegen skips, such as one holding a higher-order function, still
+    * runs generated projections; a compile error fails the test), then
+    * interpreted (no whole-stage, NO_CODEGEN factory, so every
+    * expression runs `eval`). The two runs must return the same rows,
+    * compared in printed form so that NaN equals NaN inside arrays.
+    * ConvertToLocalRelation is excluded in both runs: over a local Seq
+    * it would evaluate the projection at plan time, interpreted, and
+    * the codegen run would generate nothing. The conf is restored after.
+    */
+  private def evalEqCodegen(select: => DataFrame): Array[Row] = {
+    def run(codegen: Boolean): Array[Row] = {
+      val settings = Seq(
+        "spark.sql.optimizer.excludedRules" -> ConvertToLocalRelation.ruleName,
+        "spark.sql.codegen.wholeStage" -> codegen.toString,
+        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"),
+        "spark.sql.codegen.fallback" -> (!codegen).toString)
+      val conf = spark.conf
+      val old = settings.map { case (k, _) => k -> conf.getOption(k) }
+      try {
+        settings.foreach { case (k, v) => conf.set(k, v) }
+        select.collect()
+      } finally old.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
+    val gen = run(codegen = true)
+    val interp = run(codegen = false)
+    val (g, e) = (gen.map(_.toString).sorted.toSeq, interp.map(_.toString).sorted.toSeq)
+    if (g != e) fail(s"eval and codegen returned different rows: codegen ${g.diff(e).take(3)}, eval ${e.diff(g).take(3)}")
+    gen
+  }
+
+  private def native(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    GraftBridge.column(e)
+
+  private def exprOf(c: Column) = GraftBridge.expression(c)
 
   test("phrase_positions equals a naive sliding-window scan on random inputs") {
     val vocab = Vector("a", "b", "ab", "ba", "x")
@@ -27,8 +67,8 @@ class ExpressionPropertySpec extends SparkSpec {
         case i if toks.slice(i, i + phrase.size) == phrase => i + 1
       }
     val df = rows.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "toks")
-    val out = df.select(col("id"), TextOps.phrasePositions(col("toks"), phrase).as("pos"))
-      .as[(Long, Seq[Int])].collect().toMap
+    val out = evalEqCodegen(df.select(col("id"), TextOps.phrasePositions(col("toks"), phrase).as("pos")))
+      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     rows.zipWithIndex.foreach { case (t, i) =>
       assert(out(i.toLong) == naive(t), s"row $i toks=$t")
     }
@@ -38,10 +78,10 @@ class ExpressionPropertySpec extends SparkSpec {
     val vecs = Seq.fill(200)(Array.fill(16)((rnd.nextInt(7) - 3).toFloat)) ++
       Seq(Array.fill(16)(0.0f), Array.fill(16)(-1.0f))
     val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
-    val cmp = df.select(
+    val cmp = evalEqCodegen(df.select(
       Lsh.bucket(col("v"), 16, 12).as("nat"),
-      Lsh.bucketHof(col("v"), 16, 12).as("hof"))
-    assert(cmp.filter(col("nat") =!= col("hof")).count() == 0)
+      Lsh.bucketHof(col("v"), 16, 12).as("hof")))
+    assert(cmp.forall(r => r.getString(0) == r.getString(1)))
   }
 
   test("PqEncode matches the driver-side nearest-centroid loop on random vectors") {
@@ -59,8 +99,8 @@ class ExpressionPropertySpec extends SparkSpec {
       }
       best
     }
-    val encoded = Pq.encode(df, "embedding", model)
-      .select("vec_id", "codes").as[(Long, Seq[Int])].collect().toMap
+    val encoded = evalEqCodegen(Pq.encode(df, "embedding", model).select("vec_id", "codes"))
+      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     base.foreach { case (id, v) =>
       val expect = (0 until model.m).map { j =>
         nearestRef(Array.tabulate(sub)(i => v(j * sub + i).toDouble), model.codebooks(j))
@@ -75,12 +115,9 @@ class ExpressionPropertySpec extends SparkSpec {
     val texts = Seq.fill(200)(
       Seq.fill(rnd.nextInt(60))(alphabet.charAt(rnd.nextInt(alphabet.length))).mkString)
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
-    val got = df.select(col("id"),
-      org.apache.spark.sql.GraftBridge.column(
-        graft.plans.BpeTextTokens(
-          org.apache.spark.sql.GraftBridge.expression(lower(col("t"))),
-          Bpe.mergesArray)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = evalEqCodegen(df.select(col("id"),
+      native(graft.plans.BpeTextTokens(exprOf(lower(col("t"))), Bpe.mergesArray)).as("n")))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val pat = s"(?:${Bpe.PretokenRegex})".r
     texts.zipWithIndex.foreach { case (t, i) =>
       val exp = pat.findAllIn(t.toLowerCase).map(Bpe.encodeWord(_, Bpe.merges).length.toLong).sum
@@ -93,11 +130,9 @@ class ExpressionPropertySpec extends SparkSpec {
     val arrays = Seq.fill(100)(
       Seq.fill(rnd.nextInt(30))(s"tok${rnd.nextInt(500)}"))
     val df = arrays.zipWithIndex.map { case (a, i) => (i.toLong, a) }.toDF("id", "toks")
-    val got = df.select(col("id"),
-      org.apache.spark.sql.GraftBridge.column(
-        graft.plans.HashedBow(
-          org.apache.spark.sql.GraftBridge.expression(col("toks")), dims)).as("v"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val got = evalEqCodegen(df.select(col("id"),
+      native(graft.plans.HashedBow(exprOf(col("toks")), dims)).as("v")))
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val md5 = java.security.MessageDigest.getInstance("MD5")
     arrays.zipWithIndex.foreach { case (toks, i) =>
       val counts = new Array[Double](dims)
@@ -115,10 +150,10 @@ class ExpressionPropertySpec extends SparkSpec {
     val texts = Seq.fill(50)(
       Seq.fill(1 + rnd.nextInt(40))(s"w${rnd.nextInt(300)}").mkString(" "))
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val strs = Dedup.simHash64(df, "text", "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val words = Dedup.simHashWords(df, "text", "doc_id")
-      .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getInt)).toMap
+    val strs = evalEqCodegen(Dedup.simHash64(df, "text", "doc_id"))
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val words = evalEqCodegen(Dedup.simHashWords(df, "text", "doc_id"))
+      .map(r => r.getLong(0) -> (1 to 4).map(r.getInt)).toMap
     strs.foreach { case (id, s) =>
       val packed = words(id)
       (0 until 64).foreach { j =>
@@ -134,10 +169,8 @@ class ExpressionPropertySpec extends SparkSpec {
     val vecs = Seq.fill(200)(Array.fill(dim)((rnd.nextInt(7) - 3).toFloat)) ++
       Seq(Array.fill(dim)(0.0f), Array.fill(dim)(-1.0f), Array.fill(dim)(1.0f))
     val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
-    val out = Bq.pack(df, "v", dim = dim)
-      .select(col("id"), col("bq_w0"), col("bq_w1"))
-      .as[(Long, Long, Long)].collect()
-      .map { case (id, w0, w1) => id -> ((w0, w1)) }.toMap
+    val out = evalEqCodegen(Bq.pack(df, "v", dim = dim).select(col("id"), col("bq_w0"), col("bq_w1")))
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     vecs.zipWithIndex.foreach { case (v, i) =>
       def ref(word: Int): Long =
         (word * 64 until math.min(dim, word * 64 + 64))
@@ -156,16 +189,15 @@ class ExpressionPropertySpec extends SparkSpec {
         while (j < 20) { acc += row(j) * v(j); j += 1 }
         acc
       }.toSeq
-    val gotF = vecsF.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
-      .select(col("id"), Bq.rotateCol(col("v"), m).as("rv"))
-      .as[(Long, Seq[Double])].collect().toMap
+    def run(df: DataFrame): Map[Long, Seq[Double]] =
+      evalEqCodegen(df.select(col("id"), Bq.rotateCol(col("v"), m).as("rv")))
+        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val gotF = run(vecsF.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v"))
     vecsF.zipWithIndex.foreach { case (v, i) =>
       assert(gotF(i.toLong) == ref(v.map(_.toDouble)), s"float row $i")
     }
     val vecsD = vecsF.map(_.map(_.toDouble))
-    val gotD = vecsD.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
-      .select(col("id"), Bq.rotateCol(col("v"), m).as("rv"))
-      .as[(Long, Seq[Double])].collect().toMap
+    val gotD = run(vecsD.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v"))
     vecsD.zipWithIndex.foreach { case (v, i) =>
       assert(gotD(i.toLong) == ref(v), s"double row $i")
     }
@@ -181,14 +213,10 @@ class ExpressionPropertySpec extends SparkSpec {
       val n = math.sqrt(s)
       v.indices.map(j => v(j).toDouble / n - cents(c)(j))
     }
-    def run(clusterCol: org.apache.spark.sql.Column): Map[Long, Seq[Double]] =
-      df.select(col("id"),
-          org.apache.spark.sql.GraftBridge.column(
-            graft.plans.CentroidResidual(
-              org.apache.spark.sql.GraftBridge.expression(col("v")),
-              org.apache.spark.sql.GraftBridge.expression(clusterCol),
-              cents)).as("r"))
-        .as[(Long, Seq[Double])].collect().toMap
+    def run(clusterCol: Column): Map[Long, Seq[Double]] =
+      evalEqCodegen(df.select(col("id"),
+          native(graft.plans.CentroidResidual(exprOf(col("v")), exprOf(clusterCol), cents)).as("r")))
+        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val gotInt = run(col("cluster"))
     val gotLong = run(col("cluster").cast("long"))
     vecs.zipWithIndex.foreach { case ((v, c), i) =>
@@ -224,10 +252,9 @@ class ExpressionPropertySpec extends SparkSpec {
     inserted.foreach(key => assert(ref(key), s"false negative for inserted '$key'"))
     // codegen face through a real plan (filter over a column)
     val df = keys.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "key")
-    val hits = df.filter(org.apache.spark.sql.GraftBridge.column(
-        graft.plans.BloomMightContain(
-          org.apache.spark.sql.GraftBridge.expression(col("key")), mask, mBits, k)))
-      .select("key").collect().map(_.getString(0)).toSet
+    val hits = evalEqCodegen(df.filter(native(
+        graft.plans.BloomMightContain(exprOf(col("key")), mask, mBits, k))).select("key"))
+      .map(_.getString(0)).toSet
     val expected = keys.filter(ref).toSet
     assert(hits == expected, "codegen face diverged from the scalar reference")
   }
@@ -240,11 +267,12 @@ class ExpressionPropertySpec extends SparkSpec {
       (i.toLong, Array.fill(dim)(rnd.nextGaussian().toFloat).toSeq))
       .toDF("query_id", "q_vec")
     val nProbe = 3
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Int)] =
-      df.select("query_id", "cluster").collect()
+    def pairs(df: => DataFrame): Set[(Long, Int)] =
+      evalEqCodegen(df.select("query_id", "cluster"))
         .map(r => (r.getLong(0), r.getInt(1))).toSet
     val inPlan = pairs(Ann.queryCells(queries, "q_vec", "query_id", cents, nProbe))
-    val local = pairs(Ann.queryCellsLocal(queries, "q_vec", "query_id", cents, nProbe))
+    val local = Ann.queryCellsLocal(queries, "q_vec", "query_id", cents, nProbe)
+      .select("query_id", "cluster").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(local == inPlan,
       s"driver ranking diverged from the window ranking: ${(local -- inPlan) ++ (inPlan -- local)}")
   }
@@ -261,10 +289,9 @@ class ExpressionPropertySpec extends SparkSpec {
           transform(sequence(lit(1), size(ts) - (k - 1)),
             i => concat_ws(" ", (0 until k).map(j => element_at(ts, i + j)): _*)))
           .otherwise(array().cast("array<string>"))))
-      val cmp = df.select(col("id"),
-          TextOps.rawShingles(col("toks"), k).as("nat"), hof.as("ref"))
-        .filter(not(col("nat") <=> col("ref")))
-      assert(cmp.count() == 0, s"k=$k: native shingles diverged from the HOF reference")
+      val cmp = evalEqCodegen(df.select(col("id"),
+          TextOps.rawShingles(col("toks"), k).as("nat"), hof.as("ref")))
+      assert(cmp.forall(r => r.get(1) == r.get(2)), s"k=$k: native shingles diverged from the HOF reference")
     }
   }
 
@@ -277,11 +304,108 @@ class ExpressionPropertySpec extends SparkSpec {
       Seq.fill(200)(Seq.fill(rnd.nextInt(12))(
         Vector("Word", "x9", "\u00e9t\u00e9", ",,", "A\u212aB")(rnd.nextInt(5))).mkString(" "))
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    val cmp = df.select(col("id"),
+    val bad = evalEqCodegen(df.select(col("id"),
         TextOps.tokenize(col("text")).as("nat"),
-        filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= "").as("ref"))
-      .filter(not(col("nat") <=> col("ref")))
-    val bad = cmp.collect()
+        filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= "").as("ref")))
+      .filter(r => r.get(1) != r.get(2))
     assert(bad.isEmpty, s"native tokenize diverged: ${bad.take(3).mkString("; ")}")
+  }
+
+  test("CosineSimilarity equals a driver loop for float, double, int and null-element arrays") {
+    import graft.plans.CosineSimilarity
+    def ref(a: Seq[Double], b: Seq[Double]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      a.indices.foreach { i => dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i) }
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    def cos(df: DataFrame): Map[Long, Option[Double]] =
+      evalEqCodegen(df.select(col("id"), native(CosineSimilarity(exprOf(col("a")), exprOf(col("b")))).as("c")))
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+    val pairs = Seq.fill(150)((Seq.fill(12)(rnd.nextInt(7) - 3), Seq.fill(12)(rnd.nextInt(7) - 3))) :+
+      ((Seq.fill(12)(0), Seq.fill(12)(1))) // zero norm: NaN, not null
+    def check[T](rows: Seq[(Seq[T], Seq[T])], toD: T => Double)(
+        implicit enc: org.apache.spark.sql.Encoder[(Long, Seq[T], Seq[T])]): Unit = {
+      val got = cos(rows.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }.toDF("id", "a", "b"))
+      rows.zipWithIndex.foreach { case ((a, b), i) =>
+        val want = ref(a.map(toD), b.map(toD))
+        assert(got(i.toLong).exists(g => g == want || (g.isNaN && want.isNaN)), s"row $i: ${got(i.toLong)} vs $want")
+      }
+    }
+    check[Int](pairs, _.toDouble)
+    check[Float](pairs.map { case (a, b) => (a.map(_ * 0.37f), b.map(_ * 1.3f)) }, _.toDouble)
+    check[Double](pairs.map { case (a, b) => (a.map(_ * 0.37), b.map(_ * 1.3)) }, identity)
+    // float against double, and null elements (containsNull = true): a
+    // null anywhere in the common prefix makes the row null
+    val mixed = pairs.zipWithIndex.map { case ((a, b), i) =>
+      val an: Seq[java.lang.Float] = a.map(x => java.lang.Float.valueOf(x * 0.5f))
+      (i.toLong, if (i % 3 == 0) an.updated(i % 12, null) else an, b.map(_ * 1.3))
+    }
+    val got = cos(mixed.toDF("id", "a", "b"))
+    mixed.foreach { case (i, a, b) =>
+      if (a.contains(null)) assert(got(i).isEmpty, s"row $i: a null element must null the row")
+      else {
+        val want = ref(a.map(_.toDouble), b)
+        assert(got(i).exists(g => g == want || (g.isNaN && want.isNaN)), s"row $i: ${got(i)} vs $want")
+      }
+    }
+  }
+
+  test("NearestCentroid equals a strict-< first-minimum reference, normalized or not, with ties") {
+    import graft.plans.NearestCentroid
+    val dim = 6
+    val base = Array.fill(5)(Array.fill(dim)((rnd.nextInt(5) - 2).toDouble))
+    val cents = base ++ base.take(2) // duplicated centroids tie exactly: the first index wins
+    val vecs = Seq.fill(200)(Array.fill(dim)((rnd.nextInt(5) - 2).toFloat)) ++ base.map(_.map(_.toFloat))
+    def ref(v: Array[Double]): Int = {
+      var best = 0; var bestD = Double.MaxValue
+      for (c <- cents.indices) {
+        var d = 0.0
+        for (i <- 0 until dim) { val t = v(i) - cents(c)(i); d += t * t }
+        if (d < bestD) { bestD = d; best = c }
+      }
+      best
+    }
+    for (normalize <- Seq(false, true); asDouble <- Seq(false, true)) {
+      val rows = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      val df = if (asDouble) rows.map { case (i, v) => (i, v.map(_.toDouble)) }.toDF("id", "v")
+               else rows.toDF("id", "v")
+      val got = evalEqCodegen(df.select(col("id"),
+          native(NearestCentroid(exprOf(col("v")), cents, normalize)).as("c")))
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      rows.foreach { case (i, v) =>
+        val x = v.map(_.toDouble)
+        val norm = math.sqrt(x.foldLeft(0.0)((s, e) => s + e * e))
+        val want = ref(if (normalize) x.map(_ / norm) else x)
+        assert(got(i) == want, s"normalize=$normalize double=$asDouble row $i")
+      }
+    }
+  }
+
+  test("NearestCentroidTwoLevel equals nearest super-cell, then nearest sub-cell within it") {
+    import graft.plans.NearestCentroidTwoLevel
+    val dim = 8
+    val supers = Array.fill(3)(Array.fill(dim)(rnd.nextGaussian()))
+    val subs = Array.tabulate(3)(s => Array.fill(2 + s)(Array.fill(dim)(rnd.nextGaussian())))
+    val offsets = subs.map(_.length).scanLeft(0)(_ + _).init
+    val vecs = Seq.fill(200)(Array.fill(dim)(rnd.nextGaussian().toFloat))
+    def nearest(u: Array[Double], cs: Array[Array[Double]]): Int = {
+      var best = 0; var bestD = Double.MaxValue
+      for (c <- cs.indices) {
+        var d = 0.0
+        for (i <- 0 until dim) { val t = u(i) - cs(c)(i); d += t * t }
+        if (d < bestD) { bestD = d; best = c }
+      }
+      best
+    }
+    val got = evalEqCodegen(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+        .select(col("id"), native(NearestCentroidTwoLevel(exprOf(col("v")), supers, subs, offsets)).as("c")))
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    vecs.zipWithIndex.foreach { case (v, i) =>
+      val x = v.map(_.toDouble)
+      val norm = math.sqrt(x.foldLeft(0.0)((s, e) => s + e * e))
+      val u = x.map(_ / norm)
+      val sp = nearest(u, supers)
+      assert(got(i.toLong) == offsets(sp) + nearest(u, subs(sp)), s"row $i")
+    }
   }
 }

@@ -6,7 +6,7 @@ class NormalizeTextSpec extends SparkSpec {
   import spark.implicits._
 
   private def norm(s: String): String =
-    graft.plans.NormalizeText
+    graft.plans.NormalizeText(org.apache.spark.sql.catalyst.expressions.Literal(s))
       .normalize(org.apache.spark.unsafe.types.UTF8String.fromString(s)).toString
 
   test("NFC composition, singleton mapping, control/whitespace collapse, trim") {

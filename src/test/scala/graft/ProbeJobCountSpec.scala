@@ -167,4 +167,17 @@ class ProbeJobCountSpec extends SparkSpec {
       assert(n <= bound, s"$q fired $n jobs warm (bound $bound)")
     }
   }
+
+  test("warm ChunkStore reads take each segment's schema from its footer") {
+    // bounds = the warm counts `runMain graft.tools.Inspect <sf0.001>
+    // dedup_minhash_incremental,dedup_clusters,stream_upsert_cdc --jobs`
+    // reports once ChunkStore reads its segments through
+    // LayoutCache.readFooted; a schema-inference job per segment read
+    // costs each key more (8, 12 and 13 jobs with one)
+    for ((q, bound) <- Seq("dedup_minhash_incremental" -> 6, "dedup_clusters" -> 10,
+                           "stream_upsert_cdc" -> 8)) {
+      val n = warmJobs(q)
+      assert(n <= bound, s"$q fired $n jobs warm (bound $bound)")
+    }
+  }
 }
